@@ -143,8 +143,6 @@ TIER2 = [
     "f101_warc_datasource",
     "f102_cdx_columnar_lookup",
     "c16_host_index_rollup",
-    "f103_robots_filter",
-    "f104_sitemap_frontier",
 ]
 
 

@@ -28,6 +28,7 @@ Semantics ported:
 
 from __future__ import annotations
 
+import contextlib
 import threading
 import time
 from collections import OrderedDict
@@ -90,7 +91,9 @@ def option_chain_key(symbol: str, expiry: Any = None) -> tuple:
 
 class TTLCache:
     """Per-capability TTL+LRU cache with negative caching and per-key
-    stampede protection."""
+    stampede protection. Safe to share between threads: ``hits`` and
+    ``misses`` change only under ``_lock``, and ``_key_locks`` holds a
+    key only while some caller is computing or waiting on it."""
 
     def __init__(
         self,
@@ -107,7 +110,8 @@ class TTLCache:
         self.clock = clock
         self._store: OrderedDict[tuple, tuple[float, Any, bool]] = OrderedDict()
         self._lock = threading.Lock()
-        self._key_locks: dict[tuple, threading.Lock] = {}
+        # key -> [lock, number of callers holding or waiting on it]
+        self._key_locks: dict[tuple, list] = {}
         self.hits = 0
         self.misses = 0
 
@@ -119,6 +123,8 @@ class TTLCache:
         return self.ttls.get(capability)
 
     def _lookup(self, key: tuple):
+        """The live ``(value, is_err)`` for ``key``, or None. A hit is
+        counted under the same lock that found it."""
         now = self.clock()
         with self._lock:
             entry = self._store.get(key)
@@ -129,7 +135,26 @@ class TTLCache:
                 del self._store[key]
                 return None
             self._store.move_to_end(key)
+            self.hits += 1
             return value, is_err
+
+    @contextlib.contextmanager
+    def _key_lock(self, key: tuple):
+        """Hold ``key``'s lock. The lock is shared by every caller that
+        arrives while it exists and dropped when the last one leaves."""
+        with self._lock:
+            slot = self._key_locks.get(key)
+            if slot is None:
+                slot = self._key_locks[key] = [threading.Lock(), 0]
+            slot[1] += 1
+        try:
+            with slot[0]:
+                yield
+        finally:
+            with self._lock:
+                slot[1] -= 1
+                if slot[1] == 0:
+                    del self._key_locks[key]
 
     def _insert(self, key: tuple, value: Any, is_err: bool, ttl: float):
         with self._lock:
@@ -145,37 +170,33 @@ class TTLCache:
         errors are never cached (cache.rs negative stores hold only
         permanent errors).
         """
-        capability = key[0]
         hit = self._lookup(key)
-        if hit is not None:
-            self.hits += 1
-            value, is_err = hit
-            if is_err:
-                raise value
-            return value
-        with self._lock:
-            klock = self._key_locks.setdefault(key, threading.Lock())
-        with klock:
-            hit = self._lookup(key)  # double-check under the key lock
-            if hit is not None:
-                self.hits += 1
-                value, is_err = hit
-                if is_err:
-                    raise value
-                return value
-            self.misses += 1
-            try:
-                value = fn()
-            except BorsaSparkError as e:
-                if e.retry_class is RetryClass.PERMANENT:
-                    ttl = self._ttl_for(capability, negative=True)
-                    if ttl:
-                        self._insert(key, e, True, ttl)
-                raise
-            ttl = self._ttl_for(capability, negative=False)
-            if ttl:
-                self._insert(key, value, False, ttl)
-            return value
+        if hit is None:
+            with self._key_lock(key):
+                hit = self._lookup(key)  # double-check under the key lock
+                if hit is None:
+                    with self._lock:
+                        self.misses += 1
+                    return self._compute(key, fn)
+        value, is_err = hit
+        if is_err:
+            raise value
+        return value
+
+    def _compute(self, key: tuple, fn: Callable[[], Any]) -> Any:
+        capability = key[0]
+        try:
+            value = fn()
+        except BorsaSparkError as e:
+            if e.retry_class is RetryClass.PERMANENT:
+                ttl = self._ttl_for(capability, negative=True)
+                if ttl:
+                    self._insert(key, e, True, ttl)
+            raise
+        ttl = self._ttl_for(capability, negative=False)
+        if ttl:
+            self._insert(key, value, False, ttl)
+        return value
 
     def invalidate(self, key: tuple | None = None):
         with self._lock:

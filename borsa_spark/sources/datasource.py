@@ -279,15 +279,12 @@ class BorsaQuoteStreamDataSource(DataSource):
 
 
 def register_datasources(spark) -> None:
-    """Idempotent per-session registration of all four formats (the
-    three provider-layer ones here plus the ``warc`` crawl reader —
-    `sources/warc_datasource.py`)."""
-    from borsa_spark.sources import warc_datasource
-
+    """Idempotent per-session registration of the three provider-layer
+    formats: ``borsa_history``, ``borsa_quote_stream`` and
+    ``borsa_tick_sink``."""
     spark.dataSource.register(BorsaHistoryDataSource)
     spark.dataSource.register(BorsaQuoteStreamDataSource)
     spark.dataSource.register(BorsaTickSinkDataSource)
-    warc_datasource.register(spark)
 
 
 # ---------------------------------------------------------------------------

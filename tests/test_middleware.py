@@ -3,6 +3,12 @@
 
 from __future__ import annotations
 
+import random
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 from borsa_spark.errors import (
@@ -91,6 +97,64 @@ class TestTTLCache:
         k3 = history_key("AAPL", "EQUITY", "1d", auto_adjust=True,
                          include_actions=True)
         assert len({k1, k2, k3}) == 3
+
+
+class TestTTLCacheThreads:
+    """One TTLCache shared by 4 threads, the way a long-lived router
+    serves concurrent requests: the counters stay exact and the per-key
+    lock map holds nothing once every caller has left."""
+
+    def test_counts_exact_and_key_locks_drain(self):
+        c = TTLCache(max_size=4096, ttls={"quote": 600.0})
+        keys = [("quote", f"S{i}") for i in range(2000)]
+
+        def work(seed: int) -> int:
+            order = keys * 2
+            random.Random(seed).shuffle(order)
+            for k in order:
+                assert c.get_or_compute(k, lambda k=k: k[1]) == k[1]
+            return len(order)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)  # switch threads often: expose races
+        try:
+            with ThreadPoolExecutor(4) as ex:
+                calls = sum(ex.map(work, range(4), timeout=120))
+        finally:
+            sys.setswitchinterval(old)
+        assert calls == 4 * 2 * len(keys)
+        assert c.hits + c.misses == calls
+        assert c.misses == len(keys)  # stampede-safe: one compute per key
+        assert isinstance(c.hits, int) and isinstance(c.misses, int)
+        assert len(c._key_locks) == 0
+
+    def test_slow_key_computes_once_for_concurrent_callers(self):
+        c = TTLCache(ttls={"quote": 600.0})
+        key = ("quote", "SLOW")
+        started, release = threading.Event(), threading.Event()
+        calls = []
+
+        def slow():
+            calls.append(1)
+            started.set()
+            release.wait(10)
+            return 42
+
+        with ThreadPoolExecutor(4) as ex:
+            first = ex.submit(c.get_or_compute, key, slow)
+            assert started.wait(10)
+            rest = [ex.submit(c.get_or_compute, key, slow) for _ in range(3)]
+            deadline = time.monotonic() + 10
+            while time.monotonic() < deadline:
+                with c._lock:
+                    if c._key_locks[key][1] == 4:  # all 4 inside
+                        break
+                time.sleep(0.01)
+            release.set()
+            assert [f.result(10) for f in (first, *rest)] == [42] * 4
+        assert len(calls) == 1
+        assert (c.misses, c.hits) == (1, 3)
+        assert len(c._key_locks) == 0
 
 
 class TestQuota:

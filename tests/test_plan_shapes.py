@@ -1077,39 +1077,6 @@ class TestRound13PlanShapes:
         # partial aggregation below the exchange (map-side combine)
         assert plan.find("HashAggregate") < plan.find("Exchange")
 
-    def test_robots_eval_has_one_parse_subtree_and_one_join(
-            self, spark):
-        # parse_robots must not re-evaluate the windowed lines subtree
-        # per consumer (the agents-join form planned 5 Window nodes /
-        # 2 parses; the collect+explode form plans exactly 3: lag +
-        # group-id sum + the group-selection max), and evaluation is
-        # ONE equi-join with zero Python
-        import re
-
-        from pyspark.sql import functions as F
-
-        from borsa_spark.functions.robots import (parse_robots,
-                                                  robots_eval)
-
-        robots = spark.createDataFrame(
-            [("h.example.org",
-              "User-agent: *\nDisallow: /a\nUser-agent: b\nAllow: /b")],
-            "host string, robots_txt string",
-        )
-        urls = spark.range(64).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("https://h.example.org/p/"),
-                     F.col("id")).alias("url"),
-        )
-        out = robots_eval(urls, parse_robots(robots), "b")
-        plan = _plan_str(out)
-        assert len(re.findall(r"\(\d+\) Window", plan)) == 3
-        joins = re.findall(r"\(\d+\) (\w*Join\w*)", plan)
-        assert len(joins) == 1
-        assert "BatchEvalPython" not in plan
-        assert "MapInPandas" not in plan
-        assert "CartesianProduct" not in plan
-
 
 class TestWidenGuardsR14:
     """Round-14 hardening of `widen_if_narrow` (r13 verdict #5 +
