@@ -2,10 +2,10 @@
 
 .PHONY: test oracle bench demo smoke scale tours all verify
 
-# The standing gate: full pytest + all-84-query oracle replay (exits
-# nonzero on any red) + driver-contract smoke + bench contract. This is
-# what "done" means for any operator change; run it before every round
-# hand-off. (`make all` is the quicker subset.)
+# The standing gate: full pytest + oracle replay of every registered
+# query (exits nonzero on any red) + driver-contract smoke + bench
+# contract. This is what "done" means for any operator change; run it
+# before every round hand-off. (`make all` is the quicker subset.)
 verify: test oracle smoke bench
 
 scale:
@@ -52,8 +52,6 @@ example-tour:
 	python examples/28_stream_enrich.py
 	python examples/29_multimodal_codecs.py
 	python examples/30_incremental_rollup.py
-	python examples/31_crawl_stage_zero.py
-	python examples/32_corpus_prep_e2e.py
 	python examples/33_training_mix_e2e.py
 	python examples/34_crawl_safe_dedup.py
 

@@ -19,7 +19,7 @@ Each query is executed to completion through the noop sink
 (`df.write.format("noop")`), which materializes EVERY output column.
 count() — the pre-round-8 sink — is wrong for projection-shaped queries:
 Catalyst prunes columns count() doesn't need, so a pure-scan operator
-like f84's regex extraction would be optimized away and the "wall" would
+like a regex text extraction would be optimized away and the "wall" would
 measure an empty scan.
 
 Host-speed calibration (round 8): the shared host's wall-clock band for
@@ -102,7 +102,6 @@ TIER2 = [
     "c6_incremental_rollup",
     "c7_streaming_rollup_exactly_once",
     # round 8 additions (first-baselined in BENCH_r08)
-    "f84_html_extract",
     "f85_langid_nb",
     "f87_pq_adc_topk",
     "f88_pq_rerank_topk",
@@ -113,7 +112,6 @@ TIER2 = [
     "f86_c4_line_filter",
     "c10_tiered_rollup",
     "f91_image_band_guard",
-    "c11_crawl_corpus_prep",
     "f92_audio_envelope_pairs",
     "c12_training_mix",
     "f93_candidate_substring_spans",
@@ -122,27 +120,11 @@ TIER2 = [
     "f94_span_removal_rewrite",
     "f95_minhash_crawl_guard",
     "c13_image_crawl_clusters",
-    # round 11 additions (first-baselined in BENCH_FULL_r11): WARC
-    # ingestion — the header-trap extraction fixture and c11's full
-    # DAG driven from WARC bytes
-    "f96_warc_extract",
-    "c14_warc_corpus_prep",
+    # round 11 addition (first-baselined in BENCH_FULL_r11)
     "f97_ivfpq_residual_topk",
-    # round 12 additions (first-baselined in BENCH_FULL_r12): the
-    # splittable byte-range WARC reader over a single fixture file,
-    # the CDX index + point-fetch path, and crawl-link PageRank from
-    # WARC bytes
-    "f98_warc_split_extract",
-    "f99_warc_cdx_fetch",
+    # round 12 addition (first-baselined in BENCH_FULL_r12):
+    # crawl-link PageRank from WARC bytes
     "c15_crawl_link_rank",
-    "f100_wat_sidecar",
-    # round 13 additions (first-baselined in BENCH_FULL_r13): the
-    # registered `warc` Data Source driven via format("warc"), the
-    # SURT-sorted columnar CDX index lookup, and the host-index
-    # rollup computed from the persisted index alone
-    "f101_warc_datasource",
-    "f102_cdx_columnar_lookup",
-    "c16_host_index_rollup",
 ]
 
 
@@ -339,9 +321,9 @@ def main() -> None:
 
     timings = time_set(HEADLINE, slow_retry=15.0)
     # tier 2 runs genuinely heavier plans; the heaviest quiet walls sit
-    # at ~7-9s (f17, f90, c11), so 15s still gives >1.7x headroom while
-    # catching the mid-run bursts 25s let through (BENCH_r10 draft: c11
-    # read 17.4s against three 7.4-7.5s hand samples)
+    # at ~7-9s (f17, f90), so 15s still gives >1.7x headroom while
+    # catching the mid-run bursts 25s let through (BENCH_r10 draft: a
+    # tier-2 query read 17.4s against three 7.4-7.5s hand samples)
     tier2 = time_set(TIER2, slow_retry=15.0)
 
     # Warm the Structured Streaming + Arrow/pandas-UDF path on the tiny sf

@@ -607,7 +607,7 @@ def minhash_dedup_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     pass ``None`` explicitly for the exhaustive unguarded form.
 
     ``collapse_exact`` inlines the production STAGE ORDER (Dolma /
-    RefinedWeb, and c11 itself, run exact dedup BEFORE minhash) into a
+    RefinedWeb run exact dedup BEFORE minhash) into a
     standalone minhash run: md5-identical texts collapse to one
     representative before shingling, so an identical-text cohort pays
     the 60-permutation signature fold once instead of once per copy.

@@ -107,10 +107,9 @@ def c4_line_filter(text: Column, min_words: int = C4_LINE_MIN_WORDS
                    ) -> Column:
     """struct(clean_text, n_lines, n_kept, page_flagged) — C4's
     cleaning as one in-row array expression (split on newline, per-line
-    rules in a filter lambda, rejoin): the text-side stage between
-    f84's block-level HTML extraction and document-level scoring. Pure
-    JVM, zero shuffle — at 100 TB this rides the same scan as
-    extraction.
+    rules in a filter lambda, rejoin): the text-side stage before
+    document-level scoring. Pure JVM, zero shuffle — at 100 TB this
+    rides the corpus scan.
 
     A line is kept iff trimmed it ends in . ! ? or a quote, has >=
     ``min_words`` whitespace words, and contains no

@@ -22,8 +22,8 @@ Semantics ported:
 - Blacklist (blacklist.rs:42-88): a RateLimited error gates the provider for
   the provider-reported window (fallback: configured default); while gated,
   calls fail fast with TemporarilyBlacklisted (remaining ms >= 1).
-- Ordering (builder.rs:31-38): Cache(0) -> Blacklist(1) -> Quota(2) -> other,
-  enforced at stack build.
+- Ordering (builder.rs:31-38): Cache -> Blacklist -> Quota -> provider,
+  fixed by `MiddlewareStack.call`.
 """
 
 from __future__ import annotations
@@ -360,146 +360,6 @@ class MiddlewareStack:
         if self.cache is not None:
             return self.cache.get_or_compute(key, guarded)
         return guarded()
-
-
-# ---------------------------------------------------------------------------
-# Layered builder with stack validation (custom middleware parity)
-# ---------------------------------------------------------------------------
-
-
-class InvalidMiddlewareStack(BorsaSparkError):
-    """Stack validation failed (BorsaError::InvalidMiddlewareStack,
-    borsa-core middleware validation)."""
-
-
-class ValidationContext:
-    """What a layer may inspect about the stack it is being built into
-    (borsa-core/src/middleware.rs ValidationContext): the TYPES and names
-    of every layer present, including itself."""
-
-    def __init__(self, layers: "list[object]"):
-        self._types = {type(layer) for layer in layers}
-        self._names = {layer.name for layer in layers}
-
-    def has_middleware(self, layer_type: type) -> bool:
-        return layer_type in self._types
-
-    def has_name(self, name: str) -> bool:
-        return name in self._names
-
-
-class ConnectorBuilder:
-    """Compose a call path from pluggable middleware layers with build-time
-    validation — the reference's ConnectorBuilder
-    (borsa-middleware/src/builder.rs + middleware_validation.rs tests).
-
-    A layer is any object with:
-      - ``name: str``
-      - ``wrap(call) -> call`` where ``call(key, fn)`` invokes the rest of
-        the stack (fn is the innermost provider fetch)
-      - optional ``validate(ctx: ValidationContext) -> None`` raising
-        ``InvalidMiddlewareStack`` (e.g. a layer that depends on another
-        layer being present)
-      - optional ``order: int`` — canonical slot (builder.rs:31-38:
-        Cache=0, Blacklist=1, Quota=2, custom default 3); the builder
-        sorts by (order, insertion index) so a cache hit can never consume
-        quota regardless of layer() call order.
-
-    ``build()`` validates every layer against the full stack, then composes
-    outermost-first and returns a ``call(key, fn)`` entry point.
-    """
-
-    def __init__(self, connector: str | None = None):
-        self.connector = connector
-        self._layers: list[object] = []
-
-    def layer(self, mw: object) -> "ConnectorBuilder":
-        self._layers.append(mw)
-        return self
-
-    def names(self) -> list[str]:
-        """Introspection: layer names outermost-first (the reference's
-        macro_introspection surface)."""
-        return [layer.name for layer in self._ordered()]
-
-    def _ordered(self) -> list[object]:
-        return sorted(
-            self._layers,
-            key=lambda mw: (getattr(mw, "order", 3),
-                            self._layers.index(mw)),
-        )
-
-    def build(self):
-        ctx = ValidationContext(self._layers)
-        for mw in self._layers:
-            validate = getattr(mw, "validate", None)
-            if validate is not None:
-                validate(ctx)
-
-        def innermost(key, fn):
-            return fn()
-
-        call = innermost
-        # compose inner->outer so the first canonical slot is outermost
-        for mw in reversed(self._ordered()):
-            call = mw.wrap(call)
-        return call
-
-
-class CacheLayer:
-    """TTLCache as a builder layer (canonical slot 0)."""
-
-    name = "cache"
-    order = 0
-
-    def __init__(self, cache: TTLCache | None = None):
-        self.cache = cache if cache is not None else TTLCache()
-
-    def wrap(self, call):
-        def wrapped(key, fn):
-            return self.cache.get_or_compute(key, lambda: call(key, fn))
-
-        return wrapped
-
-
-class BlacklistLayer:
-    """Blacklist as a builder layer (canonical slot 1)."""
-
-    name = "blacklist"
-    order = 1
-
-    def __init__(self, blacklist: Blacklist | None = None,
-                 connector: str | None = None):
-        self.blacklist = blacklist if blacklist is not None else Blacklist()
-        self.connector = connector
-
-    def wrap(self, call):
-        def wrapped(key, fn):
-            self.blacklist.check(self.connector)
-            try:
-                return call(key, fn)
-            except BorsaSparkError as e:
-                self.blacklist.handle_error(e)
-                raise
-
-        return wrapped
-
-
-class QuotaLayer:
-    """QuotaGuard as a builder layer (canonical slot 2)."""
-
-    name = "quota"
-    order = 2
-
-    def __init__(self, quota: QuotaGuard):
-        self.quota = quota
-
-    def wrap(self, call):
-        def wrapped(key, fn):
-            self.quota.should_allow_call()
-            return call(key, fn)
-
-        return wrapped
 
 
 # ---------------------------------------------------------------------------

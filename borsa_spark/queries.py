@@ -5615,7 +5615,7 @@ def rel_q15_top_supplier(spark, sf):
     does NOT reuse it by itself: the round-9 plan audit showed the
     unpersisted form scanning lineitem twice (zero ReusedExchange), so
     the per-supplier view persists explicitly before its two consumers
-    (the f8/c11 multi-consumer rule; it is supplier-count-bounded and
+    (the f8 multi-consumer rule; it is supplier-count-bounded and
     2 columns wide). The 1-row max broadcasts back as a cross join and
     the supplier dim broadcasts onto the winner(s). Revenue is snapped
     to 2dp BEFORE the max comparison in both engines so the equality
@@ -7134,77 +7134,6 @@ def f70_lossy_audio_policy(spark, sf):
     )
 
 
-@query(
-    "f71_url_canon_dedup",
-    """
-    WITH g AS (
-      SELECT doc_id, doc_id % 40 AS c, (doc_id % 40) % 8 AS h,
-             (doc_id // 40) % 6 AS v
-      FROM documents),
-    canon AS (
-      SELECT doc_id,
-             CASE WHEN v = 4 THEN 'http://site' || h
-                    || '.example.com:8080/p/' || c || '?a=1&b=2'
-                  WHEN v = 5 THEN 'https://site' || h
-                    || '.example.com/p/' || c
-                  ELSE 'https://site' || h || '.example.com/p/' || c
-                    || '?a=1&b=2'
-             END AS canonical_url
-      FROM g)
-    SELECT canonical_url, count(*)::BIGINT AS n_docs,
-           min(doc_id)::BIGINT AS keeper
-    FROM canon GROUP BY canonical_url
-    """,
-)
-def f71_url_canon_dedup(spark, sf):
-    """Crawl-style URL dedup: the REAL canonicalizer
-    (functions/urls.py `canonicalize_url` — try_parse_url parts,
-    case-fold, default-port strip, fragment drop, tracking-param
-    removal, bytewise param sort, trailing-slash strip) runs over six
-    deterministic messy spellings derived from doc_id, and the oracle
-    states the expected canonical ANALYTICALLY (never re-running the
-    canonicalizer — the f69 pattern). Spellings v0..v5 per doc:
-    clean / case+param-order mangled / default port + trailing slash +
-    fragment / tracking params injected / genuinely different
-    scheme+port 8080 (must NOT merge) / no query. v0-v3 collapse to one
-    key; v4 and v5 stay distinct — a canonicalizer that over-merges
-    (strips 8080) or under-merges (keeps utm_*) hash-mismatches.
-
-    Scale shape: per-row codegen'd canonicalization at scan speed + one
-    partial-aggregatable groupBy on the canonical key (urls.py
-    docstring; hot keys collapse map-side)."""
-    from borsa_spark.functions.urls import url_dedup_groups
-
-    d = F.col("doc_id")
-    c = (d % 40).cast("string")
-    h = ((d % 40) % 8).cast("string")
-    v = F.floor(d / 40).cast("long") % 6
-    raw = (
-        F.when(v == 1, F.concat(
-            F.lit("HTTPS://Site"), h, F.lit(".EXAMPLE.com/p/"), c,
-            F.lit("?b=2&a=1")))
-        .when(v == 2, F.concat(
-            F.lit("https://site"), h, F.lit(".example.com:443/p/"), c,
-            F.lit("/?a=1&b=2#frag")))
-        .when(v == 3, F.concat(
-            F.lit("https://site"), h, F.lit(".example.com/p/"), c,
-            F.lit("?utm_source=news&a=1&gclid=g"), d.cast("string"),
-            F.lit("&b=2")))
-        .when(v == 4, F.concat(
-            F.lit("http://site"), h, F.lit(".example.com:8080/p/"), c,
-            F.lit("?a=1&b=2")))
-        .when(v == 5, F.concat(
-            F.lit("https://site"), h, F.lit(".example.com/p/"), c))
-        .otherwise(F.concat(
-            F.lit("https://site"), h, F.lit(".example.com/p/"), c,
-            F.lit("?a=1&b=2")))
-    )
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id", raw.alias("url")
-    )
-    return url_dedup_groups(docs)
-
-
 @query("f72_paragraph_dedup", None)
 def f72_paragraph_dedup(spark, sf):
     """Dolma/Gopher paragraph-level exact dedup accounting
@@ -7856,70 +7785,6 @@ def f83_corpus_card(spark, sf):
 
 
 @query(
-    "f84_html_extract",
-    """
-    WITH g AS (SELECT doc_id, text, doc_id % 4 AS v FROM documents)
-    SELECT doc_id,
-           CASE WHEN v <= 1 THEN text ELSE '' END AS extracted,
-           (CASE WHEN v <= 1 THEN 1 ELSE 0 END)::BIGINT AS kept_blocks
-    FROM g
-    """,
-)
-def f84_html_extract(spark, sf):
-    """Crawl stage zero: HTML-to-text extraction with jusText/C4
-    boilerplate rules (functions/html.py `html_extract_docs` — script/
-    style/comment strip, block split on block-level tags, keep iff
-    visible length >= 30 and link density <= 0.3; all JVM regex/array
-    ops, no UDF). The fixture wraps each document's text in messy HTML
-    generated ANALYTICALLY from doc_id (the f71 pattern — the oracle
-    states the expected text exactly, never re-running the extractor):
-    every page carries a script with stopword junk, a style block, an
-    HTML comment, a link-dominated nav (33 visible chars, 32 of them
-    anchor text — dropped by DENSITY, not length), and a 13-char footer
-    (dropped by LENGTH); the content block varies by v = doc_id % 4:
-    v0 plain <p>, v1 uppercase tags + inline <B> + newlines (extraction
-    must normalize to the bare text), v2 fully link-wrapped (density 1.0
-    -> dropped), v3 truncated to 20 chars (-> dropped). An extractor
-    that leaks script/comment text, misses the nav, or mis-normalizes
-    whitespace hash-mismatches.
-
-    Scale shape: per-row codegen'd regex/array projection at scan
-    speed, zero shuffle — the exact shape stage zero must have at
-    100 TB (html.py module docstring)."""
-    from borsa_spark.functions.html import html_extract_docs
-
-    d = F.col("doc_id")
-    v = d % 4
-    t = F.col("text")
-    content = (
-        F.when(v == 1, F.concat(
-            F.lit('<P CLASS="x">\n<B>'), t, F.lit("</B>\n</P>")))
-        .when(v == 2, F.concat(
-            F.lit('<p><a href="/x">'), t, F.lit("</a></p>")))
-        .when(v == 3, F.concat(
-            F.lit("<p>"), F.substring("text", 1, 20), F.lit("</p>")))
-        .otherwise(F.concat(F.lit("<p>"), t, F.lit("</p>")))
-    )
-    html = F.concat(
-        F.lit(
-            '<html><head><title>T</title>'
-            '<SCRIPT type="text/javascript">'
-            'if(a<b){alert("junk the of and to in")}</SCRIPT>'
-            "<style>.c{color:red}</style></head><body>"
-            "<!-- hidden the of and boilerplate -->"
-            '<div><a href="/a">home</a> '
-            '<a href="/b">about us and more links here</a></div>'
-        ),
-        content,
-        F.lit("<div>(c) 2026 corp</div></body></html>"),
-    )
-    crawl = load_table(spark, sf, "documents").select(
-        "doc_id", html.alias("html")
-    )
-    return html_extract_docs(crawl)
-
-
-@query(
     "f86_c4_line_filter",
     """
     WITH g AS (
@@ -7944,9 +7809,8 @@ def f86_c4_line_filter(spark, sf):
     (functions/text.py `c4_line_filter`, Raffel et al. 2020 §2.2):
     LINE rules — terminal punctuation, >= 3 words, no 'javascript';
     PAGE rule — lorem-ipsum / curly-brace pages flagged whole. One
-    in-row array expression, the text-side stage between f84's
-    block-level HTML extraction and document scoring. Fixture lines
-    are generated ANALYTICALLY from doc_id (the f84 pattern) with
+    in-row array expression, the text-side stage before document
+    scoring. Fixture lines are generated ANALYTICALLY from doc_id with
     every rule load-bearing: a good sentence (kept), a 2-word line
     (dropped by MIN WORDS), a 9-word no-punctuation line (dropped by
     TERMINAL), a 'javascript' line (dropped by the LINE blocklist),
@@ -7957,7 +7821,7 @@ def f86_c4_line_filter(spark, sf):
     any line rule hash-mismatches.
 
     Scale shape: per-row codegen'd array ops at scan speed, zero
-    shuffle (plan-guarded with f84)."""
+    shuffle (plan-guarded)."""
     from borsa_spark.functions.text import c4_line_filter
 
     d = F.col("doc_id")
@@ -9150,542 +9014,18 @@ def c13_image_crawl_clusters(spark, sf):
     )
 
 
-# --- f96: WARC ingestion, oracle-faced ------------------------------------
-
-#: f96 fixture boilerplate <p> (>= 30 visible chars so extraction
-#: keeps it; the nav div is >= 30 chars too, so only the link-density
-#: rule drops it — both extraction rules stay load-bearing)
-_F96_BOILER = "shared warc boilerplate sentence kept by extraction rules."
-#: planted inside 404 bodies: a fake record trailer + version line +
-#: header block. A parser that scans for separators instead of
-#: honoring Content-Length desyncs HERE and corrupts every subsequent
-#: record in the file (kept docs included) — the oracle then
-#: hash-mismatches. The Content-Length walk never looks at it.
-_F96_TRAP = (
-    b"x\r\n\r\nWARC/1.0\r\nWARC-Type: response\r\n"
-    b"Content-Length: 0\r\n\r\n\r\n\r\ny"
-)
-
-
-def _f96_html(did: int) -> str:
-    """Deterministic per-doc HTML (the f84 chrome shape): script/style/
-    comment stripped, nav dropped by LINK DENSITY (not length), footer
-    dropped by length, exactly two content <p> blocks kept."""
-    return (
-        '<html><head><script>track("x")</script>'
-        "<style>.n{color:red}</style></head><body>"
-        "<!-- chrome comment -->"
-        '<div><a href="/">home</a> '
-        '<a href="/m">more navigation links here</a></div>'
-        f"<p>warc doc {did} body text for the extraction fixture "
-        f"x{did}.</p>"
-        f"<p>{_F96_BOILER}</p>"
-        "<div>(c) warc</div></body></html>"
-    )
-
-
 def _warc_n_files(spark, n_records: int) -> int:
     """Corpus-proportional WARC fixture file count (~10k records/file,
     floor 8): one task per file is the walk's parallelism model, so the
     record-proportional term keeps drill tiers parallel (500k records
     -> 50 files). A session-parallelism floor was tried in round 13 and
-    REJECTED by interleaved A/B at sf0.1 (f96 min 3.9 s at 8 files vs
-    5.7 s at 32 — per-file encode/walk fixed cost dominates when files
-    hold ~1k records; the floor lost every interleaved pair). File
+    REJECTED by interleaved A/B at sf0.1 (8 files beat 32 — per-file
+    encode/walk fixed cost dominates when files hold ~1k records; the
+    floor lost every interleaved pair). File
     assignment never affects any output relation. ``spark`` kept in the
     signature so the sizing policy stays a one-line change."""
     del spark  # sizing is corpus-proportional, not session-shaped
     return max(8, n_records // 10_000)
-
-
-def _f96_records(row: dict):
-    """WARC records for one doc_id — every header rule load-bearing:
-
-    - WARC-Type filter: doc_id%5==0 docs add a ``request`` record
-      (same Target-URI) that must be excluded by TYPE, not content;
-    - HTTP status gate: %7==2 → 404 (body carries _F96_TRAP),
-      %11==3 → 301 redirect;
-    - content-type gate: %13==4 → 200 but image/png (binary body);
-    - header-name case-insensitivity: %3==0 docs write every named
-      field lowercase;
-    - LWS continuation folding: %17==5 docs fold WARC-Date across a
-      tab-continued line (parsed value gains the spec's single-space
-      join — the oracle expects exactly that).
-    """
-    from borsa_spark.sources import warc as W
-
-    did = int(row["doc_id"])
-    url = f"https://warc.example.com/doc/{did}"
-    date = "2026-01-01T00:00:00Z" + (
-        "\r\n\t+folded" if did % 17 == 5 else ""
-    )
-
-    def h(name: str) -> str:
-        return name.lower() if did % 3 == 0 else name
-
-    headers = {
-        h("WARC-Target-URI"): url,
-        h("WARC-Date"): date,
-        h("WARC-Record-ID"): f"<urn:borsa:doc:{did}>",
-        h("Content-Type"): "application/http; msgtype=response",
-    }
-    if did % 7 == 2:
-        payload = W.http_response(
-            404, "Not Found", {"Content-Type": "text/html"}, _F96_TRAP
-        )
-    elif did % 11 == 3:
-        payload = W.http_response(
-            301, "Moved", {"Content-Type": "text/html",
-                           "Location": url + "/new"}, b""
-        )
-    elif did % 13 == 4:
-        payload = W.http_response(
-            200, "OK", {"Content-Type": "image/png"},
-            b"\x89PNG\r\n\x1a\n" + bytes([did % 251]),
-        )
-    else:
-        payload = W.http_response(
-            200, "OK", {"Content-Type": "text/html; charset=utf-8"},
-            _f96_html(did).encode("ascii"),
-        )
-    yield W.warc_record("response", headers, payload)
-    if did % 5 == 0:
-        yield W.warc_record(
-            "request",
-            {"WARC-Target-URI": url,
-             "Content-Type": "application/http; msgtype=request"},
-            W.http_request("GET", f"/doc/{did}", "warc.example.com"),
-        )
-
-
-#: the f96 result stated analytically from doc_id — shared VERBATIM by
-#: f98 (split reader): the byte-range input-split layer must be
-#: invisible to the extracted relation
-_F96_ORACLE = f"""
-    SELECT doc_id,
-           'https://warc.example.com/doc/' || doc_id AS url,
-           CASE WHEN doc_id % 17 = 5
-                THEN '2026-01-01T00:00:00Z +folded'
-                ELSE '2026-01-01T00:00:00Z' END AS warc_date,
-           'warc doc ' || doc_id
-             || ' body text for the extraction fixture x' || doc_id
-             || '.' || chr(10) || '{_F96_BOILER}' AS extracted,
-           2::BIGINT AS kept_blocks
-    FROM documents
-    WHERE doc_id % 7 <> 2 AND doc_id % 11 <> 3 AND doc_id % 13 <> 4
-    """
-
-
-@query("f96_warc_extract", _F96_ORACLE)
-def f96_warc_extract(spark, sf):
-    """Crawl stage ZERO, oracle-faced (sources/warc.py): the documents
-    table drives a deterministic WARC fixture — 8 ``.warc.gz`` files,
-    one gzip member per record (the Common Crawl layout), response +
-    request records with planted traps (see `_f96_records`: status/
-    content-type/type gates, lowercase headers, folded WARC-Date, and
-    a fake record boundary INSIDE 404 payloads) — which `read_warc` +
-    `warc_html_docs` + f84's `extract_html` then turn back into
-    extracted text. The oracle states the surviving set and the
-    extracted text analytically from doc_id: a record walk that scans
-    payloads for separators, drops the wrong status class, misses a
-    folded header, or double-counts request records hash-mismatches.
-
-    Scale shape (round 13: `read_warc` wraps the registered ``warc``
-    Python Data Source): ONE BatchScan, one input partition per WARC
-    file (parallelism = file count, the Common Crawl unit), executors
-    streaming the chunked record walk via pyarrow.fs — no binaryFile
-    whole-file materialization, no separate Python stage; the
-    type/status gates and regex extraction are plain column
-    expressions above the scan. The tempdir materialization is the
-    c3/c4 harness pattern (bounded: one row per kept doc)."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.functions.html import extract_html
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    # file count: corpus-proportional with a session-parallelism floor
-    # (see _warc_n_files); assignment never affects the output relation
-    n_files = _warc_n_files(spark, ids.count())
-    ids = ids.withColumn("__file", F.col("doc_id") % n_files)
-    work = tempfile.mkdtemp(prefix="f96_warc_")
-    try:
-        W.write_warc_files(ids, work, _f96_records, "__file", "doc_id")
-        docs = W.warc_html_docs(
-            W.read_warc(spark, work), extra_cols=("warc_date",)
-        )
-        ext = extract_html(F.col("html"))
-        out = docs.select(
-            F.regexp_extract("url", r"/doc/(\d+)$", 1)
-            .cast("long").alias("doc_id"),
-            "url",
-            "warc_date",
-            ext["extracted"].alias("extracted"),
-            ext["kept_blocks"].cast("long").alias("kept_blocks"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-@query("f98_warc_split_extract", _F96_ORACLE)
-def f98_warc_split_extract(spark, sf):
-    """f96's crawl-stage-zero pipeline through the SPLITTABLE reader
-    (`sources/warc.py::read_warc_split`): the identical planted-trap
-    fixture written as ONE ``.warc.gz`` (every record its own gzip
-    member, the Common Crawl layout), then byte-range input splits fan
-    the single file across >1 tasks — each split resyncs to the first
-    validated member boundary (1f8b08 magic + a decompression probe
-    demanding a WARC version line, so payload bytes containing the
-    magic can't fake a boundary) and owns every member starting in its
-    range. Oracle = f96's analytic SQL VERBATIM: a resync that enters
-    mid-record, double-decodes a straddling member, or drops a
-    boundary record hash-mismatches immediately.
-
-    Scale shape: this is the reader for corpora re-packed into few
-    huge WARCs — the one-task-per-file `read_warc` stays the default
-    at Common Crawl's 90k-files-per-dump layout. Round 13: both are
-    the same registered ``warc`` Data Source, byte ranges ARE the
-    scan's input partitions (the old round-robin fan-out Exchange is
-    gone — zero shuffles). Parallelism = ceil(file_bytes /
-    split_bytes) regardless of file count; split bytes stream from
-    the open file, never held whole."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from borsa_spark.functions.html import extract_html
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    # ONE file — the case read_warc cannot parallelize and this can
-    ids = ids.withColumn("__file", F.lit(0))
-    work = tempfile.mkdtemp(prefix="f98_warc_")
-    try:
-        W.write_warc_files(ids, work, _f96_records, "__file", "doc_id")
-        [fname] = _os.listdir(work)
-        fpath = _os.path.join(work, fname)
-        # size splits to force a real fan-out at every SF (>= 8 tasks)
-        split_bytes = max(4096, _os.path.getsize(fpath) // 8)
-        docs = W.warc_html_docs(
-            W.read_warc_split(spark, fpath, split_bytes=split_bytes),
-            extra_cols=("warc_date",),
-        )
-        ext = extract_html(F.col("html"))
-        out = docs.select(
-            F.regexp_extract("url", r"/doc/(\d+)$", 1)
-            .cast("long").alias("doc_id"),
-            "url",
-            "warc_date",
-            ext["extracted"].alias("extracted"),
-            ext["kept_blocks"].cast("long").alias("kept_blocks"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-@query("f101_warc_datasource", _F96_ORACLE)
-def f101_warc_datasource(spark, sf):
-    """The registered ``warc`` Python Data Source driven DIRECTLY —
-    ``spark.read.format("warc").load(dir)`` over f96's planted-trap
-    fixture (`sources/warc_datasource.py`), default ``auto`` split
-    planning: every fixture file is under the 1 GiB threshold, so the
-    source plans one whole-file input partition per file (the Common
-    Crawl unit) and the relation is f96's exactly — oracle VERBATIM.
-    What this witnesses beyond f96/f98 (which wrap the same source
-    with splitting pinned off/on): the format registration, the
-    option surface (pattern/errors/split_bytes parsing), and the
-    auto planner's size-based whole-file choice.
-
-    Scale shape: ONE ``BatchScan warc`` — input partitions are the
-    plan (no fan-out shuffle), executors open files via pyarrow.fs
-    and stream the chunked member walk in bounded Arrow batches; a
-    mixed directory (many crawl-unit files + one re-packed mega-WARC)
-    would get whole-file and byte-range tasks side by side from the
-    same read."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.functions.html import extract_html
-    from borsa_spark.sources import warc as W
-    from borsa_spark.sources import warc_datasource as WD
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    n_files = _warc_n_files(spark, ids.count())
-    ids = ids.withColumn("__file", F.col("doc_id") % n_files)
-    work = tempfile.mkdtemp(prefix="f101_warc_")
-    try:
-        W.write_warc_files(ids, work, _f96_records, "__file", "doc_id")
-        WD.register(spark)
-        rel = (
-            spark.read.format("warc")
-            .option("pattern", "*.warc.gz")
-            .load(work)
-        )
-        docs = W.warc_html_docs(rel, extra_cols=("warc_date",))
-        ext = extract_html(F.col("html"))
-        out = docs.select(
-            F.regexp_extract("url", r"/doc/(\d+)$", 1)
-            .cast("long").alias("doc_id"),
-            "url",
-            "warc_date",
-            ext["extracted"].alias("extracted"),
-            ext["kept_blocks"].cast("long").alias("kept_blocks"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-@query(
-    "f99_warc_cdx_fetch",
-    _F96_ORACLE + " AND doc_id % 3 = 1",
-)
-def f99_warc_cdx_fetch(spark, sf):
-    """CDX index + point fetch (`sources/warc.py::warc_cdx` /
-    `fetch_records`): build the index over f96's planted-trap fixture,
-    filter it by URL predicate (doc_id % 3 = 1, stated on the index
-    relation — the planner prunes THERE), then fetch ONLY the matching
-    members by (file, offset) seek and run the same funnel+extract.
-    Oracle = f96's analytic SQL with the same predicate: a wrong
-    extent, a desynced seek, or an index row missing/duplicated
-    hash-mismatches. This is the Common Crawl CDXJ workflow — the
-    100-TB shape where point lookups stop paying full-scan cost
-    (bytes read ≈ sum of fetched member lengths, never the corpus).
-
-    Scale shape: the index build is one walk (any read's cost, done
-    once per crawl and persisted); the fetch repartitions picked rows
-    by file and seeks forward monotonically within each task."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.functions.html import extract_html
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    n_files = _warc_n_files(spark, ids.count())
-    ids = ids.withColumn("__file", F.col("doc_id") % n_files)
-    work = tempfile.mkdtemp(prefix="f99_warc_")
-    try:
-        W.write_warc_files(ids, work, _f96_records, "__file", "doc_id")
-        idx = W.warc_cdx(spark, work)
-        picked = idx.filter(
-            F.regexp_extract("target_uri", r"/doc/(\d+)$", 1)
-            .cast("long") % 3 == 1
-        )
-        docs = W.warc_html_docs(
-            W.fetch_records(picked), extra_cols=("warc_date",)
-        )
-        ext = extract_html(F.col("html"))
-        out = docs.select(
-            F.regexp_extract("url", r"/doc/(\d+)$", 1)
-            .cast("long").alias("doc_id"),
-            "url",
-            "warc_date",
-            ext["extracted"].alias("extracted"),
-            ext["kept_blocks"].cast("long").alias("kept_blocks"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _f102_url(did: int) -> str:
-    """The f102/c16 fixture's SPELLED URL — deliberately messy the way
-    a real crawl's WARC-Target-URIs are: www-prefixed spellings
-    (did%4), an explicit non-default port (did%9==0) and an explicit
-    DEFAULT port (did%9==5, which SURT must drop), unsorted query
-    params (did%6), and a fragment (did%8==3). Every arm is a doc_id
-    congruence so the DuckDB oracle can restate both the spelling and
-    its SURT key analytically."""
-    host = ("www." if did % 4 == 0 else "") + f"site{did % 13}.example.org"
-    port = ":8080" if did % 9 == 0 else (":443" if did % 9 == 5 else "")
-    q = "?b=2&a=1" if did % 6 == 0 else ""
-    frag = "#top" if did % 8 == 3 else ""
-    return f"https://{host}{port}/doc/{did}{q}{frag}"
-
-
-#: DuckDB spelling of `_f102_url` (kept adjacent so drift is visible)
-_F102_URL_SQL = """
-    'https://' || CASE WHEN doc_id % 4 = 0 THEN 'www.' ELSE '' END
-      || 'site' || (doc_id % 13) || '.example.org'
-      || CASE WHEN doc_id % 9 = 0 THEN ':8080'
-              WHEN doc_id % 9 = 5 THEN ':443' ELSE '' END
-      || '/doc/' || doc_id
-      || CASE WHEN doc_id % 6 = 0 THEN '?b=2&a=1' ELSE '' END
-      || CASE WHEN doc_id % 8 = 3 THEN '#top' ELSE '' END
-"""
-
-
-def _f102_records(row: dict):
-    """One response per doc (404 for did%7==2, else 200 text/html with
-    an analytically-stated body), plus a request record for did%5==0
-    that every index/rollup consumer must filter by WARC-Type."""
-    from borsa_spark.sources import warc as W
-
-    did = int(row["doc_id"])
-    url = _f102_url(did)
-    headers = {
-        "WARC-Target-URI": url,
-        "WARC-Date": "2026-02-01T00:00:00Z",
-        "WARC-Record-ID": f"<urn:borsa:host:{did}>",
-        "Content-Type": "application/http; msgtype=response",
-    }
-    status, reason = (404, "Not Found") if did % 7 == 2 else (200, "OK")
-    body = f"<html><body><p>site doc {did}</p></body></html>"
-    yield W.warc_record(
-        "response", headers,
-        W.http_response(status, reason,
-                        {"Content-Type": "text/html; charset=utf-8"},
-                        body.encode("ascii")),
-    )
-    if did % 5 == 0:
-        yield W.warc_record(
-            "request",
-            {"WARC-Target-URI": url,
-             "Content-Type": "application/http; msgtype=request"},
-            W.http_request("GET", f"/doc/{did}",
-                           f"site{did % 13}.example.org"),
-        )
-
-
-@query(
-    "f102_cdx_columnar_lookup",
-    f"""
-    SELECT doc_id,
-           {_F102_URL_SQL} AS url,
-           '<html><body><p>site doc ' || doc_id
-             || '</p></body></html>' AS html
-    FROM documents
-    WHERE doc_id % 13 = 7 AND doc_id % 7 <> 2
-    """,
-)
-def f102_cdx_columnar_lookup(spark, sf):
-    """The COLUMNAR CDX index end-to-end (`sources/warc.py::
-    cdx_columnar` / `write_cdx_index` / `read_cdx_index` /
-    `lookup_cdx` + `functions/urls.py::surt_key`): index the _f102
-    multi-host fixture, persist it as SURT-range-partitioned sorted
-    parquet, answer a host-scoped lookup (``org,example,site7`` —
-    which must merge the host's www-spelled, explicit-:443, and
-    :8080 variants under one reversed-host prefix) from the
-    PERSISTED index, and fetch + decode exactly the matching members.
-    Oracle: the host's congruence class stated analytically — a SURT
-    that fails to strip www/default ports (splitting the host), an
-    index file whose range leaks rows, or a fetch that desyncs
-    hash-mismatches. This is the Common Crawl columnar-index workflow
-    (the public cc-index-table: parquet sorted on url_surtkey).
-
-    Scale shape: the lookup plans as ONE parquet scan with
-    StringStartsWith(surt) pushed into it — file-level pruning from
-    the writer's disjoint ranges, row-group pruning from the sort
-    (pinned in TestRound13PlanShapes); fetch I/O ≈ the picked
-    members' bytes. At crawl scale the index is ~0.1% of the corpus
-    and a host query touches one or two of its files."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    n_files = _warc_n_files(spark, ids.count())
-    ids = ids.withColumn("__file", F.col("doc_id") % n_files)
-    work = tempfile.mkdtemp(prefix="f102_warc_")
-    idx_dir = tempfile.mkdtemp(prefix="f102_cdx_")
-    try:
-        W.write_warc_files(ids, work, _f102_records, "__file", "doc_id")
-        W.write_cdx_index(W.warc_cdx(spark, work), idx_dir,
-                          index_files=4)
-        hit = W.lookup_cdx(W.read_cdx_index(spark, idx_dir),
-                           "org,example,site7")
-        docs = W.warc_html_docs(W.fetch_records(hit))
-        out = docs.select(
-            F.regexp_extract("url", r"/doc/(\d+)", 1)
-            .cast("long").alias("doc_id"),
-            "url",
-            "html",
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(idx_dir, ignore_errors=True)
-
-
-@query(
-    "c16_host_index_rollup",
-    """
-    SELECT 'org,example,site' || (doc_id % 13) AS surt_host,
-           COUNT(*)::BIGINT AS n_pages,
-           SUM(CASE WHEN doc_id % 7 <> 2 THEN 1 ELSE 0 END)::BIGINT
-             AS n_ok,
-           SUM(CASE WHEN doc_id % 7 = 2 THEN 1 ELSE 0 END)::BIGINT
-             AS n_missing,
-           SUM(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)::BIGINT
-             AS n_www_spellings,
-           SUM(CASE WHEN doc_id % 6 = 0 THEN 1 ELSE 0 END)::BIGINT
-             AS n_query_urls
-    FROM documents
-    GROUP BY surt_host
-    """,
-)
-def c16_host_index_rollup(spark, sf):
-    """Host-level crawl analytics from the columnar CDX index ALONE —
-    the Common Crawl "host index" artifact (public: per-host page/
-    status/spelling statistics computed from the index, never the
-    payloads): group the persisted index by SURT host key (the
-    reversed-host prefix, port stripped) and count pages, 2xx/404
-    splits, www-spelled and query-carrying URL variants per host.
-    Request records must be excluded by WARC-Type; the www and
-    explicit-port spellings must land under the SAME host key.
-
-    Scale shape: ONE parquet scan of the index (payload bytes never
-    read — for a 100-TB crawl the scan is ~100 GB of index), a
-    regexp projection, one partial-aggregated groupBy keyed on
-    ~hosts (tens of millions at crawl scale, naturally
-    pre-clustered by the index sort so the shuffle's map-side
-    combine is maximally effective)."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    n_files = _warc_n_files(spark, ids.count())
-    ids = ids.withColumn("__file", F.col("doc_id") % n_files)
-    work = tempfile.mkdtemp(prefix="c16_warc_")
-    idx_dir = tempfile.mkdtemp(prefix="c16_cdx_")
-    try:
-        W.write_warc_files(ids, work, _f102_records, "__file", "doc_id")
-        W.write_cdx_index(W.warc_cdx(spark, work), idx_dir,
-                          index_files=4)
-        idx = W.read_cdx_index(spark, idx_dir)
-        out = (
-            idx.filter(F.col("warc_type") == "response")
-            .select(
-                F.regexp_extract("surt", r"^([^):]*)", 1)
-                .alias("surt_host"),
-                "target_uri",
-                "http_status",
-            )
-            .groupBy("surt_host")
-            .agg(
-                F.count("*").cast("long").alias("n_pages"),
-                F.sum((F.col("http_status") == 200).cast("long"))
-                .cast("long").alias("n_ok"),
-                F.sum((F.col("http_status") == 404).cast("long"))
-                .cast("long").alias("n_missing"),
-                F.sum(F.col("target_uri").startswith("https://www.")
-                      .cast("long")).cast("long")
-                .alias("n_www_spellings"),
-                F.sum(F.col("target_uri").contains("?").cast("long"))
-                .cast("long").alias("n_query_urls"),
-            )
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(idx_dir, ignore_errors=True)
 
 
 def _c15_records(row: dict):
@@ -9834,527 +9174,9 @@ def c15_crawl_link_rank(spark, sf):
         shutil.rmtree(work, ignore_errors=True)
 
 
-_F100_U = "'https://link.example.com/doc/' || "
-
-
-@query(
-    "f100_wat_sidecar",
-    f"""
-    WITH ids AS (
-      SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS rn
-      FROM documents),
-    nn AS (SELECT count(*) AS n FROM documents),
-    -- target ranks as plain columns FIRST, so both lookups hash-join
-    -- on column equality (a 3-way join on modular expressions sends
-    -- DuckDB into a nested loop — measured 200x slower at sf0.1)
-    want AS (
-      SELECT doc_id,
-             (rn + 1) % nn.n AS rn1,
-             (rn + doc_id % 11 + 2) % nn.n AS rn2
-      FROM ids CROSS JOIN nn),
-    tgt AS (
-      SELECT w.doc_id, {_F100_U}b.doc_id AS u1, {_F100_U}c.doc_id AS u2
-      FROM want w
-      JOIN ids b ON b.rn = w.rn1
-      JOIN ids c ON c.rn = w.rn2)
-    SELECT doc_id,
-           200::BIGINT AS status,
-           'text/html' AS content_type,
-           CASE WHEN u1 = u2 THEN u1
-                WHEN u1 < u2 THEN u1 || ',' || u2
-                ELSE u2 || ',' || u1 END AS outlinks_csv
-    FROM tgt
-    """,
-)
-def f100_wat_sidecar(spark, sf):
-    """The WARC → WAT derivation, oracle-faced: c15's link fixture
-    (every page carries the ring + skip outlinks) becomes WAT metadata
-    records (`wat_from_records` — HTTP envelope + sorted distinct
-    outlinks as JSON, all scan-fused column expressions), written as a
-    sidecar (`write_wat_files`), read back (`read_wat`), and parsed
-    with `from_json`. The oracle recomputes each page's outlink set
-    analytically (the same window + modular joins as c15) and the
-    envelope constants — a dropped/phantom link, a lost envelope
-    field, or a JSON shape drift hash-mismatches.
-
-    Scale shape: WAT is the read-once artifact for link analysis —
-    built in the same pass as any WARC read, then consumed WITHOUT
-    decompressing page bodies again (the Common Crawl WAT contract).
-    The fixture window is construction-only, as in c15."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    n = ids.count()
-    w = Window.orderBy("doc_id")
-    base = ids.withColumn("rn", F.row_number().over(w) - 1)
-    rn_ids = base.select(F.col("doc_id").alias("t"),
-                         F.col("rn").alias("trn"))
-    src = (
-        base.join(
-            rn_ids.withColumnRenamed("t", "t1")
-            .withColumnRenamed("trn", "rn1"),
-            (F.col("rn") + 1) % n == F.col("rn1"),
-        )
-        .join(
-            rn_ids.withColumnRenamed("t", "t2")
-            .withColumnRenamed("trn", "rn2"),
-            (F.col("rn") + F.col("doc_id") % 11 + 2) % n
-            == F.col("rn2"),
-        )
-        .select("doc_id", "t1", "t2")
-        .withColumn("__file", F.col("doc_id") % _warc_n_files(spark, n))
-    )
-    work = tempfile.mkdtemp(prefix="f100_warc_")
-    try:
-        W.write_warc_files(src, work, _c15_records, "__file", "doc_id")
-        wat = W.wat_from_records(W.read_warc(spark, work))
-        sidecar = tempfile.mkdtemp(prefix="f100_wat_")
-        try:
-            W.write_wat_files(
-                wat.withColumn(
-                    "__file",
-                    F.regexp_extract("url", r"/doc/(\d+)$", 1)
-                    .cast("long") % _warc_n_files(spark, n),
-                ),
-                sidecar,
-            )
-            parsed = W.read_wat(spark, sidecar).select(
-                F.from_json(
-                    "wat",
-                    "url string, http struct<status:long, "
-                    "content_type:string>, outlinks array<string>",
-                ).alias("w"),
-            )
-            out = parsed.select(
-                F.regexp_extract("w.url", r"/doc/(\d+)$", 1)
-                .cast("long").alias("doc_id"),
-                F.col("w.http.status").alias("status"),
-                F.col("w.http.content_type").alias("content_type"),
-                F.array_join("w.outlinks", ",").alias("outlinks_csv"),
-            )
-            return spark.createDataFrame(out.collect(), out.schema)
-        finally:
-            shutil.rmtree(sidecar, ignore_errors=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-# --- c11: end-to-end crawl corpus-prep DAG -------------------------------
-
-#: c11 fixture lines (each its own <p> block, every one >= 30 visible
-#: chars so EXTRACTION keeps all content lines and each later stage's
-#: drop is attributable to exactly one rule)
-_C11_L2 = "please enable javascript to view this page now"
-_C11_L3 = "subscribe to our newsletter for daily updates."
-_C11_L4 = "dup slow crash dup slow crash in nightly builds."
-_C11_L5 = "lorem ipsum dolor sit amet consectetur adipiscing elit."
-_C11_CHROME = (
-    '<html><head><script type="text/javascript">'
-    'if(a<b){track("the of and to in")}</script>'
-    "<style>.n{color:red}</style></head><body>"
-    "<!-- hidden the of and comment -->"
-    '<div><a href="/">home</a> '
-    '<a href="/about">about us and other navigation</a></div>'
-)
-_C11_FOOTER = "<div>(c) 2026 corp</div></body></html>"
-
-
-def _c11_stages(spark, sf) -> dict:
-    """The c11 pipeline, one stage relation per key — the full crawl
-    corpus-prep lifecycle composed from the round-7/8/9 stage
-    operators (mirrors the reference's end-to-end router lifecycle
-    discipline, `borsa/src/router/history.rs` merge pipeline, at the
-    LLM-data layer the Spark engine adds):
-
-        fixture -> f84 extract -> f71 URL dedup -> f86 line filter ->
-        f53 blocklist -> f1 exact dedup -> paragraph dedup (round 9,
-        `dedup.drop_repeated_paragraphs`) -> f85 trained langid
-
-    Single corpus scan: every stage through the blocklist is a row-
-    local projection/filter fused into the scan; the relation is
-    persisted ONCE before the first multi-consumer stage (URL dedup's
-    count+join) so dedup group-bys, the paragraph rewrite, and the NB
-    model's several passes all read the cache, never the parquet
-    again (plan-guarded in tests/test_plan_shapes.py). Round 11 split
-    the fixture (`_c11_crawl_fixture`) from the pipeline
-    (`_c11_stages_from_crawl`) so c14 can drive the IDENTICAL stages
-    from WARC bytes instead of a fixture column."""
-    crawl = _c11_crawl_fixture(spark, sf)
-    return _c11_stages_from_crawl(crawl)
-
-
-def _c11_crawl_fixture(spark, sf) -> DataFrame:
-    """(doc_id, lang, html, url): the c11 synthetic crawl — messy
-    chrome-wrapped HTML + tracking-params URLs, every later stage's
-    drop attributable to exactly one planted rule (see _c11_stages)."""
-    from borsa_spark.functions.langid import langid_fixture_spark_sql
-
-    d = F.col("doc_id")
-    # NOT widened (round-13 A/B): the c11 DAG fans this scan out to
-    # hundreds of pruning-variant consumers (langid panel + stage
-    # relations); a widen repartition duplicates into one Exchange per
-    # variant (462 -> 910 plan nodes measured) for a wall wash at
-    # sf0.1 — the widen only pays in single-consumer pipelines
-    base = load_table(spark, sf, "documents").select(
-        "doc_id",
-        F.when(d % 10 == 9, d - 9).otherwise(d).alias("__eff"),
-        F.when(d % 10 == 7, d - 7).otherwise(d).alias("__uid"),
-    )
-    # fixture text/lang derive from __eff (so %10==9 docs are content
-    # copies of their base — the exact-dedup plant): alias __eff to
-    # doc_id, apply the shared f85 fixture expressions, restore
-    fxd = (
-        base.select(
-            F.col("doc_id").alias("__real"), "__uid",
-            F.col("__eff").alias("doc_id"),
-        )
-        .selectExpr("__real", "__uid", "doc_id",
-                    *langid_fixture_spark_sql())
-        .select(F.col("__real").alias("doc_id"), "__uid", "lang", "text",
-                F.col("doc_id").alias("__eff"))
-    )
-    r = F.col("doc_id")
-    # L1 is salted with the EFF id: the shared f85 pool text alone has
-    # only ~10^2 distinct values, which would hand exact-dedup the
-    # whole corpus; the salt makes the planted %10==9 copies (same
-    # __eff -> same salt) the only exact duplicates by construction
-    html = F.concat(
-        F.lit(_C11_CHROME),
-        F.lit("<p>"), F.col("text"),
-        F.lit(" x"), F.col("__eff").cast("string"), F.lit("."),
-        F.lit("</p>"),
-        F.lit(f"<p>{_C11_L2}</p><p>{_C11_L3}</p>"),
-        F.when(r % 7 == 3, F.lit(f"<p>{_C11_L4}</p>")).otherwise(F.lit("")),
-        F.when(r % 11 == 4, F.lit(f"<p>{_C11_L5}</p>")).otherwise(F.lit("")),
-        F.lit(_C11_FOOTER),
-    )
-    url = F.concat(
-        F.lit("HTTPS://Crawl.example.com/doc/"),
-        F.col("__uid").cast("string"),
-        F.lit("?utm_source=feed&gclid=g"), r.cast("string"),
-    )
-    return fxd.select("doc_id", "lang",
-                      html.alias("html"), url.alias("url"))
-
-
-def _c11_stages_from_crawl(crawl: DataFrame) -> dict:
-    """The c11 pipeline from any (doc_id, lang, html, url) crawl
-    relation — the c11 fixture column or c14's WARC-decoded bytes."""
-    from borsa_spark.functions.dedup import drop_repeated_paragraphs
-    from borsa_spark.functions.html import extract_html
-    from borsa_spark.functions.text import c4_line_filter, hash_bucket
-    from borsa_spark.functions.urls import canonicalize_url
-
-    ext = extract_html(F.col("html"))
-    extracted = crawl.select(
-        "doc_id", "lang", "url",
-        ext["extracted"].alias("extracted"),
-        ext["kept_blocks"].cast("long").alias("kept_blocks"),
-    ).filter(F.col("kept_blocks") > 0)
-    # ONE corpus materialization before the first multi-consumer stage
-    extracted = extracted.withColumn(
-        "__canon", canonicalize_url(F.col("url"))
-    ).persist()
-
-    def keep_first(df, key, cols):
-        """min-doc_id-per-key survivor selection: partial-aggregatable
-        groupBy + equi-join back (the drop_repeated_paragraphs shape —
-        no corpus-sized row_number partition)."""
-        firsts = df.groupBy(key).agg(F.min("doc_id").alias("__keeper"))
-        return (
-            df.join(firsts, key)
-            .filter(F.col("doc_id") == F.col("__keeper"))
-            .select(*cols)
-        )
-
-    urld = keep_first(extracted, "__canon",
-                      ["doc_id", "lang", "extracted"])
-
-    c4 = c4_line_filter(F.col("extracted"))
-    lined = (
-        urld.select(
-            "doc_id", "lang",
-            c4["clean_text"].alias("text"),
-            c4["n_kept"].alias("__n_kept"),
-            c4["page_flagged"].alias("__flagged"),
-        )
-        .filter((F.col("__n_kept") > 0) & ~F.col("__flagged"))
-        .select("doc_id", "lang", "text")
-    )
-
-    toks = F.split(F.col("text"), "\\s+")
-    hits = F.filter(toks, lambda w: w.isin(*_BLOCKLIST))
-    blocked = lined.filter(
-        F.size(hits) <= _BLOCK_DENSITY * F.size(toks)
-    )
-
-    exd = keep_first(
-        blocked.withColumn("__h", F.md5(F.col("text"))),
-        "__h", ["doc_id", "lang", "text"],
-    )
-
-    parad = drop_repeated_paragraphs(exd).persist()
-    return {
-        "fixture": crawl,
-        "extracted": extracted,
-        "url_deduped": urld,
-        "line_filtered": lined,
-        "blocklisted": blocked,
-        "exact_deduped": exd,
-        "para_deduped": parad,
-        "hash_bucket": hash_bucket,
-    }
-
-
-def c11_stage_counts(spark, sf) -> dict:
-    """Per-stage corpus sizes (tests assert every stage is load-
-    bearing); 'boilerplate_cut' = docs the paragraph rewrite shrank."""
-    s = _c11_stages(spark, sf)
-    pre = s["exact_deduped"].select(
-        "doc_id", F.length("text").alias("__pre")
-    )
-    cut = (
-        s["para_deduped"].select("doc_id", F.length("text").alias("__post"))
-        .join(pre, "doc_id")
-        .filter(F.col("__post") < F.col("__pre"))
-        .count()
-    )
-    out = {
-        k: s[k].count()
-        for k in ("fixture", "extracted", "url_deduped", "line_filtered",
-                  "blocklisted", "exact_deduped", "para_deduped")
-    }
-    out["boilerplate_cut"] = cut
-    s["extracted"].unpersist()
-    s["para_deduped"].unpersist()
-    return out
-
-
-@query("c11_crawl_corpus_prep", None)
-def c11_crawl_corpus_prep(spark, sf):
-    """End-to-end crawl corpus prep, oracle-faced: raw messy HTML ->
-    boilerplate extraction (f84 rules) -> canonical-URL dedup (f71's
-    real canonicalizer) -> C4 line/page cleaning (f86) -> blocklist
-    density gate (f53) -> exact doc dedup (f1) -> cross-doc paragraph
-    dedup (round 9 `drop_repeated_paragraphs`) -> trained char-bigram
-    langid (f85) scored on the md5-holdout survivors. Every stage is
-    LOAD-BEARING on the fixture (tests/test_crawl_e2e.py pins that
-    each one drops or rewrites docs): tracking-params URLs collapse
-    10% of docs, the lorem page flag removes ~9%, the blocklist line
-    ~14%, planted content copies (doc_id%10==9 carries base
-    doc_id-9's text) fall to exact dedup, and the shared newsletter
-    boilerplate line survives in exactly ONE document corpus-wide.
-    The oracle recomposes every stage in DuckDB SQL — generically for
-    line filter / blocklist / both dedups / the NB closed form
-    (sql_drop_repeated_paragraphs, sql_charngram_nb_langid); the
-    extraction and canonical-URL results are stated analytically from
-    doc_id, the f84/f71 oracle pattern (those operators' own gates
-    cover their rules bit-for-bit).
-
-    Scale shape: one corpus scan fused through extraction+cleaning
-    projections, persisted once before the dedup group-bys (the
-    multi-consumer point); every dedup is a partial-aggregatable
-    min_by groupBy + equi-join back — no windows over corpus-sized
-    partitions; the NB model is charset²-bounded broadcast
-    (langid.py). See _c11_stages."""
-    from borsa_spark.functions.langid import charngram_nb_langid
-
-    s = _c11_stages(spark, sf)
-    bkt = s["hash_bucket"](F.col("doc_id"), "c11", 10)
-    scored = charngram_nb_langid(s["para_deduped"], train=bkt < 8)
-    return scored.filter(
-        s["hash_bucket"](F.col("doc_id"), "c11", 10) >= 8
-    )
-
-
-def _c11_oracle_sql() -> str:
-    """The c11 oracle: the full pipeline as one nested-CTE DuckDB
-    query, stage for stage (see c11_crawl_corpus_prep docstring for
-    which stages are recomputed generically vs stated analytically)."""
-    from borsa_spark.functions.dedup import sql_drop_repeated_paragraphs
-    from borsa_spark.functions.langid import (
-        langid_fixture_duckdb_sql,
-        sql_charngram_nb_langid,
-    )
-    from borsa_spark.functions.text import sql_hash_bucket
-
-    blk = ", ".join(f"'{w}'" for w in _BLOCKLIST)
-    pipeline = f"""
-    WITH fx AS ({langid_fixture_duckdb_sql()}),
-    ids AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 10 = 9 THEN doc_id - 9
-                  ELSE doc_id END AS eff,
-             CASE WHEN doc_id % 10 = 7 THEN doc_id - 7
-                  ELSE doc_id END AS uid
-      FROM documents),
-    ext AS (
-      SELECT i.doc_id, f.lang, i.uid,
-             f.text || ' x' || i.eff::VARCHAR || '.'
-               || chr(10) || '{_C11_L2}'
-               || chr(10) || '{_C11_L3}'
-               || CASE WHEN i.doc_id % 7 = 3
-                       THEN chr(10) || '{_C11_L4}' ELSE '' END
-               || CASE WHEN i.doc_id % 11 = 4
-                       THEN chr(10) || '{_C11_L5}' ELSE '' END
-               AS ext
-      FROM ids i JOIN fx f ON f.doc_id = i.eff),
-    urld AS (
-      SELECT doc_id, lang, ext FROM ext
-      QUALIFY row_number() OVER (PARTITION BY uid ORDER BY doc_id) = 1),
-    lined AS (
-      SELECT doc_id, lang,
-             array_to_string(list_transform(
-               list_filter(string_split(ext, chr(10)),
-                 l -> regexp_matches(trim(l), '[.!?"'']$')
-                      AND len(list_filter(
-                            regexp_split_to_array(trim(l), '\\s+'),
-                            w -> w <> '')) >= 3
-                      AND NOT contains(lower(l), 'javascript')),
-               l -> trim(l)), chr(10)) AS text
-      FROM urld
-      WHERE NOT contains(lower(ext), 'lorem ipsum')
-        AND NOT contains(ext, '{{')),
-    blocked AS (
-      SELECT doc_id, lang, text FROM lined
-      WHERE length(text) > 0
-        AND len(list_filter(regexp_split_to_array(text, '\\s+'),
-                w -> w IN ({blk})))
-            <= {_BLOCK_DENSITY} *
-               len(regexp_split_to_array(text, '\\s+'))),
-    exd AS (
-      SELECT doc_id, lang, text FROM blocked
-      QUALIFY row_number() OVER (PARTITION BY md5(text)
-                                 ORDER BY doc_id) = 1)
-    SELECT * FROM (
-      {sql_drop_repeated_paragraphs("SELECT * FROM exd",
-                                    extra_cols=("lang",))}
-    )
-    """
-    bkt = sql_hash_bucket("doc_id", "c11", 10)
-    return sql_charngram_nb_langid(
-        pipeline, f"({bkt}) < 8", out_where=f"({bkt}) >= 8"
-    )
-
-
-# --- c14: c11 driven from WARC bytes --------------------------------------
-
-
-def _c14_records(row: dict):
-    """One clean 200/text-html response record per crawl doc — the c11
-    fixture's html and tracking-params url pushed down into real WARC
-    bytes (c14's point is the byte layer, not new traps: f96 owns the
-    adversarial header fixtures)."""
-    from borsa_spark.sources import warc as W
-
-    payload = W.http_response(
-        200, "OK", {"Content-Type": "text/html; charset=utf-8"},
-        row["html"].encode("utf-8"),
-    )
-    yield W.warc_record(
-        "response",
-        {
-            "WARC-Target-URI": row["url"],
-            "WARC-Date": "2026-01-01T00:00:00Z",
-            "WARC-Record-ID": f"<urn:borsa:crawl:{int(row['doc_id'])}>",
-            "Content-Type": "application/http; msgtype=response",
-        },
-        payload,
-    )
-
-
-@query("c14_warc_corpus_prep", None)
-def c14_warc_corpus_prep(spark, sf):
-    """c11's entire corpus-prep DAG driven from WARC BYTES — the proof
-    that the crawl pipeline starts at stage zero and loses nothing to
-    the container layer: the c11 fixture's (html, url) rows are
-    serialized into 8 gzip-member-per-record WARC files
-    (`write_warc_files`), read back through `read_warc` +
-    `warc_html_docs` (the `warc` Data Source scan → status/type/
-    content-type gates → UTF-8 decode), and ONLY then enter the
-    identical stage pipeline (`_c11_stages_from_crawl`: f84 extract →
-    URL dedup → C4 lines → blocklist → exact + paragraph dedup →
-    trained langid on the md5 holdout). The oracle is c11's own full
-    recomposition SQL, verbatim — a hash match means the
-    encode→gzip→parse→decode round trip is invisible to every
-    downstream operator.
-
-    doc_id is recovered from the url's gclid tracking param (the one
-    id-bearing field the fixture carries into WARC headers verbatim,
-    read BEFORE canonicalization strips it); the training label (lang)
-    is re-derived analytically from doc_id exactly as the fixture
-    defines it — at scale that is the id→label side table a real
-    pipeline joins, not crawl content.
-
-    Scale shape: c11's (one persisted multi-consumer corpus relation,
-    min_by dedups, broadcast NB model) with the corpus scan replaced
-    by file-parallel WARC walks; the id→label derivation is a column
-    expression, not a second corpus source."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.functions.langid import (
-        charngram_nb_langid,
-        langid_fixture_spark_sql,
-    )
-    from borsa_spark.sources import warc as W
-
-    src = _c11_crawl_fixture(spark, sf).select(
-        "doc_id", "html", "url"
-    )
-    # corpus-proportional file count (the f96 `_warc_n_files`
-    # convention; assignment never affects the output). Counted on the
-    # RAW documents scan — the fixture is exactly one row per document,
-    # and counting src itself would execute the whole html-build
-    # projection once just to size the file set (a full extra corpus
-    # pass; the raw count folds to parquet metadata)
-    n_files = _warc_n_files(
-        spark, load_table(spark, sf, "documents").count()
-    )
-    src = src.withColumn("__file", F.col("doc_id") % n_files)
-    work = tempfile.mkdtemp(prefix="c14_warc_")
-    try:
-        W.write_warc_files(src, work, _c14_records, "__file", "doc_id")
-        docs = W.warc_html_docs(W.read_warc(spark, work))
-        parsed = docs.withColumn(
-            "doc_id",
-            F.regexp_extract("url", r"gclid=g(\d+)", 1).cast("long"),
-        )
-        # lang at the EFF id (content copies carry their base's lang),
-        # the same alias dance as the c11 fixture
-        eff = F.when(
-            F.col("doc_id") % 10 == 9, F.col("doc_id") - 9
-        ).otherwise(F.col("doc_id"))
-        crawl = (
-            parsed.select(
-                F.col("doc_id").alias("__real"), "html", "url",
-                eff.alias("doc_id"),
-            )
-            .selectExpr("__real", "html", "url",
-                        langid_fixture_spark_sql()[0])
-            .select(F.col("__real").alias("doc_id"), "lang",
-                    "html", "url")
-        )
-        s = _c11_stages_from_crawl(crawl)
-        bkt = s["hash_bucket"](F.col("doc_id"), "c11", 10)
-        scored = charngram_nb_langid(s["para_deduped"], train=bkt < 8)
-        out = scored.filter(
-            s["hash_bucket"](F.col("doc_id"), "c11", 10) >= 8
-        )
-        out = spark.createDataFrame(out.collect(), out.schema)
-        s["extracted"].unpersist()
-        s["para_deduped"].unpersist()
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def _c12_stages(spark, sf) -> dict:
     """Stage relations for c12 (the query and the load-bearing funnel
-    tests share them, the `_c11_stages` pattern)."""
+    tests share them)."""
     from borsa_spark.functions.classifier import hashed_logreg_scores
     from borsa_spark.functions.packing import pack_sequences
     from borsa_spark.functions.text import dsir_gumbel_topk
@@ -10401,8 +9223,8 @@ def c12_stage_counts(spark, sf) -> dict:
     load-bearing: the median gate drops docs, DSIR picks exactly k,
     packing keeps every pick and actually groups docs into bins)."""
     s = _c12_stages(spark, sf)
-    # packed feeds 4 counts below — persist it (the c11_stage_counts
-    # convention) so the DSIR llr scan + Arrow packing run once
+    # packed feeds 4 counts below — persist it so the DSIR llr scan +
+    # Arrow packing run once
     s["packed"].persist()
     out = {
         k: s[k].count()
@@ -10419,13 +9241,12 @@ def c12_stage_counts(spark, sf) -> dict:
 @query("c12_training_mix", None)
 def c12_training_mix(spark, sf):
     """End-to-end training-mix materialization, oracle-faced — the
-    corpus→training-batches half of the lifecycle next to c11's
-    crawl→corpus half, composed from the stage operators' own
-    machinery: f77's in-engine logistic quality classifier gates the
-    corpus (keep prob >= the corpus MEDIAN prob — scale-invariant, and
-    cross-engine exact because 4-decimal probs put the even-n median
-    on a 5-decimal grid, so round(median, 5) absorbs ulp drift in
-    either engine's interpolation),
+    corpus→training-batches half of the lifecycle, composed from the
+    stage operators' own machinery: f77's in-engine logistic quality
+    classifier gates the corpus (keep prob >= the corpus MEDIAN prob —
+    scale-invariant, and cross-engine exact because 4-decimal probs
+    put the even-n median on a 5-decimal grid, so round(median, 5)
+    absorbs ulp drift in either engine's interpolation),
     DSIR Gumbel-top-k (f75) draws a k=100 weighted-without-replacement
     sample from the survivors, f38's greedy first-overflow packing
     bins the sample into 256-token sequences across 8 hash-sharded
@@ -10551,10 +9372,6 @@ def _register_late_oracles() -> None:
         f"({_f85_bkt}) < 8",
         out_where=f"({_f85_bkt}) >= 8",
     )
-    ORACLES["c11_crawl_corpus_prep"] = _c11_oracle_sql()
-    # c14 = c11 from WARC bytes: the SAME recomposition SQL, verbatim —
-    # the whole point is that the byte layer is invisible to the result
-    ORACLES["c14_warc_corpus_prep"] = ORACLES["c11_crawl_corpus_prep"]
     ORACLES["c12_training_mix"] = _c12_oracle_sql()
 
 

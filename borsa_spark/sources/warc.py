@@ -1,4 +1,4 @@
-"""WARC ingestion — crawl stage zero, before `functions/html.py`.
+"""WARC ingestion — crawl stage zero.
 
 A production 100-TB text pipeline does not start from HTML sitting in
 a parquet column; it starts from WARC files (ISO 28500 / WARC 1.1 —
@@ -6,7 +6,7 @@ the Web ARChive format; Common Crawl publishes ~90k of them per crawl,
 ~1 GB each). This module is a stdlib-only WARC codec plus the Spark
 stage that turns a directory of ``*.warc[.gz]`` files into the
 (url, warc_type, http_status, payload) relation every downstream
-operator in this repo consumes (f84 extraction → c11 corpus prep).
+operator in this repo consumes (`warc_html_docs` → c15 link rank).
 
 Format facts the reader relies on (all from the public spec):
 
@@ -48,11 +48,8 @@ nor the decompressed file is ever materialized whole.
 When file sizes dwarf file counts (a corpus re-packed into few huge
 WARCs), `read_warc_split` — the same source with an explicit
 ``split_bytes`` — fans ONE file across byte-range input partitions by
-scanning for validated gzip member boundaries mid-stream; and
-`warc_cdx` + `fetch_records` turn the same seekability into an index
-+ point-read path (the Common Crawl CDXJ workflow) so lookup-shaped
-workloads stop paying full-scan cost. Both exist because of the
-member-per-record layout fact above.
+scanning for validated gzip member boundaries mid-stream — possible
+only because of the member-per-record layout fact above.
 """
 
 from __future__ import annotations
@@ -222,12 +219,12 @@ def _members_from_file(f, start: int, end: int,
                        ) -> Iterator[tuple[int, int, bytes]]:
     """Decompress a multi-member gzip stream from a seekable binary
     file object, yielding ``(member_start, member_end, member_bytes)``
-    (compressed-offset extent — the CDX index records it, and
-    ``raw[start:end]`` is a standalone decodable gzip member) for
-    every member whose START lies in ``[start, end)`` — a member that
-    begins before ``end`` is decoded to completion even when its bytes
-    run past ``end`` (the input-split contract: the task owning a
-    member's first byte owns the whole member).
+    (compressed-offset extent — ``raw[start:end]`` is a standalone
+    decodable gzip member) for every member whose START lies in
+    ``[start, end)`` — a member that begins before ``end`` is decoded
+    to completion even when its bytes run past ``end`` (the input-split
+    contract: the task owning a member's first byte owns the whole
+    member).
 
     zlib.decompressobj(47) stops at each member's end and exposes the
     not-yet-consumed tail as ``unused_data`` — the stdlib seam that
@@ -345,9 +342,8 @@ def _probe_member(f, pos: int, probe_bytes: int = 1 << 16) -> bool:
     nothing is ever LOST). Normally-compressed archives (Common Crawl
     is level 6+) cannot carry verbatim inner members, so the exposure
     is level-0/adversarial inputs; for corpora that may embed
-    archives, `read_warc` (whole-file, immune) or `warc_cdx` +
-    `fetch_records` (authoritative offsets, immune) are the correct
-    readers, and `read_warc_split`'s docstring states the same."""
+    archives, `read_warc` (whole-file, immune) is the correct reader,
+    and `read_warc_split`'s docstring states the same."""
     f.seek(pos)
     d = zlib.decompressobj(47)
     try:
@@ -460,8 +456,8 @@ def _parse_records(
     """THE record-walk core: Content-Length-driven parse over a stream
     of ``(start, end, plaintext)`` members (compressed extents),
     yielding ``(member_start, member_end, ordinal_in_member, headers,
-    payload)`` — the extent is what a CDX index records and what
-    `fetch_records` later reads back standalone. Buffered
+    payload)`` — ``raw[member_start:member_end]`` decodes standalone.
+    Buffered
     incrementally — the working buffer holds at most one record plus
     one member (consumed bytes are compacted after every record), so
     memory is bounded by the largest single record, never the
@@ -763,33 +759,6 @@ def _list_files(path: str, pattern: str):
     return filesystem, sorted(out)
 
 
-def _plan_splits(spark: SparkSession, path: str, pattern: str,
-                 split_bytes: int):
-    """(filesystem, split DataFrame | None): the shared byte-range
-    planner behind `read_warc_split` and `warc_cdx(split_bytes=...)` —
-    a driver-side listing fanned into (path, start, end) ranges, one
-    task per range. None when nothing matches."""
-    if split_bytes < 1:
-        # 0 would die inside range() with an opaque step error and a
-        # negative value would silently plan zero splits (empty
-        # relation instead of a failure) — review catch
-        raise ValueError(
-            f"split_bytes must be >= 1, got {split_bytes}"
-        )
-    filesystem, files = _list_files(path, pattern)
-    splits = [
-        (p, s, min(s + split_bytes, size))
-        for p, size in files
-        for s in range(0, max(size, 1), split_bytes)
-    ]
-    if not splits:
-        return filesystem, None
-    sdf = spark.createDataFrame(
-        splits, "path string, start long, end long"
-    ).repartition(len(splits))
-    return filesystem, sdf
-
-
 def _split_records(
     f, start: int, end: int, lenient: bool, errlog: list,
 ) -> Iterator[tuple[int, int, int, dict[str, str], bytes]]:
@@ -863,8 +832,7 @@ def read_warc_split(spark: SparkSession, path: str,
     inner bytes verbatim) can fool a mid-payload resync into emitting
     the inner records as extra rows. Records are never lost (the
     outer member's owner decodes it whole); for such corpora use
-    `read_warc` or the `warc_cdx` + `fetch_records` path, both
-    immune."""
+    `read_warc`, which is immune."""
     _lenient(errors)  # validate eagerly, before any job runs
     if split_bytes < 1:
         raise ValueError(f"split_bytes must be >= 1, got {split_bytes}")
@@ -878,438 +846,6 @@ def read_warc_split(spark: SparkSession, path: str,
         .option("split_bytes", str(split_bytes))
         .load(path)
     )
-
-
-# ---------------------------------------------------------------------------
-# CDX index + point fetch: query the index, read ONLY the records you need
-# ---------------------------------------------------------------------------
-
-#: the index relation `warc_cdx` emits — one row per record, carrying
-#: the compressed member extent (offset, length) that `fetch_records`
-#: reads back standalone. The shape mirrors Common Crawl's CDXJ index
-#: (filename/offset/length per capture), which exists precisely
-#: because the member-per-record layout makes point reads possible.
-CDX_SCHEMA = StructType(
-    [
-        StructField("warc_file", StringType()),
-        StructField("offset", LongType()),
-        StructField("length", LongType()),
-        StructField("record_ordinal", LongType()),
-        StructField("warc_type", StringType()),
-        StructField("target_uri", StringType()),
-        StructField("warc_date", StringType()),
-        StructField("record_id", StringType()),
-        StructField("http_status", LongType()),
-        StructField("content_length", LongType()),
-    ]
-)
-
-
-def _cdx_error_row(path_, off) -> dict:
-    """Sentinel index row for one lenient-mode parse failure: a
-    malformed member/record must still be COUNTABLE from the index
-    (the same accounting contract `read_warc`'s PARSE_ERROR_TYPE
-    quarantine rows honor — a lenient index build that silently
-    undercounts the crawl would misreport corpus size with no trace).
-    Extent-dependent fields are null (the junk has no decodable
-    extent); ``offset`` locates the failure, and a lenient
-    `fetch_records` over the row reproduces the full error message."""
-    return {
-        "warc_file": path_,
-        "offset": off,
-        "length": None,
-        "record_ordinal": -1,
-        "warc_type": PARSE_ERROR_TYPE,
-        "target_uri": None,
-        "warc_date": None,
-        "record_id": None,
-        "http_status": None,
-        "content_length": None,
-    }
-
-
-def _cdx_batches(batches, lenient: bool = False):
-    """mapInPandas body for `warc_cdx`: the same record walk as
-    `read_warc`, but emitting (extent, headers) index rows — bodies
-    are decoded in passing (inherent to gzip) and dropped, so the
-    index relation is tiny regardless of corpus size. Lenient-mode
-    parse failures emit `_cdx_error_row` sentinels in stream order."""
-    import pandas as pd
-
-    cols = [f.name for f in CDX_SCHEMA.fields]
-    for pdf in batches:
-        for path_, content in zip(pdf["path"], pdf["content"]):
-            raw = bytes(content)
-            rows: list[dict] = []
-            errlog: list = []
-            drained = 0
-
-            def drain_errors():
-                nonlocal drained
-                while drained < len(errlog):
-                    off, _msg = errlog[drained]
-                    rows.append(_cdx_error_row(path_, off))
-                    drained += 1
-
-            members = _members_from_file(io.BytesIO(raw), 0, len(raw),
-                                         lenient=lenient, errlog=errlog)
-            for off, mend, k, hdr, payload in _parse_records(
-                members, lenient, errlog
-            ):
-                drain_errors()  # errors precede the record after them
-                rows.append(_cdx_row(path_, off, mend, k, hdr, payload))
-                if len(rows) >= _BATCH_ROWS:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-            drain_errors()
-            yield pd.DataFrame(rows, columns=cols)
-
-
-def _cdx_row(path_, off, mend, k, hdr, payload) -> dict:
-    full = _record_row(path_, k, hdr, payload)
-    return {
-        "warc_file": path_,
-        "offset": off,
-        "length": mend - off,
-        "record_ordinal": k,
-        "warc_type": full["warc_type"],
-        "target_uri": full["target_uri"],
-        "warc_date": full["warc_date"],
-        "record_id": full["record_id"],
-        "http_status": full["http_status"],
-        "content_length": full["content_length"],
-    }
-
-
-def _cdx_split_batches(batches, filesystem, lenient: bool):
-    """mapInPandas body for the split-planned index build: per
-    (path, start, end) row, emit CDX rows for the range's records —
-    the same extent-tiling as `_cdx_batches`, reading via byte-range
-    seeks instead of binaryFile (so >2 GB files index too)."""
-    import pandas as pd
-
-    cols = [f.name for f in CDX_SCHEMA.fields]
-    for pdf in batches:
-        for path_, start, end in zip(pdf["path"], pdf["start"],
-                                     pdf["end"]):
-            rows: list[dict] = []
-            errlog: list = []
-            drained = 0
-
-            def drain_errors():
-                nonlocal drained
-                while drained < len(errlog):
-                    off, _msg = errlog[drained]
-                    rows.append(_cdx_error_row(path_, off))
-                    drained += 1
-
-            with filesystem.open_input_file(path_) as f:
-                for off, mend, k, hdr, payload in _split_records(
-                    f, int(start), int(end), lenient, errlog
-                ):
-                    drain_errors()
-                    rows.append(
-                        _cdx_row(path_, off, mend, k, hdr, payload)
-                    )
-                    if len(rows) >= _BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                drain_errors()
-            yield pd.DataFrame(rows, columns=cols)
-
-
-def warc_cdx(spark: SparkSession, path: str,
-             pattern: str = "*.warc.gz",
-             errors: str = "strict",
-             split_bytes: int | None = None) -> DataFrame:
-    """Build a CDX-style index over a directory of ``.warc.gz`` files:
-    one row per record with its compressed member extent. Built once
-    per crawl (one full walk — the same cost as any read), the index
-    is a small relation a query planner can filter/join ARBITRARILY
-    (by URL pattern, status, date, type...), and `fetch_records` then
-    reads only the matching members — the 100-TB shape where a
-    point-lookup workload stops paying full-scan cost. Persist it as
-    parquet next to the crawl; Common Crawl publishes exactly this
-    artifact (the CDXJ index) for the same reason.
-
-    Gzip-member files only (the default pattern): a plain ``.warc``
-    has no compressed extents to index — offsets there would not be
-    seekable units, so the index refuses rather than lie.
-
-    ``errors="lenient"``: malformed members/records appear as sentinel
-    rows (``warc_type = PARSE_ERROR_TYPE``, null extent fields, offset
-    set — see `_cdx_error_row`), so a lenient index build never
-    silently undercounts the crawl. One split-path caveat (shared with
-    `read_warc_split`): junk sitting exactly in a split's ENTRY region
-    is skipped by the resync scan without a sentinel — a mid-file
-    entry point cannot distinguish foreign junk from the previous
-    task's member tail.
-
-    ``split_bytes``: plan the index build as byte-range splits
-    (`read_warc_split`'s machinery) instead of one binaryFile task per
-    file — the path for few-huge-file corpora and files past
-    binaryFile's 2 GB cap; identical index rows either way (extents
-    are file properties, not plan properties)."""
-    lenient = _lenient(errors)
-    if split_bytes is not None:
-        filesystem, sdf = _plan_splits(spark, path, pattern,
-                                       split_bytes)
-        if sdf is None:
-            return spark.createDataFrame([], CDX_SCHEMA)
-        return sdf.mapInPandas(
-            lambda it: _cdx_split_batches(it, filesystem, lenient),
-            CDX_SCHEMA,
-        )
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(
-        lambda it: _cdx_batches(it, lenient), CDX_SCHEMA
-    )
-
-
-def _open_any(path: str, filesystem=None):
-    """Executor-side file open for index fetches: handles the plain
-    local paths `_list_files` emits and the ``file:``-scheme URIs
-    binaryFile's path column carries; Hadoop-only scheme spellings
-    (s3a://, s3n://) normalize to pyarrow's s3://, and other schemes
-    resolve through pyarrow's registry. An explicit ``filesystem``
-    short-circuits resolution — REQUIRED for remote CDX relations
-    built via the split planner, whose paths are scheme-less pyarrow
-    paths only that filesystem can interpret (review catch: the local
-    fallback would otherwise open 'bucket/key' relative to the
-    executor cwd)."""
-    from pyarrow import fs as pafs
-
-    if filesystem is not None:
-        return filesystem.open_input_file(path)
-    if path.startswith("file:"):
-        local = path[5:]
-        while local.startswith("//"):
-            local = local[1:]
-        return pafs.LocalFileSystem().open_input_file(local)
-    for hadoop, arrow in (("s3a://", "s3://"), ("s3n://", "s3://")):
-        if path.startswith(hadoop):
-            path = arrow + path[len(hadoop):]
-            break
-    if "://" in path:
-        fs_, rel = pafs.FileSystem.from_uri(path)
-        return fs_.open_input_file(rel)
-    return pafs.LocalFileSystem().open_input_file(path)
-
-
-def _fetch_batches(batches, lenient: bool, filesystem=None):
-    """mapInPandas body for `fetch_records`: rows sorted by (file,
-    offset) so each file opens once per contiguous run and seeks move
-    forward; one member decode per picked extent — bytes read ≈ sum of
-    fetched member lengths, never the file. Output batches bound by
-    rows AND payload bytes, like every other walker here. When the
-    picked relation carries ``record_ordinal``, only the named records
-    of a multi-record member are emitted (a member is the I/O unit,
-    not the predicate unit — review catch)."""
-    import pandas as pd
-
-    cols = [f.name for f in WARC_SCHEMA.fields]
-    for pdf in batches:
-        pdf = pdf.sort_values(["warc_file", "offset"])
-        has_ord = "record_ordinal" in pdf.columns
-        rows: list[dict] = []
-        nbytes = 0
-        cur_path, f = None, None
-        try:
-            groups = pdf.groupby(["warc_file", "offset"], sort=True)
-            for (path_, off), grp in groups:
-                if path_ != cur_path:
-                    if f is not None:
-                        f.close()
-                    cur_path = path_
-                    f = _open_any(path_, filesystem)
-                wanted = (
-                    set(int(x) for x in grp["record_ordinal"])
-                    if has_ord else None
-                )
-                errlog: list = []
-                for moff, _mend, k, hdr, payload in _parse_records(
-                    _members_from_file(f, int(off), int(off) + 1,
-                                       lenient=lenient, errlog=errlog),
-                    lenient, errlog,
-                ):
-                    if wanted is not None and k not in wanted:
-                        continue
-                    rows.append(
-                        _record_row(path_, moff + k, hdr, payload)
-                    )
-                    nbytes += len(payload)
-                for eoff, msg in errlog:
-                    # negative record_index — same disjoint error
-                    # keyspace as the split reader's
-                    rows.append(_error_row(path_, -eoff - 1, eoff, msg))
-                if len(rows) >= _BATCH_ROWS or nbytes >= _BATCH_BYTES:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows, nbytes = [], 0
-        finally:
-            if f is not None:
-                f.close()
-        yield pd.DataFrame(rows, columns=cols)
-
-
-#: fetch fan-out granularity: picked rows partition by
-#: (file, offset >> 27) — 128 MB locality buckets — so a fetch against
-#: FEW huge files still spreads across the cluster instead of
-#: serializing onto one task per file (review catch), while each
-#: task's reads stay file-local and forward-seeking
-_FETCH_BUCKET_SHIFT = 27
-
-
-def fetch_records(cdx: DataFrame, errors: str = "strict",
-                  filesystem=None,
-                  num_tasks: int | None = None) -> DataFrame:
-    """Point-read the records a (filtered) CDX relation names: for each
-    (warc_file, offset[, record_ordinal]) row, seek to the member and
-    decode ONLY it, emitting the same WARC_SCHEMA relation `read_warc`
-    produces (record_index offset-derived, the `read_warc_split`
-    convention; for multi-record members only the picked ordinals are
-    emitted). This is the complement of the scan path: filter the
-    INDEX with arbitrary Spark predicates — the planner prunes there —
-    then pay I/O for exactly the matching members. Picked rows
-    partition by (file, 128 MB offset bucket) and sort by offset
-    within partitions: open-once, forward seeks, and fan-out that
-    scales with picked bytes rather than file count.
-
-    ``filesystem``: pyarrow filesystem for scheme-less remote paths —
-    pass the target store's filesystem when the index was built via
-    `warc_cdx(split_bytes=...)` over s3://... (its paths carry no
-    scheme); local paths and file:/http-style URIs resolve without
-    it.
-
-    ``num_tasks``: fetch fan-out override. Default: ONE lightweight
-    planning job counts the picked set's distinct (file, bucket) keys
-    and the repartition is pinned to exactly that number. The explicit
-    count is load-bearing, not cosmetic: index rows are ~100 bytes, so
-    AQE's partition coalescing sees a "tiny" shuffle and folds the
-    whole picked set into ONE task — while the real cost, the member
-    I/O behind each row, is invisible to it (the round-13 drill
-    measured 72k picked rows / 19 buckets serialized into a single
-    49.8 s task before this pin; an EXPLICIT partition count is the
-    documented AQE escape hatch — coalescing only applies to
-    non-user-specified shuffles)."""
-    lenient = _lenient(errors)
-    pick_cols = ["warc_file", "offset"]
-    if "record_ordinal" in cdx.columns:
-        pick_cols.append("record_ordinal")
-    picked = cdx.select(*pick_cols).distinct()
-    bucket = F.shiftright("offset", _FETCH_BUCKET_SHIFT)
-    if num_tasks is None:
-        # planning job over the (small by design) filtered index —
-        # same role as a file listing; approx is fine, the bucket
-        # hash spreads keys over whatever count comes back
-        num_tasks = max(1, picked.select(
-            F.approx_count_distinct(
-                F.concat_ws("\x00", "warc_file", bucket)
-            )
-        ).first()[0])
-    picked = (
-        picked.repartition(num_tasks, F.col("warc_file"), bucket)
-        .sortWithinPartitions("warc_file", "offset")
-    )
-    return picked.mapInPandas(
-        lambda it: _fetch_batches(it, lenient, filesystem), WARC_SCHEMA
-    )
-
-
-def cdx_columnar(cdx: DataFrame) -> DataFrame:
-    """The CDX relation plus a ``surt`` sort-key column
-    (`functions/urls.py::surt_key` over ``target_uri``) — the key
-    Common Crawl's own columnar index (the public cc-index-table
-    parquet) sorts on (``url_surtkey``). Sentinel/error rows and
-    unparseable URIs get a NULL key: they survive into the columnar
-    index (accounting stays intact — count them with ``surt IS
-    NULL``) but no prefix lookup ever matches them."""
-    from borsa_spark.functions.urls import surt_key
-
-    return cdx.withColumn("surt", surt_key(F.col("target_uri")))
-
-
-def write_cdx_index(cdx: DataFrame, path: str,
-                    index_files: int | None = None,
-                    crawl: str | None = None) -> None:
-    """Persist a CDX relation as a SURT-SORTED columnar (parquet)
-    index — the Common Crawl columnar-index architecture: CDXJ text
-    shards answer sequential range scans; the parquet form answers
-    planner-pruned analytic lookups. ``repartitionByRange`` on the
-    key gives each output file a DISJOINT surt range (file-level
-    pruning from parquet min/max stats), ``sortWithinPartitions``
-    makes every row group's min/max tight (row-group-level pruning),
-    so a host/domain prefix lookup reads O(matching rows), never the
-    index — at Common Crawl scale that is ~3G rows/crawl of index
-    answering a host query by touching one or two files.
-
-    ``index_files``: output file count; default lets the range
-    exchange use ``spark.sql.shuffle.partitions``. (warc_file,
-    offset) ride as secondary range/sort keys so equal-surt runs
-    (re-crawls of one URL) stay deterministic and clustered.
-
-    ``crawl``: incremental maintenance label — the way Common Crawl
-    actually publishes its index (one partition per crawl under
-    ``crawl=CC-MAIN-...``). The build writes to a hive-style
-    ``path/crawl=<label>/`` partition directory: successive crawls
-    APPEND as new partitions (history is never rewritten; the index
-    grows by exactly one crawl's build cost), a re-run of the same
-    label overwrites only its own partition (idempotent retries),
-    and `read_cdx_index` over the parent surfaces ``crawl`` as a
-    partition column whose equality filters prune whole partitions
-    before the surt stats are even consulted. Overwrite-in-place
-    caveat: the idempotent retry is for FAILED builds — a reader
-    already mounted over a partition being rewritten holds a stale
-    file listing and must re-mount (Spark's FILE_NOT_EXIST)."""
-    if index_files is not None and index_files < 1:
-        # same guard class as _plan_splits' split_bytes (review
-        # catch): 0 dies inside repartitionByRange with an opaque
-        # error, negatives should never plan silently
-        raise ValueError("index_files must be >= 1")
-    if crawl is not None:
-        if "/" in crawl or "=" in crawl:
-            # the label becomes a hive partition directory name; a
-            # separator would silently change the layout
-            raise ValueError("crawl label must not contain '/' or '='")
-        path = path.rstrip("/") + f"/crawl={crawl}"
-    df = cdx if "surt" in cdx.columns else cdx_columnar(cdx)
-    keys = [F.col("surt"), F.col("warc_file"), F.col("offset")]
-    parts = (df.repartitionByRange(index_files, *keys)
-             if index_files else df.repartitionByRange(*keys))
-    (parts.sortWithinPartitions("surt", "warc_file", "offset")
-          .write.mode("overwrite").parquet(path))
-
-
-def read_cdx_index(spark: SparkSession, path: str) -> DataFrame:
-    """Mount a persisted columnar CDX index. Plain parquet — the
-    value is in what the writer guaranteed (surt-disjoint files,
-    sorted row groups), which the reader gets for free as stats-based
-    pruning under any pushed predicate. For a per-crawl maintained
-    index (`write_cdx_index(crawl=...)`), mount the PARENT directory:
-    hive partition discovery surfaces ``crawl`` as a column and
-    equality filters on it prune whole partitions at planning time
-    (``PartitionFilters`` in the scan), before surt stats apply."""
-    return spark.read.parquet(path)
-
-
-def lookup_cdx(index: DataFrame, prefix: str) -> DataFrame:
-    """Index rows whose SURT key starts with ``prefix`` — the
-    host/domain-scoped lookup the sorted index exists for; compose
-    with `fetch_records` to read the matching members.
-
-    Prefix semantics (SURT reverses host labels, so scope = prefix):
-    ``org,example)`` = exactly host example.org (default port);
-    ``org,example,`` = its subdomains; ``org,example`` alone ALSO
-    matches org,examplefoo — include the ``)``/``,``/``:`` terminator
-    unless that over-match is intended. Plan shape: ``startswith`` on
-    a literal pushes to the parquet scan as StringStartsWith, which
-    prunes whole files (disjoint ranges) and row groups (sorted) via
-    min/max stats — reads scale with the result, not the index."""
-    return index.filter(F.col("surt").startswith(prefix))
 
 
 def read_warc_stream(spark: SparkSession, path: str,
@@ -1374,8 +910,8 @@ def write_warc_files(
     order_col: str | None = None,
     compress: bool = True,
 ) -> DataFrame:
-    """Distributed WARC sink (and the fixture builder the f96/c14
-    oracle queries drive): one ``part-<key>.warc.gz`` per distinct
+    """Distributed WARC sink (and the fixture builder the c15
+    oracle query drives): one ``part-<key>.warc.gz`` per distinct
     ``file_col`` value, records in ``order_col`` order within the file
     (deterministic bytes — fixtures must hash-stably regenerate),
     ``record_fn(row_dict) -> Iterable[bytes]`` producing each row's
@@ -1421,225 +957,6 @@ def write_warc_files(
     return out
 
 
-#: the WARC-Profile URI for identical-payload revisits (WARC 1.1 §6.7.2)
-REVISIT_IDENTICAL = (
-    "http://netpreserve.org/warc/1.1/revisit/identical-payload-digest"
-)
-
-
-def revisit_record(url: str, refers_to: str,
-                   payload_digest: str,
-                   date: str = "2026-01-01T00:00:00Z",
-                   record_id: str | None = None) -> bytes:
-    """A ``revisit`` record: the crawler re-fetched ``url``, found the
-    payload byte-identical to an earlier capture (``refers_to`` = that
-    record's WARC-Record-ID), and archived only this marker instead of
-    the body — crawl-time exact dedup, standard in Common Crawl. The
-    dedup signal is free data for the corpus pipeline: see
-    `warc_revisit_edges`."""
-    return warc_record(
-        "revisit",
-        {
-            "WARC-Target-URI": url,
-            "WARC-Date": date,
-            "WARC-Record-ID": record_id or f"<urn:borsa:revisit:{url}>",
-            "WARC-Refers-To": refers_to,
-            "WARC-Payload-Digest": payload_digest,
-            "WARC-Profile": REVISIT_IDENTICAL,
-            "Content-Type": "application/http; msgtype=response",
-        },
-        b"",
-    )
-
-
-def warc_revisit_edges(records: DataFrame) -> DataFrame:
-    """(dup_url, orig_record_id, payload_digest): the duplication edges
-    the CRAWLER already proved, harvested from ``revisit`` records — a
-    corpus pipeline should consume these before spending a single
-    shingle on content dedup (the originals' record ids join back to
-    the response relation on ``record_id``). Pure column expressions
-    over the record walk; only identical-payload-digest revisits
-    qualify (other profiles assert weaker equivalence).
-
-    The record walk emits revisit headers like any other record, so
-    this needs no codec support — it is a view, and it composes with
-    `dup_clusters` exactly like a verified minhash pair relation
-    (every revisit edge is an exact-duplicate edge)."""
-    rev = records.filter(F.col("warc_type") == "revisit")
-    prof = F.lower(
-        F.coalesce(F.col("headers")["warc-profile"], F.lit(""))
-    )
-    return (
-        rev.filter(prof.contains("identical-payload-digest"))
-        .select(
-            F.col("target_uri").alias("dup_url"),
-            F.col("headers")["warc-refers-to"].alias("orig_record_id"),
-            F.col("headers")["warc-payload-digest"]
-            .alias("payload_digest"),
-        )
-    )
-
-
-def wet_record(url: str, text: str,
-               date: str = "2026-01-01T00:00:00Z",
-               record_id: str | None = None,
-               refers_to: str | None = None) -> bytes:
-    """One WET record: extracted text as a WARC ``conversion`` record
-    (the Common Crawl WET layout — Content-Type text/plain, UTF-8
-    payload, WARC-Refers-To linking back to the response record it
-    was converted from). WET is the standard interchange format for
-    the OUTPUT of the extraction stage: a pipeline that reads WARC
-    and writes WET slots into any Common-Crawl-consuming stack."""
-    headers = {
-        "WARC-Target-URI": url,
-        "WARC-Date": date,
-        "WARC-Record-ID": record_id or f"<urn:borsa:wet:{url}>",
-        "Content-Type": "text/plain",
-    }
-    if refers_to:
-        headers["WARC-Refers-To"] = refers_to
-    return warc_record("conversion", headers,
-                       text.encode("utf-8"))
-
-
-def write_wet_files(
-    df: DataFrame,
-    out_dir: str,
-    url_col: str = "url",
-    text_col: str = "text",
-    file_col: str = "__file",
-    order_col: str | None = None,
-) -> DataFrame:
-    """Distributed WET sink: (url, text) rows become gzip-member
-    ``conversion`` records, one ``part-<key>.warc.gz`` per file_col
-    value — `write_warc_files` with the WET record shape. Returns the
-    committed (warc_file, n_records) summary (an action has run)."""
-
-    def rec(row):
-        yield wet_record(str(row[url_col]), str(row[text_col]))
-
-    return write_warc_files(df, out_dir, rec, file_col,
-                            order_col or url_col)
-
-
-def read_wet(spark: SparkSession, path: str,
-             pattern: str = "*.warc*") -> DataFrame:
-    """(url, text) from WET files: the record walk filtered to
-    ``conversion`` records, payload decoded as UTF-8 — the inverse of
-    `write_wet_files` and the entry point for consuming someone
-    else's extracted-text corpus without re-running extraction."""
-    rec = read_warc(spark, path, pattern)
-    return rec.filter(F.col("warc_type") == "conversion").select(
-        F.col("target_uri").alias("url"),
-        F.col("body").cast("string").alias("text"),
-    )
-
-
-def wat_record(url: str, wat_json: str,
-               date: str = "2026-01-01T00:00:00Z",
-               record_id: str | None = None,
-               refers_to: str | None = None) -> bytes:
-    """One WAT record: per-capture METADATA as a WARC ``metadata``
-    record with an ``application/json`` payload (the Common Crawl WAT
-    layout — the sidecar carrying HTTP headers, outlinks, and
-    envelope facts so consumers can analyze a crawl without touching
-    page bodies). ``wat_json`` is the already-serialized JSON."""
-    headers = {
-        "WARC-Target-URI": url,
-        "WARC-Date": date,
-        "WARC-Record-ID": record_id or f"<urn:borsa:wat:{url}>",
-        "Content-Type": "application/json",
-    }
-    if refers_to:
-        headers["WARC-Refers-To"] = refers_to
-    return warc_record("metadata", headers,
-                       wat_json.encode("utf-8"))
-
-
-#: href targets for the WAT outlink extractor — absolute http(s) URLs
-#: in double-quoted href attributes (the layer stays deliberately
-#: simple: WAT consumers re-parse JSON anyway, and the extraction
-#: regex is a parameter for anything fancier)
-_HREF_RE = r'href="(https?://[^"]+)"'
-
-
-def wat_from_records(records: DataFrame,
-                     href_pattern: str = _HREF_RE) -> DataFrame:
-    """(url, wat) — the WAT sidecar computed from a record relation:
-    per 2xx html response, a JSON document carrying the HTTP envelope
-    (status, content type) and the page's outlinks (sorted, distinct).
-    Pure column expressions over the walk output — `to_json(struct)`
-    and `regexp_extract_all` fuse into the scan, zero Python.
-
-    This is the standard Common Crawl derivation (WARC → WAT): link
-    analysis, frontier scoring, and host-graph work read the sidecar
-    and never decompress page bodies again."""
-    docs = warc_html_docs(
-        records, extra_cols=("http_status", "http_content_type")
-    )
-    # F.lit(pattern), never string-interpolated F.expr: a caller
-    # pattern containing a single quote would otherwise parse-error or
-    # inject arbitrary SQL expression text (review catch)
-    links = F.array_sort(
-        F.array_distinct(
-            F.regexp_extract_all(
-                F.col("html"), F.lit(href_pattern), F.lit(1)
-            )
-        )
-    )
-    return docs.select(
-        "url",
-        F.to_json(
-            F.struct(
-                F.col("url"),
-                F.struct(
-                    F.col("http_status").alias("status"),
-                    F.col("http_content_type").alias("content_type"),
-                ).alias("http"),
-                links.alias("outlinks"),
-            )
-        ).alias("wat"),
-    )
-
-
-def write_wat_files(
-    df: DataFrame,
-    out_dir: str,
-    url_col: str = "url",
-    wat_col: str = "wat",
-    file_col: str = "__file",
-    order_col: str | None = None,
-) -> DataFrame:
-    """Distributed WAT sink: (url, wat json) rows become gzip-member
-    ``metadata`` records — `write_warc_files` with the WAT record
-    shape. Returns the committed (warc_file, n_records) summary."""
-
-    def rec(row):
-        yield wat_record(str(row[url_col]), str(row[wat_col]))
-
-    return write_warc_files(df, out_dir, rec, file_col,
-                            order_col or url_col)
-
-
-def read_wat(spark: SparkSession, path: str,
-             pattern: str = "*.warc*") -> DataFrame:
-    """(url, wat) from WAT files: the record walk filtered to
-    ``metadata`` records with JSON payloads — the inverse of
-    `write_wat_files`. Parse ``wat`` with ``F.from_json`` and the
-    consumer's schema (`wat_from_records` emits
-    ``struct<url:string, http:struct<status:long,
-    content_type:string>, outlinks:array<string>>``)."""
-    rec = read_warc(spark, path, pattern)
-    return rec.filter(
-        (F.col("warc_type") == "metadata")
-        & (F.lower(F.coalesce("content_type", F.lit("")))
-           .startswith("application/json"))
-    ).select(
-        F.col("target_uri").alias("url"),
-        F.col("body").cast("string").alias("wat"),
-    )
-
-
 def warc_html_docs(records: DataFrame,
                    min_status: int = 200,
                    max_status: int = 299,
@@ -1651,7 +968,7 @@ def warc_html_docs(records: DataFrame,
     stance, see the cast comment below), and emit (url, html [, *extra_cols passed through]). Pure
     column expressions over the record relation — the
     type/status/content-type gates are the load-bearing header rules
-    f96's fixture plants traps for."""
+    the record walk's tests plant traps for."""
     return (
         records.filter(
             (F.col("warc_type") == "response")

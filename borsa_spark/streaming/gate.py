@@ -100,120 +100,3 @@ def streaming_monotonic_gate(
         outputMode="append",
         timeoutConf=timeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# T8 on the modern API: transformWithStateInPandas (Spark 4).
-# ---------------------------------------------------------------------------
-
-
-def _tws_unavailable_reason() -> str | None:
-    """Why transformWithStateInPandas cannot run here, or None if it
-    can. It needs PySpark >= 4 AND the protobuf runtime (its
-    driver<->worker state channel is proto-encoded). Exactly TWO
-    outcomes are acceptable: available, or unavailable precisely
-    because google.protobuf is absent (this container's documented
-    state). Any OTHER failure — a Spark upgrade renaming
-    StatefulProcessor, a half-installed protobuf — must surface loudly,
-    so the probe re-raises it instead of folding it into a skip: the
-    guard test in tests/test_streaming.py runs UNSKIPPED and fails on
-    anything but the documented reason, and the equivalence test
-    auto-activates the moment protobuf appears."""
-    try:
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError as e:  # API moved/renamed: NOT an acceptable skip
-        raise RuntimeError(
-            "transformWithState probe: StatefulProcessor import failed "
-            f"for a reason other than missing protobuf: {e}"
-        ) from e
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return "google.protobuf absent"
-    return None
-
-
-def _tws_available() -> bool:
-    """True iff the transformWithState gate variant can run in this
-    environment (see _tws_unavailable_reason)."""
-    return _tws_unavailable_reason() is None
-
-
-def _make_gate_processor(out_cols, ts_col, order_col, ttl_ms):
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-    )
-
-    class MonotonicGateProcessor(StatefulProcessor):
-        """Per-key drop-older-keep-equal gate as a Spark 4
-        StatefulProcessor: one ValueState long (the HWM in ns) per
-        symbol, with the 24h idle reaper expressed as NATIVE state TTL
-        (`getValueState(..., ttlDurationMs=...)`) instead of the legacy
-        API's ProcessingTimeTimeout dance — TTL'd state simply vanishes,
-        so a bounded availableNow drive needs no special-casing."""
-
-        def init(self, handle):
-            self._hwm = handle.getValueState(
-                "hwm", "value long", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            existing = self._hwm.get()
-            hwm = existing[0] if existing is not None else None
-            for pdf in rows:
-                if order_col is not None:
-                    pdf = pdf.sort_values(order_col, kind="stable")
-                ts = pdf[ts_col].astype("int64").to_numpy()
-                if len(ts) == 0:
-                    continue
-                init_v = hwm if hwm is not None else np.iinfo(np.int64).min
-                running = np.maximum.accumulate(
-                    np.concatenate(([init_v], ts))
-                )
-                keep = ts >= running[:-1]
-                hwm = int(running[-1])
-                out = pdf[keep]
-                if len(out):
-                    yield out[out_cols]
-            if hwm is not None:
-                self._hwm.update((int(hwm),))
-
-        def close(self):
-            pass
-
-    return MonotonicGateProcessor()
-
-
-def streaming_monotonic_gate_tws(
-    updates: DataFrame,
-    key: str = "symbol",
-    ts_col: str = "ts",
-    order_col: str | None = "seq",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """`streaming_monotonic_gate` on Spark 4's transformWithState API —
-    same semantics (filters.rs:12-74), same vectorized shifted-cummax
-    body, but keyed state goes through a StatefulProcessor with NATIVE
-    per-state TTL, and the operator requires the RocksDB state store
-    (set `spark.sql.streaming.stateStore.providerClass` to
-    RocksDBStateStoreProvider — transformWithState does not run on the
-    HDFS-backed default). Prefer this form on Spark 4 clusters: native
-    TTL composes with availableNow triggers (no wall-clock timeout
-    hang), and RocksDB state scales past executor memory."""
-    if not _tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires PySpark >= 4 and the"
-            " protobuf runtime (absent in this container)"
-        )
-    cols = updates.columns
-    schema = updates.schema
-    return updates.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_make_gate_processor(
-            cols, ts_col, order_col, ttl_ms
-        ),
-        outputStructType=schema,
-        outputMode="Append",
-        timeMode="None",
-    )

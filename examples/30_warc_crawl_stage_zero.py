@@ -8,10 +8,7 @@ The full byte-level tour of `sources/warc.py`:
    Common Crawl layout) with `write_warc_files`;
 2. scan it with `read_warc` (one task per file) and the html funnel;
 3. fan ONE file across byte-range tasks with `read_warc_split`;
-4. build a CDX index (`warc_cdx`) and point-fetch two records by URL
-   predicate (`fetch_records`) — the lookup path that never scans;
-5. tolerate planted junk with `errors="lenient"` (quarantine rows);
-6. emit the extracted text as WET conversion records.
+4. tolerate planted junk with `errors="lenient"` (quarantine rows).
 
 Run: python examples/30_warc_crawl_stage_zero.py
 """
@@ -75,14 +72,7 @@ def main() -> None:
     print(f"split read of {f0}: rows={parts.count()} "
           f"tasks={parts.rdd.getNumPartitions()}")
 
-    # 4. index once, then point-read: filter the INDEX, fetch members
-    idx = W.warc_cdx(spark, work)
-    picked = idx.filter(F.col("target_uri").rlike("/page/(9|25)$"))
-    fetched = W.fetch_records(picked)
-    print("-- point-fetched by URL predicate (bytes read = 2 members):")
-    fetched.select("target_uri", "http_status").show(truncate=False)
-
-    # 5. junk tolerance: a torn gzip member quarantines, never kills
+    # 4. junk tolerance: a torn gzip member quarantines, never kills
     junk = os.path.join(work, "torn.warc.gz")
     with open(junk, "wb") as fh:
         fh.write(W.gzip_member(next(records({"id": 100}))))
@@ -92,14 +82,6 @@ def main() -> None:
     quarantined = lan.filter(F.col("warc_type") == W.PARSE_ERROR_TYPE)
     print("-- lenient mode, quarantine accounting:")
     quarantined.select("warc_file", "headers").show(truncate=False)
-
-    # 6. WET out: extracted text in the interchange format
-    wet_dir = os.path.join(work, "wet")
-    text = docs.select(
-        "url", F.regexp_replace("html", "<[^>]*>", "").alias("text")
-    ).withColumn("__file", F.lit(0))
-    W.write_wet_files(text, wet_dir)
-    print(f"wet round-trip rows={W.read_wet(spark, wet_dir).count()}")
 
     spark.stop()
 

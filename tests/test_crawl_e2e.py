@@ -1,8 +1,8 @@
-"""End-to-end crawl corpus-prep DAG (c11) and its building blocks:
-the rewriting paragraph dedup (`dedup.drop_repeated_paragraphs`) and
-the stage composition contract — every stage must be LOAD-BEARING
-(drop or rewrite at least one fixture doc) so a green c11 hash means
-every stage ran, not that the pipeline happened to be a no-op."""
+"""Corpus-prep building blocks: the rewriting paragraph dedup
+(`dedup.drop_repeated_paragraphs`) and the c12 stage composition
+contract — every stage must be LOAD-BEARING (drop or rewrite at least
+one fixture doc) so a green c12 hash means every stage ran, not that
+the pipeline happened to be a no-op."""
 
 from __future__ import annotations
 
@@ -76,32 +76,6 @@ class TestDropRepeatedParagraphs:
         assert got == want
 
 
-class TestC11StageLoadBearing:
-    """Every c11 stage must change the corpus at sf0.01 — a stage that
-    passes everything through silently is a fixture bug, not coverage."""
-
-    @pytest.fixture(scope="class")
-    def stages(self, spark):
-        from borsa_spark.queries import c11_stage_counts
-
-        return c11_stage_counts(spark, SF01)
-
-    def test_every_stage_drops_or_rewrites(self, stages):
-        n = stages
-        assert n["fixture"] > 0
-        # extraction keeps every doc (chrome stripped, content kept) —
-        # its load-bearing proof is the f84 gate; here it must not drop
-        assert n["extracted"] == n["fixture"]
-        assert n["url_deduped"] < n["extracted"]          # %10==7 urls
-        assert n["line_filtered"] < n["url_deduped"]      # %11==4 lorem
-        assert n["blocklisted"] < n["line_filtered"]      # %7==3 casino
-        assert n["exact_deduped"] < n["blocklisted"]      # %10==9 copies
-        # paragraph dedup rewrites but keeps doc count (L1 lines are
-        # distinct post exact-dedup; only boilerplate L3 is cut)
-        assert n["para_deduped"] == n["exact_deduped"]
-        assert n["boilerplate_cut"] == n["para_deduped"] - 1
-
-
 class TestDropRepeatedParagraphsProperties:
     """Property-based model equivalence: drop_repeated_paragraphs vs a
     pure-Python keep-first model over machine-chosen corpora (tiny
@@ -154,10 +128,10 @@ class TestDropRepeatedParagraphsProperties:
 
 
 class TestC12StageLoadBearing:
-    """The training-mix funnel (c12) counterpart to c11's pin: the
-    median quality gate must DROP documents, DSIR must pick exactly k,
-    packing must keep every pick while genuinely grouping docs into
-    shared bins across all streams."""
+    """The training-mix funnel (c12): the median quality gate must
+    DROP documents, DSIR must pick exactly k, packing must keep every
+    pick while genuinely grouping docs into shared bins across all
+    streams."""
 
     @pytest.fixture(scope="class")
     def stages(self, spark):

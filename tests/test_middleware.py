@@ -228,86 +228,6 @@ class TestStackOrdering:
         assert q.calls_in_window == 1
 
 
-class TestConnectorBuilder:
-    """Ports of middleware_validation.rs + builder ordering semantics for
-    the pluggable-layer builder."""
-
-    def test_validation_fails_when_dependency_missing(self):
-        from borsa_spark.middleware import (
-            ConnectorBuilder,
-            InvalidMiddlewareStack,
-            QuotaGuard,
-            QuotaLayer,
-        )
-
-        class CustomLayer:
-            name = "custom"
-
-            def validate(self, ctx):
-                if not ctx.has_middleware(QuotaLayer):
-                    raise InvalidMiddlewareStack(
-                        "CustomLayer requires QuotaLayer to be present"
-                    )
-
-            def wrap(self, call):
-                return call
-
-        with pytest.raises(InvalidMiddlewareStack, match="requires QuotaLayer"):
-            ConnectorBuilder("c").layer(CustomLayer()).build()
-
-        # satisfied once the dependency is layered in (any order)
-        call = (
-            ConnectorBuilder("c")
-            .layer(CustomLayer())
-            .layer(QuotaLayer(QuotaGuard(limit=10)))
-            .build()
-        )
-        assert call(("k",), lambda: 41) == 41
-
-    def test_canonical_order_applies_regardless_of_layer_order(self):
-        """Quota layered BEFORE cache must still sit inside it: a repeat
-        (cached) call may not consume quota (builder.rs:31-38)."""
-        from borsa_spark.middleware import (
-            CacheLayer,
-            ConnectorBuilder,
-            QuotaGuard,
-            QuotaLayer,
-            TTLCache,
-        )
-
-        quota = QuotaGuard(limit=10)
-        builder = (
-            ConnectorBuilder("c")
-            .layer(QuotaLayer(quota))   # inserted first...
-            .layer(CacheLayer(TTLCache()))
-        )
-        assert builder.names() == ["cache", "quota"]  # ...but cache is outer
-        call = builder.build()
-        key = ("history", "AAPL")
-        assert call(key, lambda: "v") == "v"
-        assert call(key, lambda: "v") == "v"
-        assert quota.calls_in_window == 1  # second call was a cache hit
-
-    def test_custom_layer_wraps_and_observes(self):
-        from borsa_spark.middleware import ConnectorBuilder
-
-        seen = []
-
-        class Audit:
-            name = "audit"
-
-            def wrap(self, call):
-                def wrapped(key, fn):
-                    seen.append(key)
-                    return call(key, fn)
-
-                return wrapped
-
-        call = ConnectorBuilder("c").layer(Audit()).build()
-        assert call(("q", "A"), lambda: 7) == 7
-        assert seen == [("q", "A")]
-
-
 class TestQuotaSerde:
     """quota_serde.rs ports: config and state survive a JSON round-trip."""
 

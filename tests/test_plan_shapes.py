@@ -450,18 +450,6 @@ class TestRound4ContinuedPlanShapes:
 
 
 class TestRound7PlanShapes:
-    def test_url_canon_is_scan_plus_one_shuffle(self, spark):
-        # canonicalization is per-row codegen (no Python), the URL here
-        # derives from doc_id alone so the scan reads ONE column, and
-        # the whole dedup is a single canonical-key groupBy shuffle
-        plan = plan_of(spark, "f71_url_canon_dedup")
-        assert "EvalPython" not in plan
-        assert plan.count("Exchange") <= 2  # tree node + Arguments line
-        import re
-
-        m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-        assert m and m.group(1) == "doc_id:bigint"
-
     def test_paragraph_dedup_partial_aggs_no_single_partition(self, spark):
         plan = plan_of(spark, "f72_paragraph_dedup")
         assert "SinglePartition" not in plan
@@ -567,17 +555,6 @@ class TestBpeAndRollupShapes:
 
 
 class TestRound8PlanShapes:
-    def test_html_extract_is_scan_plus_project_zero_shuffle(self, spark):
-        # crawl stage zero must run at scan speed: per-row regex/array
-        # projection, no Python, no exchange of any kind
-        plan = plan_of(spark, "f84_html_extract")
-        assert "EvalPython" not in plan
-        assert "Exchange" not in plan
-        import re
-
-        m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-        assert m and "doc_id:bigint" in m.group(1)
-
     def test_langid_nb_model_relations_broadcast(self, spark):
         # the NB model (counts/totals/priors/vocab) is bounded by
         # charset^2 x n_langs: every join against the corpus-sized tf
@@ -611,20 +588,6 @@ class TestRound8PlanShapes:
         plan = plan_of(spark, "f91_image_band_guard")
         assert "MapInPandas" not in plan
         assert "BroadcastHashJoin" in plan
-
-    def test_c11_crawl_dag_single_corpus_scan(self, spark):
-        # the end-to-end crawl DAG reads the documents parquet ONCE:
-        # extraction/cleaning fuse into the scan, the relation persists
-        # before the first multi-consumer stage, and every dedup/NB
-        # pass reads the cache (explain prints the cached subtree at
-        # each reference, so count DISTINCT scan node ids, not lines)
-        import re
-
-        plan = plan_of(spark, "c11_crawl_corpus_prep")
-        scan_ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", plan))
-        assert len(scan_ids) == 1
-        assert "EvalPython" not in plan  # all JVM until the argmax
-        assert "InMemoryTableScan" in plan
 
     def test_audio_band_pairing_inherits_image_guards(self, spark):
         # f92 rides the shared _band_near_pairs: decode once
@@ -932,150 +895,6 @@ class TestRound12PlanShapes:
         assert "BatchEvalPython" not in plan
         n_splits = -(-os.path.getsize(path) // split)
         assert parts.rdd.getNumPartitions() == n_splits > 1
-
-    def test_cdx_filter_prunes_before_any_fetch_io(self, spark,
-                                                   tmp_path):
-        # index -> arbitrary predicate -> point fetch: the predicate
-        # must sit between the two Arrow walks (filter the INDEX, not
-        # the fetched records), and the fetch side's only exchanges
-        # are the distinct + the by-file repartition
-        from pyspark.sql import functions as F
-
-        from borsa_spark.sources import warc as W
-
-        d = self._fixture(spark, tmp_path)
-        idx = W.warc_cdx(spark, d)
-        picked = idx.filter(F.col("target_uri").endswith("7"))
-        fetched = W.fetch_records(picked)
-        plan = _plan_str(fetched)
-        import re
-
-        walks = [m.start() for m in re.finditer(r"\(\d+\) MapInPandas",
-                                                plan)]
-        assert len(walks) == 2  # index walk + fetch walk, nothing more
-        filt = plan.find("Filter")
-        assert filt >= 0
-        assert "BatchEvalPython" not in plan
-        # the fetch input carries ONLY (warc_file, offset): column
-        # pruning reached the index walk's projection
-        assert "hashpartitioning(warc_file" in plan
-
-
-def _host_rec(row):
-    """Multi-host record maker for the columnar-index plan tests:
-    host varies with id so the SURT range partitioning has real key
-    spread."""
-    from borsa_spark.sources import warc as W
-
-    i = row["id"]
-    yield W.warc_record(
-        "response",
-        {"WARC-Target-URI": f"https://h{i % 7:02d}.example.org/p/{i}",
-         "Content-Type": "application/http; msgtype=response"},
-        W.http_response(200, "OK", {"Content-Type": "text/html"},
-                        b"<p>plan fixture body long enough here.</p>"),
-    )
-
-
-class TestRound13PlanShapes:
-    @staticmethod
-    def _index(spark, tmp_path, n=96, index_files=3):
-        from pyspark.sql import functions as F
-
-        from borsa_spark.sources import warc as W
-
-        warc_dir = str(tmp_path / "warc")
-        idx_dir = str(tmp_path / "cdx")
-        W.write_warc_files(
-            spark.range(n).select(
-                F.col("id"), (F.col("id") % 2).alias("__file")
-            ),
-            warc_dir, _host_rec,
-        )
-        W.write_cdx_index(W.warc_cdx(spark, warc_dir), idx_dir,
-                          index_files=index_files)
-        return idx_dir
-
-    def test_lookup_pushes_startswith_into_the_parquet_scan(
-            self, spark, tmp_path):
-        # the whole point of the sorted columnar index: a prefix
-        # lookup must reach the scan as a pushed StringStartsWith
-        # (min/max row-group + file pruning), one scan, no shuffle,
-        # no Python
-        import re
-
-        from borsa_spark.sources import warc as W
-
-        idx_dir = self._index(spark, tmp_path)
-        hit = W.lookup_cdx(W.read_cdx_index(spark, idx_dir),
-                           "org,example,h03)")
-        plan = _plan_str(hit)
-        assert re.search(r"PushedFilters:.*StringStartsWith\(surt",
-                         plan), plan
-        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-        assert "Exchange" not in plan
-        assert "MapInPandas" not in plan
-        assert "BatchEvalPython" not in plan
-
-    def test_index_files_are_disjoint_and_row_groups_sorted(
-            self, spark, tmp_path):
-        # what makes the pruning REAL, asserted from the parquet
-        # footers themselves: every output file owns a disjoint surt
-        # range (repartitionByRange) and row-group stats are tight
-        # (sortWithinPartitions) — min/max pruning follows from
-        # parquet semantics, no Spark internals needed
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        idx_dir = self._index(spark, tmp_path)
-        spans = []
-        for f in glob.glob(os.path.join(idx_dir, "part-*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            col = [md.schema.column(i).name
-                   for i in range(md.num_columns)].index("surt")
-            groups = []
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(col).statistics
-                assert st is not None and st.has_min_max
-                groups.append((st.min, st.max))
-            # row groups sorted and non-overlapping within the file
-            for (lo1, hi1), (lo2, hi2) in zip(groups, groups[1:]):
-                assert hi1 <= lo2
-            if groups:
-                spans.append((groups[0][0], groups[-1][1]))
-        assert len(spans) >= 2  # the range exchange really spread
-        spans.sort()
-        for (_, hi), (lo, _) in zip(spans, spans[1:]):
-            assert hi <= lo  # files own disjoint surt ranges
-
-    def test_host_rollup_never_touches_payload_bytes(self, spark,
-                                                     tmp_path):
-        # the c16 shape: host analytics from the index alone — one
-        # parquet scan, zero WARC walks (MapInPandas absent), one
-        # aggregate exchange keyed on the host projection
-        import re
-
-        from pyspark.sql import functions as F
-
-        from borsa_spark.sources import warc as W
-
-        idx_dir = self._index(spark, tmp_path)
-        rollup = (
-            W.read_cdx_index(spark, idx_dir)
-            .filter(F.col("warc_type") == "response")
-            .groupBy(F.regexp_extract("surt", r"^([^):]*)", 1)
-                     .alias("surt_host"))
-            .agg(F.count("*").alias("n_pages"))
-        )
-        plan = _plan_str(rollup)
-        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-        assert "MapInPandas" not in plan
-        assert "BatchEvalPython" not in plan
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-        # partial aggregation below the exchange (map-side combine)
-        assert plan.find("HashAggregate") < plan.find("Exchange")
 
 
 class TestWidenGuardsR14:

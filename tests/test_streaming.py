@@ -707,109 +707,3 @@ class TestDropDuplicatesWithinWatermark:
         rows = out.collect()
         seqs = sorted((r.symbol, r.seq) for r in rows)
         assert seqs == [("AAPL", 1), ("AAPL", 2)]  # replays dropped
-
-
-from borsa_spark.streaming.gate import _tws_available
-
-
-class TestTwsAvailabilityGuard:
-    """NEVER-skipped guard on the transformWithState skip itself: the
-    equivalence tests below may only skip for EXACTLY the documented
-    reason (google.protobuf absent from this container). If the probe
-    fails any other way — a Spark upgrade renaming StatefulProcessor,
-    a broken half-install — this fails loudly instead of letting the
-    skip rot; the moment protobuf appears, _tws_available() flips and
-    the full equivalence suite auto-activates (skip count drops to 0
-    with no code change)."""
-
-    def test_unavailability_reason_is_exactly_protobuf(self):
-        from borsa_spark.streaming.gate import _tws_unavailable_reason
-
-        # raises RuntimeError on any undocumented breakage
-        reason = _tws_unavailable_reason()
-        assert reason in (None, "google.protobuf absent")
-        if reason is None:
-            # runnable: the real equivalence tests below must not skip
-            assert _tws_available()
-
-
-@pytest.mark.skipif(
-    not _tws_available(),
-    reason="transformWithState needs the protobuf runtime "
-           "(absent in this container); runs on real Spark 4 clusters",
-)
-class TestTransformWithStateGate:
-    """T8 on Spark 4's transformWithState API: same kept-set as the
-    legacy applyInPandasWithState gate over the same feed, RocksDB
-    state store (required by the operator), cross-batch HWM state."""
-
-    def test_same_kept_set_as_legacy_gate(self, spark, stream_rows,
-                                          tmp_path):
-        from borsa_spark.streaming.gate import (
-            streaming_monotonic_gate_tws,
-        )
-
-        path, schema = stream_rows
-        src = spark.readStream.schema(schema).parquet(path)
-        gated = streaming_monotonic_gate_tws(src)
-        q = (
-            gated.writeStream.format("memory")
-            .queryName("tws_gate_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .option(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        kept = sorted(r.seq for r in spark.table("tws_gate_out").collect())
-        assert kept == [0, 1, 3, 4, 5, 7]  # == legacy gate's kept set
-
-    def test_cross_batch_state(self, spark, tmp_path):
-        import datetime as dt
-
-        from borsa_spark.streaming.gate import (
-            streaming_monotonic_gate_tws,
-        )
-
-        def ts(sec):
-            return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=sec)
-
-        schema = "symbol string, ts timestamp, seq long"
-        batches = [
-            [("AAPL", ts(100), 0)],
-            [("AAPL", ts(50), 1),   # older than batch-0 HWM -> dropped
-             ("AAPL", ts(100), 2),  # equal allowed
-             ("AAPL", ts(200), 3)],
-        ]
-        path = tmp_path / "tws_ticks"
-        path.mkdir()
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).repartition(1) \
-                .write.parquet(str(path / f"b{i}"))
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(path / "b*"))
-        )
-        gated = streaming_monotonic_gate_tws(src)
-        q = (
-            gated.writeStream.format("memory")
-            .queryName("tws_xbatch")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_txb"))
-            .option(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        kept = sorted(r.seq for r in spark.table("tws_xbatch").collect())
-        assert kept == [0, 2, 3]  # HWM survived the batch boundary

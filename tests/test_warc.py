@@ -471,80 +471,6 @@ class TestSplitReader:
         assert all(trap in bytes(r.body) for r in got)
 
 
-class TestCdxFetch:
-    """CDX index + point fetch: the member-per-record layout's payoff —
-    filter a small index relation with arbitrary predicates, then read
-    ONLY the matching members instead of scanning the crawl."""
-
-    def test_index_extents_decode_standalone(self, spark, warc_dir):
-        idx = W.warc_cdx(spark, warc_dir).collect()
-        assert len(idx) == 7  # one row per record, all types indexed
-        by_file = {}
-        for r in idx:
-            by_file.setdefault(r.warc_file, []).append(r)
-        for path, rows in by_file.items():
-            local = path[5:] if path.startswith("file:") else path
-            raw = open(local, "rb").read()
-            # extents tile the file exactly (member-per-record layout)
-            rows.sort(key=lambda r: r.offset)
-            assert rows[0].offset == 0
-            assert rows[-1].offset + rows[-1].length == len(raw)
-            for r in rows:
-                # each extent is a standalone decodable gzip member
-                # holding exactly its indexed record
-                [(h, _)] = list(W.iter_warc_records(
-                    raw[r.offset:r.offset + r.length]
-                ))
-                assert h.get("warc-target-uri") == r.target_uri
-                assert h["warc-type"] == r.warc_type
-
-    def test_split_planned_index_is_identical(self, spark, warc_dir):
-        # warc_cdx(split_bytes=...) plans the build as byte-range
-        # splits (the >2 GB / few-huge-files path); extents are file
-        # properties, so the rows must match the binaryFile plan's
-        # exactly (warc_file normalizes: binaryFile emits file: URIs,
-        # the split planner plain paths)
-        def rows(df):
-            return sorted(
-                (os.path.basename(r.warc_file), r.offset, r.length,
-                 r.record_ordinal, r.warc_type, r.target_uri,
-                 r.http_status)
-                for r in df.collect()
-            )
-
-        a = rows(W.warc_cdx(spark, warc_dir))
-        b = rows(W.warc_cdx(spark, warc_dir, split_bytes=97))
-        assert a == b and len(a) == 7
-
-    def test_fetch_equals_scan_for_the_filtered_set(self, spark,
-                                                    warc_dir):
-        idx = W.warc_cdx(spark, warc_dir)
-        from pyspark.sql import functions as F
-
-        picked = idx.filter(
-            (F.col("warc_type") == "response")
-            & (F.col("http_status") == 200)
-        )
-        fetched = W.fetch_records(picked).collect()
-        want = (
-            W.read_warc(spark, warc_dir)
-            .filter((F.col("warc_type") == "response")
-                    & (F.col("http_status") == 200))
-            .collect()
-        )
-
-        def key(rows):
-            return sorted(
-                (r.target_uri, r.warc_type, r.http_status,
-                 bytes(r.body)) for r in rows
-            )
-
-        assert len(fetched) == len(want) == 3
-        assert key(fetched) == key(want)
-        # and the fetch spans both fixture files
-        assert len({r.warc_file for r in fetched}) == 2
-
-
 class TestReviewFindingsR12:
     """Round-12 in-round review catches, pinned."""
 
@@ -600,22 +526,14 @@ class TestReviewFindingsR12:
         p.write_bytes(b"".join(outer))
         return str(p)
 
-    def test_nested_archive_whole_read_and_cdx_fetch_are_exact(
-        self, spark, tmp_path
-    ):
-        p = self._nested_archive(tmp_path)
+    def test_nested_archive_whole_read_is_exact(self, spark, tmp_path):
+        self._nested_archive(tmp_path)
         outer = {"http://outer/0", "http://outer/1", "http://outer/2"}
         # whole-file read: immune (inner bytes are payload, the
         # Content-Length walk never looks at them)
         got = [r.target_uri
                for r in W.read_warc(spark, str(tmp_path)).collect()]
         assert sorted(got) == sorted(outer)
-        # index + point fetch: immune (authoritative offsets)
-        idx = W.warc_cdx(spark, str(tmp_path))
-        assert {r.target_uri for r in idx.collect()} == outer
-        fetched = [r.target_uri
-                   for r in W.fetch_records(idx).collect()]
-        assert sorted(fetched) == sorted(outer)
 
     def test_nested_archive_split_read_never_loses_records(
         self, spark, tmp_path
@@ -636,26 +554,6 @@ class TestReviewFindingsR12:
             assert all(u.startswith(("http://outer/", "http://inner/"))
                        for u in got)
 
-    def test_fetch_emits_only_picked_ordinals(self, spark, tmp_path):
-        # a multi-record member is the I/O unit, not the predicate
-        # unit: fetching one ordinal of a 3-record member must emit
-        # exactly that record
-        recs = b"".join(
-            W.warc_record("resource",
-                          {"WARC-Target-URI": f"http://mr/{i}"},
-                          b"b" * (10 + i))
-            for i in range(3)
-        )
-        p = tmp_path / "multi.warc.gz"
-        p.write_bytes(W.gzip_member(recs))
-        from pyspark.sql import functions as F
-
-        idx = W.warc_cdx(spark, str(tmp_path))
-        assert idx.count() == 3  # one row per record, shared extent
-        picked = idx.filter(F.col("record_ordinal") == 1)
-        got = W.fetch_records(picked).collect()
-        assert [r.target_uri for r in got] == ["http://mr/1"]
-
 
 class TestReviewFindingsR13:
     """Round-13 review catches (the r12 ADVICE list), pinned."""
@@ -674,48 +572,6 @@ class TestReviewFindingsR13:
         p.write_bytes(blob)
         return str(p), len(W.gzip_member(good[0]))
 
-    def test_lenient_cdx_emits_sentinel_rows(self, spark, tmp_path):
-        # a lenient INDEX build must not silently undercount the crawl
-        # (read_warc's quarantine contract, extended to warc_cdx)
-        p, off0 = self._junk_file(tmp_path)
-        idx = W.warc_cdx(spark, str(tmp_path), errors="lenient")
-        rows = idx.collect()
-        errs = [r for r in rows if r.warc_type == W.PARSE_ERROR_TYPE]
-        assert len(errs) == 1
-        assert errs[0].offset == off0  # locates the torn member
-        assert errs[0].length is None  # junk has no decodable extent
-        assert errs[0].record_ordinal == -1
-        assert len(rows) == 4  # 3 indexed records + 1 sentinel
-
-    def test_lenient_split_cdx_emits_sentinel_rows(self, spark,
-                                                   tmp_path):
-        # same accounting through the split-planned build (junk placed
-        # INSIDE split 0, after good[0] — entry-region junk is the
-        # documented exception)
-        p, off0 = self._junk_file(tmp_path)
-        idx = W.warc_cdx(spark, p, errors="lenient",
-                         split_bytes=off0 + 30)
-        rows = idx.collect()
-        errs = [r for r in rows if r.warc_type == W.PARSE_ERROR_TYPE]
-        assert len(errs) == 1 and errs[0].offset == off0
-        assert len([r for r in rows
-                    if r.warc_type == "response"]) == 3
-
-    def test_lenient_sentinel_fetch_reproduces_the_error(self, spark,
-                                                         tmp_path):
-        # the sentinel's offset is a live locator: a lenient fetch of
-        # the row reproduces the failure as a quarantine row with the
-        # full message, no crawl re-scan needed
-        p, off0 = self._junk_file(tmp_path)
-        idx = W.warc_cdx(spark, str(tmp_path), errors="lenient")
-        from pyspark.sql import functions as F
-
-        sent = idx.filter(F.col("warc_type") == W.PARSE_ERROR_TYPE)
-        got = W.fetch_records(sent, errors="lenient").collect()
-        assert len(got) == 1
-        assert got[0].warc_type == W.PARSE_ERROR_TYPE
-        assert "gzip" in got[0].headers["error"]
-
     @pytest.mark.parametrize("bad", [0, -5])
     def test_split_bytes_validated(self, spark, tmp_path, bad):
         (tmp_path / "a.warc.gz").write_bytes(
@@ -723,8 +579,6 @@ class TestReviewFindingsR13:
         )
         with pytest.raises(ValueError, match="split_bytes"):
             W.read_warc_split(spark, str(tmp_path), split_bytes=bad)
-        with pytest.raises(ValueError, match="split_bytes"):
-            W.warc_cdx(spark, str(tmp_path), split_bytes=bad)
 
     def test_split_error_record_index_is_disjoint(self, spark,
                                                   tmp_path):
@@ -742,57 +596,6 @@ class TestReviewFindingsR13:
         assert all(i < 0 for i in errs)
         assert len(set(real + errs)) == len(real) + len(errs)
         assert errs == [-off0 - 1]
-
-    def test_fetch_fans_out_across_offset_buckets(self, spark,
-                                                  tmp_path,
-                                                  monkeypatch):
-        # the AQE-coalescing catch (round-13 drill): picked index rows
-        # are ~100 bytes, so without an EXPLICIT partition count AQE
-        # folds the whole picked set into one task while the member
-        # I/O behind each row stays invisible to it — 72k rows / 19
-        # buckets ran as a single 49.8 s task. fetch_records must pin
-        # the repartition to the counted bucket fan-out. (Bucket shift
-        # shrunk so a small fixture spans many buckets.)
-        from pyspark.sql import functions as F
-
-        monkeypatch.setattr(W, "_FETCH_BUCKET_SHIFT", 12)  # 4 KB
-        recs = [_resp_record(f"http://fan/{i}", b"x" * 120)
-                for i in range(200)]
-        p = str(tmp_path / "fan.warc.gz")
-        W.write_warc(p, recs)
-        idx = W.warc_cdx(spark, str(tmp_path))
-        n_buckets = idx.select(
-            F.shiftright("offset", 12)
-        ).distinct().count()
-        assert n_buckets > 4  # the fixture really spans buckets
-        fetched = W.fetch_records(idx)
-        fan = (fetched.select(F.spark_partition_id().alias("p"))
-               .groupBy("p").count().count())
-        assert fan > 1  # never serialized onto one task
-        assert fetched.count() == 200
-        # explicit override wins
-        one = W.fetch_records(idx, num_tasks=1)
-        assert (one.select(F.spark_partition_id().alias("p"))
-                .groupBy("p").count().count()) == 1
-
-    def test_wat_href_pattern_with_quote_is_safe(self, spark,
-                                                 tmp_path):
-        # a pattern containing a single quote must neither parse-error
-        # nor inject expression text (F.lit, not interpolated F.expr)
-        rec = _resp_record(
-            "http://w/0",
-            b"<a href='http://q.example/x'>q</a>"
-            b'<a href="http://d.example/y">d</a>',
-        )
-        p = tmp_path / "w.warc.gz"
-        p.write_bytes(W.gzip_member(rec))
-        recs = W.read_warc(spark, str(tmp_path))
-        wat = W.wat_from_records(
-            recs, href_pattern=r"href='(https?://[^']+)'"
-        ).collect()
-        assert len(wat) == 1
-        assert "http://q.example/x" in wat[0].wat
-        assert "http://d.example/y" not in wat[0].wat
 
 
 class TestLenientFuzz:
@@ -1062,105 +865,6 @@ class TestStreamingWarcIngest:
         assert {r.id for r in ing.corpus_arrays().collect()} == {0, 1, 2, 3, 5}
 
 
-class TestWet:
-    """WET (extracted-text conversion records): the OUTPUT side of
-    stage zero — WARC in, WET out, and WET back in losslessly."""
-
-    def test_warc_to_wet_round_trip(self, spark, warc_dir, tmp_path):
-        from pyspark.sql import functions as F
-
-        from borsa_spark.functions.html import extract_html
-
-        docs = W.warc_html_docs(W.read_warc(spark, warc_dir))
-        ext = extract_html(F.col("html"), min_chars=5)
-        extracted = docs.select(
-            "url", ext["extracted"].alias("text")
-        ).withColumn("__file", F.lit(0))
-        out = str(tmp_path / "wet")
-        summary = W.write_wet_files(extracted, out)
-        assert sum(r.n_records for r in summary.collect()) == 2
-        back = {(r.url, r.text) for r in W.read_wet(spark, out).collect()}
-        want = {(r.url, r.text) for r in extracted.collect()}
-        assert back == want
-
-    def test_wet_records_carry_conversion_type(self, tmp_path):
-        rec = W.wet_record("http://a/x", "extracted text here",
-                           refers_to="<urn:test:http://a/x>")
-        [(h, p)] = list(W.iter_warc_records(rec))
-        assert h["warc-type"] == "conversion"
-        assert h["content-type"] == "text/plain"
-        assert h["warc-refers-to"] == "<urn:test:http://a/x>"
-        assert p.decode() == "extracted text here"
-
-    def test_unicode_text_survives(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        rows = [(f"http://u/{i}", "héllo wörld — τεχτ " + "μ" * i)
-                for i in range(4)]
-        df = spark.createDataFrame(rows, "url string, text string")
-        out = str(tmp_path / "wet_u")
-        W.write_wet_files(df.withColumn("__file", F.lit(0)), out)
-        back = {(r.url, r.text) for r in W.read_wet(spark, out).collect()}
-        assert back == set(rows)
-
-
-class TestWat:
-    """WAT (metadata sidecar): the third Common Crawl artifact next to
-    WET and CDX — HTTP envelope + outlinks as JSON metadata records,
-    derivable from WARC and consumable without touching page bodies."""
-
-    def test_wat_record_shape(self):
-        rec = W.wat_record("http://a/x", '{"k": 1}',
-                           refers_to="<urn:test:http://a/x>")
-        [(h, p)] = list(W.iter_warc_records(rec))
-        assert h["warc-type"] == "metadata"
-        assert h["content-type"] == "application/json"
-        assert h["warc-refers-to"] == "<urn:test:http://a/x>"
-        assert p == b'{"k": 1}'
-
-    def test_warc_to_wat_round_trip(self, spark, tmp_path):
-        import json as _json
-
-        from pyspark.sql import functions as F
-
-        body = (b'<p>page with links</p>'
-                b'<a href="https://z.example/b">b</a>'
-                b'<a href="https://a.example/a">a</a>'
-                b'<a href="https://z.example/b">dup</a>')
-        recs = [
-            _resp_record("http://w/0", body),
-            _resp_record("http://w/1", b"<p>no links here</p>"),
-            _resp_record("http://w/2", b"<p>gone</p>", status=404),
-        ]
-        W.write_warc(str(tmp_path / "w.warc.gz"), recs)
-        wat = W.wat_from_records(W.read_warc(spark, str(tmp_path)))
-        rows = {r.url: _json.loads(r.wat) for r in wat.collect()}
-        # 404 excluded; outlinks sorted + distinct; envelope carried
-        assert set(rows) == {"http://w/0", "http://w/1"}
-        assert rows["http://w/0"]["outlinks"] == [
-            "https://a.example/a", "https://z.example/b"
-        ]
-        assert rows["http://w/1"]["outlinks"] == []
-        assert rows["http://w/0"]["http"]["status"] == 200
-
-        # sidecar round trip: write as WAT files, read + parse back
-        out = str(tmp_path / "wat")
-        W.write_wat_files(wat.withColumn("__file", F.lit(0)), out)
-        back = W.read_wat(spark, out)
-        parsed = back.select(
-            "url",
-            F.from_json(
-                "wat",
-                "url string, http struct<status:long, "
-                "content_type:string>, outlinks array<string>",
-            ).alias("w"),
-        )
-        got = {r.url: r.w.outlinks for r in parsed.collect()}
-        assert got["http://w/0"] == [
-            "https://a.example/a", "https://z.example/b"
-        ]
-
-
 class TestMalformedBytes:
     def test_garbage_page_does_not_kill_the_funnel(self, spark,
                                                    tmp_path):
@@ -1189,211 +893,3 @@ class TestMalformedBytes:
         (tmp_path / "empty.warc.gz").write_bytes(b"")
         rows = W.read_warc(spark, str(tmp_path)).collect()
         assert [r.target_uri for r in rows] == ["http://x"]
-
-
-class TestRevisitRecords:
-    """Crawl-time dedup signal: identical-payload revisit records are
-    duplication edges the crawler already proved — harvested as a view
-    and composable with dup_clusters like any verified pair relation."""
-
-    def test_revisit_edges_and_cluster_composition(self, spark,
-                                                   tmp_path):
-        from pyspark.sql import functions as F
-
-        from borsa_spark.functions.dedup import dup_clusters
-
-        recs = [
-            _resp_record("http://a/orig", b"<p>the original body</p>"),
-            _resp_record("http://b/other", b"<p>unrelated body</p>"),
-            W.revisit_record(
-                "http://a/copy1", "<urn:test:http://a/orig>",
-                "sha1:DIGEST1",
-            ),
-            W.revisit_record(
-                "http://a/copy2", "<urn:test:http://a/orig>",
-                "sha1:DIGEST1",
-            ),
-            # a server-not-modified revisit (different profile) must
-            # NOT become an exact-dup edge
-            W.warc_record(
-                "revisit",
-                {"WARC-Target-URI": "http://weak",
-                 "WARC-Refers-To": "<urn:test:http://a/orig>",
-                 "WARC-Profile":
-                     "http://netpreserve.org/warc/1.1/revisit/"
-                     "server-not-modified"},
-                b"",
-            ),
-        ]
-        W.write_warc(str(tmp_path / "r.warc.gz"), recs)
-        rec = W.read_warc(spark, str(tmp_path))
-        edges = W.warc_revisit_edges(rec).collect()
-        assert {(e.dup_url, e.orig_record_id) for e in edges} == {
-            ("http://a/copy1", "<urn:test:http://a/orig>"),
-            ("http://a/copy2", "<urn:test:http://a/orig>"),
-        }
-        assert all(e.payload_digest == "sha1:DIGEST1" for e in edges)
-
-        # compose: map urls/record-ids to node ids and fold the edges
-        # with the same star-contraction clusterer verified pairs use
-        urls = rec.select(
-            F.coalesce(F.col("headers")["warc-target-uri"],
-                       F.col("target_uri")).alias("u")
-        ).distinct()
-        nid = urls.select(
-            "u", F.xxhash64("u").alias("id")
-        )
-        originals = rec.filter(F.col("warc_type") == "response").select(
-            F.col("record_id").alias("orig_record_id"),
-            F.col("target_uri").alias("orig_url"),
-        )
-        e = (
-            W.warc_revisit_edges(rec)
-            .join(originals, "orig_record_id")
-            .join(nid.withColumnRenamed("u", "dup_url")
-                  .withColumnRenamed("id", "id_a"), "dup_url")
-            .join(nid.withColumnRenamed("u", "orig_url")
-                  .withColumnRenamed("id", "id_b"), "orig_url")
-            .select("id_a", "id_b")
-        )
-        comp = dup_clusters(e, nid.select("id"))
-        sizes = sorted(
-            r["n"] for r in comp.groupBy("comp")
-            .agg(F.count("*").alias("n")).collect()
-        )
-        # orig + 2 copies cluster; the other response and the weak
-        # revisit stay singletons
-        assert sizes == [1, 1, 3]
-
-
-class TestCdxColumnar:
-    """The SURT-sorted columnar index (round 13): spelling merge,
-    sentinel accounting, and persisted-layout round-trips. Plan/layout
-    guarantees (pushed StartsWith, disjoint file ranges, sorted row
-    groups) live in test_plan_shapes.TestRound13PlanShapes."""
-
-    VARIANTS = [  # one resource, four crawl spellings
-        "https://www.site.example.org/doc/1?b=2&a=1",
-        "https://site.example.org:443/doc/1/?a=1&b=2#top",
-        "https://site.example.org/doc/1?b=2&a=1",
-        "https://SITE.Example.ORG/doc/1?a=1&b=2",
-    ]
-
-    def _dir(self, tmp_path, extra=()):
-        blob = b"".join(
-            W.gzip_member(_resp_record(u, b"<p>v</p>"))
-            for u in (*self.VARIANTS, *extra)
-        )
-        p = tmp_path / "hosts.warc.gz"
-        p.write_bytes(blob)
-        return str(tmp_path)
-
-    def test_spelling_variants_collapse_under_one_prefix(
-            self, spark, tmp_path):
-        d = self._dir(tmp_path,
-                      extra=("https://other.example.org/doc/9",))
-        idx_dir = str(tmp_path / "cdx")
-        W.write_cdx_index(W.warc_cdx(spark, d), idx_dir, index_files=2)
-        index = W.read_cdx_index(spark, idx_dir)
-        hit = W.lookup_cdx(index, "org,example,site)")
-        rows = hit.collect()
-        assert len(rows) == len(self.VARIANTS)
-        assert {r.surt for r in rows} == {
-            "org,example,site)/doc/1?a=1&b=2"
-        }
-        # spelled URIs survive unmerged next to the merged key
-        assert {r.target_uri for r in rows} == set(self.VARIANTS)
-        # and the picked members fetch + decode
-        fetched = W.fetch_records(hit).collect()
-        assert len(fetched) == len(self.VARIANTS)
-        assert all(b"<p>v</p>" in r.body for r in fetched)
-
-    def test_lenient_sentinels_keep_null_surt(self, spark, tmp_path):
-        good = _resp_record("https://site.example.org/ok", b"<p>k</p>")
-        blob = (W.gzip_member(good)
-                + b"\x1f\x8b\x08" + b"\x00" * 24
-                + W.gzip_member(good))
-        (tmp_path / "junk.warc.gz").write_bytes(blob)
-        idx_dir = str(tmp_path / "cdx")
-        W.write_cdx_index(
-            W.warc_cdx(spark, str(tmp_path), errors="lenient"),
-            idx_dir, index_files=1,
-        )
-        index = W.read_cdx_index(spark, idx_dir)
-        # the sentinel survives persistence, counts via surt IS NULL,
-        # and no prefix lookup can ever match it
-        assert index.filter("surt IS NULL").count() == 1
-        assert index.count() == 3
-        assert W.lookup_cdx(index, "").count() == 2
-
-    def test_write_accepts_pre_columnar_relation(self, spark,
-                                                 tmp_path):
-        d = self._dir(tmp_path)
-        idx_dir = str(tmp_path / "cdx")
-        W.write_cdx_index(W.cdx_columnar(W.warc_cdx(spark, d)),
-                          idx_dir, index_files=1)
-        index = W.read_cdx_index(spark, idx_dir)
-        assert index.columns.count("surt") == 1
-        assert index.count() == len(self.VARIANTS)
-
-    def test_index_files_validated(self, spark, tmp_path):
-        d = self._dir(tmp_path)
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="index_files"):
-            W.write_cdx_index(W.warc_cdx(spark, d),
-                              str(tmp_path / "cdx"), index_files=0)
-
-    def test_per_crawl_partitions_append_and_prune(self, spark,
-                                                   tmp_path):
-        # the Common Crawl maintenance shape: one partition per crawl,
-        # appended over time, idempotent per label, partition-pruned
-        # on read BEFORE surt stats apply
-        import re
-
-        from pyspark.sql import functions as F
-
-        d1 = self._dir(tmp_path)
-        idx_dir = str(tmp_path / "cdx")
-        cdx1 = W.warc_cdx(spark, d1)
-        W.write_cdx_index(cdx1, idx_dir, index_files=1,
-                          crawl="2026-08")
-        # second crawl: same records again (a recrawl)
-        W.write_cdx_index(cdx1, idx_dir, index_files=1,
-                          crawl="2026-09")
-        index = W.read_cdx_index(spark, idx_dir)
-        assert "crawl" in index.columns
-        n = len(self.VARIANTS)
-        assert index.count() == 2 * n
-        # idempotent retry: rewriting one label must not double it
-        # (re-mount after the rewrite — an already-open reader of the
-        # overwritten partition holds a stale file listing, which is
-        # inherent to overwrite-in-place and documented)
-        W.write_cdx_index(cdx1, idx_dir, index_files=1,
-                          crawl="2026-09")
-        index = W.read_cdx_index(spark, idx_dir)
-        assert index.count() == 2 * n
-        one = index.filter(F.col("crawl") == "2026-09")
-        assert one.count() == n
-        # the crawl equality is a PartitionFilter (planning-time
-        # pruning), and the surt prefix still pushes inside it
-        plan_df = W.lookup_cdx(one, "org,example,site)")
-        import contextlib
-        import io
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            plan_df.explain("formatted")
-        plan = buf.getvalue()
-        assert re.search(r"PartitionFilters:.*crawl.*2026-09", plan), plan
-        assert re.search(r"PushedFilters:.*StringStartsWith\(surt",
-                         plan), plan
-        assert plan_df.count() == n
-
-    def test_crawl_label_validated(self, spark, tmp_path):
-        import pytest as _pytest
-
-        d = self._dir(tmp_path)
-        cdx = W.warc_cdx(spark, d)
-        for bad in ("a/b", "a=b"):
-            with _pytest.raises(ValueError, match="crawl label"):
-                W.write_cdx_index(cdx, str(tmp_path / "cdx"),
-                                  crawl=bad)

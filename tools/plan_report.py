@@ -26,26 +26,11 @@ MATERIALIZED_GATES = {
     "c6_incremental_rollup",
     "c7_streaming_rollup_exactly_once",
     "c10_tiered_rollup",
-    # round 11: tempdir-harness WARC queries execute the fixture write
-    # + read + collect at construction (the c3/c4 pattern); their plan
-    # evidence is the mapInPandas walk asserted in tests/test_plan_
-    # shapes.py, not an explain of the returned LocalRelation
-    "f96_warc_extract",
-    "c14_warc_corpus_prep",
-    # round 12: same tempdir-harness pattern (split reader / CDX fetch
-    # plans asserted in TestRound12PlanShapes)
-    "f98_warc_split_extract",
-    "f99_warc_cdx_fetch",
+    # tempdir-harness WARC query: executes the fixture write + read +
+    # collect at construction (the c3/c4 pattern); its plan evidence
+    # is the warc plan tests in tests/test_plan_shapes.py, not an
+    # explain of the returned LocalRelation
     "c15_crawl_link_rank",
-    "f100_wat_sidecar",
-    # round 13: the Data Source surface query, same tempdir harness
-    # (plan asserted in TestRound13PlanShapes-adjacent updates to the
-    # r11/r12 warc plan tests: BatchScan warc, zero exchanges), plus
-    # the columnar-index pair (plans asserted in TestRound13PlanShapes:
-    # pushed StringStartsWith lookup / index-only rollup)
-    "f101_warc_datasource",
-    "f102_cdx_columnar_lookup",
-    "c16_host_index_rollup",
 }
 
 

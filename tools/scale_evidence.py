@@ -602,7 +602,7 @@ def run_f17_stages(spark, results: list) -> None:
 
 
 def run_r7_family(spark, results: list) -> None:
-    """Round-7 crawl-pipeline family (f71-f74) across three document
+    """Round-7 crawl-pipeline family (f72-f78) across three document
     decades: sf0.1 (5k docs, the bench tier), sf1 (50.3k, 10x) and
     sf100x (500.3k, 100x). Each query runs end-to-end with a count()
     sink; walls are comparable across tiers because the plans are
@@ -620,7 +620,7 @@ def run_r7_family(spark, results: list) -> None:
         ("sf1x10", os.path.abspath(SCALE_DIR)),
         ("sf100x", os.path.abspath(SCALE_DIR_100)),
     ]
-    for qname in ("f71_url_canon_dedup", "f72_paragraph_dedup",
+    for qname in ("f72_paragraph_dedup",
                   "f73_unigram_lm_score", "f74_dsir_weights",
                   "f75_dsir_resample", "f76_bloom_decontaminate",
                   "f77_logreg_quality_score",
@@ -676,33 +676,31 @@ def _run_decade_drill(
 
 
 def run_r8_family(spark, results: list) -> None:
-    """Round-8 crawl-stage-zero family (f84 HTML extraction, f85
-    trained langid) across three document decades — both are
-    corpus-scan-shaped (f84 zero-shuffle projection; f85 one tf scan +
-    broadcast model), so walls should track corpus size ~linearly."""
+    """Round-8 family (f85 trained langid, f87/f88 PQ top-k) across
+    three document decades — f85 is corpus-scan-shaped (one tf scan +
+    broadcast model), so its walls should track corpus size
+    ~linearly."""
     _run_decade_drill(
         spark, results,
-        ("f84_html_extract", "f85_langid_nb",
-         "f87_pq_adc_topk", "f88_pq_rerank_topk"),
+        ("f85_langid_nb", "f87_pq_adc_topk", "f88_pq_rerank_topk"),
     )
 
 
 def run_r9_family(spark, results: list) -> None:
     """Round-9 lifecycle family across three document decades: the
-    composed DAGs (c11 crawl corpus prep, c12 training mix) against
-    their dominant stage (f77), plus f93's two-stage substring dedup.
-    The drill checks the COMPOSITIONS — c11 should track the f71-f78
-    stage family's 2-6x wall per decade, c12 should track bare f77
-    (everything after its k=100 selection is O(k)) — and that f93's
-    span OUTPUT follows true duplicate structure, not corpus size,
-    while its walls stay sub-linear. Timing starts at fn()
-    construction because c12 trains at construction time (the bench
-    run_once convention, applied uniformly; for the lazy queries the
-    construction cost inside the window is near-zero)."""
+    composed c12 training mix against its dominant stage (f77), plus
+    f93's two-stage substring dedup. The drill checks the
+    COMPOSITION — c12 should track bare f77 (everything after its
+    k=100 selection is O(k)) — and that f93's span OUTPUT follows true
+    duplicate structure, not corpus size, while its walls stay
+    sub-linear. Timing starts at fn() construction because c12 trains
+    at construction time (the bench run_once convention, applied
+    uniformly; for the lazy queries the construction cost inside the
+    window is near-zero)."""
     _run_decade_drill(
         spark, results,
-        ("f77_logreg_quality_score", "c11_crawl_corpus_prep",
-         "c12_training_mix", "f93_candidate_substring_spans"),
+        ("f77_logreg_quality_score", "c12_training_mix",
+         "f93_candidate_substring_spans"),
         time_from_construction=True,
     )
 
@@ -741,27 +739,15 @@ def run_r10_family(spark, results: list) -> None:
 
 
 def run_r11_family(spark, results: list) -> None:
-    """Round-11 additions across three document decades:
-
-    - f96 WARC extraction: the fixture WRITE (8 gzip-member files),
-      the binaryFile→mapInPandas record walk, the header gates, and
-      the f84 extraction all scale with record count; one task per
-      file means the 500k tier exercises 62.5k-record files — the
-      shape of a real Common Crawl segment, scaled down 16x.
-    - c14, c11's DAG from WARC bytes: should track c11's own decade
-      walls plus the near-linear WARC encode/decode layer.
-    - f97 residual IVFPQ over the embedding decades: broadcast
-      model relations, probed equi-join — walls should track the
-      f89 raw-coding form with the n_probe× larger query table
-      invisible at these sizes.
-
-    All three queries materialize inside fn() (tempdir harness /
-    collected models), so timing starts at construction (the c12
-    convention)."""
+    """Round-11 addition across three document decades: f97 residual
+    IVFPQ over the embedding decades — broadcast model relations,
+    probed equi-join — walls should track the f89 raw-coding form with
+    the n_probe× larger query table invisible at these sizes. It
+    materializes its collected models inside fn(), so timing starts
+    at construction (the c12 convention)."""
     _run_decade_drill(
         spark, results,
-        ("f96_warc_extract", "c14_warc_corpus_prep",
-         "f97_ivfpq_residual_topk"),
+        ("f97_ivfpq_residual_topk",),
         time_from_construction=True,
     )
 

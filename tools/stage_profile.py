@@ -7,7 +7,6 @@ adjacent prefix walls. Families:
              verified pairs (f7's pipeline on the raw corpus)
   f95      — the same pipeline over the f95 boilerplate fixture (capped)
   f17      — verified pairs vs. full star-contraction clustering
-  c11      — each stage relation of _c11_stages + the full langid query
   rollup   — per-protocol-step walls for c6 / c7 / c10 (VERDICT item 6)
 
 Usage: python tools/stage_profile.py <family> [--runs 2] [--sf DIR]
@@ -120,16 +119,6 @@ def main() -> None:
         )
         out["full_f17"] = timed(
             "full_f17", lambda: QUERIES["f17_dup_clusters"](spark, args.sf))
-
-    elif args.family == "c11":
-        from borsa_spark.queries import QUERIES, _c11_stages
-
-        for key in ("fixture", "extracted", "url_deduped", "line_filtered",
-                    "blocklisted", "exact_deduped", "para_deduped"):
-            out[key] = timed(key, lambda k=key: _c11_stages(spark, args.sf)[k])
-        out["full_c11"] = timed(
-            "full_c11",
-            lambda: QUERIES["c11_crawl_corpus_prep"](spark, args.sf))
 
     elif args.family == "rollup":
         import tempfile
