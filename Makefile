@@ -48,7 +48,6 @@ example-tour:
 	python examples/24_quota_middleware.py
 	python examples/25_python_datasource.py
 	python examples/26_dedup_ingest.py
-	python examples/27_drift_monitor.py
 	python examples/28_stream_enrich.py
 	python examples/29_multimodal_codecs.py
 	python examples/30_incremental_rollup.py

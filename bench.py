@@ -122,9 +122,6 @@ TIER2 = [
     "c13_image_crawl_clusters",
     # round 11 addition (first-baselined in BENCH_FULL_r11)
     "f97_ivfpq_residual_topk",
-    # round 12 addition (first-baselined in BENCH_FULL_r12):
-    # crawl-link PageRank from WARC bytes
-    "c15_crawl_link_rank",
 ]
 
 

@@ -262,26 +262,18 @@ class QuotaGuard:
             )
         with self._lock:
             now = self.clock()
-            elapsed = now - self.last_reset
-            if elapsed >= self.window_s:
-                self.calls_in_window = 0
-                # realign to window boundary (whole windows passed)
-                self.last_reset += int(elapsed / self.window_s) * self.window_s
-            if self.even_spread:
-                s_elapsed = now - self.slice_start
-                if s_elapsed >= self.slice_s:
-                    self.calls_in_slice = 0
-                    self.slice_start += int(s_elapsed / self.slice_s) * self.slice_s
-                if (
-                    self.calls_in_slice + cost > self.allowed_per_slice
-                    and self.calls_in_window + cost <= self.limit
-                ):
-                    reset_in = self.slice_s - (now - self.slice_start)
-                    raise QuotaExceeded(
-                        "slice budget exhausted",
-                        remaining=self.limit - self.calls_in_window,
-                        reset_in_s=reset_in,
-                    )
+            self._roll_over(now)
+            if (
+                self.even_spread
+                and self.calls_in_slice + cost > self.allowed_per_slice
+                and self.calls_in_window + cost <= self.limit
+            ):
+                reset_in = self.slice_s - (now - self.slice_start)
+                raise QuotaExceeded(
+                    "slice budget exhausted",
+                    remaining=self.limit - self.calls_in_window,
+                    reset_in_s=reset_in,
+                )
             if self.calls_in_window + cost <= self.limit:
                 self.calls_in_window += cost
                 if self.even_spread:
@@ -293,6 +285,20 @@ class QuotaGuard:
                 remaining=max(0, self.limit - self.calls_in_window),
                 reset_in_s=reset_in,
             )
+
+    def _roll_over(self, now: float) -> None:
+        """Start a fresh window (and slice) once the current one has
+        passed. Caller holds ``_lock``."""
+        elapsed = now - self.last_reset
+        if elapsed >= self.window_s:
+            self.calls_in_window = 0
+            # realign to window boundary (whole windows passed)
+            self.last_reset += int(elapsed / self.window_s) * self.window_s
+        if self.even_spread:
+            s_elapsed = now - self.slice_start
+            if s_elapsed >= self.slice_s:
+                self.calls_in_slice = 0
+                self.slice_start += int(s_elapsed / self.slice_s) * self.slice_s
 
 
 class Blacklist:
@@ -394,7 +400,7 @@ class QuotaConfig:
             raise ValueError(f"unknown quota strategy {d['strategy']!r}")
         return cls(
             limit=int(d["limit"]),
-            # dataclass default mirrors the reference's 60 s window
+            # absent window_s falls back to the dataclass default (86 400 s)
             window_s=float(d.get("window_s", cls.window_s)),
             strategy=d.get("strategy", "unit"),
         )
@@ -418,12 +424,14 @@ class QuotaState:
 
     @classmethod
     def of(cls, guard: QuotaGuard) -> "QuotaState":
-        now = guard.clock()
-        return cls(
-            limit=guard.limit,
-            remaining=max(0, guard.limit - guard.calls_in_window),
-            reset_in_s=max(0.0, guard.window_s - (now - guard.last_reset)),
-        )
+        with guard._lock:
+            now = guard.clock()
+            guard._roll_over(now)
+            return cls(
+                limit=guard.limit,
+                remaining=max(0, guard.limit - guard.calls_in_window),
+                reset_in_s=max(0.0, guard.window_s - (now - guard.last_reset)),
+            )
 
     def to_json(self) -> str:
         import json

@@ -9014,166 +9014,6 @@ def c13_image_crawl_clusters(spark, sf):
     )
 
 
-def _warc_n_files(spark, n_records: int) -> int:
-    """Corpus-proportional WARC fixture file count (~10k records/file,
-    floor 8): one task per file is the walk's parallelism model, so the
-    record-proportional term keeps drill tiers parallel (500k records
-    -> 50 files). A session-parallelism floor was tried in round 13 and
-    REJECTED by interleaved A/B at sf0.1 (8 files beat 32 — per-file
-    encode/walk fixed cost dominates when files hold ~1k records; the
-    floor lost every interleaved pair). File
-    assignment never affects any output relation. ``spark`` kept in the
-    signature so the sizing policy stays a one-line change."""
-    del spark  # sizing is corpus-proportional, not session-shaped
-    return max(8, n_records // 10_000)
-
-
-def _c15_records(row: dict):
-    """One response record per doc: the html body carries TWO outlinks
-    (ring successor + a doc_id-dependent skip) — the link structure
-    the crawl-rank pipeline must recover from bytes."""
-    from borsa_spark.sources import warc as W
-
-    did, t1, t2 = int(row["doc_id"]), int(row["t1"]), int(row["t2"])
-    html = (
-        f"<html><body><p>crawl link fixture page {did} body text "
-        f"kept by extraction rules.</p>"
-        f'<a href="https://link.example.com/doc/{t1}">one</a> '
-        f'<a href="https://link.example.com/doc/{t2}">two</a>'
-        "</body></html>"
-    )
-    yield W.warc_record(
-        "response",
-        {
-            "WARC-Target-URI": f"https://link.example.com/doc/{did}",
-            "WARC-Date": "2026-01-01T00:00:00Z",
-            "WARC-Record-ID": f"<urn:borsa:link:{did}>",
-            "Content-Type": "application/http; msgtype=response",
-        },
-        W.http_response(200, "OK", {"Content-Type": "text/html"},
-                        html.encode("ascii")),
-    )
-
-
-def _c15_oracle_sql() -> str:
-    """The c15 link graph and its PageRank stated analytically: rank-
-    indexed ring (rn -> rn+1) plus a doc_id-dependent skip
-    (rn -> rn + doc_id%11 + 2), self-loops dropped, UNION-deduped;
-    then f56's exact snapped power-iteration CTEs."""
-    from borsa_spark.functions.graph import sql_pagerank_round
-
-    rounds = ",".join(
-        sql_pagerank_round(f"pr{k - 1}" if k > 1 else "pr0", k)
-        for k in (1, 2, 3)
-    )
-    return f"""
-    WITH ids AS (
-      SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS rn
-      FROM documents),
-    nn0 AS (SELECT count(*) AS n FROM documents),
-    raw_edges AS (
-      SELECT a.doc_id AS src, b.doc_id AS dst
-      FROM ids a CROSS JOIN nn0
-      JOIN ids b ON b.rn = (a.rn + 1) % nn0.n
-      UNION
-      SELECT a.doc_id, c.doc_id
-      FROM ids a CROSS JOIN nn0
-      JOIN ids c ON c.rn = (a.rn + a.doc_id % 11 + 2) % nn0.n),
-    edges AS (SELECT src, dst FROM raw_edges WHERE src <> dst),
-    deg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
-    nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-    pr0 AS (
-      SELECT doc_id AS id, round(1.0 / nn.n, 8) AS pr
-      FROM documents CROSS JOIN nn),
-    {rounds}
-    SELECT id AS doc_id, round(pr, 6) AS pagerank,
-           row_number() OVER (ORDER BY pr DESC, id ASC) AS rank
-    FROM pr3
-    ORDER BY pr DESC, id ASC LIMIT 100
-    """
-
-
-@query("c15_crawl_link_rank", _c15_oracle_sql())
-def c15_crawl_link_rank(spark, sf):
-    """Crawl-frontier scoring from WARC BYTES: the web-corpus quality
-    prior a real pipeline computes from the hyperlink graph. Documents
-    become WARC response records whose html carries two outlinks
-    (ring + doc_id-dependent skip — in-degree varies, so real hubs
-    exist); the pipeline recovers the graph from bytes
-    (`read_warc` → `warc_html_docs` → href extraction, all JVM-side
-    regexp over the scan) and runs f56's snapped PageRank
-    (`functions/graph.py`, 3 iterations, damping 0.85). Oracle states
-    the same edges analytically (rank-indexed window + modular joins)
-    and walks the identical fixpoint CTEs — a missed or phantom link,
-    a dropped dangling node, or a desynced record walk moves ranks.
-
-    Scale shape: the href extraction is `regexp_extract_all` fused
-    into the scan (zero Python); each PageRank round is one equi-join
-    + one map-side-combined groupBy (f56's plan). The rank-indexed
-    ring is FIXTURE construction (single-partition window over doc
-    ids) — production edges come from the crawl itself; the top-100
-    panel plans as TakeOrderedAndProject, never a full-corpus sort."""
-    import shutil
-    import tempfile
-
-    from borsa_spark.functions.graph import pagerank
-    from borsa_spark.sources import warc as W
-
-    ids = load_table(spark, sf, "documents").select("doc_id")
-    n = ids.count()
-    w = Window.orderBy("doc_id")
-    base = ids.withColumn("rn", F.row_number().over(w) - 1)
-    rn_ids = base.select(F.col("doc_id").alias("t"),
-                         F.col("rn").alias("trn"))
-    src = (
-        base.join(
-            rn_ids.withColumnRenamed("t", "t1")
-            .withColumnRenamed("trn", "rn1"),
-            (F.col("rn") + 1) % n == F.col("rn1"),
-        )
-        .join(
-            rn_ids.withColumnRenamed("t", "t2")
-            .withColumnRenamed("trn", "rn2"),
-            (F.col("rn") + F.col("doc_id") % 11 + 2) % n
-            == F.col("rn2"),
-        )
-        .select("doc_id", "t1", "t2")
-        .withColumn("__file", F.col("doc_id") % _warc_n_files(spark, n))
-    )
-    work = tempfile.mkdtemp(prefix="c15_warc_")
-    try:
-        W.write_warc_files(src, work, _c15_records, "__file", "doc_id")
-        docs = W.warc_html_docs(W.read_warc(spark, work))
-        edges = (
-            docs.select(
-                F.regexp_extract("url", r"/doc/(\d+)$", 1)
-                .cast("long").alias("src"),
-                F.explode(
-                    F.expr(
-                        "regexp_extract_all(html, "
-                        "'href=\"https://link\\\\.example\\\\.com"
-                        "/doc/(\\\\d+)\"', 1)"
-                    )
-                ).alias("dst_s"),
-            )
-            .select("src", F.col("dst_s").cast("long").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        nodes = ids.select(F.col("doc_id").alias("id"))
-        pr = pagerank(edges, nodes, iters=3)
-        top = pr.orderBy(F.col("pr").desc(), F.col("id").asc()).limit(100)
-        rw = Window.orderBy(F.col("pr").desc(), F.col("id").asc())
-        out = top.select(
-            F.col("id").alias("doc_id"),
-            F.round(F.col("pr"), 6).alias("pagerank"),
-            F.row_number().over(rw).alias("rank"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def _c12_stages(spark, sf) -> dict:
     """Stage relations for c12 (the query and the load-bearing funnel
     tests share them)."""

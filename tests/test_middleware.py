@@ -258,6 +258,15 @@ class TestQuotaSerde:
         snap = QuotaState.of(guard)
         assert (snap.limit, snap.remaining, snap.reset_in_s) == (3, 1, 50.0)
 
+        # the snapshot rolls the window over exactly as the next call
+        # would: a spent window that has passed reads as a fresh budget
+        guard.should_allow_call()
+        clock.t = 61.0
+        snap = QuotaState.of(guard)
+        assert (snap.remaining, snap.reset_in_s) == (3, 59.0)
+        guard.should_allow_call()
+        assert QuotaState.of(guard).remaining == 2
+
 
 class TestWeightedQuota:
     def test_cost_deducts_multiple_units(self):

@@ -790,38 +790,6 @@ class TestRound10PlanShapes:
 
 
 class TestRound11PlanShapes:
-    def test_warc_read_is_one_datasource_scan(self, spark, tmp_path):
-        # the WARC relation (round 13: rewired onto the registered
-        # `warc` Python Data Source): ONE BatchScan and nothing else
-        # Python-side — no binaryFile materialization, no MapInPandas
-        # stage; the html funnel's type/status/content-type gates sit
-        # ABOVE the scan as plain filters (map-only, no shuffle)
-        from pyspark.sql import functions as F
-
-        from borsa_spark.sources import warc as W
-
-        W.write_warc_files(
-            spark.range(8).select(
-                F.col("id"), (F.col("id") % 2).alias("__file")
-            ),
-            str(tmp_path),
-            _warc_rec,
-        )
-        rel = W.read_warc(spark, str(tmp_path))
-        docs = W.warc_html_docs(rel)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            docs.explain("formatted")
-        plan = buf.getvalue()
-        import re
-
-        assert len(re.findall(r"\(\d+\) BatchScan warc", plan)) == 1
-        assert "MapInPandas" not in plan  # the walk IS the scan now
-        assert "Exchange" not in plan  # record walk + gates: map-only
-        assert "BatchEvalPython" not in plan  # Arrow path, never pickled
-        # splitting off: one task per file, the Common Crawl unit
-        assert rel.rdd.getNumPartitions() == 2
-
     def test_f97_model_relations_broadcast_corpus_never_self_joins(
         self, spark
     ):
@@ -833,68 +801,6 @@ class TestRound11PlanShapes:
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan
         assert "SortMergeJoin" not in plan
         spark.catalog.clearCache()
-
-
-def _warc_rec(row):
-    from borsa_spark.sources import warc as W
-
-    yield W.warc_record(
-        "response",
-        {"WARC-Target-URI": f"http://x/{row['id']}",
-         "Content-Type": "application/http; msgtype=response"},
-        W.http_response(200, "OK", {"Content-Type": "text/html"},
-                        b"<p>plan fixture body long enough here.</p>"),
-    )
-
-
-def _plan_str(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-class TestRound12PlanShapes:
-    @staticmethod
-    def _fixture(spark, tmp_path, n=64):
-        from pyspark.sql import functions as F
-
-        from borsa_spark.sources import warc as W
-
-        W.write_warc_files(
-            spark.range(n).select(
-                F.col("id"), (F.col("id") % 2).alias("__file")
-            ),
-            str(tmp_path), _warc_rec,
-        )
-        return str(tmp_path)
-
-    def test_split_read_is_one_scan_task_per_byte_range(self, spark,
-                                                        tmp_path):
-        # the split reader (round 13: rewired onto the `warc` Data
-        # Source): byte ranges ARE the input partitions of ONE
-        # BatchScan — the old round-robin fan-out exchange over a
-        # (path,start,end) relation is GONE, zero shuffles; partitions
-        # = split count
-        import os
-
-        from borsa_spark.sources import warc as W
-
-        d = self._fixture(spark, tmp_path)
-        [fname] = [x for x in os.listdir(d) if x.endswith(".warc.gz")
-                   and "part-0" in x]
-        path = os.path.join(d, fname)
-        split = max(64, os.path.getsize(path) // 5)
-        parts = W.read_warc_split(spark, path, split_bytes=split)
-        plan = _plan_str(parts)
-        import re
-
-        assert len(re.findall(r"\(\d+\) BatchScan warc", plan)) == 1
-        assert "MapInPandas" not in plan
-        assert "Exchange" not in plan  # the fan-out shuffle is gone
-        assert "BatchEvalPython" not in plan
-        n_splits = -(-os.path.getsize(path) // split)
-        assert parts.rdd.getNumPartitions() == n_splits > 1
 
 
 class TestWidenGuardsR14:

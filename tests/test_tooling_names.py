@@ -1,9 +1,11 @@
 """The tooling names only code that exists: every query listed in
-bench.py's tiers and in tools/plan_report.py is registered, and every
-example the Makefile runs is on disk. A removed query or example would
-otherwise leave a dead entry that only fails when the tool is run.
-The lists are read with ``ast``, so neither script is imported and no
-Spark session starts."""
+bench.py's tiers and in tools/plan_report.py is registered, every
+example the Makefile runs is on disk, and every ``borsa_spark`` import
+in the repo resolves. A removed query, example or module would
+otherwise leave a dead entry that only fails when the tool is run (or,
+for an import inside a function, when that function is called).
+Everything is read with ``ast``, so no script is imported and no Spark
+session starts."""
 
 from __future__ import annotations
 
@@ -49,3 +51,102 @@ def test_makefile_examples_exist():
     missing = [s for s in scripts
                if not os.path.isfile(os.path.join(REPO, s))]
     assert missing == []
+
+
+# Where ``borsa_spark`` is imported from: the package and everything
+# that drives it.
+IMPORT_SCAN = ("borsa_spark", "examples", "tools", "tests", "perfbench",
+               "bench.py", "__spark_entry__.py")
+
+
+def _module_file(module: str) -> str | None:
+    base = os.path.join(REPO, *module.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _top_level_names(stmts, names: set) -> set:
+    """Names a module binds at top level, including inside top-level
+    ``if``/``try``/``with``/``for`` blocks (but not in function or class
+    bodies)."""
+    for node in stmts:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0]
+                         for a in node.names)
+        else:
+            for _, value in ast.iter_fields(node):
+                for sub in value if isinstance(value, list) else [value]:
+                    if isinstance(sub, ast.stmt):
+                        _top_level_names([sub], names)
+                    elif isinstance(sub, ast.ExceptHandler):
+                        names.update([sub.name] if sub.name else [])
+                        _top_level_names(sub.body, names)
+                    elif isinstance(sub, ast.AST):
+                        names.update(
+                            n.id for n in ast.walk(sub)
+                            if isinstance(n, ast.Name)
+                            and isinstance(n.ctx, ast.Store)
+                        )
+    return names
+
+
+def _py_files():
+    for entry in IMPORT_SCAN:
+        path = os.path.join(REPO, entry)
+        if os.path.isfile(path):
+            yield path
+            continue
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            yield from (os.path.join(root, f) for f in sorted(files)
+                        if f.endswith(".py"))
+
+
+def _from_module(path: str, node: ast.ImportFrom) -> str:
+    """The absolute module of a ``from`` import (relative ones resolved
+    against the importing file's package)."""
+    if not node.level:
+        return node.module
+    parts = os.path.relpath(path, REPO)[:-len(".py")].split(os.sep)
+    base = ".".join(parts[:len(parts) - node.level])
+    return f"{base}.{node.module}" if node.module else base
+
+
+def test_borsa_spark_imports_resolve():
+    bindings: dict = {}
+
+    def binds(module: str, name: str) -> bool:
+        if _module_file(f"{module}.{name}"):
+            return True
+        if module not in bindings:
+            with open(_module_file(module)) as f:
+                bindings[module] = _top_level_names(
+                    ast.parse(f.read()).body, set())
+        return name in bindings[module]
+
+    dangling = []
+    for path in _py_files():
+        rel = os.path.relpath(path, REPO)
+        with open(path) as f:
+            tree = ast.parse(f.read(), rel)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                pairs = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                module = _from_module(path, node)
+                pairs = [(module, a.name) for a in node.names]
+            else:
+                continue
+            for module, name in pairs:
+                if module.split(".")[0] != "borsa_spark":
+                    continue
+                if _module_file(module) is None:
+                    dangling.append((rel, node.lineno, module))
+                elif name not in (None, "*") and not binds(module, name):
+                    dangling.append((rel, node.lineno, f"{module}:{name}"))
+    assert dangling == []

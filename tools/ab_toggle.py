@@ -1,12 +1,12 @@
-"""Interleaved A/B for round-13 widen/n_files decisions: alternate
-OFF/ON samples in ONE process (A,B,A,B,...) so host bursts hit both
-arms equally; report per-arm sample lists and minima.
+"""Interleaved A/B for the round-13 widen decision: alternate OFF/ON
+samples in ONE process (A,B,A,B,...) so host bursts hit both arms
+equally; report per-arm sample lists and minima.
 
-OFF = widen_if_narrow patched to identity (and/or the WARC file-count
-floor back at 8); ON = the committed behavior. Timing is the bench
-methodology (noop sink, release_all_cached between samples).
+OFF = widen_if_narrow patched to identity; ON = the committed behavior.
+Timing is the bench methodology (noop sink, release_all_cached between
+samples).
 
-Usage: python tools/ab_toggle.py <query> [n_pairs] [--mode widen|nfiles|both]
+Usage: python tools/ab_toggle.py <query> [n_pairs]
 """
 
 from __future__ import annotations
@@ -24,12 +24,8 @@ os.environ.setdefault("BORSA_SPARK_SHINGLE_HASH", "xxhash64")
 def main() -> None:
     name = sys.argv[1]
     n_pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    mode = "widen"
-    if "--mode" in sys.argv:
-        mode = sys.argv[sys.argv.index("--mode") + 1]
 
     import borsa_spark.functions.dedup as dd
-    import borsa_spark.queries as Q
     from borsa_spark.queries import QUERIES
     from borsa_spark.session import get_spark, release_all_cached
 
@@ -38,18 +34,10 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     real_widen = dd.widen_if_narrow
-    real_nfiles = Q._warc_n_files
 
     def set_arm(on: bool) -> None:
-        if mode in ("widen", "both"):
-            dd.widen_if_narrow = real_widen if on else (lambda df: df)
-            # queries.py binds the module, so patching dd covers _dd too
-        if mode in ("nfiles", "both"):
-            Q._warc_n_files = (
-                real_nfiles
-                if on
-                else (lambda spark, n: max(8, n // 10_000))
-            )
+        dd.widen_if_narrow = real_widen if on else (lambda df: df)
+        # queries.py binds the module, so patching dd covers _dd too
 
     fn = QUERIES[name]
 
@@ -76,7 +64,6 @@ def main() -> None:
 
     out = {
         "query": name,
-        "mode": mode,
         "off": off,
         "on": on,
         "off_min": min(off),

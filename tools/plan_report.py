@@ -26,11 +26,6 @@ MATERIALIZED_GATES = {
     "c6_incremental_rollup",
     "c7_streaming_rollup_exactly_once",
     "c10_tiered_rollup",
-    # tempdir-harness WARC query: executes the fixture write + read +
-    # collect at construction (the c3/c4 pattern); its plan evidence
-    # is the warc plan tests in tests/test_plan_shapes.py, not an
-    # explain of the returned LocalRelation
-    "c15_crawl_link_rank",
 }
 
 
