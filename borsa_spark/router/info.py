@@ -23,7 +23,7 @@ from borsa_spark.errors import BorsaSparkError, UnsupportedError
 from borsa_spark.plans.routing_policy import RoutingContext
 from borsa_spark.router.quotes import _quote_union
 from borsa_spark.router.tables import capability_scan
-from borsa_spark.sources.provider import Catalog
+from borsa_spark.sources.provider import Catalog, _local_frame
 
 
 def _try_scan(catalog, capability, symbols, prefix: str,
@@ -88,7 +88,7 @@ def info(
     base = (
         symbols_df
         if symbols_df is not None
-        else spark.createDataFrame([(s,) for s in symbols], "symbol string")
+        else _local_frame(spark, [(s,) for s in symbols], "symbol string")
     )
     out = base
     if quotes is not None:
@@ -187,7 +187,7 @@ def download(
             HistoryRequest(symbol=ALL_SYMBOLS, interval=interval),
             symbols=ALL_SYMBOLS, **history_kwargs,
         )
-        return res.candles, spark.createDataFrame([], "symbol string")
+        return res.candles, _local_frame(spark, [], "symbol string")
     if len(set(symbols)) != len(symbols):
         raise ValueError("duplicate symbols in download request")
 
@@ -219,6 +219,6 @@ def download(
     candles = frames[0]
     for f in frames[1:]:
         candles = candles.unionByName(f)
-    requested = spark.createDataFrame([(s,) for s in symbols], "symbol string")
+    requested = _local_frame(spark, [(s,) for s in symbols], "symbol string")
     failed = requested.join(candles.select("symbol").distinct(), "symbol", "left_anti")
     return candles, failed

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from borsa_spark.errors import NotFoundError, UnsupportedError
 from borsa_spark.plans.routing_policy import RoutingContext
-from borsa_spark.sources.provider import Catalog
+from borsa_spark.sources.provider import Catalog, _local_frame
 
 
 def _quote_union(
@@ -142,7 +142,14 @@ def quotes(
     one cached relation per request — safety is the default, and a
     caller that consumes both outputs under a harness-owned cache
     lifetime (bench/oracle: `release_all_cached` per query) opts in to
-    the single-scan plan with persist=True."""
+    the single-scan plan with persist=True.
+
+    What each output executes: ``best`` runs the provider union and the
+    per-symbol window. ``failures`` anti-joins the requested symbols, a
+    ``LocalRelation`` built through Arrow, against that same union, so
+    without ``persist`` it runs the union again. A REST provider is
+    fetched once per call, while the union is built; both outputs read
+    its rows as a ``LocalRelation``, and neither starts a Python worker."""
     if len(set(symbols)) != len(symbols):
         # duplicate-symbol validation (download.rs:10-26 applies the same rule)
         raise ValueError("duplicate symbols in batch quote request")
@@ -162,9 +169,7 @@ def quotes(
     )
     if persist:
         best = best.persist()
-    requested = spark.createDataFrame(
-        [(s,) for s in symbols], "symbol string"
-    )
+    requested = _local_frame(spark, [(s,) for s in symbols], "symbol string")
     failures = requested.join(best, "symbol", "left_anti")
     return best, failures
 

@@ -56,7 +56,9 @@ class StreamHandle:
         same merged view, no shared-log write point."""
         live = [p for p in self.session_paths if os.path.isdir(p)]
         if not live:
-            return self.spark.createDataFrame([], self.schema)
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), self.schema
+            )
         return self.spark.read.schema(self.schema).parquet(*live)
 
     def process_available(self, timeout_s: int = 120) -> None:

@@ -15,10 +15,11 @@ parquet-backed DataFrames — same planner, same pipeline, different scan.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from borsa_spark.errors import NotFoundError, UnsupportedError
@@ -48,6 +49,16 @@ class Source:
     DataFrame). The per-capability scan templates in the router add the
     symbol/interval/date predicates — those reach the parquet scan as pushed
     filters because the factory returns an untouched declarative scan.
+
+    A factory whose result is a batch relation over files (for example
+    ``lambda: spark.read.parquet(dir)``) runs once: the resolved relation is
+    kept and reused, so a request does not list the directory and read the
+    parquet footers again. The kept relation belongs to the factory object
+    it came from; putting a new factory in ``tables`` replaces it. Every
+    other factory runs on every call — REST tables behind the middleware,
+    streaming feeds and in-memory frames — so the cache, quota and blacklist
+    see every router call. A directory that grows needs ``refresh()`` before
+    its new files become visible.
     """
 
     name: str
@@ -55,6 +66,14 @@ class Source:
     history_intervals: tuple[str, ...] = ()
     tables: dict[str, DataFrame | Callable[[], DataFrame]] = field(
         default_factory=dict
+    )
+    # capability -> (factory, its tagged relation, or None for a factory
+    # that runs on every call)
+    _resolved: dict[str, tuple[Callable[[], DataFrame], DataFrame | None]] = (
+        field(default_factory=dict, init=False, repr=False, compare=False)
+    )
+    _resolve_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
     )
 
     def capabilities(self) -> set[str]:
@@ -70,7 +89,28 @@ class Source:
         t = self.tables.get(capability)
         if t is None:
             raise UnsupportedError(capability, connector=self.name)
-        df = t() if callable(t) else t
+        if not callable(t):
+            return self._tag(t)
+        hit = self._resolved.get(capability)
+        if hit is None or hit[0] is not t:
+            with self._resolve_lock:
+                hit = self._resolved.get(capability)
+                if hit is None or hit[0] is not t:
+                    # First call of this factory: its result decides
+                    # whether later calls reuse it or call it again.
+                    df = self._tag(t())
+                    files = not df.isStreaming and df.inputFiles()
+                    self._resolved[capability] = (t, df if files else None)
+                    return df
+        return hit[1] if hit[1] is not None else self._tag(t())
+
+    def refresh(self) -> None:
+        """Drop the resolved file relations, so the next call of each
+        factory lists its files again (new files become visible)."""
+        with self._resolve_lock:
+            self._resolved.clear()
+
+    def _tag(self, df: DataFrame) -> DataFrame:
         # Every capability row is provider-tagged so downstream merge /
         # attribution / blame logic can run without re-deriving lineage.
         if "provider" not in df.columns:
@@ -135,6 +175,24 @@ class Catalog:
             if s.supports_kind(ctx.kind) and s.supports(capability)
         ]
         return out
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str
+) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation``: pandas to Arrow to the JVM,
+    so no Python worker runs when the frame is used (a list given to
+    ``createDataFrame`` goes through a pickled Python RDD instead).
+    ``schema`` is a flat DDL string; missing values become nulls, and an
+    empty ``rows`` gives an empty frame of that schema."""
+    import pandas as pd
+    import pyarrow as pa
+
+    cols = [c.split()[0] for c in schema.split(",")]
+    pdf = pd.DataFrame.from_records(rows, columns=cols)
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, preserve_index=False), schema
+    )
 
 
 def catalog_df(spark, catalog: Catalog):

@@ -52,7 +52,7 @@ from borsa_spark.errors import (
     UnsupportedError,
 )
 from borsa_spark.middleware import MiddlewareStack
-from borsa_spark.sources.provider import ALL_KINDS, Source
+from borsa_spark.sources.provider import ALL_KINDS, Source, _local_frame
 
 Headers = dict[str, str]
 
@@ -447,12 +447,16 @@ def rest_source(
     universe: capability tables are LAZY factories (no fetch happens until
     the router actually selects this provider for a scan), so an unselected
     provider costs zero HTTP calls — the live analog of predicate pushdown.
+
+    The factories run on every router call (``Source`` keeps only relations
+    over files), so each call goes through the adapter's middleware: the
+    TTL cache answers or the transport is called, and quota and blacklist
+    see the call. The fetched rows become a ``LocalRelation`` through Arrow
+    (no Python workers); history stays on executors.
     """
 
     def quotes_df() -> DataFrame:
-        return spark.createDataFrame(
-            adapter.fetch_quotes(symbols), QUOTE_SCHEMA
-        )
+        return _local_frame(spark, adapter.fetch_quotes(symbols), QUOTE_SCHEMA)
 
     def search_df() -> DataFrame:
         # the router's search template filters by query afterwards; a live
@@ -461,16 +465,16 @@ def rest_source(
         rows: list[tuple] = []
         for s in symbols:
             rows.extend(adapter.fetch_search(s))
-        return spark.createDataFrame(rows, SEARCH_SCHEMA)
+        return _local_frame(spark, rows, SEARCH_SCHEMA)
 
     def profile_df() -> DataFrame:
         rows: list[tuple] = []
         for s in symbols:
             rows.extend(adapter.fetch_profile(s))
-        return spark.createDataFrame(rows, PROFILE_SCHEMA)
+        return _local_frame(spark, rows, PROFILE_SCHEMA)
 
     def history_df() -> DataFrame:
-        sym_df = spark.createDataFrame([(s,) for s in symbols], "symbol string")
+        sym_df = _local_frame(spark, [(s,) for s in symbols], "symbol string")
         return adapter.fetch_history_distributed(sym_df)
 
     tables: dict[str, Callable[[], DataFrame]] = {}

@@ -3,9 +3,10 @@ bench.py's tiers and in tools/plan_report.py is registered, every
 example the Makefile runs is on disk, and every ``borsa_spark`` import
 in the repo resolves. A removed query, example or module would
 otherwise leave a dead entry that only fails when the tool is run (or,
-for an import inside a function, when that function is called).
-Everything is read with ``ast``, so no script is imported and no Spark
-session starts."""
+for an import inside a function, when that function is called). The
+request paths also build no local rows from a Python list, which would
+start Python workers. Everything is read with ``ast``, so no script is
+imported and no Spark session starts."""
 
 from __future__ import annotations
 
@@ -150,3 +151,47 @@ def test_borsa_spark_imports_resolve():
                 elif name not in (None, "*") and not binds(module, name):
                     dangling.append((rel, node.lineno, f"{module}:{name}"))
     assert dangling == []
+
+
+# Request paths: their local rows go through Arrow (``_local_frame``),
+# because ``createDataFrame`` over a list runs a pickled Python RDD.
+LOCAL_ROW_SCAN = ("borsa_spark/router", "borsa_spark/sources/rest.py")
+
+
+def _pickled_row_calls(tree) -> list[int]:
+    """Lines of ``createDataFrame`` calls whose data is a list, tuple or
+    list comprehension."""
+    lines = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"):
+            continue
+        data = node.args[:1] + [k.value for k in node.keywords
+                                if k.arg == "data"]
+        if any(isinstance(d, (ast.List, ast.Tuple, ast.ListComp))
+               for d in data):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_request_paths_create_no_rows_from_lists():
+    planted = ast.parse(
+        'spark.createDataFrame([(s,) for s in symbols], "symbol string")\n'
+        'spark.createDataFrame(data=[], schema="symbol string")\n'
+        'spark.createDataFrame(((1,),), "a int")\n'
+        'spark.createDataFrame(pdf, "symbol string")\n'
+    )
+    assert _pickled_row_calls(planted) == [1, 2, 3]
+    offenders = []
+    for entry in LOCAL_ROW_SCAN:
+        path = os.path.join(REPO, entry)
+        files = [path] if os.path.isfile(path) else [
+            os.path.join(path, f) for f in sorted(os.listdir(path))
+            if f.endswith(".py")]
+        for f in files:
+            with open(f) as fh:
+                tree = ast.parse(fh.read(), f)
+            offenders += [(os.path.relpath(f, REPO), line)
+                          for line in _pickled_row_calls(tree)]
+    assert offenders == []
