@@ -29,8 +29,8 @@ consumer's action to benefit. The CALLER (harness, service loop, or
 notebook) owns the release — run
 ``borsa_spark.session.release_all_cached(spark)`` after consuming each
 result (it also frees ``localCheckpoint`` blocks, which
-``spark.catalog.clearCache()`` alone does not). bench.py and the
-oracle harness do this between queries;
+``spark.catalog.clearCache()`` alone does not). The oracle harness
+(tools/check_oracle.py) clears the cache between queries;
 tests/test_cache_discipline.py asserts the sweep returns the session
 to zero cached blocks after representative queries() entries. The few
 functions that themselves run the terminal action (e.g.

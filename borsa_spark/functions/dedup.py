@@ -611,7 +611,7 @@ def minhash_dedup_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     standalone minhash run: md5-identical texts collapse to one
     representative before shingling, so an identical-text cohort pays
     the 60-permutation signature fold once instead of once per copy.
-    Measured trade (round 11, SCALE.md): the fold saving scales with
+    Measured trade (round-11 scale drill): the fold saving scales with
     words-per-doc × dup-rate, the collapse machinery (md5 groupBy +
     membership joins + re-expansion, ~6 extra shuffle stages of
     id-sized relations) is near-fixed — on an 80%-duplicated 200-word

@@ -1456,16 +1456,16 @@ def band_oversized_buckets(
 _UNSET = object()
 
 #: Coherent presets for the band candidate joins (round-10: safe by
-#: DEFAULT). The three knobs are not independent: SCALE.md's 500k-image
-#: drill shows byte bands + a cap collapsing recall (1,951/2,048 buckets
+#: DEFAULT). The three knobs are not independent: a 500k-image scale
+#: drill showed byte bands + a cap collapsing recall (1,951/2,048 buckets
 #: oversized -> 231/50,030 planted pairs found) while byte bands WITHOUT
 #: a cap go O(n²) on flat cohorts — only the (wide bands, finite cap)
 #: pair is crawl-viable, so the preset switches them together.
 #:
 #: - "crawl" (default): 16-bit bands (4 bands -> pigeonhole recall
 #:   bound hamming <= 3, hence the matching max_hamming default) + a
-#:   finite hot-bucket cap. What a 100-TB user gets without reading
-#:   SCALE.md. Excluded buckets are never silent: account with
+#:   finite hot-bucket cap. What a 100-TB user gets without tuning
+#:   the knobs. Excluded buckets are never silent: account with
 #:   `band_oversized_buckets` and route those near-identical cohorts
 #:   through exact (full-hash) dedup.
 #: - "exhaustive": byte bands, no cap, hamming <= 6 — the all-pairs
@@ -1555,7 +1555,7 @@ def phash_near_pairs(
     giant near-identical cohorts better served by exact dedup.
     ``bytes_per_band``: the wide-band density lever (phash_band_keys) —
     at crawl density prefer 2 (the video path's frame hashes are full
-    of near-constant frames, the dHash SCALE.md drill's saturation
+    of near-constant frames, the dHash scale drill's saturation
     case)."""
     max_hamming, max_bucket_size, bytes_per_band = _resolve_band_profile(
         profile, max_hamming, max_bucket_size, bytes_per_band

@@ -22,7 +22,7 @@ Two plan shapes for the moment pass, agreeing at the 8dp snap:
 - `embedding_covariance_fast` (the 100 TB path): per-partition numpy
   ``X^T X`` / column-sum / count partials via Arrow `mapInPandas`
   (BLAS does the d² work in-core), one d²+d+1-key agg of partials —
-  measured 10x faster at the 200k-vector tier (SCALE.md).
+  measured 10x faster at the 200k-vector tier.
 
 Null embeddings, and vectors containing a null or NaN element, are
 SKIPPED by both paths and the oracle (shared `_usable` filter; the

@@ -381,8 +381,8 @@ def ivfpq_residual_topk(
     built per probed list from the QUERY's residual against that
     list's centroid, so ``adc ≈ ||q − c_list − dec(code)||²`` — the
     coarse offset cancels instead of being re-approximated by the
-    codebook. Measured envelope (tests/test_pq.py + SCALE.md, round
-    11): where residuals carry compressible structure the codes
+    codebook. Measured envelope (tests/test_pq.py and a round-11 scale
+    drill): where residuals carry compressible structure the codes
     resolve true-neighbor sets exactly (set recall 1.0 on the pattern
     fixture; the pipeline itself is pinned bit-equal to an independent
     numpy model); on corpora whose residuals are incompressible

@@ -2887,8 +2887,9 @@ def f9_simhash_near_pairs(spark, sf):
     # hash join whose build and stream sides are SEPARATE plan instances —
     # plan-shape probing (round 4) shows no ReusedExchange, so without the
     # persist the in-row hashing runs twice. Cache lifetime is owned by
-    # the harness: bench.py and check_oracle clearCache() after each
-    # query, so per-query persists no longer accumulate across a session.
+    # the harness: tools/check_oracle.py clearCache()s after each query
+    # and tests/test_cache_discipline.py sweeps with release_all_cached,
+    # so per-query persists no longer accumulate across a session.
     sim = _dd.simhash_inrow(load_table(spark, sf, "documents"), 3).persist()
     out = _dd.simhash_near_pairs(sim, max_hamming=6)
     return out.withColumn("hamming", F.col("hamming").cast("long"))
@@ -8584,7 +8585,7 @@ def f92_audio_envelope_pairs(spark, sf):
     """Audio near-dup detection with REAL decode in the loop
     (multimodal.py `audio_dhash` + the SHARED guarded band machinery):
     the image family's round-9 scale shape — wide 16-bit bands
-    (rows_per_band=2, the SCALE.md drill's scale path), hot-bucket cap
+    (rows_per_band=2, the round-9 drill's scale path), hot-bucket cap
     10, pigeonhole max_hamming=3 — applied to waveforms. One 16-bit
     PCM WAV per document: 80% constant tones (every |sample| equal →
     envelope blocks equal → all-zero bands, the crawl-degenerate flat
@@ -8722,7 +8723,7 @@ def f93_candidate_substring_spans(spark, sf):
     At sf0.01 the two-stage output EQUALS f61's corpus-wide output
     (pinned in tests/test_text.py) — on THAT corpus the screen
     proposes every true span pair. One decade up the sets diverge in
-    both directions (SCALE.md sf1 record: the screen's fp-df cap
+    both directions (a round-10 sf1 measurement: the screen's fp-df cap
     drops boilerplate-heavy pairs f61 reaches, ~84% screen recall,
     while f93 finds spans through boilerplate grams f61's own gram-df
     cap drops) — the standard screen-recall vs cap-exactness trade,

@@ -74,9 +74,9 @@ def release_all_cached(spark: SparkSession) -> int:
     This is the teeth behind the package-wide cache-lifetime contract
     (see ``borsa_spark.__doc__``): library functions persist
     multi-consumer intermediates and the HARNESS frees them between
-    queries. bench.py calls this inside every sample; the sweep test in
-    tests/test_cache_discipline.py asserts it returns the session to
-    zero cached blocks after each queries() entry.
+    queries. tools/check_oracle.py clears the catalog cache after every
+    query; the sweep test in tests/test_cache_discipline.py asserts it
+    returns the session to zero cached blocks after each queries() entry.
 
     Note: unpersisting a localCheckpointed RDD truncates its lineage —
     any still-live DataFrame built on it cannot be recomputed. Callers

@@ -1,5 +1,5 @@
 """Storage layout helpers: bucketed/sorted candle tables for shuffle-free
-merges (SCALE.md "storage layout assumption").
+merges.
 
 At 100 TB the dominant cost of the history pipeline is the shuffle that
 co-locates each symbol's rows for the first-wins merge window. Writing the

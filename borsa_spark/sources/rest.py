@@ -37,6 +37,7 @@ Spark-first translation:
 from __future__ import annotations
 
 import json
+import math
 from dataclasses import dataclass, field
 from typing import Callable, Iterator, Protocol
 
@@ -115,6 +116,21 @@ class UrllibTransport:
 _NOT_FOUND_MARKERS = ("not found", "no data found", "unknown symbol")
 
 
+def _retry_after_s(headers: Headers) -> float | None:
+    """Seconds from a ``Retry-After`` header, found case-insensitively
+    (HTTP/2 sends header names in lowercase). None, leaving the Blacklist
+    default, for a missing header, an HTTP date, or a value that is not
+    finite and >= 0: ``inf`` would otherwise blacklist forever."""
+    for name, value in headers.items():
+        if name.lower() == "retry-after":
+            try:
+                seconds = float(value)
+            except ValueError:
+                return None
+            return seconds if math.isfinite(seconds) and seconds >= 0 else None
+    return None
+
+
 def map_http_error(
     status: int,
     headers: Headers,
@@ -147,12 +163,9 @@ def map_http_error(
         return UnsupportedError(f"{capability}: access denied for {target}")
     if status == 429:
         err = RateLimited(f"{capability}: rate limited")
-        retry = headers.get("Retry-After")
-        if retry is not None:
-            try:
-                err.window_s = float(retry)
-            except ValueError:
-                pass
+        window = _retry_after_s(headers)
+        if window is not None:
+            err.window_s = window
         return err
     return ProviderError(f"{capability}: HTTP {status} for {target}")
 

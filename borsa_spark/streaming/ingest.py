@@ -582,7 +582,7 @@ class ImageDedupIngest:
     never re-decoded — state per image is the md5 + 8 small ints
     (~50 bytes), independent of payload size.
 
-    Defaults follow the SCALE.md round-9 drill: ``rows_per_band=2``
+    Defaults follow the round-9 scale drill: ``rows_per_band=2``
     (16-bit band keys — byte keys saturate at ~10^4 images) with the
     pigeonhole bound max_hamming <= 8/rows_per_band - 1 enforced, and
     the hot-bucket cap applied to the COMBINED batch+corpus bucket

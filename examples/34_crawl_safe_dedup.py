@@ -1,5 +1,5 @@
 """34 — Crawl-safe dedup defaults + corpus-wide span removal (round
-10): what a 100-TB user gets WITHOUT reading SCALE.md.
+10): what a 100-TB user gets WITHOUT tuning anything.
 
 Three demonstrations, each from its own oracled operator:
 

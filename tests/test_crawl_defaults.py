@@ -1,10 +1,10 @@
 """Round-10 contract: the candidate-join DEFAULTS are the crawl-safe
-guarded forms. SCALE.md's 500k-image drill shows the old defaults
+guarded forms. A 500k-image scale drill showed the old defaults
 (byte bands, no cap) collapsing exactly at crawl density — byte bands
 without a cap go O(n²) on flat cohorts, byte bands WITH a cap lose
 recall (1,951/2,048 buckets oversized -> 231/50,030 planted pairs).
 Only (wide bands, finite cap) is viable unattended, so that is what a
-caller gets without reading SCALE.md; the exhaustive all-pairs shapes
+caller gets without tuning anything; the exhaustive all-pairs shapes
 require an explicit opt-in (``profile="exhaustive"`` /
 ``max_bucket_size=None``). These tests pin the flip so a refactor
 cannot quietly hand the 100-TB user the quadratic shape back."""

@@ -1,4 +1,4 @@
-"""Physical-plan regression guards: the perf claims in SCALE.md must stay
+"""Physical-plan regression guards: the measured plan shapes must stay
 true as code evolves — pushdown reaches the scan, dims broadcast, the merge
 partially aggregates, and bucketed layouts stay shuffle-free."""
 
@@ -129,7 +129,7 @@ class TestPlanShapes:
 
 
 class TestRound3PlanShapes:
-    """Pin the SCALE.md claims for the training-mix stages."""
+    """Pin the plan shapes of the training-mix stages."""
 
     def test_stratified_sample_is_pure_filter(self, spark):
         plan = plan_of(spark, "f31_stratified_sample")
@@ -170,7 +170,7 @@ class TestRound3PlanShapes:
 
 
 class TestRound4PlanShapes:
-    """Pin the round-4 dedup plan claims from SCALE.md."""
+    """Pin the round-4 dedup plan shapes."""
 
     def test_minhash_signature_inrow_is_scan_speed(self, spark):
         from borsa_spark.functions import dedup as dd
@@ -243,7 +243,7 @@ class TestRound4PlanShapes:
 
 
 class TestRound4RetrievalPlanShapes:
-    """Pin the SCALE.md claims for the round-4 retrieval/connector ops."""
+    """Pin the plan shapes of the round-4 retrieval/connector ops."""
 
     def test_doc_chunks_zero_shuffle(self, spark):
         plan = plan_of(spark, "f44_doc_chunks")
@@ -275,7 +275,7 @@ class TestRound4RetrievalPlanShapes:
 
 
 class TestRound4ContinuedPlanShapes:
-    """Pin the SCALE.md claims for f52-f54, w11, and the new TPC-H shapes."""
+    """Pin the plan shapes of f52-f54, w11, and the new TPC-H queries."""
 
     def test_blocklist_filter_is_scan_speed(self, spark):
         plan = plan_of(spark, "f53_blocklist_filter")
@@ -485,7 +485,7 @@ class TestRound7PlanShapes:
 
 class TestBpeAndRollupShapes:
     """Round-7 additions: BPE training rounds and the mergeable rollup
-    must keep their SCALE.md shapes — vocab-sized partial aggs, 1-row
+    must keep their measured shapes — vocab-sized partial aggs, 1-row
     TakeOrdered argmax, broadcast merge application, Python-free."""
 
     def test_bpe_round_is_partial_agg_plus_takeordered(self, spark):

@@ -484,7 +484,7 @@ class TestResidualModelEquivalence:
         the structure scale. (Raw coding also reaches 1.0 here: with
         8 cells IVF probing masks its capacity ceiling; the fixtures
         where raw would collapse need cell counts beyond what a unit
-        test should spin — documented in SCALE.md.)"""
+        test should spin.)"""
         from borsa_spark.functions.pq import (
             ivfpq_residual_topk,
             pq_train_codebooks_residual,

@@ -71,6 +71,23 @@ class TestErrorTaxonomy:
         assert isinstance(err, RateLimited)
         assert err.window_s == 7.5
 
+    @pytest.mark.parametrize("headers, window_s", [
+        ({"retry-after": "7.5"}, 7.5),  # HTTP/2 sends lowercase names
+        ({"Retry-After": "inf"}, None),  # None: the Blacklist default
+        ({"Retry-After": "nan"}, None),
+        ({"Retry-After": "-5"}, None),
+    ], ids=["lowercase", "inf", "nan", "negative"])
+    def test_retry_after_sets_blacklist_window(self, headers, window_s):
+        err = map_http_error(429, headers, b"", "quote", "A")
+        assert isinstance(err, RateLimited)
+        assert getattr(err, "window_s", None) == window_s
+        now = [0.0]
+        blacklist = Blacklist(default_window_s=60.0, clock=lambda: now[0])
+        blacklist.handle_error(err)
+        assert blacklist.remaining_s() == (window_s or 60.0)
+        now[0] = 1e9
+        assert blacklist.remaining_s() is None
+
 
 class TestQuotePagination:
     def test_batched_pages_and_mapping(self):

@@ -1208,7 +1208,7 @@ class TestCandidateSubstringSpans:
 
 
 class TestScreenVsCapAsymmetry:
-    """Round-10 pin of the f93-vs-f61 trade SCALE.md measured at sf1
+    """Round-10 pin of the f93-vs-f61 trade measured at sf1
     (screen proposes ~84% of f61's pairs; f93 finds spans through
     boilerplate f61's own gram-df cap drops). Both directions on a
     replica-style fixture so a screen or cap regression cannot hide:
