@@ -43,11 +43,8 @@ example-tour:
 	python examples/22_multi_quotes.py
 	python examples/23_dataframe.py
 	python examples/24_quota_middleware.py
-	python examples/25_python_datasource.py
 	python examples/26_dedup_ingest.py
-	python examples/28_stream_enrich.py
 	python examples/29_multimodal_codecs.py
-	python examples/30_incremental_rollup.py
 	python examples/33_training_mix_e2e.py
 	python examples/34_crawl_safe_dedup.py
 

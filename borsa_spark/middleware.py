@@ -331,7 +331,9 @@ class Blacklist:
 
     def handle_error(self, err: BorsaSparkError) -> BorsaSparkError:
         if isinstance(err, RateLimited):
-            window = getattr(err, "window_s", None) or self.default_window_s
+            window = getattr(err, "window_s", None)
+            if window is None:
+                window = self.default_window_s
             with self._lock:
                 self._until = self.clock() + window
         return err

@@ -1002,64 +1002,6 @@ def a9_attribution_spans(spark, sf):
 
 
 @query(
-    "o8_range_join",
-    f"""
-    WITH ranked AS ({_MERGE_ORACLE_BODY}),
-    merged AS (SELECT symbol, bucket, provider_rank FROM ranked WHERE rn = 1),
-    chg AS (
-      SELECT symbol, bucket, provider_rank,
-             CASE WHEN lag(provider_rank) OVER (PARTITION BY symbol ORDER BY bucket)
-                       IS DISTINCT FROM provider_rank THEN 1 ELSE 0 END AS c
-      FROM merged),
-    runs AS (
-      SELECT symbol, bucket, provider_rank,
-             sum(c) OVER (PARTITION BY symbol ORDER BY bucket
-                          ROWS UNBOUNDED PRECEDING) AS run_idx
-      FROM chg),
-    spans AS (
-      SELECT symbol, run_idx, provider_rank,
-             min(bucket) AS s, max(bucket) AS e
-      FROM runs GROUP BY 1, 2, 3)
-    SELECT ev.event_id, sp.symbol, sp.provider_rank,
-           epoch(sp.s)::BIGINT AS span_start
-    FROM events ev JOIN spans sp
-      ON sp.symbol = ev.event_type
-     AND date_trunc('minute', ev.ts) BETWEEN sp.s AND sp.e
-    """,
-)
-def o8_range_join(spark, sf):
-    """Range join as provenance lookup: every raw event matched into the
-    attribution span (provider run) covering its minute. Spark-side is the
-    bucketized equi-join (operators/rangejoin.py) — explode intervals to
-    hourly buckets, hash-join, exact post-filter — never the
-    broadcast-nested-loop a naive BETWEEN join plans. The oracle is
-    DuckDB's plain BETWEEN join."""
-    from borsa_spark.operators.rangejoin import range_join
-
-    m = _minute_merged(spark, sf).withColumn(
-        "provider_rank", F.col("priority")
-    )
-    spans = build_attribution(
-        m.select("symbol", "ts", F.col("provider_rank").alias("provider"))
-    ).select(
-        "symbol", F.col("provider").alias("provider_rank"),
-        "span_start", "span_end",
-    )
-    ev = load_table(spark, sf, "events").select(
-        "event_id",
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("minute", "ts").alias("minute_ts"),
-    )
-    out = range_join(
-        ev, spans, on="symbol", point_ts="minute_ts", bucket_seconds=3600
-    )
-    return out.select(
-        "event_id", "symbol", "provider_rank",
-        F.unix_timestamp("span_start").alias("span_start"),
-    )
-
-
-@query(
     "p7_monotonic_gate",
     """
     WITH arr AS (
@@ -1229,66 +1171,6 @@ def s14_json_props_extract(spark, sf):
         F.sum(k).alias("sum_k"),
         F.round(F.avg(k), 4).alias("avg_k"),
         F.count(F.when(k >= 50, 1)).alias("n_high"),
-    )
-
-
-@query(
-    "o7_asof_join",
-    """
-    WITH trades AS (
-      SELECT event_type AS symbol, ts, event_id AS trade_id,
-             round(value, 2) AS trade_px
-      FROM events WHERE event_id % 2 = 0),
-    quotes_all AS (
-      SELECT event_type AS symbol, ts, event_id, round(value, 2) AS quote_px
-      FROM events WHERE event_id % 2 = 1),
-    quotes AS (
-      -- unique (symbol, ts): keep the max-event_id row (deterministic)
-      SELECT symbol, ts, quote_px FROM (
-        SELECT *, row_number() OVER (PARTITION BY symbol, ts
-                                     ORDER BY event_id DESC) AS rn
-        FROM quotes_all) q WHERE rn = 1)
-    SELECT t.symbol,
-           epoch(date_trunc('second', t.ts))::BIGINT AS trade_ts,
-           t.trade_id, t.trade_px,
-           q.quote_px AS quote_px_right,
-           epoch(date_trunc('second', q.ts))::BIGINT AS quote_ts_right
-    FROM trades t
-    ASOF LEFT JOIN quotes q
-      ON t.symbol = q.symbol AND t.ts >= q.ts
-    """,
-)
-def o7_asof_join(spark, sf):
-    """As-of join (trades x latest quote at-or-before the trade): Spark has
-    no native ASOF JOIN, so this is the union + last_value(ignorenulls)
-    formulation (operators/asof.py) — one shuffle on the key, no per-key
-    range explosion. The oracle is DuckDB's BUILT-IN ASOF LEFT JOIN: two
-    completely different algorithms, hash-compared."""
-    from borsa_spark.operators.asof import asof_join
-
-    ev = load_table(spark, sf, "events")
-    trades = ev.filter(F.col("event_id") % 2 == 0).select(
-        F.col("event_type").alias("symbol"), "ts",
-        F.col("event_id").alias("trade_id"),
-        F.round("value", 2).alias("trade_px"),
-    )
-    quotes_all = ev.filter(F.col("event_id") % 2 == 1).select(
-        F.col("event_type").alias("symbol"), "ts", "event_id",
-        F.round("value", 2).alias("quote_px"),
-    )
-    w = Window.partitionBy("symbol", "ts").orderBy(F.col("event_id").desc())
-    quotes = (
-        quotes_all.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "event_id")
-    )
-    out = asof_join(trades, quotes, on="symbol")
-    return out.select(
-        "symbol",
-        F.unix_timestamp("ts").alias("trade_ts"),
-        "trade_id", "trade_px",
-        "quote_px_right",
-        F.unix_timestamp("ts_right").alias("quote_ts_right"),
     )
 
 
@@ -4870,109 +4752,6 @@ def f50_curriculum_deciles(spark, sf):
     )
 
 
-@query(
-    "o9_salted_join",
-    """
-    WITH dim AS (
-      SELECT event_type, count(*)::BIGINT AS n_type
-      FROM events GROUP BY event_type)
-    SELECT e.event_id, e.event_type, d.n_type
-    FROM events e JOIN dim d USING (event_type)
-    """,
-)
-def o9_salted_join(spark, sf):
-    """Skew-resilient salted join (operators/skew.py `salted_join`): the
-    big side salts on row identity, the small dim replicates across salt
-    buckets, and the gate pins row-identity with the plain join. The
-    static alternative to AQE's skew-join split for hot probe keys
-    feeding co-partitioned aggregations (see salted_join docstring)."""
-    from borsa_spark.operators.skew import salted_join
-
-    ev = load_table(spark, sf, "events").select("event_id", "event_type")
-    dim = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_type")
-    )
-    out = salted_join(
-        ev, dim, ["event_type"], "inner", buckets=8,
-        salt_on=F.col("event_id"),
-    )
-    return out.select("event_id", "event_type", "n_type")
-
-
-# ---------------------------------------------------------------------------
-# Connector layer: Python Data Source mounts (sources/datasource.py)
-# ---------------------------------------------------------------------------
-
-_C1_SYMS = "click,view,purchase,signup,error"
-_C1_TICKS_SQL = """
-    SELECT event_type AS symbol,
-           epoch_us(ts)::BIGINT AS ts_us,
-           value AS price,
-           event_id AS seq
-    FROM events
-    WHERE event_type IN ('click','view','purchase','signup','error')
-"""
-
-
-def _datasource_ticks(spark: SparkSession, sf: str) -> DataFrame:
-    from borsa_spark.sources.datasource import register_datasources
-
-    register_datasources(spark)
-    return (
-        spark.read.format("borsa_history")
-        .option("path", sf)
-        .option("symbols", _C1_SYMS)
-        .load()
-    )
-
-
-@query("c1_datasource_history", _C1_TICKS_SQL)
-def c1_datasource_history(spark, sf):
-    """Provider history through the first-class Spark mount: the
-    ``borsa_history`` Python Data Source (sources/datasource.py) — one
-    InputPartition per symbol, executor-side Arrow-batch reads, parquet
-    row-group pruning on the symbol predicate. The gate proves the
-    DataSource path end-to-end: partition planning, Arrow ingest, schema.
-
-    Reference: borsa-yfinance/src/lib.rs HistoryProvider::history mounted
-    the Spark way instead of a per-call async client.
-
-    Scale shape: a 10k-symbol universe is 10k partitions of independent
-    I/O spread over executors; stragglers retry per symbol. No driver rows,
-    no shuffle — a pure scan."""
-    return _datasource_ticks(spark, sf)
-
-
-@query(
-    "c2_datasource_daily_ohlc",
-    f"""
-    WITH t AS ({_C1_TICKS_SQL})
-    SELECT symbol,
-           (ts_us // 86400000000)::BIGINT AS day_idx,
-           arg_min(price, ts_us) AS open,
-           max(price) AS high,
-           min(price) AS low,
-           arg_max(price, ts_us) AS close,
-           count(*)::BIGINT AS n_ticks
-    FROM t GROUP BY symbol, day_idx
-    """,
-)
-def c2_datasource_daily_ohlc(spark, sf):
-    """The DataSource composing with the engine: daily OHLC straight off
-    the ``borsa_history`` scan. min_by/max_by picks are exact (ts_us is
-    globally unique), so only one shuffle — the groupBy — and partial
-    aggregation runs map-side inside the per-symbol partitions."""
-    t = _datasource_ticks(spark, sf)
-    day = F.expr("ts_us div 86400000000")  # integer division, JVM-side
-    return t.groupBy("symbol", day.alias("day_idx")).agg(
-        F.min_by("price", "ts_us").alias("open"),
-        F.max("price").alias("high"),
-        F.min("price").alias("low"),
-        F.max_by("price", "ts_us").alias("close"),
-        F.count("*").alias("n_ticks"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round 4, continued: semantic dedup, admission filters, training order,
 # Bollinger bands, and two more TPC-H shapes (correlated scalar subquery,
@@ -5559,16 +5338,13 @@ def x4_hll_sketch_merge(spark, sf):
     """,
 )
 def o13_bar_enrich_join(spark, sf):
-    """Batch analog of the stream-stream enrichment join
-    (`streaming/enrich.py`): every tick joined to its containing hourly
+    """Tick-to-bar enrichment: every tick joined to its containing hourly
     bar (symbol equality + event-time interval), stamped with whether it
-    printed above the bar's open. The oracle pins the interval-join
-    semantics the streaming test asserts live; in batch the same
-    predicate compiles to an equi-join on (symbol, hour-truncated ts) —
-    NOT a range join — because a tumbling window's containing bar is
-    computable per row. That rewrite (bucketize, then equi-join) is the
-    o8 range-join trick and the reason this stays shuffle-bounded at
-    scale; open is exact (arg_min on globally-unique ts)."""
+    printed above the bar's open. The oracle states the interval join;
+    Spark-side the same predicate is an equi-join on (symbol,
+    hour-truncated ts) — NOT a range join — because a tumbling window's
+    containing bar is computable per row, which keeps it shuffle-bounded
+    at scale. Open is exact (arg_min on globally-unique ts)."""
     ev = load_table(spark, sf, "events")
     bars = ev.groupBy(
         F.col("event_type").alias("symbol"),
@@ -7369,7 +7145,7 @@ def c5_compaction_roundtrip(spark, sf):
     FilePartition packing (maxPartitionBytes pinned to the target, one
     output file per scan bin, ZERO shuffle) and read back. Hash-match
     against the source table proves the rewrite is lossless; the
-    file-count/no-Exchange receipts live in tests/test_layout.py. The
+    file-count/no-Exchange receipts live in tests/test_zorder.py. The
     c3 pattern: materialized before the scratch dir vanishes."""
     import tempfile
 
@@ -7427,233 +7203,6 @@ def f81_bpe_compression(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     return bpe_token_counts(docs, 8)
-
-
-@query(
-    "c6_incremental_rollup",
-    _OHLC_ORACLE.format(bucket="date_trunc('day', ts)"),
-)
-def c6_incremental_rollup(spark, sf):
-    """Incrementally-maintained OHLCV rollup (operators/rollup.py) —
-    the hypertable continuous-aggregate shape: the first 24 days of
-    events are materialized as MERGEABLE per-(symbol, day) state
-    partitioned by day; the remaining days arrive as a batch and fold
-    in via `merge_into_rollup`, which prunes the state scan to the
-    dirty partitions and rewrites ONLY them (dynamic partition
-    overwrite). The oracle is the FULL recompute over all events (a2's
-    exact SQL) — incremental == full is the semantics-preservation
-    gate (the f76 pattern). Per-batch cost at 100 TB: O(batch + dirty
-    partitions), independent of rollup history length.
-
-    The c3/c5 pattern: materialized before the scratch dir vanishes."""
-    import tempfile
-
-    from borsa_spark.operators.rollup import (
-        merge_into_rollup,
-        read_rollup,
-        rollup_finalize,
-        rollup_state,
-        write_rollup,
-    )
-
-    ev = _event_candles(spark, sf)
-    cutoff = F.lit("2024-01-25").cast("timestamp")
-    with tempfile.TemporaryDirectory() as work:
-        write_rollup(rollup_state(ev.filter(F.col("ts") < cutoff)), work)
-        merge_into_rollup(spark, work, ev.filter(F.col("ts") >= cutoff))
-        out = rollup_finalize(read_rollup(spark, work))
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
-
-
-@query(
-    "c7_streaming_rollup_exactly_once",
-    _OHLC_ORACLE.format(bucket="date_trunc('day', ts)"),
-)
-def c7_streaming_rollup_exactly_once(spark, sf):
-    """The streaming continuous aggregate under the oracle gate
-    (streaming/rollup.py `RollupMaintainer`): events split into a base
-    build + two micro-batches, WITH batch 0 delivered twice (the
-    foreachBatch replay Structured Streaming is allowed to do after a
-    restart). The versioned-partition log must absorb the replay
-    exactly-once, so the maintained head hash-matches the full
-    recompute over all events (a2's SQL) — double-counting any replayed
-    tick would flip n_bars/sum_value and fail the gate.
-
-    Scale shape: per batch O(batch + dirty partitions); committed
-    files never mutated (the two-phase-commit discipline of
-    streaming/ingest.py)."""
-    import tempfile
-
-    from borsa_spark.streaming.rollup import RollupMaintainer
-
-    ev = _event_candles(spark, sf)
-    c1 = F.lit("2024-01-20").cast("timestamp")
-    c2 = F.lit("2024-01-26").cast("timestamp")
-    with tempfile.TemporaryDirectory() as work:
-        rm = RollupMaintainer(spark, work)
-        rm.build(ev.filter(F.col("ts") < c1))
-        b0 = ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2))
-        rm.process_batch(b0, 0)
-        rm.process_batch(b0, 0)  # replayed delivery: must be absorbed
-        rm.process_batch(ev.filter(F.col("ts") >= c2), 1)
-        out = rm.finalized()
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
-
-
-@query(
-    "c8_rollup_cdc_images",
-    """
-    WITH e AS (
-      SELECT event_type AS symbol, date_trunc('day', ts) AS bucket, ts,
-             value, event_id
-      FROM events),
-    ranked AS (
-      SELECT symbol, bucket, value,
-             ts < TIMESTAMP '2024-01-26 12:00:00' AS prior,
-             row_number() OVER (PARTITION BY symbol, bucket
-                                ORDER BY ts ASC, event_id ASC)  AS rn_a,
-             row_number() OVER (PARTITION BY symbol, bucket
-                                ORDER BY ts DESC, event_id DESC) AS rn_z,
-             CASE WHEN ts < TIMESTAMP '2024-01-26 12:00:00' THEN
-               row_number() OVER (PARTITION BY symbol, bucket,
-                                  ts < TIMESTAMP '2024-01-26 12:00:00'
-                                  ORDER BY ts ASC, event_id ASC) END AS prn_a,
-             CASE WHEN ts < TIMESTAMP '2024-01-26 12:00:00' THEN
-               row_number() OVER (PARTITION BY symbol, bucket,
-                                  ts < TIMESTAMP '2024-01-26 12:00:00'
-                                  ORDER BY ts DESC, event_id DESC) END AS prn_z
-      FROM e),
-    aft AS (
-      SELECT symbol, epoch(bucket)::BIGINT AS bucket_ts,
-             max(CASE WHEN rn_a = 1 THEN value END) AS after_open,
-             round(max(value), 2) AS after_high,
-             round(min(value), 2) AS after_low,
-             max(CASE WHEN rn_z = 1 THEN value END) AS after_close,
-             count(*)::BIGINT AS after_n_bars,
-             round(sum(value), 2) AS after_sum_value
-      FROM ranked GROUP BY symbol, bucket),
-    bef AS (
-      SELECT symbol, epoch(bucket)::BIGINT AS bucket_ts,
-             max(CASE WHEN prn_a = 1 THEN value END) AS before_open,
-             round(max(value) FILTER (WHERE prior), 2) AS before_high,
-             round(min(value) FILTER (WHERE prior), 2) AS before_low,
-             max(CASE WHEN prn_z = 1 THEN value END) AS before_close,
-             count(*) FILTER (WHERE prior)::BIGINT AS before_n_bars,
-             round(sum(value) FILTER (WHERE prior), 2) AS before_sum_value
-      FROM ranked WHERE prior GROUP BY symbol, bucket),
-    dirty AS (
-      SELECT DISTINCT symbol, epoch(bucket)::BIGINT AS bucket_ts
-      FROM e WHERE ts >= TIMESTAMP '2024-01-26 12:00:00')
-    SELECT CASE WHEN b.before_n_bars IS NULL THEN 'insert'
-                ELSE 'update' END AS change,
-           a.symbol, a.bucket_ts,
-           a.after_open, a.after_high, a.after_low, a.after_close,
-           a.after_n_bars, a.after_sum_value,
-           b.before_open, b.before_high, b.before_low, b.before_close,
-           b.before_n_bars, b.before_sum_value
-    FROM aft a
-    JOIN dirty d USING (symbol, bucket_ts)
-    LEFT JOIN bef b USING (symbol, bucket_ts)
-    WHERE b.before_n_bars IS NULL OR b.before_n_bars <> a.after_n_bars
-    """,
-)
-def c8_rollup_cdc_images(spark, sf):
-    """The maintainer's CDC deltas under the oracle gate
-    (streaming/rollup.py `changes_for`): batch 1 carries every tick
-    from mid-day Jan 26 on, so day 26 emits UPDATE rows with real
-    before-images (the morning's partial bars) and days 27-30 emit
-    INSERTs. The oracle states both images analytically from the raw
-    events with the cutoff encoded — a wrong before-image resolution
-    (e.g. reading the post-merge state), a missed insert, or an
-    unfiltered same-day carry-along all hash-mismatch."""
-    import tempfile
-
-    from borsa_spark.streaming.rollup import RollupMaintainer
-
-    ev = _event_candles(spark, sf)
-    c1 = F.lit("2024-01-20").cast("timestamp")
-    cut = F.lit("2024-01-26 12:00:00").cast("timestamp")
-    with tempfile.TemporaryDirectory() as work:
-        rm = RollupMaintainer(spark, work)
-        rm.build(ev.filter(F.col("ts") < c1))
-        rm.process_batch(
-            ev.filter((F.col("ts") >= c1) & (F.col("ts") < cut)), 0
-        )
-        rm.process_batch(ev.filter(F.col("ts") >= cut), 1)
-        out = rm.changes_for(1)
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
-
-
-@query(
-    "c9_rollup_cascade",
-    _OHLC_ORACLE.format(bucket="date_trunc('day', ts)"),
-)
-def c9_rollup_cascade(spark, sf):
-    """The hypertable cascade (operators/rollup.py `rollup_cascade`):
-    HOURLY mergeable state re-bucketed to DAILY without touching raw
-    ticks — proving every state field is associative across buckets,
-    not just across batches. Oracle = the daily full recompute straight
-    from the events (a2's SQL); a wrong cross-bucket open/close
-    resolution or a lost tie-break hash-mismatches.
-
-    Scale shape at 100 TB: the daily tier reads |hourly state| rows
-    (~24x the daily keyset), never the tick history — cascaded
-    continuous aggregates each pay only their input tier's size."""
-    from borsa_spark.operators.rollup import (
-        rollup_cascade,
-        rollup_finalize,
-        rollup_state,
-    )
-
-    ev = _event_candles(spark, sf)
-    hourly = rollup_state(ev, trunc="hour")
-    return rollup_finalize(rollup_cascade(hourly, trunc="day"))
-
-
-@query(
-    "c10_tiered_rollup",
-    _OHLC_ORACLE.format(bucket="date_trunc('day', ts)"),
-)
-def c10_tiered_rollup(spark, sf):
-    """The two-tier continuous-aggregate tower under the oracle gate
-    (streaming/rollup.py `TieredRollupMaintainer`): hourly AND daily
-    rollups maintained from one foreachBatch delivery — the daily tier
-    consumes the hourly tier's change log (committed marker pday set)
-    and re-derives exactly the dirty days via `rollup_cascade`,
-    committed with replacement semantics. The gate injects BOTH failure
-    modes Structured Streaming permits: a full replayed delivery
-    (batch 0 twice) and a crash BETWEEN tiers (batch 1's hourly tier
-    committed directly, then the whole delivery replayed) — the daily
-    head must still hash-match the daily full recompute over all
-    events (a2's SQL). Double-counting a replay, merging instead of
-    replacing the cascaded state, or losing the inter-tier crash
-    window all flip n_bars/sum_value and fail the gate.
-
-    Scale shape: tier 1 O(batch + dirty partitions); tier 2 O(hourly
-    state of the dirty days) — never the tick history (module
-    docstring)."""
-    import tempfile
-
-    from borsa_spark.streaming.rollup import TieredRollupMaintainer
-
-    ev = _event_candles(spark, sf)
-    c1 = F.lit("2024-01-20").cast("timestamp")
-    c2 = F.lit("2024-01-26").cast("timestamp")
-    with tempfile.TemporaryDirectory() as work:
-        tm = TieredRollupMaintainer(spark, work)
-        tm.build(ev.filter(F.col("ts") < c1))
-        b0 = ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2))
-        tm.process_batch(b0, 0)
-        tm.process_batch(b0, 0)  # replayed delivery: must be absorbed
-        b1 = ev.filter(F.col("ts") >= c2)
-        tm.hourly.process_batch(b1, 1)  # crash between tiers...
-        tm.process_batch(b1, 1)  # ...then the replayed delivery
-        out = tm.finalized()
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
 
 
 @query("f82_embedding_covariance")

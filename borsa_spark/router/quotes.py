@@ -72,6 +72,8 @@ def quote(
     *invocation plus a usable-row probe* — the Spark analog of the
     reference's async quote call returning a value.
     """
+    if strategy not in ("priority", "latency"):
+        raise UnsupportedError(f"unknown quote strategy {strategy!r}")
     ctx = RoutingContext(symbol=symbol, kind=kind, exchange=exchange)
     if strategy == "latency":
         return _quote_latency_race(

@@ -146,75 +146,3 @@ def candle_stream(
         )
     )
 
-
-def rollup_stream(
-    updates: DataFrame,
-    tier_seconds: list[int],
-    watermark: str = "30 seconds",
-    ts_col: str = "ts",
-    price_col: str = "price",
-) -> DataFrame:
-    """Tiered continuous aggregation ("hypertable rollup" shape): ticks ->
-    bars at tier_seconds[0] -> coarser bars re-aggregated FROM the previous
-    tier, one streaming query with stacked stateful operators (append mode
-    + watermarks, supported since Spark 3.4/4.x).
-
-    Why tiers instead of N independent aggregations over raw ticks: each
-    coarser tier consumes tier-bar rows (orders of magnitude fewer than
-    ticks), so state and shuffle per tier shrink geometrically — the same
-    reason time-series stores cascade their continuous aggregates. OHLC
-    composes exactly: open of a coarse bucket = open of its earliest fine
-    bar, high = max of highs, volume/n_ticks sum (cascade == direct is
-    oracle-checked batch-side by a10_rollup_cascade).
-
-    Returns the final tier with bucket-start ``ts``.
-    """
-    if not tier_seconds:
-        raise ValueError("tier_seconds must be non-empty")
-    if any(b % a for a, b in zip(tier_seconds, tier_seconds[1:])):
-        raise ValueError("each tier must divide the next")
-    # Tier 1: the only withWatermark in the query. Coarser tiers chain via
-    # window-on-window (F.window over the previous tier's window STRUCT),
-    # which propagates the event-time watermark through each aggregation —
-    # re-applying withWatermark on intermediate output would add a second
-    # watermark node that sees no data until tier 1 emits, pinning the
-    # global (min-of-nodes) watermark at zero and deadlocking eviction.
-    ord_key = F.struct(F.col("window.start"))
-    out = (
-        updates.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col("symbol"),
-            F.window(F.col(ts_col), f"{tier_seconds[0]} seconds").alias(
-                "window"
-            ),
-        )
-        .agg(
-            F.min_by(price_col, F.col(ts_col)).alias("open"),
-            F.max(price_col).alias("high"),
-            F.min(price_col).alias("low"),
-            F.max_by(price_col, F.col(ts_col)).alias("close"),
-            F.count("*").alias("n_ticks"),
-        )
-    )
-    for step in tier_seconds[1:]:
-        out = (
-            out.groupBy(
-                F.col("symbol"),
-                F.window(F.col("window"), f"{step} seconds").alias("window"),
-            )
-            .agg(
-                F.min_by("open", ord_key).alias("open"),
-                F.max("high").alias("high"),
-                F.min("low").alias("low"),
-                F.max_by("close", ord_key).alias("close"),
-                F.sum("n_ticks").alias("n_ticks"),
-            )
-        )
-    return out.select(
-        "symbol",
-        F.col("window.start").alias("ts"),
-        F.col("window.end").alias("window_end"),
-        "open", "high", "low", "close", "n_ticks",
-        F.lit(f"{tier_seconds[-1]}s").alias("interval"),
-        F.lit(True).alias("is_final"),
-    )

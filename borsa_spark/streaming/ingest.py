@@ -22,8 +22,7 @@ writes go to PER-BATCH subdirectories (``arrays/batch-{id}/``) in
 overwrite mode, and the commit marker ``_batches/batch-{id}.json`` is
 written LAST: a replay of an uncommitted batch overwrites its own
 partial output (idempotent), and a replay of a committed batch returns
-before touching state — the same manifest discipline as the
-`borsa_tick_sink` two-phase commit.
+before touching state — the marker protocol of `streaming/markers.py`.
 
 Scale shape at 100 TB/day ingest: state is partitioned parquet keyed by
 band/bucket; the per-batch work is (batch bands x corpus bands) on

@@ -1,6 +1,5 @@
 """The ONE marker-commit protocol for every exactly-once state store
-in the package (RollupMaintainer, TieredRollupMaintainer, DedupIngest,
-ImageDedupIngest).
+in the package (DedupIngest, ImageDedupIngest).
 
 Two-phase-commit discipline: data files land first (overwrite mode, so
 an uncommitted replay rewrites identical output), then the JSON marker

@@ -1,5 +1,5 @@
-"""Time-series operator tour: resampling (incl. tz/DST), rollup cascade,
-as-of join, range join, rolling features, sessionization.
+"""Time-series operator tour: tz-aware resampling, with the daily tier
+cascaded from the hourly one (the a10_rollup_cascade semantics).
 
 Run: python examples/timeseries_tour.py
 """
@@ -17,8 +17,6 @@ from borsa_spark.operators import (  # noqa: E402
     resample_to_daily,
     resample_to_minutes,
 )
-from borsa_spark.operators.asof import asof_join  # noqa: E402
-from borsa_spark.operators.rangejoin import range_join  # noqa: E402
 from borsa_spark.session import get_spark  # noqa: E402
 from borsa_spark.sources import load_table  # noqa: E402
 
@@ -49,63 +47,6 @@ def main() -> None:
     daily = resample_to_daily(hourly)
     print("== tz-aware daily bars cascaded from hourly ==")
     daily.orderBy("symbol", "ts").show(5)
-
-    # as-of join: "trades" get the latest preceding "quote"
-    trades = ev.filter(F.col("event_id") % 2 == 0).select(
-        F.col("event_type").alias("symbol"), "ts",
-        F.col("value").alias("trade_px"),
-    )
-    quotes = ev.filter(F.col("event_id") % 2 == 1).select(
-        F.col("event_type").alias("symbol"), "ts",
-        F.col("value").alias("quote_px"), F.col("event_id").alias("seq"),
-    )
-    print("== as-of join (trade x latest quote) ==")
-    asof_join(trades, quotes, on="symbol", right_cols=["quote_px"],
-              right_seq="seq").show(5)
-
-    # range join: events matched into fixed maintenance windows
-    windows = spark.createDataFrame(
-        [("click", "2024-01-05 00:00:00", "2024-01-07 00:00:00", "w1"),
-         ("view", "2024-01-10 00:00:00", "2024-01-20 00:00:00", "w2")],
-        "symbol string, span_start string, span_end string, window_id string",
-    ).select(
-        "symbol",
-        F.to_timestamp("span_start").alias("span_start"),
-        F.to_timestamp("span_end").alias("span_end"),
-        "window_id",
-    )
-    pts = ev.select(
-        F.col("event_type").alias("symbol"), "ts", "event_id"
-    )
-    print("== range join (events in windows) ==")
-    range_join(pts, windows, on="symbol", bucket_seconds=86400) \
-        .groupBy("window_id").count().show()
-
-    # incrementally-maintained rollup (c6): days 1-24 materialized as
-    # mergeable state, the tail folds in touching only dirty partitions
-    import tempfile
-
-    from borsa_spark.operators.rollup import (
-        merge_into_rollup,
-        read_rollup,
-        rollup_finalize,
-        rollup_state,
-        write_rollup,
-    )
-
-    ticks = ev.select(
-        F.col("event_type").alias("symbol"), "ts", "value",
-        F.col("event_id").alias("seq"),
-    )
-    cutoff = F.lit("2024-01-25").cast("timestamp")
-    with tempfile.TemporaryDirectory() as work:
-        write_rollup(rollup_state(ticks.filter(F.col("ts") < cutoff)), work)
-        dirty = merge_into_rollup(
-            spark, work, ticks.filter(F.col("ts") >= cutoff)
-        )
-        print(f"== incremental rollup (rewrote {len(dirty)} dirty days) ==")
-        rollup_finalize(read_rollup(spark, work)) \
-            .orderBy(F.desc("bucket_ts"), "symbol").show(8)
 
     spark.stop()
 

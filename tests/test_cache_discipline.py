@@ -59,6 +59,12 @@ class TestQueriesLeaveNoResidue:
         "hist_e2e_daily_merge",
     ]
 
+    def test_sweep_names_are_registered(self):
+        # a cut or rename must update SWEEP, not shrink it silently
+        from borsa_spark.queries import QUERIES
+
+        assert [n for n in self.SWEEP if n not in QUERIES] == []
+
     def test_sweep_returns_session_to_zero_cached(self, spark):
         from borsa_spark.queries import QUERIES
         from borsa_spark.session import release_all_cached
@@ -67,9 +73,7 @@ class TestQueriesLeaveNoResidue:
         release_all_cached(spark)
         residue = {}
         for name in self.SWEEP:
-            fn = QUERIES.get(name)
-            if fn is None:  # registry rotation never drops entries,
-                continue     # but guard against a rename
+            fn = QUERIES[name]  # a missing name fails, never skips
             fn(spark, sf).write.format("noop").mode("overwrite").save()
             release_all_cached(spark)
             n = _persistent_rdd_count(spark)

@@ -115,18 +115,6 @@ class TestPlanShapes:
         plan = plan_of(spark, "f23_quality_median_gate")
         assert "BroadcastHashJoin" in plan
 
-    def test_range_join_no_nested_loop(self, spark):
-        # the bucketized formulation must never plan a cartesian /
-        # broadcast-nested-loop join
-        plan = plan_of(spark, "o8_range_join")
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_asof_query_join_free(self, spark):
-        plan = plan_of(spark, "o7_asof_join")
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-
 
 class TestRound3PlanShapes:
     """Pin the plan shapes of the training-mix stages."""
@@ -267,11 +255,6 @@ class TestRound4RetrievalPlanShapes:
         plan = plan_of(spark, "f49_bpe_pair_counts")
         assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
         assert plan.count("Exchange hashpartitioning") <= 2
-
-    def test_datasource_history_is_pure_scan(self, spark):
-        plan = plan_of(spark, "c1_datasource_history")
-        assert "Exchange" not in plan          # per-symbol partitions, no shuffle
-        assert "BatchEvalPython" not in plan   # Arrow batch reads
 
 
 class TestRound4ContinuedPlanShapes:
@@ -484,9 +467,9 @@ class TestRound7PlanShapes:
 
 
 class TestBpeAndRollupShapes:
-    """Round-7 additions: BPE training rounds and the mergeable rollup
-    must keep their measured shapes — vocab-sized partial aggs, 1-row
-    TakeOrdered argmax, broadcast merge application, Python-free."""
+    """Round-7 additions: BPE training rounds must keep their measured
+    shapes — vocab-sized partial aggs, 1-row TakeOrdered argmax,
+    broadcast merge application, Python-free."""
 
     def test_bpe_round_is_partial_agg_plus_takeordered(self, spark):
         import contextlib
@@ -529,29 +512,6 @@ class TestBpeAndRollupShapes:
         assert "BroadcastNestedLoopJoin" in plan
         assert "SortMergeJoin" not in plan
         assert "Exchange hashpartitioning" not in plan
-
-    def test_rollup_state_is_one_partial_agg(self, spark):
-        import contextlib
-        import io
-
-        from pyspark.sql import functions as F
-
-        from borsa_spark.operators.rollup import rollup_state
-        from borsa_spark.sources import load_table
-
-        ev = load_table(spark, SF, "events")
-        ticks = ev.select(
-            F.col("event_type").alias("symbol"), "ts", "value",
-            F.col("event_id").alias("seq"),
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            rollup_state(ticks).explain("formatted")
-        plan = buf.getvalue()
-        assert "partial_min_by" in plan  # map-side combine before shuffle
-        assert plan.count(" Exchange (") == 1  # exactly one shuffle
-        assert "Window" not in plan  # mergeable state needs no windows
-        assert "BatchEvalPython" not in plan
 
 
 class TestRound8PlanShapes:

@@ -88,6 +88,14 @@ class TestErrorTaxonomy:
         now[0] = 1e9
         assert blacklist.remaining_s() is None
 
+    def test_retry_after_zero_leaves_no_blacklist_window(self):
+        # "retry now" is a window of 0 s, not a cue for the default
+        err = map_http_error(429, {"Retry-After": "0"}, b"", "quote", "A")
+        assert err.window_s == 0.0
+        blacklist = Blacklist(default_window_s=60.0, clock=lambda: 0.0)
+        blacklist.handle_error(err)
+        assert blacklist.remaining_s() is None
+
 
 class TestQuotePagination:
     def test_batched_pages_and_mapping(self):

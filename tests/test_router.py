@@ -306,6 +306,13 @@ class TestQuoteRouter:
         with pytest.raises(ValueError):
             quotes(spark, cat, ["AAPL", "AAPL"])
 
+    def test_unknown_strategy_rejected(self, spark):
+        cat = Catalog().register(
+            quote_source(spark, "provA", [quote_row("provA", "AAPL", 10)])
+        )
+        with pytest.raises(UnsupportedError, match="latnecy"):
+            quote(spark, cat, "AAPL", strategy="latnecy")
+
 
 def search_source(spark, name, rows):
     from borsa_spark import schemas

@@ -391,56 +391,6 @@ class TestOptionStream:
         assert sorted(r.seq for r in out.collect()) == list(range(7))
 
 
-class TestRollupStream:
-    def test_tiered_bars_stacked_stateful_ops(self, spark, tmp_path):
-        """ticks -> 60s bars -> 300s bars in ONE streaming query (two
-        stacked stateful aggregations, append mode). With max tick at
-        t=590 and a 10s watermark, tier 1 closes bars through [480,540)
-        and tier 2 closes exactly the [0,300) bucket."""
-        import datetime as dt
-
-        from borsa_spark.streaming.fanin import rollup_stream
-
-        def ts(sec):
-            return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=sec)
-
-        rows = [
-            ("AAPL", ts(0), 10.0, 0),
-            ("AAPL", ts(30), 12.0, 1),
-            ("AAPL", ts(90), 9.0, 2),
-            ("AAPL", ts(250), 11.0, 3),
-            ("AAPL", ts(400), 20.0, 4),
-            ("AAPL", ts(590), 21.0, 5),
-        ]
-        df = spark.createDataFrame(
-            rows, "symbol string, ts timestamp, price double, seq long"
-        )
-        path = str(tmp_path / "rollup_ticks")
-        df.repartition(1).write.parquet(path)
-        src = spark.readStream.schema(df.schema).parquet(path)
-        bars = rollup_stream(src, [60, 300], watermark="10 seconds")
-        out = _run_stream(spark, bars, tmp_path, "rollup_out", "append")
-        got = {(r.symbol, int(r.ts.timestamp()) % 86400): r
-               for r in out.collect()}
-        assert set(got) == {("AAPL", 0)}  # only [0,300) closed at tier 2
-        bar = got[("AAPL", 0)]
-        # ticks in [0,300): 10@0, 12@30, 9@90, 11@250
-        assert (float(bar.open), float(bar.high), float(bar.low),
-                float(bar.close), bar.n_ticks) == (10.0, 12.0, 9.0, 11.0, 4)
-        assert bar.interval == "300s" and bar.is_final
-
-    def test_tier_divisibility_enforced(self, spark):
-        import pytest
-
-        from borsa_spark.streaming.fanin import rollup_stream
-
-        df = spark.readStream.format("rate").load().selectExpr(
-            "'A' AS symbol", "timestamp AS ts", "CAST(value AS DOUBLE) AS price"
-        )
-        with pytest.raises(ValueError, match="divide"):
-            rollup_stream(df, [60, 90])
-
-
 class TestStreamingExactDedup:
     def test_replays_dropped_within_watermark(self, spark, tmp_path):
         import datetime as dt

@@ -1,11 +1,12 @@
 """The tooling names only code that exists: every script the Makefile
-runs is on disk, and every ``borsa_spark`` import in the repo resolves.
-A removed script or module would otherwise leave a dead entry that only
-fails when the target is run (or, for an import inside a function, when
-that function is called). The request paths also build no local rows
-from a Python list, which would start Python workers. Everything is read
-with ``ast`` or a regex, so no script is imported and no Spark session
-starts."""
+runs is on disk, every example is run by some Makefile target, and every
+``borsa_spark`` import in the repo resolves. A removed script or module
+would otherwise leave a dead entry that only fails when the target is
+run (or, for an import inside a function, when that function is
+called), and a cut could leave an example that nothing runs. The
+request paths also build no local rows from a Python list, which would
+start Python workers. Everything is read with ``ast`` or a regex, so no
+script is imported and no Spark session starts."""
 
 from __future__ import annotations
 
@@ -16,14 +17,35 @@ import re
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _makefile_scripts(text: str) -> list[str]:
+    return re.findall(r"\bpython3?\s+([\w./-]+\.py)\b", text)
+
+
 def test_makefile_examples_exist():
     with open(os.path.join(REPO, "Makefile")) as f:
-        scripts = re.findall(r"\bpython3?\s+([\w./-]+\.py)\b", f.read())
+        scripts = _makefile_scripts(f.read())
     dirs = {os.path.dirname(s) for s in scripts}
     assert {"examples", "tools", "perfbench"} <= dirs, dirs
     missing = [s for s in scripts
                if not os.path.isfile(os.path.join(REPO, s))]
     assert missing == []
+
+
+def _orphan_examples(makefile: str, names: list[str]) -> list[str]:
+    run = set(_makefile_scripts(makefile))
+    return [n for n in names
+            if n != "_common.py" and f"examples/{n}" not in run]
+
+
+def test_every_example_is_run_by_the_makefile():
+    planted = "tour:\n\tpython examples/a.py\n"
+    assert _orphan_examples(planted, ["_common.py", "a.py", "b.py"]) == [
+        "b.py"]
+    with open(os.path.join(REPO, "Makefile")) as f:
+        makefile = f.read()
+    names = sorted(n for n in os.listdir(os.path.join(REPO, "examples"))
+                   if n.endswith(".py"))
+    assert _orphan_examples(makefile, names) == []
 
 
 # Where ``borsa_spark`` is imported from: the package and everything
