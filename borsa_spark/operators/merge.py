@@ -15,8 +15,9 @@ merge_history (merge.rs:28-110):
   provider with non-null meta; if the merged series is empty, first provider
   overall with non-null meta (merge.rs:44-49, 81-84, 88-91).
 - Actions from all providers are concatenated and deduplicated by full
-  identity (ts, kind, payload), output in canonical
-  (ts, kind-rank, payload) order (merge.rs:173-279).
+  identity (ts, kind, payload) (merge.rs:264-279). The reference's canonical
+  (ts, kind-rank, payload) sort (merge.rs:173-225) is not applied: a
+  DataFrame has no row order until the caller sorts it.
 
 Determinism at scale: Spark's ``dropDuplicates`` keeps an *arbitrary* row and
 is therefore wrong here (SURVEY §4.2) — we use an argmin aggregation
@@ -31,8 +32,6 @@ from typing import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-ACTION_KIND_RANK = {"dividend": 0, "split": 1, "capital_gain": 2}
 
 _CANDLE_COLS = [
     "symbol", "kind", "ts", "open", "high", "low", "close", "close_unadj",
@@ -136,7 +135,7 @@ def merge_history(
 
 
 def dedup_actions(actions: DataFrame) -> DataFrame:
-    """A6: dedup actions by full identity, canonical order (merge.rs:264-279).
+    """A6: dedup actions by full identity (merge.rs:264-279); unsorted.
 
     Identity: dividend (ts, amount, currency); split (ts, numerator,
     denominator); capital_gain (ts, amount, currency). ``dropDuplicates`` is
@@ -146,18 +145,3 @@ def dedup_actions(actions: DataFrame) -> DataFrame:
     return actions.dropDuplicates(
         ["symbol", "ts", "kind", "amount", "currency", "numerator", "denominator"]
     )
-
-
-def action_sort_key_cols(df: DataFrame) -> list:
-    """Canonical action ordering (merge.rs:173-225): ts, kind rank, payload."""
-    kind_rank = F.lit(None).cast("int")
-    for k, r in ACTION_KIND_RANK.items():
-        kind_rank = F.when(F.col("kind") == k, F.lit(r)).otherwise(kind_rank)
-    return [
-        F.col("ts"),
-        kind_rank,
-        F.col("amount"),
-        F.col("currency"),
-        F.col("numerator"),
-        F.col("denominator"),
-    ]

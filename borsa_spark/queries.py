@@ -440,10 +440,6 @@ def rel_q13(spark: SparkSession, sf: str) -> DataFrame:
 # Domain operators over the events stream table
 # ---------------------------------------------------------------------------
 
-_EVENTS_CANDLES_DOC = """events -> candle feed: symbol=event_type,
-provider='prov'||user_id%3 (priority=user_id%3), price=value, seq=event_id."""
-
-
 def _event_candles(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
     return ev.select(
@@ -562,12 +558,10 @@ def t12_candles_vs_batch(spark, sf):
     )
     work = tempfile.mkdtemp(prefix="sp_t12_")
     name = f"t12_bars_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         src = f"{work}/src"
         ev.write.parquet(src)  # micros-normalized copy for the file stream
         schema = spark.read.parquet(src).schema
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         from borsa_spark.streaming import candle_stream
 
         stream = spark.readStream.schema(schema).parquet(src)
@@ -591,7 +585,6 @@ def t12_candles_vs_batch(spark, sf):
                 "t12 availableNow drain did not finish within 300 s"
             )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(work, ignore_errors=True)
     return spark.table(name).select(
         "symbol",

@@ -228,6 +228,21 @@ def history(
     thread wrapper) because fixture catalogs cannot stall.
     """
     req = req.resolved()
+    # Checked before any provider is called: a rejected request spends no
+    # transport call or quota.
+    if strategy not in ("deep", "fallback"):
+        raise UnsupportedError(f"unknown merge strategy {strategy!r}")
+    if strategy == "fallback" and (
+        symbols == ALL_SYMBOLS or (symbols is not None and len(symbols) > 1)
+    ):
+        # Fallback semantics are per-request (first provider with data
+        # for THE symbol, history.rs:481-519); applying them wholesale
+        # to a batch would silently drop symbols only covered by
+        # later-in-chain providers. Deep handles batches correctly.
+        raise UnsupportedError(
+            "fallback strategy is per-symbol; use strategy='deep' for "
+            "symbol batches (or issue per-symbol fallback requests)"
+        )
     deadline = Deadline(request_timeout, f"history({req.symbol})")
     plans, warnings = plan_history(catalog, req)
 
@@ -283,15 +298,6 @@ def history(
         )
 
     if strategy == "fallback":
-        if symbols == ALL_SYMBOLS or (symbols is not None and len(symbols) > 1):
-            # Fallback semantics are per-request (first provider with data
-            # for THE symbol, history.rs:481-519); applying them wholesale
-            # to a batch would silently drop symbols only covered by
-            # later-in-chain providers. Deep handles batches correctly.
-            raise UnsupportedError(
-                "fallback strategy is per-symbol; use strategy='deep' for "
-                "symbol batches (or issue per-symbol fallback requests)"
-            )
         # Sequential first-non-empty (history.rs:481-519). LIMIT-1 probes in
         # priority order; each probe is a tiny job thanks to pushdown.
         chosen = None
@@ -302,7 +308,7 @@ def history(
         if chosen is None:
             raise NotFoundError(f"history for {req.symbol}")
         union = chosen
-    elif strategy == "deep":
+    else:
         union = reduce(lambda a, b: a.unionByName(b), frames)
         if uniform_plan:
             rplan = plans[0][3]
@@ -310,8 +316,6 @@ def history(
                 union, rplan.kind, rplan.minutes,
                 keys=["priority", "provider", "symbol"],
             )
-    else:
-        raise UnsupportedError(f"unknown merge strategy {strategy!r}")
 
     if validate_currency:
         from borsa_spark.operators.validate import (

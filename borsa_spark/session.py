@@ -1,8 +1,13 @@
 """Tuned SparkSession builder.
 
-Scale notes (100 TB target):
-- AQE on: runtime partition coalescing + skew-join splitting replaces hand
-  tuning of `spark.sql.shuffle.partitions` across 1000-executor clusters.
+- One shuffle partition per core. AQE coalesces the shuffles of batch
+  queries at run time, but not those of stateful streaming operators (the
+  monotonic gate, candle and dedup state): their partition count is frozen
+  into the checkpoint when a query first starts, and every state partition
+  costs one Python task and one state-store commit on every micro-batch,
+  whatever its data. More partitions than cores only add those fixed
+  costs. A query restarted from a checkpoint keeps the checkpoint's count.
+  ``extra_conf={"spark.sql.shuffle.partitions": ...}`` sets another count.
 - UTC session timezone is a *correctness* requirement: all reference
   timestamps are UTC epoch seconds and the DuckDB oracle compares UTC-naive.
 - Arrow on: every Pandas-UDF boundary (stateful gate, minhash, multimodal)
@@ -21,7 +26,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "borsa_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
     rocksdb_state_store: bool = False,
 ) -> SparkSession:
@@ -31,15 +35,11 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-        )
 
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

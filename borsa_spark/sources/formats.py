@@ -1,4 +1,5 @@
-"""Additional source formats for candle/quote tables: CSV and JSON lines.
+"""Additional source formats: candle tables as CSV and JSON lines, and a
+synthetic quote stream.
 
 The reference's schema posture is fixed/static — every capability has a
 concrete response type and nothing is inferred (SURVEY §1.2). These loaders
@@ -33,14 +34,6 @@ def load_candles_csv(
 def load_candles_json(spark: SparkSession, path: str) -> DataFrame:
     """Candle JSON-lines; unknown fields dropped, missing fields null."""
     return spark.read.schema(schemas.CANDLES).json(path)
-
-
-def load_quotes_csv(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
-    return (
-        spark.read.schema(schemas.QUOTES)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
 
 
 def rate_quote_stream(

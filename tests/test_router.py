@@ -246,6 +246,35 @@ class TestHistoryRouter:
         with pytest.raises(UnsupportedError):
             plan_history(cat, HistoryRequest(symbol="AAPL", kind="EQUITY"))
 
+    @staticmethod
+    def _counting_catalog(spark):
+        """One provider whose history factory counts its calls; an
+        in-memory frame is not a file relation, so every call counts."""
+        df = make_candles(spark, [candle("provA", sec=0, o=1.0)])
+        calls = []
+
+        def factory():
+            calls.append(1)
+            return df
+
+        src = Source(name="provA", history_intervals=("1d",),
+                     tables={"history": factory})
+        return Catalog().register(src), calls
+
+    def test_unknown_strategy_rejected_before_any_provider(self, spark):
+        cat, calls = self._counting_catalog(spark)
+        with pytest.raises(UnsupportedError, match="deeep"):
+            history(spark, cat, HistoryRequest(symbol="AAPL"),
+                    strategy="deeep")
+        assert calls == []
+
+    def test_fallback_batch_rejected_before_any_provider(self, spark):
+        cat, calls = self._counting_catalog(spark)
+        with pytest.raises(UnsupportedError, match="per-symbol"):
+            history(spark, cat, HistoryRequest(symbol="AAPL"),
+                    strategy="fallback", symbols=["AAPL", "MSFT"])
+        assert calls == []
+
 
 def quote_row(provider, symbol, price, exchange=None, shortname=None):
     from decimal import Decimal

@@ -657,3 +657,119 @@ class TestDropDuplicatesWithinWatermark:
         rows = out.collect()
         seqs = sorted((r.symbol, r.seq) for r in rows)
         assert seqs == [("AAPL", 1), ("AAPL", 2)]  # replays dropped
+
+
+class TestFrozenPartitionCount:
+    """A stateful stream keeps the shuffle partition count of its
+    checkpoint (Structured Streaming stores it in the offset log), so a
+    stream started under one count restarts under it whatever the session
+    says now, and still produces the bars of a one-shot drain. A new
+    checkpoint takes the session's count, which ``get_spark`` sets to one
+    partition per core."""
+
+    SCHEMA = ("provider string, symbol string, ts timestamp, "
+              "price double, seq long")
+    N_FILES = 4
+
+    def _write_backlog(self, spark, root, files):
+        """File ``k`` of each provider holds ticks from minute ``2k`` to
+        ``2k + 2``; about one tick in six arrives out of order."""
+        import datetime as dt
+
+        rng = random.Random(11)
+        t0 = dt.datetime(2024, 1, 1)
+        for p in range(3):
+            for k in files:
+                rows = []
+                for i in range(24):
+                    sec = k * 120 + i * 5 + p
+                    if rng.random() < 0.17:
+                        sec -= rng.randint(6, 40)
+                    rows.append((
+                        f"p{p}", rng.choice(["AAPL", "MSFT", "GOOG"]),
+                        t0 + dt.timedelta(seconds=sec),
+                        round(rng.uniform(90, 110), 2),
+                        (k * 3 + p) * 100 + i,
+                    ))
+                spark.createDataFrame(rows, self.SCHEMA).repartition(
+                    1).write.parquet(str(root / f"p{p}" / f"f{k}"))
+
+    def _drain(self, spark, root, out, ckpt):
+        sources = [
+            spark.readStream.schema(self.SCHEMA)
+            .option("maxFilesPerTrigger", "2")
+            .parquet(str(root / f"p{p}" / "f*"))
+            for p in range(3)
+        ]
+        bars = candle_stream(
+            streaming_monotonic_gate(fan_in(sources)),
+            interval_seconds=60, watermark="10 seconds",
+        )
+        q = (
+            bars.writeStream.format("parquet")
+            .option("path", str(out))
+            .option("checkpointLocation", str(ckpt))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(300)
+        assert q.exception() is None
+        counts = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress for op in p["stateOperators"]
+        }
+        n_ops = {len(p["stateOperators"]) for p in q.recentProgress}
+        assert n_ops == {2}  # the gate and the candle aggregate
+        return counts
+
+    def _bars(self, spark, out):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(str(out)).select(
+                "symbol", "ts", "open", "high", "low", "close", "n_ticks"
+            ).collect()
+        )
+
+    def test_restart_keeps_checkpoint_partition_count(self, spark, tmp_path):
+        key = "spark.sql.shuffle.partitions"
+        session_parts = spark.conf.get(key)
+        assert session_parts == "4"
+        ticks, out, ckpt = (tmp_path / n for n in ("ticks", "out", "ckpt"))
+        half = self.N_FILES // 2
+        self._write_backlog(spark, ticks, range(half))
+        spark.conf.set(key, "8")
+        try:
+            assert self._drain(spark, ticks, out, ckpt) == {8}
+        finally:
+            spark.conf.set(key, session_parts)
+        self._write_backlog(spark, ticks, range(half, self.N_FILES))
+        assert self._drain(spark, ticks, out, ckpt) == {8}
+        restarted = self._bars(spark, out)
+
+        fresh_out = tmp_path / "fresh_out"
+        assert self._drain(
+            spark, ticks, fresh_out, tmp_path / "fresh_ckpt") == {4}
+        one_shot = self._bars(spark, fresh_out)
+        assert len(one_shot) > 3 * self.N_FILES
+        assert restarted == one_shot
+
+    def test_default_is_one_partition_per_core(self):
+        import os
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, SPARK_GRAFT_CPUS="2",
+                   SPARK_GRAFT_DRIVER_MEM="1g")
+        env.pop("SPARK_GRAFT_MASTER", None)
+        probe = (
+            "from borsa_spark.session import get_spark\n"
+            "s = get_spark('partition-default')\n"
+            "print(s.conf.get('spark.sql.shuffle.partitions'))\n"
+            "s.stop()\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", probe], cwd=repo, env=env,
+            capture_output=True, text=True, timeout=300, check=True,
+        )
+        assert out.stdout.strip().splitlines()[-1] == "2"

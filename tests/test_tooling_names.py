@@ -5,7 +5,8 @@ would otherwise leave a dead entry that only fails when the target is
 run (or, for an import inside a function, when that function is
 called), and a cut could leave an example that nothing runs. The
 request paths also build no local rows from a Python list, which would
-start Python workers. Everything is read with ``ast`` or a regex, so no
+start Python workers, and no library module sets the shuffle partition
+count on a live session. Everything is read with ``ast`` or a regex, so no
 script is imported and no Spark session starts."""
 
 from __future__ import annotations
@@ -90,8 +91,8 @@ def _top_level_names(stmts, names: set) -> set:
     return names
 
 
-def _py_files():
-    for entry in IMPORT_SCAN:
+def _py_files(entries=IMPORT_SCAN):
+    for entry in entries:
         path = os.path.join(REPO, entry)
         if os.path.isfile(path):
             yield path
@@ -188,4 +189,49 @@ def test_request_paths_create_no_rows_from_lists():
                 tree = ast.parse(fh.read(), f)
             offenders += [(os.path.relpath(f, REPO), line)
                           for line in _pickled_row_calls(tree)]
+    assert offenders == []
+
+
+# ``get_spark`` alone decides the shuffle partition count. A library call
+# that sets it on a live session changes every query that shares the
+# session, concurrent router threads included, and a stateful stream
+# freezes whatever count it starts under into its checkpoint.
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _shuffle_partition_sets(tree) -> list[int]:
+    """Lines of ``<anything>.conf.set("spark.sql.shuffle.partitions", ...)``
+    calls."""
+    lines = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"):
+            continue
+        key = node.args[:1] + [k.value for k in node.keywords
+                               if k.arg == "key"]
+        if any(isinstance(k, ast.Constant) and k.value == SHUFFLE_PARTITIONS
+               for k in key):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_library_sets_no_shuffle_partitions():
+    planted = ast.parse(
+        'spark.conf.set("spark.sql.shuffle.partitions", "8")\n'
+        'df.sparkSession.conf.set(key="spark.sql.shuffle.partitions",'
+        ' value=n)\n'
+        'spark.conf.set("spark.sql.session.timeZone", "UTC")\n'
+        'spark.conf.get("spark.sql.shuffle.partitions")\n'
+        'b.config("spark.sql.shuffle.partitions", "4")\n'
+    )
+    assert _shuffle_partition_sets(planted) == [1, 2]
+    offenders = []
+    for path in _py_files(("borsa_spark",)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        offenders += [(os.path.relpath(path, REPO), line)
+                      for line in _shuffle_partition_sets(tree)]
     assert offenders == []
