@@ -7,9 +7,9 @@ from __future__ import annotations
 import importlib
 
 __all__ = [
-    "bpe", "classifier", "dedup", "flac", "gif", "graph", "jpeg",
-    "langid", "layout", "multimodal", "packing", "pca", "pipeline",
-    "pq", "retrieval", "similarity", "text", "vector_index",
+    "bpe", "classifier", "dedup", "flac", "gif", "jpeg", "langid",
+    "multimodal", "packing", "pca", "pipeline", "pq", "retrieval",
+    "similarity", "text", "vector_index",
 ]
 
 

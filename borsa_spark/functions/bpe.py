@@ -15,9 +15,9 @@ corpus), and it maps cleanly onto Spark:
   a 1-ROW argmax relation (max weighted count, lexicographic pair
   tie-break — pure integers, no float anywhere) -> broadcast crossJoin
   back and `F.replace` the merged pair into every word's segmentation.
-  The loop is fully declarative (the pagerank shape: no driver-side
-  model state beyond the per-round 1-row checkpoint; the argmax rides
-  as a broadcast relation), so the same unrolled CTEs replay it
+  The loop is fully declarative (no driver-side model state beyond the
+  per-round 1-row checkpoint; the argmax rides as a broadcast
+  relation), so the same unrolled CTEs replay it
   byte-for-byte in the oracle.
 
 Segmentation encoding: symbols are '·'-delimited with BOTH boundaries
@@ -125,8 +125,7 @@ def _train(
     round is one vocab-keyed partial-agg groupBy + a 1-row broadcast
     argmax (itself checkpointed, so nothing downstream re-runs a
     round) + an in-row replace cascade. Vocab re-checkpoints every
-    other round to keep the nested-round lineage flat (the pagerank
-    convention, functions/graph.py)."""
+    other round to keep the nested-round lineage flat."""
     # LAZY checkpoints (round 14): the loop is fully declarative —
     # nothing in it needs a result before the caller's single action —
     # so eager checkpoints only added one blocking job per round

@@ -11,8 +11,7 @@ bounded groupBy-sum aggregated to the driver, the model (n_buckets + 1
 doubles — the entire point of feature hashing is that the model fits
 anywhere) is updated driver-side and re-broadcast.
 
-Engine portability follows the `functions/graph.py` pagerank
-convention: weights are SNAPPED to ``snap`` decimals after every
+Engine portability: weights are SNAPPED to ``snap`` decimals after every
 update, so cross-engine float-summation-order drift (~1e-13 on the
 gradient sums) cannot compound across iterations, and the oracle
 (`sql_hashed_logreg_scores`, iteration-unrolled CTEs) lands on

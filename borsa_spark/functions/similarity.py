@@ -408,7 +408,7 @@ def kmeans_centroids(
     # persists once and every round reads the cache; the k-row
     # centroid relation eagerly localCheckpoints per round, cutting
     # the iterative lineage exactly like f77's per-iteration error
-    # relation and pagerank's per-round snap.
+    # relation.
     e = emb.select(
         F.col(id_col).alias("__vid"),
         F.transform(F.col(emb_col), lambda x: x.cast("double")).alias("__v"),

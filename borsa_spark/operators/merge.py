@@ -51,10 +51,10 @@ def with_priority(df: DataFrame, priorities: Mapping[str, int]) -> DataFrame:
     return df.withColumn("priority", expr.cast("int"))
 
 
-def merge_candles(candles: DataFrame, priority_col: str = "priority") -> DataFrame:
+def merge_candles(candles: DataFrame) -> DataFrame:
     """First-wins candle merge (merge_candles_by_priority, merge.rs:122-161).
 
-    Input must carry ``priority_col``; returns the winning candle per
+    Input must carry ``priority``; returns the winning candle per
     (symbol, ts) with provider retained for attribution, close_unadj cleared.
 
     Expressed as ``min_by(row, (priority, seq))`` AGGREGATION rather than a
@@ -66,7 +66,7 @@ def merge_candles(candles: DataFrame, priority_col: str = "priority") -> DataFra
     is the within-provider input order).
     """
     ord_key = F.struct(
-        F.col(priority_col),
+        F.col("priority"),
         F.coalesce(F.col("seq"), F.lit(0)).alias("__seq"),
     )
     payload = F.struct(*[F.col(c) for c in candles.columns])
@@ -85,8 +85,7 @@ def merge_candles(candles: DataFrame, priority_col: str = "priority") -> DataFra
     )
 
 
-def merged_series_flags(merged: DataFrame, candles: DataFrame,
-                        priority_col: str = "priority") -> DataFrame:
+def merged_series_flags(merged: DataFrame, candles: DataFrame) -> DataFrame:
     """Per-symbol merged-series attributes: the ``adjusted`` flag and meta.
 
     - adjusted = AND over contributing providers (merge.rs:76-84, 99-102).
@@ -95,10 +94,10 @@ def merged_series_flags(merged: DataFrame, candles: DataFrame,
       fallback (first provider overall) since an empty merge has no rows.
     """
     contrib = merged.groupBy("symbol", "provider").agg(
-        F.min(priority_col).alias("__prio")
+        F.min("priority").alias("__prio")
     )
     per_provider = candles.groupBy("symbol", "provider").agg(
-        F.min(priority_col).alias("__prio2"),
+        F.min("priority").alias("__prio2"),
         F.any_value("adjusted").alias("__adj"),
         F.any_value("timezone").alias("__tz"),
         F.any_value("utc_offset_seconds").alias("__off"),
@@ -117,19 +116,18 @@ def merge_history(
     candles: DataFrame,
     actions: DataFrame | None = None,
     priorities: Mapping[str, int] | None = None,
-    priority_col: str = "priority",
 ) -> tuple[DataFrame, DataFrame | None, DataFrame]:
     """Full merge: (merged candles, deduped actions, per-symbol flags).
 
     ``priorities`` maps provider -> rank (0 wins); if omitted the input must
-    already carry ``priority_col``.
+    already carry ``priority``.
     """
     if priorities is not None:
         candles = with_priority(candles, priorities)
         if actions is not None:
             actions = with_priority(actions, priorities)
-    merged = merge_candles(candles, priority_col)
-    flags = merged_series_flags(merged, candles, priority_col)
+    merged = merge_candles(candles)
+    flags = merged_series_flags(merged, candles)
     deduped = dedup_actions(actions) if actions is not None else None
     return merged, deduped, flags
 

@@ -20,7 +20,7 @@ from borsa_spark.errors import CurrencyError
 
 
 def check_series_currency_uniform(
-    df: DataFrame, keys: list[str] | None = None, currency_col: str = "currency"
+    df: DataFrame, keys: list[str] | None = None
 ) -> None:
     """Raise CurrencyError if any series mixes currencies.
 
@@ -29,7 +29,7 @@ def check_series_currency_uniform(
     keys = keys or ["symbol"]
     bad = (
         df.groupBy(*keys)
-        .agg(F.countDistinct(currency_col).alias("n_cur"))
+        .agg(F.countDistinct("currency").alias("n_cur"))
         .filter(F.col("n_cur") > 1)
         .limit(5)
         .collect()

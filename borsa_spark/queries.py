@@ -1881,155 +1881,6 @@ def o9_pivot_daily_mix(spark, sf):
     )
 
 
-@query(
-    "o10_grouping_sets",
-    """
-    SELECT coalesce(event_type, '<all>') AS event_type,
-           coalesce(strftime(ts, '%Y-%m-%d'), '<all>') AS day,
-           count(*)::BIGINT AS n,
-           round(sum(value), 2) AS sum_value
-    FROM events
-    GROUP BY GROUPING SETS ((event_type, strftime(ts, '%Y-%m-%d')),
-                            (event_type), ())
-    """,
-)
-def o10_grouping_sets(spark, sf):
-    """GROUPING SETS: per-(type, day), per-type, and grand-total rows in
-    one pass — the multi-granularity report a dashboard reads without
-    three scans. NULL grouping placeholders coalesced to '<all>' so both
-    engines label subtotal rows identically."""
-    ev = load_table(spark, sf, "events").withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    out = ev.groupingSets(
-        [["event_type", "day"], ["event_type"], []],
-        "event_type", "day",
-    ).agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-    )
-    return out.select(
-        F.coalesce("event_type", F.lit("<all>")).alias("event_type"),
-        F.coalesce("day", F.lit("<all>")).alias("day"),
-        "n", "sum_value",
-    )
-
-
-@query(
-    "o11_unpivot_round_trip",
-    """
-    SELECT date_trunc('day', ts) AS day, event_type, count(*)::BIGINT AS n
-    FROM events GROUP BY 1, 2
-    """,
-)
-def o11_unpivot_round_trip(spark, sf):
-    """UNPIVOT closure property: the o9 wide matrix stacked back to long
-    format (minus the zero-filled cells) must equal the plain two-key
-    groupBy — pivot and unpivot are inverses. Uses the native
-    `unpivot`/stack operator."""
-    ev = load_table(spark, sf, "events")
-    kinds = ["click", "error", "purchase", "signup", "view"]
-    wide = (
-        ev.groupBy(F.date_trunc("day", "ts").alias("day"))
-        .pivot("event_type", kinds)
-        .count()
-        .na.fill(0)
-    )
-    long = wide.unpivot(
-        ["day"], kinds, "event_type", "n"
-    ).filter(F.col("n") > 0)
-    return long.select("day", "event_type", F.col("n").cast("long").alias("n"))
-
-
-@query(
-    "o12_upsert_emulation",
-    """
-    WITH base AS (
-      SELECT user_id, count(*)::BIGINT AS n, round(sum(value), 2) AS s
-      FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'
-      GROUP BY user_id),
-    changes AS (
-      SELECT user_id, count(*)::BIGINT AS n, round(sum(value), 2) AS s
-      FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'
-      GROUP BY user_id)
-    SELECT user_id, n, s, 'kept' AS origin FROM base
-    WHERE user_id NOT IN (SELECT user_id FROM changes)
-    UNION ALL
-    SELECT user_id, n, s, 'upserted' AS origin FROM changes
-    """,
-)
-def o12_upsert_emulation(spark, sf):
-    """MERGE-INTO emulation without a transactional table format: apply a
-    changes batch onto a dimension snapshot as anti-join (keep untouched
-    rows) + union (take changed/new rows wholesale) — the v1 CDC pattern
-    where Delta/Iceberg MERGE is unavailable. Both sides pre-aggregated,
-    one anti-join shuffle on the key."""
-    ev = load_table(spark, sf, "events")
-    cut = F.lit("2024-01-16").cast("timestamp")
-
-    def snap(pred):
-        return ev.filter(pred).groupBy("user_id").agg(
-            F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("s")
-        )
-
-    base = snap(F.col("ts") < cut)
-    changes = snap(F.col("ts") >= cut)
-    kept = base.join(changes, "user_id", "left_anti").withColumn(
-        "origin", F.lit("kept")
-    )
-    return kept.unionByName(changes.withColumn("origin", F.lit("upserted")))
-
-
-@query(
-    "w6_rolling_features",
-    """
-    WITH b AS (
-      SELECT event_type AS symbol, date_trunc('hour', ts) AS bucket,
-             round(avg(value), 6) AS m
-      FROM events GROUP BY 1, 2)
-    SELECT symbol, epoch(bucket)::BIGINT AS bucket_ts,
-           round(avg(m) OVER w, 4) AS ma7,
-           min(m) OVER w AS lo7,
-           max(m) OVER w AS hi7,
-           count(*) OVER w AS n7
-    FROM b
-    WINDOW w AS (PARTITION BY symbol ORDER BY bucket ASC
-                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-    """,
-)
-def w6_rolling_features(spark, sf):
-    """Rolling 7-bucket features over hourly means (moving avg/min/max +
-    support count): the rowsBetween window family, partitioned by symbol,
-    ordered by bucket. The hourly pre-aggregate is snapped to 6dp so the
-    rolling avg divides identical operands in both engines.
-
-    lo7/hi7 are emitted UNROUNDED: min/max select one of the 6dp-snapped
-    m values bit-identically in both engines, and re-rounding an exact
-    6dp value to 4dp creates decimal-half boundaries where Spark
-    (BigDecimal shortest-string rounding) and DuckDB (binary rounding)
-    legitimately disagree — the sf0.1 sweep caught 8 such rows (e.g.
-    m=65.99125 -> 65.9913 vs 65.9912). Never re-round an already-snapped
-    value at a coarser precision."""
-    ev = load_table(spark, sf, "events")
-    b = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", "ts").alias("bucket"),
-    ).agg(F.round(F.avg("value"), 6).alias("m"))
-    w = (
-        Window.partitionBy("symbol")
-        .orderBy(F.col("bucket").asc())
-        .rowsBetween(-6, Window.currentRow)
-    )
-    return b.select(
-        "symbol",
-        F.unix_timestamp("bucket").alias("bucket_ts"),
-        F.round(F.avg("m").over(w), 4).alias("ma7"),
-        F.min("m").over(w).alias("lo7"),
-        F.max("m").over(w).alias("hi7"),
-        F.count("*").over(w).alias("n7"),
-    )
-
-
 _NORM_SQL = (
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),"
     " ' +', ' ', 'g'))"
@@ -2198,249 +2049,6 @@ def f25_embedding_norms(spark, sf):
 
 
 @query(
-    "w8_rolling_vol",
-    """
-    WITH t AS (
-      SELECT event_type AS symbol, epoch_us(ts)::BIGINT AS ts_us, value AS price,
-             row_number() OVER (
-               PARTITION BY event_type ORDER BY ts, event_id) AS rn,
-             sum(value) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS s,
-             sum(value * value) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS s2
-      FROM events)
-    SELECT symbol, ts_us,
-           round(sqrt(greatest(0.0, (s2 - s * s / 20) / 19)), 2) AS vol20
-    FROM t WHERE rn >= 20
-    """,
-)
-def w8_rolling_vol(spark, sf):
-    """Rolling 20-tick volatility (sample stddev) per symbol — the
-    market-data window op behind realized-vol monitors. Full windows only
-    (rn >= 20), and the variance is computed from EXPLICIT windowed sums
-    with a clamp at 0, identically in both engines: built-in windowed
-    stddev differs across engines in its sliding update (DuckDB's
-    subtract-on-evict path can go fractionally negative -> NaN), so the
-    formula itself is the portable contract. Rounded to 2dp — the
-    windowed sums are evict-order-sensitive in the last ulps. One shuffle
-    on symbol; rows-based frame so incremental window aggregation
-    applies."""
-    ev = load_table(spark, sf, "events")
-    wspec = Window.partitionBy("event_type").orderBy(
-        F.col("ts"), F.col("event_id")
-    )
-    wsum = wspec.rowsBetween(-19, Window.currentRow)
-    base = ev.select(
-        F.col("event_type").alias("symbol"),
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.row_number().over(wspec).alias("rn"),
-        F.sum("value").over(wsum).alias("s"),
-        F.sum(F.col("value") * F.col("value")).over(wsum).alias("s2"),
-    )
-    vol = F.sqrt(
-        F.greatest(
-            F.lit(0.0), (F.col("s2") - F.col("s") * F.col("s") / 20) / 19
-        )
-    )
-    return (
-        base.filter(F.col("rn") >= 20)
-        .select("symbol", "ts_us", F.round(vol, 2).alias("vol20"))
-    )
-
-
-@query(
-    "w9_max_drawdown",
-    """
-    WITH t AS (
-      SELECT event_type AS symbol, ts, event_id, value AS price,
-             max(value) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id) AS peak
-      FROM events)
-    SELECT symbol,
-           round(min(price / peak - 1.0), 4) AS max_drawdown,
-           round(max(peak), 2) AS peak_price
-    FROM t GROUP BY symbol
-    """,
-)
-def w9_max_drawdown(spark, sf):
-    """Max drawdown per symbol: running peak (cumulative max over arrival
-    order) then the worst peak-relative dip. The running max is exact
-    (comparisons, no accumulation), the division happens once per row —
-    engine-portable at 4dp. Window + final agg both shuffle on symbol
-    once (co-partitioned)."""
-    ev = load_table(spark, sf, "events")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy(F.col("ts"), F.col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    t = ev.select(
-        F.col("event_type").alias("symbol"),
-        F.col("value").alias("price"),
-        F.max("value").over(w).alias("peak"),
-    )
-    return t.groupBy("symbol").agg(
-        F.round(F.min(F.col("price") / F.col("peak") - 1.0), 4).alias(
-            "max_drawdown"
-        ),
-        F.round(F.max("peak"), 2).alias("peak_price"),
-    )
-
-
-@query(
-    "w10_rolling_corr",
-    """
-    WITH daily AS (
-      SELECT symbol, day_idx, px FROM (
-        SELECT event_type AS symbol,
-               (epoch_us(ts) // 86400000000)::BIGINT AS day_idx,
-               value AS px,
-               row_number() OVER (
-                 PARTITION BY event_type, epoch_us(ts) // 86400000000
-                 ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events) t
-      WHERE rn = 1),
-    paired AS (
-      SELECT a.symbol AS sym_a, b.symbol AS sym_b,
-             a.day_idx, a.px AS x, b.px AS y
-      FROM daily a JOIN daily b USING (day_idx)
-      WHERE a.symbol < b.symbol),
-    sums AS (
-      SELECT sym_a, sym_b, day_idx,
-             row_number() OVER (PARTITION BY sym_a, sym_b
-                                ORDER BY day_idx) AS rn,
-             sum(x)     OVER w AS sx,  sum(y)     OVER w AS sy,
-             sum(x * x) OVER w AS sx2, sum(y * y) OVER w AS sy2,
-             sum(x * y) OVER w AS sxy
-      FROM paired
-      WINDOW w AS (PARTITION BY sym_a, sym_b ORDER BY day_idx
-                   ROWS BETWEEN 9 PRECEDING AND CURRENT ROW))
-    SELECT sym_a, sym_b, day_idx,
-           round((10 * sxy - sx * sy)
-                 / sqrt(greatest(1e-12, 10 * sx2 - sx * sx)
-                        * greatest(1e-12, 10 * sy2 - sy * sy)), 3) AS corr10
-    FROM sums WHERE rn >= 10
-    """,
-)
-def w10_rolling_corr(spark, sf):
-    """Rolling 10-day Pearson correlation between EVERY symbol pair's
-    daily closes — the cross-series analytics window (pairs trading,
-    lead-lag monitors; the reference's stock-comparison example 09 run
-    as a panel). Daily close = arg_max(value, ts) per (symbol, day), the
-    series self-equi-join on day (sym_a < sym_b canonicalizes pairs),
-    and the correlation comes from EXPLICIT windowed sums with
-    denominator clamps — same engine-portability rule as w8 (built-in
-    windowed corr differs across engines on its sliding update). Full
-    windows only. EVERY window is keyed by (sym_a, sym_b): no global
-    ordering exists anywhere, so the plan scales with pair count
-    instead of collapsing to a single partition. The all-pairs panel is
-    quadratic in symbol count by construction — a production monitor
-    over thousands of symbols feeds an explicit pair allowlist into the
-    same shape."""
-    ev = load_table(spark, sf, "events")
-    # close pick carries the repo's composite tie-break (ts, event_id) —
-    # ts alone can tie in a real feed, and engines would then disagree;
-    # Spark keeps the skew-resilient max_by AGGREGATION over the struct
-    # key, the oracle expresses the identical pick as a rank-1 window
-    # (DuckDB's arg_max takes no composite key).
-    daily = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.expr("unix_micros(ts) div 86400000000").alias("day_idx"),
-    ).agg(
-        F.max_by(
-            "value", F.struct(F.col("ts"), F.col("event_id"))
-        ).alias("px")
-    )
-    a = daily.select(
-        F.col("symbol").alias("sym_a"), "day_idx", F.col("px").alias("x")
-    )
-    b = daily.select(
-        F.col("symbol").alias("sym_b"), "day_idx", F.col("px").alias("y")
-    )
-    paired = a.join(b, "day_idx").filter(F.col("sym_a") < F.col("sym_b"))
-    w = (
-        Window.partitionBy("sym_a", "sym_b")
-        .orderBy("day_idx")
-        .rowsBetween(-9, Window.currentRow)
-    )
-    wr = Window.partitionBy("sym_a", "sym_b").orderBy("day_idx")
-    s = paired.select(
-        "sym_a",
-        "sym_b",
-        "day_idx",
-        F.row_number().over(wr).alias("rn"),
-        F.sum("x").over(w).alias("sx"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("x") * F.col("x")).over(w).alias("sx2"),
-        F.sum(F.col("y") * F.col("y")).over(w).alias("sy2"),
-        F.sum(F.col("x") * F.col("y")).over(w).alias("sxy"),
-    )
-    corr = (10 * F.col("sxy") - F.col("sx") * F.col("sy")) / F.sqrt(
-        F.greatest(F.lit(1e-12), 10 * F.col("sx2") - F.col("sx") * F.col("sx"))
-        * F.greatest(F.lit(1e-12), 10 * F.col("sy2") - F.col("sy") * F.col("sy"))
-    )
-    return (
-        s.filter(F.col("rn") >= 10)
-        .select("sym_a", "sym_b", "day_idx", F.round(corr, 3).alias("corr10"))
-    )
-
-
-@query(
-    "w7_ewma",
-    """
-    WITH b AS (
-      SELECT event_type AS symbol, date_trunc('hour', ts) AS bucket,
-             round(avg(value), 6) AS m
-      FROM events GROUP BY 1, 2),
-    l AS (
-      SELECT symbol, bucket, m,
-             lag(m, 1) OVER w AS m1, lag(m, 2) OVER w AS m2,
-             lag(m, 3) OVER w AS m3
-      FROM b WINDOW w AS (PARTITION BY symbol ORDER BY bucket ASC))
-    SELECT symbol, epoch(bucket)::BIGINT AS bucket_ts,
-           round((m + 0.5 * coalesce(m1, 0) + 0.25 * coalesce(m2, 0)
-                    + 0.125 * coalesce(m3, 0))
-                 / (1 + CASE WHEN m1 IS NULL THEN 0 ELSE 0.5 END
-                      + CASE WHEN m2 IS NULL THEN 0 ELSE 0.25 END
-                      + CASE WHEN m3 IS NULL THEN 0 ELSE 0.125 END),
-                 4) AS ewma
-    FROM l
-    """,
-)
-def w7_ewma(spark, sf):
-    """Exponentially-weighted moving average over hourly means via
-    explicit lag composition (alpha=1/2: weights 1, .5, .25, .125 are
-    exact binary fractions, so the float math is engine-identical),
-    renormalized over the lags present at the series head."""
-    ev = load_table(spark, sf, "events")
-    b = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", "ts").alias("bucket"),
-    ).agg(F.round(F.avg("value"), 6).alias("m"))
-    w = Window.partitionBy("symbol").orderBy(F.col("bucket").asc())
-    m1, m2, m3 = (F.lag("m", k).over(w) for k in (1, 2, 3))
-    num = (
-        F.col("m")
-        + 0.5 * F.coalesce(m1, F.lit(0.0))
-        + 0.25 * F.coalesce(m2, F.lit(0.0))
-        + 0.125 * F.coalesce(m3, F.lit(0.0))
-    )
-    den = (
-        F.lit(1.0)
-        + F.when(m1.isNull(), 0.0).otherwise(0.5)
-        + F.when(m2.isNull(), 0.0).otherwise(0.25)
-        + F.when(m3.isNull(), 0.0).otherwise(0.125)
-    )
-    return b.select(
-        "symbol",
-        F.unix_timestamp("bucket").alias("bucket_ts"),
-        F.round(num / den, 4).alias("ewma"),
-    )
-
-
-@query(
     "u3_set_difference",
     """
     SELECT user_id, floor(value)::BIGINT AS value_bin FROM events
@@ -2462,62 +2070,6 @@ def u3_set_difference(spark, sf):
     first = ev.filter(F.col("ts") < cut).select("user_id", vb).distinct()
     second = ev.filter(F.col("ts") >= cut).select("user_id", vb)
     return first.join(second, ["user_id", "value_bin"], "left_anti")
-
-
-@query(
-    "x1_approx_stats",
-    """
-    SELECT event_type,
-           count(DISTINCT user_id)::BIGINT AS exact_users,
-           round(quantile_cont(value, 0.5), 4) AS exact_p50,
-           TRUE AS users_within_15pct,
-           TRUE AS p50_within_rank_window
-    FROM events GROUP BY event_type
-    """,
-)
-def x1_approx_stats(spark, sf):
-    """The approximate-aggregate family — what actually runs at 100 TB
-    when exact distinct counts / quantiles would shuffle the world:
-    HyperLogLog++ distinct users and approximate value quantiles per
-    event type. The sketch VALUES are engine-specific (DuckDB cannot
-    reproduce them), so — like x2/x3 — the oracle checks the accuracy
-    CONTRACT instead: exact counterparts plus booleans asserting the
-    HLL++ estimate landed within 15% (rsd=0.05, see x2's envelope
-    rationale for why 3x the rsd) and the approx median landed inside
-    the exact [p45, p55] rank window (approx_percentile's guarantee IS
-    a rank bound — see x3). The oracle emits literal TRUE, so any group
-    whose sketch drifts out of tolerance fails the value-hash gate.
-    Groups with exact_users = 0 or an all-null value column pass
-    vacuously rather than producing NULL flags.
-
-    Scale shape: both sketches are the 100 TB path (fixed per-group
-    state, mergeable map-side); the exact aggregates here are the
-    verification harness, not the production plan."""
-    ev = load_table(spark, sf, "events")
-    agg = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("exact_users"),
-        F.approx_count_distinct("user_id", rsd=0.05).alias("__approx_users"),
-        F.expr("percentile(value, 0.5)").alias("__exact_p50"),
-        F.expr("percentile(value, 0.45)").alias("__lo"),
-        F.expr("percentile(value, 0.55)").alias("__hi"),
-        F.expr("approx_percentile(value, 0.5, 10000)").alias("__approx_p50"),
-    )
-    users_ok = (F.col("exact_users") == 0) | (
-        F.abs(F.col("__approx_users") - F.col("exact_users"))
-        / F.col("exact_users")
-        <= 0.15
-    )
-    p50_ok = F.col("__exact_p50").isNull() | (
-        (F.col("__approx_p50") >= F.col("__lo"))
-        & (F.col("__approx_p50") <= F.col("__hi"))
-    )
-    return agg.select(
-        "event_type",
-        "exact_users",
-        F.round("__exact_p50", 4).alias("exact_p50"),
-        users_ok.alias("users_within_15pct"),
-        p50_ok.alias("p50_within_rank_window"),
-    )
 
 
 _SIG_SQL = _dd.sql_minhash_signature("sh")
@@ -3849,51 +3401,6 @@ def f38_sequence_packing(spark, sf):
 
 
 @query(
-    "x2_approx_error_envelope",
-    """
-    SELECT event_type AS symbol,
-           count(DISTINCT user_id)::BIGINT AS exact_users,
-           true AS within_15pct
-    FROM events GROUP BY event_type
-    """,
-)
-def x2_approx_error_envelope(spark, sf):
-    """Sketch error envelope as an ORACLE-CHECKED property: per symbol,
-    the exact distinct-user count plus a boolean asserting Spark's
-    HyperLogLog++ estimate (rsd=0.05) landed within 15% of it. The oracle
-    cannot reproduce the sketch value (engine-specific — that is why x1 is
-    rows-only), but it CAN assert the envelope: it emits ``true``, so the
-    value-hash gate fails if any group's estimate drifts out of tolerance.
-    Complements x1 by making the approximation's accuracy contract itself
-    driver-verifiable.
-
-    The asserted envelope (15%) is deliberately wider than rsd=0.05: rsd
-    is a standard DEVIATION, not a bound — once HLL++ leaves its exact
-    sparse mode (observed up to ~2-3x rsd drift at 10^5+ cardinalities), a
-    group can legitimately sit past 5% with nothing wrong. Groups whose
-    user_id values are all null (exact_users = 0) pass vacuously instead
-    of producing a NULL ratio. Verified regime: sf0.01-sf0.1, group
-    cardinalities 10^2-10^5.
-
-    Scale shape: HLL++ is the 100 TB path for distinct counts (fixed
-    ~1.5 KB state per group vs an exact count's full shuffle of distinct
-    keys); the exact count here is the verification harness, not the
-    production plan.
-    """
-    ev = load_table(spark, sf, "events")
-    agg = ev.groupBy(F.col("event_type").alias("symbol")).agg(
-        F.countDistinct("user_id").cast("long").alias("exact_users"),
-        F.approx_count_distinct("user_id", rsd=0.05).alias("__approx"),
-    )
-    within = (F.col("exact_users") == 0) | (
-        F.abs(F.col("__approx") - F.col("exact_users"))
-        / F.col("exact_users")
-        <= 0.15
-    )
-    return agg.select("symbol", "exact_users", within.alias("within_15pct"))
-
-
-@query(
     "f39_pack_efficiency",
     f"""
     WITH packed AS ({_pk.sql_pack_sequences(budget=256, n_streams=8)}),
@@ -3937,45 +3444,6 @@ def f39_pack_efficiency(spark, sf):
             .alias("avg_fill"),
         F.sum(F.when(F.col("fill") > 256, 1).otherwise(0)).cast("long")
             .alias("oversized_bins"),
-    )
-
-
-@query(
-    "x3_quantile_envelope",
-    """
-    SELECT event_type AS symbol,
-           round(quantile_cont(value, 0.5), 4) AS exact_p50,
-           TRUE AS within_rank_window
-    FROM events GROUP BY event_type
-    """,
-)
-def x3_quantile_envelope(spark, sf):
-    """Approx-quantile error envelope, x2's pattern for percentiles: per
-    symbol, exact interpolated median alongside a flag that Spark's
-    approx_percentile landed inside the exact [p45, p55] rank window. The
-    oracle emits the exact median + literal TRUE, so any group where the
-    sketch drifts outside its rank-error contract fails the value-hash
-    gate. Rank-window (not value-epsilon) because approx_percentile's
-    guarantee IS a rank bound (error <= n/accuracy); a value tolerance
-    would be distribution-dependent.
-
-    Scale shape: approx_percentile (GK sketch) is the 100 TB path — fixed
-    sketch per group, mergeable map-side; the exact percentile here is
-    the verification harness, same division of labor as x2."""
-    ev = load_table(spark, sf, "events").filter(F.col("value").isNotNull())
-    agg = ev.groupBy(F.col("event_type").alias("symbol")).agg(
-        F.expr("percentile(value, 0.5)").alias("__exact"),
-        F.expr("percentile(value, 0.45)").alias("__lo"),
-        F.expr("percentile(value, 0.55)").alias("__hi"),
-        F.expr("approx_percentile(value, 0.5, 10000)").alias("__approx"),
-    )
-    within = (F.col("__approx") >= F.col("__lo")) & (
-        F.col("__approx") <= F.col("__hi")
-    )
-    return agg.select(
-        "symbol",
-        F.round("__exact", 4).alias("exact_p50"),
-        within.alias("within_rank_window"),
     )
 
 
@@ -4747,7 +4215,7 @@ def f50_curriculum_deciles(spark, sf):
 
 # ---------------------------------------------------------------------------
 # Round 4, continued: semantic dedup, admission filters, training order,
-# Bollinger bands, and two more TPC-H shapes (correlated scalar subquery,
+# and two more TPC-H shapes (correlated scalar subquery,
 # anti join + global scalar) to round out engine generality.
 # ---------------------------------------------------------------------------
 
@@ -4918,78 +4386,6 @@ def f54_training_order(spark, sf):
 
 
 @query(
-    "w11_bollinger",
-    """
-    WITH t AS (
-      SELECT event_type AS symbol, epoch_us(ts)::BIGINT AS ts_us,
-             value AS price,
-             row_number() OVER (
-               PARTITION BY event_type ORDER BY ts, event_id) AS rn,
-             sum(value) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS s,
-             sum(value * value) OVER (
-               PARTITION BY event_type ORDER BY ts, event_id
-               ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS s2
-      FROM events),
-    b AS (
-      SELECT symbol, ts_us, price, s / 20 AS mid,
-             sqrt(greatest(0.0, (s2 - s * s / 20) / 19)) AS sd
-      FROM t WHERE rn >= 20)
-    SELECT symbol, ts_us,
-           round(mid, 4) AS mid20,
-           round(mid + 2 * sd, 2) AS upper_band,
-           round(mid - 2 * sd, 2) AS lower_band,
-           round((price - (mid - 2 * sd)) / nullif(4 * sd, 0.0), 4) AS pct_b
-    FROM b
-    """,
-)
-def w11_bollinger(spark, sf):
-    """Bollinger bands per symbol: 20-tick mean +/- 2 sample stddevs and
-    %B (where the price sits inside the band, 0 = lower, 1 = upper). Same
-    explicit-windowed-sums contract as w8 — the built-in sliding stddev
-    is not engine-portable, the clamped formula is — with the band edges
-    derived from the UNROUNDED mid/sd and only the emitted columns
-    snapped (2dp prices, 4dp ratio). nullif guards the flat-window case
-    (sd = 0 -> %B undefined -> NULL in both engines). One shuffle on
-    symbol; rows-frame windowed sums update incrementally."""
-    ev = load_table(spark, sf, "events")
-    wspec = Window.partitionBy("event_type").orderBy(
-        F.col("ts"), F.col("event_id")
-    )
-    wsum = wspec.rowsBetween(-19, Window.currentRow)
-    t = ev.select(
-        F.col("event_type").alias("symbol"),
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        F.col("value").alias("price"),
-        F.row_number().over(wspec).alias("rn"),
-        F.sum("value").over(wsum).alias("s"),
-        F.sum(F.col("value") * F.col("value")).over(wsum).alias("s2"),
-    ).filter(F.col("rn") >= 20)
-    mid = F.col("s") / 20
-    sd = F.sqrt(
-        F.greatest(
-            F.lit(0.0), (F.col("s2") - F.col("s") * F.col("s") / 20) / 19
-        )
-    )
-    b = t.select(
-        "symbol", "ts_us", "price", mid.alias("mid"), sd.alias("sd")
-    )
-    return b.select(
-        "symbol",
-        "ts_us",
-        F.round(F.col("mid"), 4).alias("mid20"),
-        F.round(F.col("mid") + 2 * F.col("sd"), 2).alias("upper_band"),
-        F.round(F.col("mid") - 2 * F.col("sd"), 2).alias("lower_band"),
-        F.round(
-            (F.col("price") - (F.col("mid") - 2 * F.col("sd")))
-            / F.nullif(4 * F.col("sd"), F.lit(0.0)),
-            4,
-        ).alias("pct_b"),
-    )
-
-
-@query(
     "rel_q17_small_qty_revenue",
     """
     WITH pa AS (
@@ -5084,95 +4480,6 @@ def rel_q22_dormant_balance(spark, sf):
     )
 
 
-_MACD_SLOW_W = [1.0, 0.75, 0.5625, 0.421875, 0.31640625, 0.2373046875]
-
-
-def _ewma_sql(col: str, weights: list[float], win: str) -> str:
-    """Truncated-lag EWMA as SQL: sum(w_k * lag_k) / sum(present w_k)."""
-    num = " + ".join(
-        f"{w!r} * coalesce(lag({col}, {k}) OVER {win}, 0)" if k else f"{col}"
-        for k, w in enumerate(weights)
-    )
-    den = " + ".join(
-        f"(CASE WHEN lag({col}, {k}) OVER {win} IS NULL THEN 0 ELSE {w!r} END)"
-        if k
-        else "1"
-        for k, w in enumerate(weights)
-    )
-    return f"(({num}) / ({den}))"
-
-
-@query(
-    "w12_macd",
-    f"""
-    WITH b AS (
-      SELECT event_type AS symbol, date_trunc('hour', ts) AS bucket,
-             round(avg(value), 6) AS m
-      FROM events GROUP BY 1, 2),
-    e AS (
-      SELECT symbol, bucket,
-             {_ewma_sql('m', [1.0, 0.5, 0.25, 0.125], 'w')} AS fast,
-             {_ewma_sql('m', _MACD_SLOW_W, 'w')} AS slow
-      FROM b WINDOW w AS (PARTITION BY symbol ORDER BY bucket ASC)),
-    d AS (
-      SELECT symbol, bucket, fast - slow AS macd FROM e),
-    s AS (
-      SELECT symbol, bucket, macd,
-             {_ewma_sql('macd', [1.0, 0.5, 0.25, 0.125], 'w2')} AS signal
-      FROM d WINDOW w2 AS (PARTITION BY symbol ORDER BY bucket ASC))
-    SELECT symbol, epoch(bucket)::BIGINT AS bucket_ts,
-           round(macd, 4) AS macd, round(signal, 4) AS signal,
-           round(macd - signal, 4) AS histogram
-    FROM s
-    """,
-)
-def w12_macd(spark, sf):
-    """MACD over hourly means: fast (alpha=1/2, depth 4) minus slow
-    (alpha=1/4, depth 6) truncated-lag EWMA, a signal line (EWMA of the
-    MACD itself), and the histogram — the momentum indicator composed
-    from w7's engine-portable EWMA contract. Every weight is an exact
-    binary fraction ((3/4)^k, (1/2)^k), the lag composition fixes the
-    float addition order, and the head renormalizes over present lags —
-    so both engines walk identical doubles and the 4dp snap is stable.
-
-    Scale shape: one shuffle on symbol for the hourly aggregate; BOTH
-    window passes (fast/slow, then signal-over-macd) use the same
-    (symbol, bucket) partitioning and ordering, so Spark sorts once and
-    the second Window reuses the first's distribution — no extra
-    exchange (plan-guarded)."""
-    ev = load_table(spark, sf, "events")
-    b = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", "ts").alias("bucket"),
-    ).agg(F.round(F.avg("value"), 6).alias("m"))
-    w = Window.partitionBy("symbol").orderBy(F.col("bucket").asc())
-
-    def ewma(col: F.Column, weights: list[float]) -> F.Column:
-        num = col
-        den = F.lit(1.0)
-        for k, wt in enumerate(weights):
-            if k == 0:
-                continue
-            lagged = F.lag(col, k).over(w)
-            num = num + wt * F.coalesce(lagged, F.lit(0.0))
-            den = den + F.when(lagged.isNull(), 0.0).otherwise(wt)
-        return num / den
-
-    e = b.withColumn(
-        "macd",
-        ewma(F.col("m"), [1.0, 0.5, 0.25, 0.125])
-        - ewma(F.col("m"), _MACD_SLOW_W),
-    )
-    s = e.withColumn("signal", ewma(F.col("macd"), [1.0, 0.5, 0.25, 0.125]))
-    return s.select(
-        "symbol",
-        F.unix_timestamp("bucket").alias("bucket_ts"),
-        F.round(F.col("macd"), 4).alias("macd"),
-        F.round(F.col("signal"), 4).alias("signal"),
-        F.round(F.col("macd") - F.col("signal"), 4).alias("histogram"),
-    )
-
-
 @query(
     "rel_q19_disjunctive_revenue",
     """
@@ -5256,110 +4563,6 @@ def rel_q21_returned_without_discount(spark, sf):
         .join(discounted, "o_orderkey", "left_anti")
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@query(
-    "x4_hll_sketch_merge",
-    """
-    SELECT event_type,
-           count(DISTINCT user_id)::BIGINT AS exact_users,
-           true AS merge_agrees,
-           true AS within_15pct
-    FROM events GROUP BY event_type
-    """,
-)
-def x4_hll_sketch_merge(spark, sf):
-    """HLL sketch MERGEABILITY — the property that makes approx-distinct
-    usable at 100 TB: per-day partial sketches (computed map-side, tiny
-    binary state) union into the same estimate the one-shot sketch
-    gives, so daily rollups never rescan history. Emits a merged-vs-
-    direct agreement band (|merged − direct| ≤ max(1, 2% of exact) — NOT
-    a pinned 0: a direct sketch still in sparse/coupon mode estimates
-    exactly while a union promoted to dense HLL estimates with lgK
-    register error, so bit-equality is cardinality-regime-fragile) and a
-    15% envelope vs exact distinct (x2's contract: rsd is a std-dev, not
-    a bound, so the envelope is deliberately wide; all-null groups pass
-    vacuously). The oracle recomputes exact counts and pins both flags —
-    engine sketches themselves are not portable, their CONTRACT is."""
-    ev = load_table(spark, sf, "events")
-    partial = ev.groupBy(
-        "event_type", F.to_date("ts").alias("__day")
-    ).agg(F.hll_sketch_agg("user_id").alias("__sk"))
-    merged = partial.groupBy("event_type").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("__sk")).alias("__merged")
-    )
-    direct = ev.groupBy("event_type").agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("__direct"),
-        F.countDistinct("user_id").cast("long").alias("exact_users"),
-    )
-    within = (F.col("exact_users") == 0) | (
-        F.abs(F.col("__merged") - F.col("exact_users"))
-        <= 0.15 * F.col("exact_users")
-    )
-    merge_agrees = F.abs(F.col("__merged") - F.col("__direct")) <= F.greatest(
-        F.lit(1.0), 0.02 * F.col("exact_users")
-    )
-    return (
-        merged.join(direct, "event_type")
-        .select(
-            "event_type",
-            "exact_users",
-            merge_agrees.alias("merge_agrees"),
-            within.alias("within_15pct"),
-        )
-    )
-
-
-@query(
-    "o13_bar_enrich_join",
-    """
-    WITH bars AS (
-      SELECT event_type AS symbol, date_trunc('hour', ts) AS bar_ts,
-             arg_min(value, ts) AS open
-      FROM events GROUP BY 1, 2)
-    SELECT e.event_id, e.event_type AS symbol,
-           epoch_us(e.ts)::BIGINT AS ts_us,
-           epoch(b.bar_ts)::BIGINT AS bar_ts,
-           round(b.open, 2) AS open,
-           (e.value > b.open) AS above_open
-    FROM events e
-    JOIN bars b
-      ON b.symbol = e.event_type
-     AND e.ts >= b.bar_ts
-     AND e.ts < b.bar_ts + INTERVAL 1 HOUR
-    """,
-)
-def o13_bar_enrich_join(spark, sf):
-    """Tick-to-bar enrichment: every tick joined to its containing hourly
-    bar (symbol equality + event-time interval), stamped with whether it
-    printed above the bar's open. The oracle states the interval join;
-    Spark-side the same predicate is an equi-join on (symbol,
-    hour-truncated ts) — NOT a range join — because a tumbling window's
-    containing bar is computable per row, which keeps it shuffle-bounded
-    at scale. Open is exact (arg_min on globally-unique ts)."""
-    ev = load_table(spark, sf, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", "ts").alias("bar_ts"),
-    ).agg(F.min_by("value", "ts").alias("open"))
-    ticks = ev.select(
-        "event_id",
-        F.col("event_type").alias("symbol"),
-        F.col("ts"),
-        F.date_trunc("hour", "ts").alias("bar_ts"),
-        F.col("value"),
-    )
-    return (
-        ticks.join(bars, ["symbol", "bar_ts"])
-        .select(
-            "event_id",
-            "symbol",
-            F.unix_micros("ts").alias("ts_us"),
-            F.unix_timestamp("bar_ts").alias("bar_ts"),
-            F.round(F.col("open"), 2).alias("open"),
-            (F.col("value") > F.col("open")).alias("above_open"),
-        )
     )
 
 
@@ -5450,53 +4653,6 @@ def rel_q20_part_promotion_suppliers(spark, sf):
     )
     return sup.join(qualifying, "s_suppkey", "left_semi").select(
         "s_suppkey", "s_name"
-    )
-
-
-@query(
-    "x5_freq_items_superset",
-    """
-    WITH toks AS (
-      SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-    tot AS (SELECT count(*)::DOUBLE AS n FROM toks)
-    SELECT t.tok, count(*)::BIGINT AS n_occurrences,
-           true AS in_sketch
-    FROM toks t, tot
-    GROUP BY t.tok, tot.n
-    HAVING count(*) / tot.n > 0.025
-    """,
-)
-def x5_freq_items_superset(spark, sf):
-    """Heavy-hitters sketch contract (`DataFrame.stat.freqItems`, the
-    Karp/Misra-Gries one-pass algorithm): every token whose true share
-    exceeds the sketch support is GUARANTEED to appear in the sketch
-    output — the one-sided bound that lets vocab/stop-word discovery run
-    in bounded memory over an unbounded key space. The query checks the
-    exact frequent set (share > 0.025, a margin above the sketch's 0.02
-    support so threshold-boundary items can't flicker) for membership in
-    the sketch; the oracle pins the exact set and the always-true flag.
-    Scale shape: the sketch is per-partition counters merged once
-    (1/support entries each), never a full groupBy."""
-    docs = load_table(spark, sf, "documents")
-    # three consumers (sketch, total, exact counts) — persist the
-    # single-column token relation so the explode runs once
-    toks = docs.select(
-        F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).persist()
-    sketch = toks.stat.freqItems(["tok"], support=0.02)
-    tot = toks.agg(F.count("*").cast("double").alias("__n"))
-    exact = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("n_occurrences"))
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("n_occurrences") / F.col("__n") > 0.025)
-    )
-    return exact.crossJoin(F.broadcast(sketch)).select(
-        "tok",
-        "n_occurrences",
-        F.array_contains(F.col("tok_freqItems"), F.col("tok")).alias(
-            "in_sketch"
-        ),
     )
 
 
@@ -5850,173 +5006,6 @@ def rel_q8_market_share(spark, sf):
     )
 
 
-def _pagerank_sql() -> str:
-    from borsa_spark.functions.graph import sql_pagerank_round
-
-    rounds = ",".join(
-        sql_pagerank_round(f"pr{k - 1}" if k > 1 else "pr0", k)
-        for k in (1, 2, 3)
-    )
-    return f"""
-    WITH sh AS ({_SH_CTE}),
-    sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON sa.id = id_a
-      JOIN sizes sb ON sb.id = id_b
-      WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.5),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    deg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
-    nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-    pr0 AS (
-      SELECT doc_id AS id, round(1.0 / nn.n, 8) AS pr
-      FROM documents CROSS JOIN nn),
-    {rounds}
-    SELECT id AS doc_id, round(pr, 6) AS pagerank,
-           row_number() OVER (ORDER BY pr DESC, id ASC) AS rank
-    FROM pr3
-    ORDER BY pr DESC, id ASC LIMIT 100
-    """
-
-
-@query("f56_similarity_pagerank", _pagerank_sql())
-def f56_similarity_pagerank(spark, sf):
-    """PageRank over the near-dup similarity graph (3 snapped power
-    iterations, damping 0.85): template hubs — one document
-    near-duplicating many others — float to the top, the graph-centrality
-    quality prior a web corpus gets from its hyperlink graph. Edges are
-    the LSH-verified pair relation in both directions; isolated docs hold
-    the teleport floor; dangling mass is not redistributed (documented in
-    functions/graph.py — the oracle-portability variant). Each iteration
-    is one equi-join + one map-side-combined groupBy; ranks snap at 8dp
-    per round (the kmeans recurrence convention) so both engines walk
-    the identical fixpoint.
-
-    Output contract is the TOP-100 hub panel ordered (pr desc, doc_id):
-    hub detection needs the head of the ranking, not a total order over
-    the corpus — a bare ``row_number() OVER (ORDER BY pr)`` would drag
-    every rank row through one SinglePartition exchange, while limit-k
-    plans as TakeOrderedAndProject (per-partition top-k, merged on the
-    driver) and the rank window then runs over k rows only. A
-    full-corpus ordering, if ever needed, takes f54's hierarchical-rank
-    shape instead."""
-    from borsa_spark.functions.graph import pagerank
-
-    docs = load_table(spark, sf, "documents")
-    # the pair list feeds both union branches — persist it so the LSH
-    # band join + verify run once, not per direction (round-9 audit)
-    pairs = _lsh_verified_pairs(docs).select("id_a", "id_b").persist()
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    ).distinct()
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    pr = pagerank(edges, nodes, iters=3)
-    top = pr.orderBy(F.col("pr").desc(), F.col("id").asc()).limit(100)
-    w = Window.orderBy(F.col("pr").desc(), F.col("id").asc())
-    return top.select(
-        F.col("id").alias("doc_id"),
-        F.round(F.col("pr"), 6).alias("pagerank"),
-        F.row_number().over(w).alias("rank"),
-    )
-
-
-def _weighted_pagerank_sql() -> str:
-    from borsa_spark.functions.graph import sql_pagerank_round
-
-    rounds = ",".join(
-        sql_pagerank_round(
-            f"pr{k - 1}" if k > 1 else "pr0", k,
-            weighted=True, redistribute=True,
-        )
-        for k in (1, 2, 3)
-    )
-    return f"""
-    WITH sh AS ({_SH_CTE}),
-    sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b,
-             round(n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter), 4) AS w
-      FROM inter
-      JOIN sizes sa ON sa.id = id_a
-      JOIN sizes sb ON sb.id = id_b
-      WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.5),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst, w FROM pairs
-      UNION ALL SELECT id_b, id_a, w FROM pairs),
-    deg AS (SELECT src AS id, sum(w) AS deg FROM edges GROUP BY src),
-    nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-    pr0 AS (
-      SELECT doc_id AS id, round(1.0 / nn.n, 8) AS pr
-      FROM documents CROSS JOIN nn),
-    {rounds}
-    SELECT id AS doc_id, round(pr, 6) AS pagerank,
-           row_number() OVER (ORDER BY pr DESC, id ASC) AS rank
-    FROM pr3
-    ORDER BY pr DESC, id ASC LIMIT 100
-    """
-
-
-@query("f57_weighted_pagerank", _weighted_pagerank_sql())
-def f57_weighted_pagerank(spark, sf):
-    """Weighted PageRank with dangling-mass redistribution — the TEXTBOOK
-    recurrence (f56 is the cheap variant), closing the divergence
-    documented in functions/graph.py. Edges are the LSH-verified near-dup
-    pairs in both directions, weighted by their 4dp exact Jaccard: a
-    0.9-similarity edge carries proportionally more of its source's rank
-    than a 0.5 one (w / Σ_out w replaces 1 / deg). Each round the summed
-    rank of out-degree-0 docs is re-shared uniformly, so total mass stays
-    1 (up to snap) — the property test pins that invariant; this oracle
-    pins the exact per-doc values.
-
-    Scale shape: identical joins to f56 plus ONE extra scalar aggregate
-    per round (the dangling mass), snapped and broadcast into the rank
-    update as a 1-row crossJoin — no driver round-trip, no extra shuffle
-    of rank rows. Output is the same TakeOrdered top-100 hub panel (no
-    SinglePartition window over the corpus)."""
-    from borsa_spark.functions.graph import pagerank
-
-    docs = load_table(spark, sf, "documents")
-    # persist: both union branches consume the pair list (f56's fix)
-    pairs = (
-        _lsh_verified_pairs(docs)
-        .select("id_a", "id_b", "jaccard")
-        .persist()
-    )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst"),
-        F.col("jaccard").alias("w"),
-    ).unionByName(
-        pairs.select(
-            F.col("id_b").alias("src"), F.col("id_a").alias("dst"),
-            F.col("jaccard").alias("w"),
-        )
-    )
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    pr = pagerank(
-        edges, nodes, iters=3,
-        weight_col="w", redistribute_dangling=True,
-    )
-    top = pr.orderBy(F.col("pr").desc(), F.col("id").asc()).limit(100)
-    w = Window.orderBy(F.col("pr").desc(), F.col("id").asc())
-    return top.select(
-        F.col("id").alias("doc_id"),
-        F.round(F.col("pr"), 6).alias("pagerank"),
-        F.row_number().over(w).alias("rank"),
-    )
-
-
 @query(
     "f58_audio_features",
     """
@@ -6100,7 +5089,7 @@ def f58_audio_features(spark, sf):
 def f59_jpeg_features(spark, sf):
     """Multimodal: REAL baseline-JPEG decode end-to-end (functions/
     jpeg.py — pure-Python T.81: Huffman entropy decode, dequant, IDCT,
-    YCbCr->RGB). f16's analytic-oracle pattern with the x2 envelope
+    YCbCr->RGB). f16's analytic-oracle pattern with an envelope
     twist: JPEG is lossy, so instead of pinning the decoded luma exactly
     the oracle pins the CONTRACT — per solid-color image (dims and RGB
     derived from doc_id alone, encoded at quality 90), the decoded mean
@@ -6349,134 +5338,6 @@ def f62_flac_features(spark, sf):
         F.col("duration_ms").cast("long").alias("duration_ms"),
         F.round("rms", 6).alias("rms"),
         "decoder",
-    )
-
-
-def _f63_sql() -> str:
-    from borsa_spark.functions.layout import sql_zorder_key
-
-    z = sql_zorder_key(["xb", "yb"], bits=10)
-    return f"""
-    WITH d AS (
-      SELECT (user_id % 1024)::BIGINT AS xb,
-             greatest(least(floor(value)::BIGINT, 1023), 0) AS yb
-      FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL),
-    z AS (SELECT xb, yb, ({z}) AS zv FROM d)
-    SELECT (zv >> 14)::BIGINT AS bucket,
-           count(*)::BIGINT AS n,
-           min(xb) AS x_min, max(xb) AS x_max,
-           min(yb) AS y_min, max(yb) AS y_max
-    FROM z GROUP BY 1
-    """
-
-
-@query(
-    "w13_session_windows",
-    """
-    WITH e AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id
-                                     ORDER BY ts) IS NULL
-                  OR ts - lag(ts) OVER (PARTITION BY user_id
-                                        ORDER BY ts)
-                     >= INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events WHERE user_id IS NOT NULL),
-    s AS (
-      SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id
-                                    ORDER BY ts
-                                    ROWS UNBOUNDED PRECEDING) AS sess
-      FROM e)
-    SELECT user_id,
-           epoch_us(min(ts))::BIGINT AS session_start_us,
-           count(*)::BIGINT AS n_events,
-           (epoch_us(max(ts)) - epoch_us(min(ts)))::BIGINT AS span_us
-    FROM s GROUP BY user_id, sess
-    """,
-)
-def w13_session_windows(spark, sf):
-    """User sessionization with Spark's NATIVE ``session_window``
-    (30-minute inactivity gap): per session, start timestamp, event
-    count, and active span. The oracle rebuilds sessions from first
-    principles — gaps-and-islands over lag() — so this query
-    cross-checks Spark's built-in session-window semantics against the
-    textbook definition, per group, per event. Two boundary subtleties
-    the oracle must mirror exactly: a session window is [start,
-    last + gap), so an event AT last + gap starts a NEW session (the
-    islands rule is `>=` gap, not `>`); and timestamps carry
-    microseconds, so epochs compare in integer MICROSECONDS (DuckDB's
-    ::BIGINT cast of a fractional epoch ROUNDS where Spark's
-    unix_timestamp truncates — the sweep-class divergence, avoided
-    rather than papered over).
-
-    Scale shape: session_window plans as one shuffle keyed user_id with
-    in-partition sort — same cost as the window formulation, but the
-    SAME operator runs unchanged under Structured Streaming with a
-    watermark (state per open session), which the lag() formulation
-    cannot. Session windows at 100 TB are the standard web/event-log
-    aggregation."""
-    ev = load_table(spark, sf, "events").filter(
-        F.col("user_id").isNotNull()
-    )
-    return (
-        ev.groupBy(
-            "user_id",
-            F.session_window("ts", "30 minutes").alias("w"),
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.min("ts").alias("__first"),
-            F.max("ts").alias("__last"),
-        )
-        .select(
-            "user_id",
-            F.unix_micros("__first").alias("session_start_us"),
-            "n_events",
-            (
-                F.unix_micros("__last") - F.unix_micros("__first")
-            ).cast("long").alias("span_us"),
-        )
-    )
-
-
-@query("f63_zorder_stats", _f63_sql())
-def f63_zorder_stats(spark, sf):
-    """Z-order (Morton) layout clustering, oracle-faced: bucketize two
-    independent event dimensions to 10 bits each, interleave their bits
-    JVM-side (`layout.zorder_key` — pure integer math inside whole-stage
-    codegen), split the curve into 64 ranges (z >> 14), and emit each
-    range's min/max per dimension. The oracle replays the interleave
-    bit-for-bit in SQL, so a single misplaced bit position anywhere in
-    the 20-term expression fails the hash-match. The min/max columns ARE
-    the layout receipt: z-range buckets are tight in BOTH dimensions
-    (each spans ~1/8 of either axis), where a one-column sort is tight
-    in one and spans the full range of the other —
-    `test_zorder_file_skipping_receipt` measures that on real files.
-
-    Scale shape: the production use is `layout.zorder_layout` (one
-    repartitionByRange shuffle at write time — the price of any sort);
-    this query is its auditable core. At 100 TB, min/max footer stats
-    then prune files for filters on EITHER dimension."""
-    from borsa_spark.functions.layout import zorder_key
-
-    ev = load_table(spark, sf, "events").filter(
-        F.col("user_id").isNotNull() & F.col("value").isNotNull()
-    )
-    d = ev.select(
-        (F.col("user_id") % 1024).cast("long").alias("xb"),
-        F.greatest(
-            F.least(F.floor("value").cast("long"), F.lit(1023)), F.lit(0)
-        ).alias("yb"),
-    )
-    z = d.select("xb", "yb", zorder_key(["xb", "yb"], bits=10).alias("zv"))
-    return (
-        z.groupBy(F.shiftright("zv", 14).cast("long").alias("bucket"))
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.min("xb").alias("x_min"), F.max("xb").alias("x_max"),
-            F.min("yb").alias("y_min"), F.max("yb").alias("y_max"),
-        )
     )
 
 
@@ -7020,8 +5881,8 @@ def f77_logreg_quality_score(spark, sf):
     256-bucket hashed-bigram features, labels = the f74 target split
     (src0/src1), then every document scored by the trained model — the
     discriminative half of the CCNet filter next to f74's generative
-    llr. Weights snap to 8 decimals per update (the pagerank
-    snapped-fixpoint convention) so the iteration-unrolled DuckDB
+    llr. Weights snap to 8 decimals per update (a snapped fixpoint)
+    so the iteration-unrolled DuckDB
     oracle lands on bit-identical weights.
 
     Scale shape: one corpus scan into a checkpointed per-(doc, bucket)
@@ -7127,37 +5988,6 @@ def f79_lossy_header_metadata(spark, sf):
     )
 
 
-@query(
-    "c5_compaction_roundtrip",
-    "SELECT doc_id, source, n_chars FROM documents",
-)
-def c5_compaction_roundtrip(spark, sf):
-    """Lakehouse small-file compaction (functions/layout.py
-    `compact_parquet`): the documents table is deliberately shattered
-    into 64 tiny parquet files, then bin-packed back via Spark's own
-    FilePartition packing (maxPartitionBytes pinned to the target, one
-    output file per scan bin, ZERO shuffle) and read back. Hash-match
-    against the source table proves the rewrite is lossless; the
-    file-count/no-Exchange receipts live in tests/test_zorder.py. The
-    c3 pattern: materialized before the scratch dir vanishes."""
-    import tempfile
-
-    from borsa_spark.functions.layout import compact_parquet
-
-    docs = load_table(spark, sf, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    with tempfile.TemporaryDirectory() as work:
-        docs.repartition(64).write.parquet(f"{work}/frag")
-        compact_parquet(
-            spark, f"{work}/frag", f"{work}/tight",
-            target_bytes=8 * 1024 * 1024,
-        )
-        out = spark.read.parquet(f"{work}/tight")
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
-
-
 @query("f80_bpe_train")
 def f80_bpe_train(spark, sf):
     """Distributed BPE tokenizer training (functions/bpe.py
@@ -7165,7 +5995,7 @@ def f80_bpe_train(spark, sf):
     frequency-weighted pair counts over the word-vocabulary relation —
     the corpus is scanned ONCE; every round touches only the distinct-
     word relation. The loop is fully declarative (1-row broadcast
-    argmax per round, in-row replace cascade, pagerank-style
+    argmax per round, in-row replace cascade, per-round
     checkpointing), so the DuckDB oracle replays it byte-for-byte as
     12 unrolled MATERIALIZED CTE rounds — a wrong pair count, a wrong
     tie-break, or a divergent merge application all hash-mismatch.

@@ -228,6 +228,10 @@ def history(
     thread wrapper) because fixture catalogs cannot stall.
     """
     req = req.resolved()
+    # One symbol given as a bare string is a batch of one, not a sequence
+    # of characters; ALL_SYMBOLS stays the full-catalog sentinel.
+    if isinstance(symbols, str) and symbols != ALL_SYMBOLS:
+        symbols = [symbols]
     # Checked before any provider is called: a rejected request spends no
     # transport call or quota.
     if strategy not in ("deep", "fallback"):

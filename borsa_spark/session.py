@@ -8,6 +8,10 @@
   whatever its data. More partitions than cores only add those fixed
   costs. A query restarted from a checkpoint keeps the checkpoint's count.
   ``extra_conf={"spark.sql.shuffle.partitions": ...}`` sets another count.
+- Streaming state lives in Spark's default HDFS-backed store, which keeps
+  every key's state on the JVM heap. For large keyed state, pass
+  ``extra_conf={"spark.sql.streaming.stateStore.providerClass":
+  "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"}``.
 - UTC session timezone is a *correctness* requirement: all reference
   timestamps are UTC epoch seconds and the DuckDB oracle compares UTC-naive.
 - Arrow on: every Pandas-UDF boundary (stateful gate, minhash, multimodal)
@@ -27,11 +31,7 @@ def get_spark(
     app_name: str = "borsa_spark",
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state_store: bool = False,
 ) -> SparkSession:
-    """``rocksdb_state_store`` switches streaming state to
-    RocksDBStateStoreProvider — the production backend for large keyed state
-    (HDFSBacked keeps every symbol's state on the JVM heap)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -49,12 +49,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    if rocksdb_state_store:
-        b = b.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

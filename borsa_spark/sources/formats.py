@@ -8,8 +8,7 @@ used (on a 100 TB lake, inference means an extra full scan AND
 nondeterministic types).
 
 CSV/JSON scans don't push predicates the way parquet does — treat them as
-ingestion formats: load once, normalize, write parquet/bucketed tables
-(`sources/layout.py`) for the query path.
+ingestion formats: load once, normalize, write parquet for the query path.
 """
 
 from __future__ import annotations

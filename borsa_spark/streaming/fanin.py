@@ -92,8 +92,6 @@ def candle_stream(
     interval_seconds: int,
     watermark: str = "30 seconds",
     ts_col: str = "ts",
-    price_col: str = "price",
-    volume_col: str | None = "volume",
     final_mode: bool = True,
 ) -> DataFrame:
     """T12: tick stream -> OHLCV bars at a tumbling interval.
@@ -119,15 +117,15 @@ def candle_stream(
     """
     win = F.window(F.col(ts_col), f"{interval_seconds} seconds")
     ord_key: Column = F.struct(F.col(ts_col), F.col("seq")) if "seq" in updates.columns else F.col(ts_col)
+    volume = ["volume"] if "volume" in updates.columns else []
     aggs = [
-        F.min_by(price_col, ord_key).alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max_by(price_col, ord_key).alias("close"),
+        F.min_by("price", ord_key).alias("open"),
+        F.max("price").alias("high"),
+        F.min("price").alias("low"),
+        F.max_by("price", ord_key).alias("close"),
         F.count("*").alias("n_ticks"),
+        *[F.sum(c).alias(c) for c in volume],
     ]
-    if volume_col is not None and volume_col in updates.columns:
-        aggs.append(F.sum(volume_col).alias("volume"))
     return (
         updates.withWatermark(ts_col, watermark)
         .groupBy(F.col("symbol"), win.alias("window"))
@@ -137,7 +135,7 @@ def candle_stream(
             F.col("window.start").alias("ts"),
             F.col("window.end").alias("window_end"),
             "open", "high", "low", "close", "n_ticks",
-            *( ["volume"] if volume_col is not None and "volume" in updates.columns else [] ),
+            *volume,
             # CANDLE_UPDATES parity (connector.rs:270-288): the requested
             # interval travels with each bar; is_final truthfulness depends
             # on the output mode (see final_mode in the docstring).

@@ -1,8 +1,8 @@
 """Unit pins for the round-4 additions beyond their sf0.01 oracle rows:
-blocklist density rule, seeded training order, Bollinger band algebra, and
-SemDeDup's cluster-bounded candidate generation. Each test drives the
-registered query (or its underlying rule) on tiny synthetic inputs where
-the expected answer is hand-checkable.
+blocklist density rule, seeded training order, and SemDeDup's
+cluster-bounded candidate generation. Each test drives the registered
+query (or its underlying rule) on tiny synthetic inputs where the expected
+answer is hand-checkable.
 """
 
 from __future__ import annotations
@@ -76,38 +76,6 @@ class TestTrainingOrder:
         a = QUERIES["f54_training_order"](spark, SF001).collect()
         by_pos = [r["doc_id"] for r in sorted(a, key=lambda r: r["position"])]
         assert by_pos != sorted(by_pos)  # md5 actually shuffled
-
-
-class TestBollinger:
-    def test_band_algebra_holds(self, spark):
-        out = QUERIES["w11_bollinger"](spark, SF001)
-        bad = out.filter(
-            (F.col("upper_band") < F.col("lower_band"))
-            | (F.col("mid20") > F.col("upper_band") + 0.01)
-            | (F.col("mid20") < F.col("lower_band") - 0.01)
-        )
-        assert bad.count() == 0
-
-    def test_pct_b_centers_the_mid(self, spark):
-        # price == mid -> %B == 0.5 by construction; verify on a constant
-        # ramp where the 20-tick mean trails the price (pct_b > 0.5).
-        import datetime as dt
-
-        rows = [
-            (i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=i), 0, "X",
-             float(i), "{}")
-            for i in range(1, 41)
-        ]
-        df = spark.createDataFrame(
-            rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
-        )
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as d:
-            df.write.parquet(f"{d}/events.parquet")
-            out = QUERIES["w11_bollinger"](spark, d).collect()
-        assert out, "full windows exist"
-        assert all(r["pct_b"] is None or r["pct_b"] > 0.5 for r in out)
 
 
 class TestSemDeDup:

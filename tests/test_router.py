@@ -198,6 +198,23 @@ class TestHistoryRouter:
         rows = res.candles.collect()
         assert [str(r.provider) for r in rows] == ["provB"]
 
+    def test_fallback_takes_one_symbol_as_string(self, spark):
+        # symbols="AAPL" is one symbol, not a four-character batch
+        a = [candle("provA", symbol="MSFT", sec=0, o=1.0)]
+        b = [candle("provB", sec=0, o=2.0), candle("provB", sec=DAY, o=3.0)]
+        cat = Catalog().register(
+            hist_source(spark, "provA", a)
+        ).register(hist_source(spark, "provB", b))
+
+        def candles(symbols):
+            res = history(spark, cat, HistoryRequest(symbol="AAPL"),
+                          strategy="fallback", symbols=symbols)
+            return [tuple(r) for r in res.candles.collect()]
+
+        want = candles(["AAPL"])
+        assert len(want) == 2
+        assert candles("AAPL") == want
+
     def test_empty_provider_skipped_in_deep(self, spark):
         # router_history_empty_is_skipped.rs
         a = [candle("provA", symbol="MSFT", sec=0, o=1.0)]

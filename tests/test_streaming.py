@@ -480,10 +480,9 @@ class TestRocksDBStateStore:
 
 
 class TestSessionWindowStreaming:
-    """w13's streaming half: the SAME session_window aggregation runs
-    under Structured Streaming with a watermark — closed sessions match
-    the batch computation over the same feed (T12's append-mode pattern
-    for session windows)."""
+    """A session_window aggregation runs under Structured Streaming with
+    a watermark — closed sessions match the batch computation over the
+    same feed (T12's append-mode pattern for session windows)."""
 
     def test_closed_sessions_match_batch(self, spark, tmp_path):
         import datetime as dt

@@ -409,23 +409,6 @@ class TestDupClustersRandomized:
         assert got == want
 
 
-class TestApproxErrorBounds:
-    def test_approx_error_bounds(self, spark):
-        """HLL++ distinct and approx quantiles stay inside their error
-        envelopes against the exact values on real driver data."""
-        from borsa_spark.queries import x1_approx_stats
-
-        rows = x1_approx_stats(spark, "/root/testdata/sf0.01").collect()
-        assert rows
-        for r in rows:
-            # x1 is oracle-backed since r6: the flags ARE the envelope
-            # (HLL++ within 15% of exact; approx median inside the exact
-            # [p45, p55] rank window) and the oracle pins them to TRUE.
-            assert r.users_within_15pct is True
-            assert r.p50_within_rank_window is True
-            assert r.exact_users > 0 and r.exact_p50 is not None
-
-
 class TestMixtureAndSampling:
     """f31-f34 invariants on the real sf0.001 tables (the oracle gate checks
     exact values at sf0.01; these pin the semantic properties)."""

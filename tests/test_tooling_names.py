@@ -6,8 +6,10 @@ run (or, for an import inside a function, when that function is
 called), and a cut could leave an example that nothing runs. The
 request paths also build no local rows from a Python list, which would
 start Python workers, and no library module sets the shuffle partition
-count on a live session. Everything is read with ``ast`` or a regex, so no
-script is imported and no Spark session starts."""
+count on a live session. Every registered query has a DuckDB oracle and
+every oracle a query. Everything but the registry is read with ``ast`` or
+a regex, so no script is imported, and no check starts a Spark
+session."""
 
 from __future__ import annotations
 
@@ -235,3 +237,11 @@ def test_library_sets_no_shuffle_partitions():
         offenders += [(os.path.relpath(path, REPO), line)
                       for line in _shuffle_partition_sets(tree)]
     assert offenders == []
+
+
+def test_every_query_has_an_oracle_and_every_oracle_a_query():
+    # Late oracles are assigned by key after the @query decorators run,
+    # so a cut query can leave its oracle behind.
+    from borsa_spark.queries import ORACLES, QUERIES
+
+    assert sorted(set(QUERIES) ^ set(ORACLES)) == []
