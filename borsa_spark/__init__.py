@@ -14,7 +14,7 @@ Layout
 - ``plans``       pure-Python planning: routing policy, interval planning
 - ``router``      capability routers (history, quotes, search, info, ...)
 - ``sources``     provider/fixture table registry
-- ``functions``   dedup / similarity / text-analysis / multimodal pipelines
+- ``functions``   dedup / text-analysis / multimodal pipelines
 - ``streaming``   stream fan-in, monotonic gate, windowed candles, supervisor
 - ``middleware``  TTL cache / quota / blacklist wrappers
 
@@ -22,7 +22,7 @@ Cache-lifetime contract
 -----------------------
 Library functions that feed one intermediate to several consumers
 (`minhash_dedup_pairs`' shingle arrays, `repeated_substring_spans`'
-anchors, `semdedup`'s cluster assignments, ...) ``persist()`` that
+anchors, `bloom_decontaminate`'s probe set, ...) ``persist()`` that
 intermediate and do NOT unpersist it before returning: the returned
 DataFrame is lazy, so the cache must outlive the call for the
 consumer's action to benefit. The CALLER (harness, service loop, or
@@ -34,7 +34,7 @@ result (it also frees ``localCheckpoint`` blocks, which
 tests/test_cache_discipline.py asserts the sweep returns the session
 to zero cached blocks after representative queries() entries. The few
 functions that themselves run the terminal action (e.g.
-``kmeans_centroids``' training loop) clean up their own persists.
+``dup_clusters``' label-propagation loop) clean up their own persists.
 """
 
 from borsa_spark.errors import (

@@ -8,8 +8,7 @@ import importlib
 
 __all__ = [
     "bpe", "classifier", "dedup", "flac", "gif", "jpeg", "langid",
-    "multimodal", "packing", "pca", "pipeline", "pq", "retrieval",
-    "similarity", "text", "vector_index",
+    "multimodal", "packing", "pipeline", "text",
 ]
 
 

@@ -1443,9 +1443,9 @@ def repeated_substring_spans(
 
     Plan: (1) slide a k-token window over each doc -> (id, pos, gram)
     anchors, hashed to 64 bits for the join key; (2) drop grams present
-    in more than ``max_gram_df`` documents (corpus boilerplate —
-    accounted by f55's family, and the df cap is what bounds the
-    self-join fanout, exactly containment_pairs' discipline); (3)
+    in more than ``max_gram_df`` documents (corpus boilerplate — the df
+    cap is what bounds the self-join fanout, exactly containment_pairs'
+    discipline); (3)
     equi-join anchors across documents (id_a < id_b): two positions on
     the same DIAGONAL (pos_a - pos_b) and consecutive in pos_a extend
     one shared substring, so (4) gaps-and-islands per (id_a, id_b, diag)
@@ -1747,6 +1747,72 @@ def sql_drop_repeated_paragraphs(
     """
 
 
+def doc_chunks(
+    docs: DataFrame, window: int = 64, stride: int = 48
+) -> DataFrame:
+    """Sliding-window chunking: (doc_id, chunk_idx, start_tok, n_tokens,
+    chunk_hash) with ``window``-token chunks every ``stride`` tokens.
+    The last chunk is the tail remainder (shorter than ``window``); a doc
+    shorter than one window is exactly one chunk. chunk count =
+    1 + ceil((n - window) / stride) for n > window.
+
+    Everything is in-row: split, a `sequence` of chunk starts, one
+    explode, `slice`, `md5(array_join(...))`. No shuffle, no Python.
+    Emits a hash per chunk, not the chunk text, so downstream dedup moves
+    fixed-size keys.
+    """
+    if stride <= 0 or window <= 0:
+        raise ValueError("window and stride must be positive")
+    toks = F.split(F.col("text"), " ")
+    n = F.size(toks)
+    n_chunks = F.when(n <= window, F.lit(1)).otherwise(
+        F.ceil((n - window) / F.lit(float(stride))).cast("long") + 1
+    )
+    out = docs.select(
+        "doc_id",
+        toks.alias("__toks"),
+        F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)).alias(
+            "chunk_idx"
+        ),
+    )
+    chunk = F.expr(f"slice(__toks, chunk_idx * {stride} + 1, {window})")
+    return out.select(
+        "doc_id",
+        "chunk_idx",
+        (F.col("chunk_idx") * stride).cast("long").alias("start_tok"),
+        F.size(chunk).cast("long").alias("n_tokens"),
+        F.md5(F.array_join(chunk, " ")).alias("chunk_hash"),
+    )
+
+
+def sql_doc_chunks(window: int = 64, stride: int = 48) -> str:
+    """DuckDB oracle for doc_chunks (same chunk math, list slicing)."""
+    return f"""
+    WITH t AS (
+      SELECT doc_id, string_split(text, ' ') AS toks,
+             len(string_split(text, ' ')) AS n
+      FROM documents),
+    m AS (
+      SELECT doc_id, toks,
+             CASE WHEN n <= {window} THEN 1
+                  ELSE cast(ceil((n - {window}) / {stride}.0) AS BIGINT) + 1
+             END AS n_chunks
+      FROM t),
+    e AS (
+      SELECT doc_id, toks,
+             unnest(generate_series(0, n_chunks - 1)) AS chunk_idx
+      FROM m)
+    SELECT doc_id, chunk_idx,
+           (chunk_idx * {stride})::BIGINT AS start_tok,
+           len(toks[chunk_idx * {stride} + 1 : chunk_idx * {stride} + {window}])::BIGINT
+             AS n_tokens,
+           md5(array_to_string(
+             toks[chunk_idx * {stride} + 1 : chunk_idx * {stride} + {window}], ' '))
+             AS chunk_hash
+    FROM e
+    """
+
+
 def paragraph_dedup_stats(
     docs: DataFrame, para_words: int = 12, text_col: str = "text"
 ) -> DataFrame:
@@ -1759,7 +1825,7 @@ def paragraph_dedup_stats(
     from the rest.
 
     The fixture corpus has no newlines, so a "paragraph" here is the
-    non-overlapping ``para_words``-token chunk (retrieval.doc_chunks
+    non-overlapping ``para_words``-token chunk (``doc_chunks``
     with stride == window — one in-row explode, the tail remainder is
     the last paragraph); on real corpora pass the text pre-split on
     '\\n\\n' through the same hash->df->join shape. Output (all exact
@@ -1773,8 +1839,6 @@ def paragraph_dedup_stats(
     is an equi-join on chunk_hash followed by a doc_id-keyed groupBy.
     Nothing is O(n^2) and no window function is involved.
     """
-    from borsa_spark.functions.retrieval import doc_chunks
-
     chunks = doc_chunks(docs, window=para_words, stride=para_words)
     df_counts = chunks.groupBy("chunk_hash").agg(
         F.countDistinct("doc_id").alias("__df")
@@ -1797,8 +1861,6 @@ def paragraph_dedup_stats(
 def sql_paragraph_dedup_stats(para_words: int = 12) -> str:
     """DuckDB oracle for paragraph_dedup_stats (same chunking math via
     sql_doc_chunks, same distinct-doc df rule)."""
-    from borsa_spark.functions.retrieval import sql_doc_chunks
-
     return f"""
     WITH chunks AS ({sql_doc_chunks(para_words, para_words)}),
     dfc AS (

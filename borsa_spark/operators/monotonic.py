@@ -24,7 +24,6 @@ def monotonic_gate(
     df: DataFrame,
     key: str = "symbol",
     order_col: str = "seq",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Rows that pass the drop-older-keep-equal gate, in original order."""
     w = (
@@ -33,7 +32,7 @@ def monotonic_gate(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
-        df.withColumn("__hwm", F.max(ts_col).over(w))
-        .filter(F.col("__hwm").isNull() | (F.col(ts_col) >= F.col("__hwm")))
+        df.withColumn("__hwm", F.max("ts").over(w))
+        .filter(F.col("__hwm").isNull() | (F.col("ts") >= F.col("__hwm")))
         .drop("__hwm")
     )

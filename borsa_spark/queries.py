@@ -53,390 +53,6 @@ def query(name: str, oracle: str | None = None):
 
 
 # ---------------------------------------------------------------------------
-# Relational core (scans S1-S8, filters P-family, joins, aggregations)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "rel_q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)                                        AS sum_qty,
-           round(sum(l_extendedprice), 2)                                   AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
-           round(avg(l_quantity), 4)                                        AS avg_qty,
-           round(avg(l_extendedprice), 4)                                   AS avg_price,
-           round(avg(l_discount), 4)                                        AS avg_disc,
-           count(*)::BIGINT                                                 AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def rel_q1(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q1 shape: scan + filter pushdown + 8-agg groupBy (SURVEY §2.4)."""
-    li = load_table(spark, sf, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-@query(
-    "rel_q3_top_orders",
-    """
-    SELECT o.o_orderkey,
-           epoch(o.o_orderdate)::BIGINT AS orderdate_ts,
-           o.o_orderpriority,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-      AND l.l_shipdate  > TIMESTAMP '1998-03-15 00:00:00'
-    GROUP BY 1, 2, 3
-    ORDER BY revenue DESC, o.o_orderkey ASC
-    LIMIT 10
-    """,
-)
-def rel_q3(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join + top-k. The customer dim is broadcast —
-    at 100 TB the fact-side scan never shuffles for this join."""
-    c = load_table(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
-    )
-    li = load_table(spark, sf, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
-    )
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy(
-            "o_orderkey",
-            F.unix_timestamp("o_orderdate").alias("orderdate_ts"),
-            "o_orderpriority",
-        )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-@query(
-    "rel_q5_region_revenue",
-    """
-    SELECT n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM region r
-    JOIN nation n   ON n.n_regionkey = r.r_regionkey
-    JOIN customer c ON c.c_nationkey = n.n_nationkey
-    JOIN orders o   ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY n.n_name
-    """,
-)
-def rel_q5(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way star join; all dims broadcast, one shuffle for
-    the final groupBy."""
-    r = load_table(spark, sf, "region").filter(F.col("r_name") == "ASIA")
-    n = load_table(spark, sf, "nation")
-    c = load_table(spark, sf, "customer")
-    s = load_table(spark, sf, "supplier")
-    o = load_table(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf, "lineitem")
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (s.s_nationkey == c.c_nationkey),
-        )
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-    )
-
-
-@query(
-    "rel_q6_revenue_filter",
-    """
-    SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-           count(*)::BIGINT AS n_rows
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-)
-def rel_q6(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter + global agg; every predicate reaches the
-    parquet scan (PushedFilters)."""
-    li = load_table(spark, sf, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        ).agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-@query(
-    "rel_q4_order_priority",
-    """
-    SELECT o_orderpriority, count(*)::BIGINT AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_discount > 0.05)
-    GROUP BY o_orderpriority
-    """,
-)
-def rel_q4(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS = left-semi join; the orders side is filtered
-    before the join so the semi-join probe is small."""
-    o = load_table(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf, "lineitem").filter(F.col("l_discount") > 0.05)
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-@query(
-    "rel_q10_returned_revenue",
-    """
-    SELECT c.c_custkey, c.c_name, n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-07-01 00:00:00'
-      AND l.l_returnflag = 'R'
-    GROUP BY 1, 2, 3
-    ORDER BY revenue DESC, c.c_custkey ASC
-    LIMIT 20
-    """,
-)
-def rel_q10(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q10 shape: who returned the most — fact-side filters + 3 dims
-    broadcast + top-k."""
-    c = load_table(spark, sf, "customer")
-    n = load_table(spark, sf, "nation")
-    o = load_table(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    li = load_table(spark, sf, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-@query(
-    "rel_q12_shipmode_priority",
-    """
-    SELECT l_linestatus,
-           sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-           sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END)::BIGINT AS low_line_count
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY l_linestatus
-    """,
-)
-def rel_q12(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q12 shape: conditional-count pivot over a join (CASE inside
-    sum — the classic map-side-computable pivot)."""
-    o = load_table(spark, sf, "orders")
-    li = load_table(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@query(
-    "rel_q14_promo_revenue",
-    """
-    SELECT round(100.0 * sum(CASE WHEN p.p_type LIKE 'PROMO%'
-                                  THEN l.l_extendedprice * (1 - l.l_discount)
-                                  ELSE 0 END)
-                 / sum(l.l_extendedprice * (1 - l.l_discount)), 4)
-             AS promo_revenue_pct,
-           count(*)::BIGINT AS n_rows
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
-      AND l.l_shipdate <  TIMESTAMP '1997-09-01 00:00:00'
-    """,
-)
-def rel_q14(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q14 shape: conditional revenue share over a part-dimension
-    broadcast join (covers the last driver table, `part`)."""
-    p = load_table(spark, sf, "part")
-    li = load_table(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-06-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-09-01").cast("timestamp"))
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0.0))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(100.0 * F.sum(promo) / F.sum(rev), 4).alias(
-                "promo_revenue_pct"
-            ),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-@query(
-    "rel_q18_large_orders",
-    """
-    WITH big AS (
-      SELECT l_orderkey FROM lineitem
-      GROUP BY l_orderkey HAVING sum(l_quantity) > 300)
-    SELECT c.c_name, c.c_custkey, o.o_orderkey,
-           epoch(o.o_orderdate)::BIGINT AS orderdate_ts,
-           o.o_totalprice,
-           round(sum(l.l_quantity), 2) AS total_qty
-    FROM customer c
-    JOIN orders o   ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE o.o_orderkey IN (SELECT l_orderkey FROM big)
-    GROUP BY 1, 2, 3, 4, 5
-    ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
-    LIMIT 100
-    """,
-)
-def rel_q18(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q18 shape: large-volume customers — a HAVING-filtered
-    self-semi-join on the fact table. The `big` order-key set is a
-    left-semi join (key set is small after the HAVING filter, broadcast
-    under AQE); the quantity re-aggregation then touches only qualifying
-    orders. Deterministic top-100: (o_totalprice desc, o_orderkey asc)."""
-    li = load_table(spark, sf, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("__q"))
-        .filter(F.col("__q") > 300)
-        .select("l_orderkey")
-    )
-    o = load_table(spark, sf, "orders")
-    c = load_table(spark, sf, "customer")
-    return (
-        li.join(big, "l_orderkey", "left_semi")
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.unix_timestamp("o_orderdate").alias("orderdate_ts"),
-            "o_totalprice",
-        )
-        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(100)
-    )
-
-
-@query(
-    "rel_q13_customer_distribution",
-    """
-    SELECT c_count, count(*)::BIGINT AS custdist FROM (
-      SELECT c.c_custkey, count(o.o_orderkey)::BIGINT AS c_count
-      FROM customer c LEFT JOIN orders o
-        ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-      GROUP BY c.c_custkey) cc
-    GROUP BY c_count
-    """,
-)
-def rel_q13(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q13 shape: outer join with a join-condition filter + double
-    aggregation. The non-equi predicate lives in the join condition (NOT the
-    WHERE), preserving customers with zero qualifying orders."""
-    c = load_table(spark, sf, "customer")
-    o = load_table(spark, sf, "orders")
-    per_cust = (
-        c.join(
-            o,
-            (c.c_custkey == o.o_custkey)
-            & (o.o_orderpriority != "1-URGENT"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
-
-
-# ---------------------------------------------------------------------------
 # Domain operators over the events stream table
 # ---------------------------------------------------------------------------
 
@@ -1016,9 +632,9 @@ def p7_monotonic_gate(spark, sf):
     ev = load_table(spark, sf, "events").withColumn(
         "arrival", (F.col("event_id") * 2654435761) % 4294967296
     )
-    return monotonic_gate(
-        ev, key="user_id", order_col="arrival", ts_col="ts"
-    ).select("event_id")
+    return monotonic_gate(ev, key="user_id", order_col="arrival").select(
+        "event_id"
+    )
 
 
 @query(
@@ -1405,7 +1021,6 @@ def p4_exchange_enforcement(spark, sf):
 
 from borsa_spark.functions import dedup as _dd  # noqa: E402
 from borsa_spark.functions import packing as _pk  # noqa: E402
-from borsa_spark.functions import similarity as _sim  # noqa: E402
 from borsa_spark.functions import text as _tx  # noqa: E402
 
 
@@ -2018,37 +1633,6 @@ def f24_corpus_prep_e2e(spark, sf):
 
 
 @query(
-    "f25_embedding_norms",
-    """
-    SELECT vec_id, label,
-           round(sqrt(list_sum(list_transform(embedding,
-                 x -> x::DOUBLE * x::DOUBLE))), 4) AS l2,
-           round(list_sum(list_transform(embedding, x -> x::DOUBLE))
-                 / len(embedding), 4) AS mean_comp
-    FROM embeddings
-    """,
-)
-def f25_embedding_norms(spark, sf):
-    """Embedding hygiene stats: per-vector L2 norm + component mean — the
-    pre-normalization audit a similarity pipeline runs before indexing
-    (catching zero/degenerate vectors). Sequential array folds, so the
-    float math is order-identical cross-engine."""
-    emb = load_table(spark, sf, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    l2 = F.sqrt(
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    mean = F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x) / F.size(
-        "embedding"
-    )
-    return emb.select(
-        "vec_id", "label",
-        F.round(l2, 4).alias("l2"),
-        F.round(mean, 4).alias("mean_comp"),
-    )
-
-
-@query(
     "u3_set_difference",
     """
     SELECT user_id, floor(value)::BIGINT AS value_bin FROM events
@@ -2568,241 +2152,6 @@ def j2_info_join(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Training-data pipeline: similarity search (functions.similarity)
-# ---------------------------------------------------------------------------
-
-_KM_DIST = (
-    "round(list_sum(list_transform(range(1, len(e.v) + 1), "
-    "i -> (e.v[i] - c.cemb[i]) * (e.v[i] - c.cemb[i]))), 4)"
-)
-
-
-def _kmeans_round_sql(src_cents: str, n: int) -> str:
-    """One Lloyd round: assign against ``src_cents`` -> recomputed c{n}."""
-    return f"""
-    d{n} AS (
-      SELECT e.vec_id, c.cid, {_KM_DIST} AS d
-      FROM e CROSS JOIN {src_cents} c),
-    a{n} AS (
-      SELECT vec_id, cid FROM (
-        SELECT vec_id, cid, row_number() OVER (
-          PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-        FROM d{n}) t WHERE rn = 1),
-    m{n} AS (
-      SELECT a{n}.cid, t.pos, round(avg(e.v[t.pos]), 6) AS cval
-      FROM a{n} JOIN e USING (vec_id),
-           unnest(range(1, len(e.v) + 1)) AS t(pos)
-      GROUP BY 1, 2),
-    c{n} AS (SELECT cid, list(cval ORDER BY pos) AS cemb FROM m{n} GROUP BY cid)
-    """
-
-
-_KMEANS_SQL = f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    c0 AS (SELECT vec_id AS cid, v AS cemb FROM e WHERE vec_id < 8),
-    {_kmeans_round_sql('c0', 1)},
-    {_kmeans_round_sql('c1', 2)},
-    d3 AS (
-      SELECT e.vec_id, c.cid, {_KM_DIST} AS d
-      FROM e CROSS JOIN c2 c)
-    SELECT vec_id, cid AS cluster FROM (
-      SELECT vec_id, cid, row_number() OVER (
-        PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-      FROM d3) t WHERE rn = 1
-"""
-
-
-@query("f20_kmeans_clusters", _KMEANS_SQL)
-def f20_kmeans_clusters(spark, sf):
-    """Lloyd's k-means (k=8, 2 rounds, deterministic lowest-id seeds) as a
-    DataFrame program, final assignment hash-matched against the identical
-    rounded recurrence unrolled in SQL. Centroid components snap to 6dp and
-    distances to 4dp each round, so both engines walk the same fixpoint
-    despite differing float summation orders. The trained centroids drop
-    into ivf_topk in place of the seed centroids (same (cid, cemb)
-    contract)."""
-    emb = load_table(spark, sf, "embeddings")
-    cents = _sim.kmeans_centroids(emb, k=8, iters=2)
-    out = _sim.kmeans_assign(emb, cents)
-    return out.select(
-        "vec_id", F.col("cluster").cast("long").alias("cluster")
-    )
-
-
-@query(
-    "f10_cosine_topk",
-    """
-    WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
-               FROM embeddings WHERE vec_id < 10),
-    c AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings),
-    sims AS (
-      SELECT q_id, c_id,
-             round(list_cosine_similarity(q_emb::DOUBLE[], c_emb::DOUBLE[]), 4)
-               AS cosine_sim
-      FROM q, c WHERE q_id != c_id)
-    SELECT q_id, c_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY cosine_sim DESC, c_id ASC) AS rank
-      FROM sims) t
-    WHERE rank <= 5
-    """,
-)
-def f10_cosine_topk(spark, sf):
-    """Brute-force cosine top-5 for the first 10 vectors (ANN baseline)."""
-    emb = load_table(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-    )
-    out = _sim.brute_force_topk(q, c, k=5)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-_PLANES = _sim._lcg_planes(8, 64)
-
-
-_LSH_CAP = 64
-
-
-@query(
-    "f11_lsh_ann_topk",
-    f"""
-    WITH b0 AS (
-      SELECT vec_id, embedding,
-             {_sim.sql_hyperplane_bucket('embedding', _PLANES)} AS bucket
-      FROM embeddings),
-    bc AS (
-      SELECT bucket, CAST(CEIL(count(*) / {_LSH_CAP}.0) AS BIGINT) AS n_sub
-      FROM b0 GROUP BY bucket),
-    b AS (
-      SELECT b0.vec_id, b0.embedding, b0.bucket, b0.vec_id % bc.n_sub AS sub
-      FROM b0 JOIN bc USING (bucket)),
-    sims AS (
-      SELECT a.vec_id AS q_id, c.vec_id AS c_id,
-             round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                          c.embedding::DOUBLE[]), 4) AS cosine_sim
-      FROM b a JOIN b c ON a.bucket = c.bucket AND a.sub = c.sub
-                       AND a.vec_id != c.vec_id)
-    SELECT q_id, c_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY cosine_sim DESC, c_id ASC) AS rank
-      FROM sims) t
-    WHERE rank <= 5
-    """,
-)
-def f11_lsh_ann_topk(spark, sf):
-    """LSH-bucketed ANN top-5: 8 fixed hyperplanes -> 256 buckets ->
-    in-bucket brute force, hot buckets split at {cap} (the scale guard —
-    uncapped, one dense bucket is quadratic; see lsh_topk docstring)."""
-    emb = load_table(spark, sf, "embeddings")
-    out = _sim.lsh_topk(emb, _PLANES, k=5, max_bucket_size=_LSH_CAP)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@query(
-    "f15_ivf_topk",
-    """
-    WITH c AS (SELECT vec_id AS cid, embedding AS cemb
-               FROM embeddings WHERE vec_id < 8),
-    a AS (
-      SELECT e.vec_id, e.embedding, c.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_distance(e.embedding::DOUBLE[],
-                                      c.cemb::DOUBLE[]) ASC, c.cid ASC) AS rn
-      FROM embeddings e, c),
-    corpus AS (SELECT vec_id AS c_id, embedding AS c_emb, cid AS centroid_id
-               FROM a WHERE rn = 1),
-    q AS (SELECT vec_id AS q_id, embedding AS q_emb
-          FROM embeddings WHERE vec_id < 10),
-    qp AS (
-      SELECT q.q_id, q.q_emb, c.cid AS centroid_id,
-             row_number() OVER (
-               PARTITION BY q.q_id
-               ORDER BY list_distance(q.q_emb::DOUBLE[],
-                                      c.cemb::DOUBLE[]) ASC, c.cid ASC) AS rn
-      FROM q, c),
-    probed AS (SELECT q_id, q_emb, centroid_id FROM qp WHERE rn <= 2),
-    sims AS (
-      SELECT p.q_id, s.c_id,
-             round(list_cosine_similarity(p.q_emb::DOUBLE[],
-                                          s.c_emb::DOUBLE[]), 4) AS cosine_sim
-      FROM probed p JOIN corpus s ON p.centroid_id = s.centroid_id
-      WHERE p.q_id != s.c_id)
-    SELECT q_id, c_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY cosine_sim DESC, c_id ASC) AS rank
-      FROM sims) t
-    WHERE rank <= 5
-    """,
-)
-def f15_ivf_topk(spark, sf):
-    """IVF ANN top-5: coarse quantizer (8 deterministic seed centroids =
-    vec_id < 8), corpus assigned to nearest centroid as a scan-side
-    projection, queries probe their 2 nearest inverted lists. The
-    equi-join-on-centroid shape is the third scale path next to brute force
-    (f10) and hyperplane LSH (f11)."""
-    emb = load_table(spark, sf, "embeddings")
-    centroids = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = _sim.ivf_topk(emb, q, centroids, k=5, n_probe=2)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@query(
-    "f12_embedding_near_dup",
-    f"""
-    WITH b AS (
-      SELECT vec_id, embedding,
-             {_sim.sql_hyperplane_bucket('embedding', _PLANES)} AS bucket
-      FROM embeddings)
-    SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-           round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                        c.embedding::DOUBLE[]), 4) AS cosine_sim
-    FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-    WHERE list_cosine_similarity(a.embedding::DOUBLE[], c.embedding::DOUBLE[])
-          >= 0.40
-    """,
-)
-def f12_embedding_near_dup(spark, sf):
-    """Embedding-cosine near-dup pairs: LSH-bucketed candidate join +
-    cosine >= 0.40 (the near-duplicate detection path for embedding-heavy
-    training corpora; same equi-join scale shape as f11)."""
-    emb = load_table(spark, sf, "embeddings")
-    b = emb.select(
-        "vec_id", "embedding",
-        _sim.hyperplane_bucket(F.col("embedding"), _PLANES).alias("bucket"),
-    )
-    b = b.withColumn("__n", _sim.norm2(F.col("embedding")))
-    a = b.select(F.col("vec_id").alias("id_a"),
-                 F.col("embedding").alias("q_emb"),
-                 F.col("__n").alias("q_n"), "bucket")
-    c = b.select(F.col("vec_id").alias("id_b"),
-                 F.col("embedding").alias("c_emb"),
-                 F.col("__n").alias("c_n"), "bucket")
-    # norms folded once per vector pre-join (bit-identical, 3x less work)
-    cos = _sim.dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.col("q_n") * F.col("c_n")
-    )
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cos >= 0.40)
-        .select(
-            "id_a", "id_b", F.round(cos, 4).alias("cosine_sim"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # f28-f30: decontamination, per-source caps, n-gram novelty — the remaining
 # standard stages of a web-scale training-data pipeline
 # ---------------------------------------------------------------------------
@@ -3270,111 +2619,6 @@ def f36_leakage_safe_split(spark, sf):
         "doc_id",
         "component",
         _tx.split_assign(F.col("component"), salt="split36").alias("split"),
-    )
-
-
-@query(
-    "f37_quantized_cosine_topk",
-    """
-    WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-               FROM embeddings),
-    s AS (SELECT vec_id, v,
-                 list_aggregate(list_transform(v, x -> abs(x)), 'max') / 127.0
-                   AS scale
-          FROM e),
-    qv AS (SELECT vec_id,
-                  list_transform(v, x -> floor(x / scale + 0.5)::BIGINT) AS q
-           FROM s WHERE scale > 0),
-    base AS (SELECT vec_id, q,
-                    list_sum(list_transform(q, x -> x * x))::BIGINT AS qn
-             FROM qv),
-    qs AS (SELECT vec_id AS q_id, q AS qq, qn AS qqn
-           FROM base WHERE vec_id < 10 AND qn > 0),
-    sims AS (
-      SELECT q_id, b.vec_id AS c_id,
-             round(list_sum(list_transform(range(1, len(qq) + 1),
-                                           i -> qq[i] * b.q[i]))
-                   / (sqrt(qqn) * sqrt(b.qn)), 4) AS approx_cos
-      FROM qs, base b WHERE q_id != b.vec_id AND b.qn > 0)
-    SELECT q_id, c_id, approx_cos, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY approx_cos DESC, c_id ASC) AS rank
-      FROM sims) t
-    WHERE rank <= 5
-    """,
-)
-def f37_quantized_cosine_topk(spark, sf):
-    """Int8-quantized cosine top-k: per-vector symmetric quantization
-    (scale = max|x| / 127, q_i = floor(x/scale + 0.5)) and ranking by the
-    quantized cosine — the scales cancel, so the score is pure integer
-    dot / (sqrt of integer norms), bit-reproducible across engines.
-
-    Scale shape: THE bandwidth lever for ANN at 100 TB — int8 vectors
-    shuffle/broadcast at 1/4 the bytes of float32 (1/8 of double), which
-    is the difference between a broadcastable query set and a shuffled
-    one; candidate scoring is exact integer arithmetic (no float
-    accumulation-order hazard), so map-side combine and re-partitioning
-    never change results. The rank-on-rounded-score + id tie-break
-    pattern matches f10, making recall vs the full-precision baseline
-    directly measurable (same keys, same ranking rule).
-    """
-    emb = load_table(spark, sf, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = (
-        emb.select("vec_id", v.alias("v"))
-        .withColumn(
-            "scale",
-            F.aggregate(
-                F.col("v"), F.lit(0.0),
-                lambda acc, x: F.greatest(acc, F.abs(x)),
-            ) / F.lit(127.0),
-        )
-        .filter(F.col("scale") > 0)
-        .withColumn(
-            "q",
-            F.transform(
-                F.col("v"),
-                lambda x: F.floor(x / F.col("scale") + 0.5).cast("long"),
-            ),
-        )
-        .withColumn(
-            "qn",
-            F.aggregate(
-                F.col("q"), F.lit(0).cast("long"),
-                lambda acc, x: acc + x * x,
-            ),
-        )
-        .filter(F.col("qn") > 0)
-        .select("vec_id", "q", "qn")
-    )
-    qs = base.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("q").alias("qq"),
-        F.col("qn").alias("qqn"),
-    )
-    intdot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    sims = (
-        base.crossJoin(F.broadcast(qs))
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("c_id"),
-            F.round(
-                intdot / (F.sqrt(F.col("qqn")) * F.sqrt(F.col("qn"))), 4
-            ).alias("approx_cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("approx_cos").desc(), F.col("c_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("q_id", "c_id", "approx_cos", "rank")
     )
 
 
@@ -4058,57 +3302,26 @@ def f43_quality_gate(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Retrieval-side corpus ops (functions/retrieval.py) + PII scrub
+# Document chunking + PII scrub
 # ---------------------------------------------------------------------------
 
 
-def _register_retrieval():
-    from borsa_spark.functions import retrieval as _rt
-    from borsa_spark.functions import text as _tx
-
-    @query("f44_doc_chunks", _rt.sql_doc_chunks(64, 48))
-    def f44_doc_chunks(spark, sf):
-        """Sliding-window chunking (64-token windows, stride 48) — the op
-        that turns documents into training/RAG-sized pieces. In-row
-        arithmetic + one explode, zero shuffles; emits chunk HASHES so
-        downstream dedup moves fixed-size keys, not text."""
-        return _rt.doc_chunks(load_table(spark, sf, "documents"), 64, 48)
-
-    @query("f45_bm25_topk", _rt.sql_bm25_topk())
-    def f45_bm25_topk(spark, sf):
-        """BM25 top-10 per panel query. Corpus stats and the query panel
-        are broadcast; the only shuffle is the (query, doc) tf groupBy.
-        Deterministic rank: (score desc, doc_id asc)."""
-        return _rt.bm25_topk(load_table(spark, sf, "documents"))
-
-    @query("f46_inverted_index", _rt.sql_inverted_index())
-    def f46_inverted_index(spark, sf):
-        """Inverted index with capped postings (true df/cf + first-20 doc
-        ids): explode + two term-keyed groupBys, both map-side
-        combinable. The cap is the scale guard — a stop word's full
-        postings list would be one unbounded hot row."""
-        return _rt.inverted_index(load_table(spark, sf, "documents"))
-
-    @query("f55_boilerplate_fraction", _rt.sql_boilerplate_fraction(64, 48, 2))
-    def f55_boilerplate_fraction(spark, sf):
-        """Chunk-level boilerplate share per document (the RefinedWeb/C4
-        line-dedup stage): a chunk hash appearing in >= 2 distinct docs
-        is template text; the per-doc fraction drives drop-or-strip.
-        Three hash-keyed shuffles, text never moves after the chunker."""
-        return _rt.boilerplate_fraction(
-            load_table(spark, sf, "documents"), 64, 48, 2
-        )
-
-    @query("f47_pii_scrub", _tx.sql_pii_scrub())
-    def f47_pii_scrub(spark, sf):
-        """PII detect + redact accounting (email/SSN/phone/IPv4), all
-        JVM-side regex at scan speed. This fixture corpus is clean (all
-        zeros, redacted_hash == md5(text)) — dirty-text behavior is
-        pinned by tests/test_retrieval_pii.py on constructed rows."""
-        return _tx.pii_scrub(load_table(spark, sf, "documents"))
+@query("f44_doc_chunks", _dd.sql_doc_chunks(64, 48))
+def f44_doc_chunks(spark, sf):
+    """Sliding-window chunking (64-token windows, stride 48) — the op
+    that turns documents into training-sized pieces. In-row arithmetic +
+    one explode, zero shuffles; emits chunk HASHES so downstream dedup
+    moves fixed-size keys, not text."""
+    return _dd.doc_chunks(load_table(spark, sf, "documents"), 64, 48)
 
 
-_register_retrieval()
+@query("f47_pii_scrub", _tx.sql_pii_scrub())
+def f47_pii_scrub(spark, sf):
+    """PII detect + redact accounting (email/SSN/phone/IPv4), all
+    JVM-side regex at scan speed. This fixture corpus is clean (all
+    zeros, redacted_hash == md5(text)) — dirty-text behavior is
+    pinned by tests/test_retrieval_pii.py on constructed rows."""
+    return _tx.pii_scrub(load_table(spark, sf, "documents"))
 
 
 def _register_ingest():
@@ -4214,61 +3427,8 @@ def f50_curriculum_deciles(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Round 4, continued: semantic dedup, admission filters, training order,
-# and two more TPC-H shapes (correlated scalar subquery,
-# anti join + global scalar) to round out engine generality.
+# Round 4, continued: admission filters and training order
 # ---------------------------------------------------------------------------
-
-_SEMDEDUP_TAU = 0.40
-
-_SEMDEDUP_SQL = f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    c0 AS (SELECT vec_id AS cid, v AS cemb FROM e WHERE vec_id < 8),
-    {_kmeans_round_sql('c0', 1)},
-    {_kmeans_round_sql('c1', 2)},
-    d3 AS (
-      SELECT e.vec_id, c.cid, {_KM_DIST} AS d
-      FROM e CROSS JOIN c2 c),
-    asg AS (
-      SELECT vec_id, cid AS cluster FROM (
-        SELECT vec_id, cid, row_number() OVER (
-          PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-        FROM d3) t WHERE rn = 1),
-    m AS (
-      SELECT a.vec_id, a.cluster, e.v FROM asg a JOIN e USING (vec_id))
-    SELECT a.vec_id, a.cluster,
-           count(*)::BIGINT AS n_dup_neighbors,
-           round(max(list_cosine_similarity(a.v, b.v)), 4) AS max_cos
-    FROM m a JOIN m b
-      ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-    WHERE list_cosine_similarity(a.v, b.v) >= {_SEMDEDUP_TAU}
-    GROUP BY a.vec_id, a.cluster
-"""
-
-
-@query("f52_semdedup", _SEMDEDUP_SQL)
-def f52_semdedup(spark, sf):
-    """SemDeDup (Abbas et al. 2023): cluster the embedding space with
-    k-means, then search for near-duplicates ONLY within each cluster —
-    the cluster assignment replaces an all-pairs cosine join with k
-    intra-cluster joins. A vector is a semantic duplicate if some
-    lower-id cluster-mate sits at cosine >= tau; the lower-id copy is the
-    deterministic survivor (SemDeDup keeps one representative per group).
-    Emits the drop list with per-vector dup-neighbor counts.
-
-    Scale shape: kmeans_centroids is broadcast-assign + a k*dim recompute
-    shuffle per round (functions/similarity.py:373); the intra-cluster
-    self-join is an equi-join on the cluster id, so candidate volume is
-    sum(|cluster|^2) not n^2 — with balanced clusters that is n^2/k, and
-    at real scale k grows with n (sqrt(n) clusters keeps per-cluster work
-    flat). The oracle unrolls the identical 6dp/4dp-snapped Lloyd
-    recurrence (f20's contract) plus the within-cluster cosine join.
-    """
-    emb = load_table(spark, sf, "embeddings")
-    return _sim.semdedup(emb, tau=_SEMDEDUP_TAU, k=8, iters=2)
-
 
 _BLOCKLIST = ("dup", "slow", "crash")
 _BLOCK_DENSITY = 0.10
@@ -4385,277 +3545,6 @@ def f54_training_order(spark, sf):
     )
 
 
-@query(
-    "rel_q17_small_qty_revenue",
-    """
-    WITH pa AS (
-      SELECT l_partkey, 0.5 * avg(l_quantity) AS half_avg_qty
-      FROM lineitem GROUP BY l_partkey)
-    SELECT round(sum(l.l_extendedprice) / 7.0, 2) AS avg_yearly,
-           count(*)::BIGINT AS n_lines
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    JOIN pa ON pa.l_partkey = l.l_partkey
-    WHERE p.p_brand = 'Brand#1' AND l.l_quantity < pa.half_avg_qty
-    """,
-)
-def rel_q17_small_qty_revenue(spark, sf):
-    """TPC-H Q17 shape (small-quantity-order revenue): a correlated
-    scalar subquery — avg quantity per part — decorrelated into a
-    per-part aggregate joined back to the fact table. That decorrelation
-    is THE standard optimizer rewrite for this query class; expressing it
-    directly keeps the plan two equi-joins on l_partkey (both sides
-    shuffle-partitioned the same way, and the part-brand filter prunes
-    before the join). Single-row output: sum snapped to 2dp with a line
-    count so the hash pins cardinality too."""
-    li = load_table(spark, sf, "lineitem")
-    part = load_table(spark, sf, "part")
-    pa = li.groupBy("l_partkey").agg(
-        (0.5 * F.avg("l_quantity")).alias("half_avg_qty")
-    )
-    return (
-        li.join(
-            F.broadcast(part.filter(F.col("p_brand") == "Brand#1")),
-            li.l_partkey == part.p_partkey,
-        )
-        .join(pa, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("half_avg_qty"))
-        .agg(
-            F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"),
-            F.count("*").alias("n_lines"),
-        )
-    )
-
-
-@query(
-    "rel_q22_dormant_balance",
-    """
-    WITH pos AS (
-      SELECT avg(c_acctbal) AS avg_bal FROM customer WHERE c_acctbal > 0)
-    SELECT c.c_nationkey::BIGINT AS nationkey,
-           count(*)::BIGINT AS numcust,
-           round(sum(c.c_acctbal), 2) AS totacctbal
-    FROM customer c, pos
-    WHERE c.c_acctbal > pos.avg_bal
-      AND NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-    GROUP BY c.c_nationkey
-    """,
-)
-def rel_q22_dormant_balance(spark, sf):
-    """TPC-H Q22 shape (global sales opportunity): rich customers with no
-    LARGE order — a global scalar subquery (avg positive balance,
-    computed once and broadcast as a 1-row cross join) plus an ANTI join
-    against big-ticket orders, grouped by nation. The anti join is the
-    load-bearing operator: at scale it runs as a shuffled left-anti on
-    o_custkey with BOTH sides thinned before the join (customers by the
-    balance predicate, the probe by a pushed-down o_totalprice filter),
-    and Spark's AQE can flip it to broadcast when the filtered probe is
-    small. The o_totalprice > 400000 qualifier (vs the classic "never
-    ordered") keeps the gate non-vacuous at every test sf — this
-    generator gives every customer at least one order, so the pure
-    NOT EXISTS form returns 0 rows below sf0.1 and the correctness gate
-    would pass without exercising the anti join at all."""
-    cust = load_table(spark, sf, "customer")
-    orders = load_table(spark, sf, "orders")
-    avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        F.avg("c_acctbal").alias("avg_bal")
-    )
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(
-            orders.filter(F.col("o_totalprice") > 400000).select(
-                F.col("o_custkey").alias("c_custkey")
-            ),
-            "c_custkey",
-            "left_anti",
-        )
-        .groupBy(F.col("c_nationkey").cast("long").alias("nationkey"))
-        .agg(
-            F.count("*").alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-    )
-
-
-@query(
-    "rel_q19_disjunctive_revenue",
-    """
-    SELECT round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue,
-           count(*)::BIGINT AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5
-           AND l.l_quantity BETWEEN 1 AND 11)
-       OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 10
-           AND l.l_quantity BETWEEN 10 AND 20)
-       OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 20 AND 30)
-    """,
-)
-def rel_q19_disjunctive_revenue(spark, sf):
-    """TPC-H Q19 shape (discounted revenue under a 3-way disjunction of
-    conjunct groups spanning BOTH join sides). The optimizer test is
-    predicate decomposition: Catalyst derives the single-side implications
-    (p_brand IN (...), quantity within the union range) and pushes them
-    below the join as scan filters, keeping only the cross-side residual
-    on the join output — the classic OR-of-ANDs pushdown. The part side
-    (brand+size filtered) broadcasts."""
-    li = load_table(spark, sf, "lineitem")
-    part = load_table(spark, sf, "part")
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    g1 = (
-        (F.col("p_brand") == "Brand#1")
-        & F.col("p_size").between(1, 5)
-        & F.col("l_quantity").between(1, 11)
-    )
-    g2 = (
-        (F.col("p_brand") == "Brand#2")
-        & F.col("p_size").between(1, 10)
-        & F.col("l_quantity").between(10, 20)
-    )
-    g3 = (
-        (F.col("p_brand") == "Brand#3")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(20, 30)
-    )
-    return j.filter(g1 | g2 | g3).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-        ).alias("revenue"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-@query(
-    "rel_q21_returned_without_discount",
-    """
-    SELECT o.o_orderpriority, count(*)::BIGINT AS n_orders
-    FROM orders o
-    WHERE EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-      AND NOT EXISTS (
-        SELECT 1 FROM lineitem l2
-        WHERE l2.l_orderkey = o.o_orderkey AND l2.l_discount > 0.05)
-    GROUP BY o.o_orderpriority
-    """,
-)
-def rel_q21_returned_without_discount(spark, sf):
-    """TPC-H Q21 shape (the reference query's supplier-blame pattern,
-    re-keyed to this schema's columns): orders that HAVE a returned line
-    (left-semi) and have NO discounted line (left-anti) — the same fact
-    table probed twice with opposite existential polarity, each probe
-    pre-filtered before its join so the semi/anti build sides carry only
-    qualifying keys. Both joins key on o_orderkey, so the order stream
-    shuffles once and AQE can broadcast the thinned probes."""
-    orders = load_table(spark, sf, "orders")
-    li = load_table(spark, sf, "lineitem")
-    returned = li.filter(F.col("l_returnflag") == "R").select(
-        F.col("l_orderkey").alias("o_orderkey")
-    )
-    discounted = li.filter(F.col("l_discount") > 0.05).select(
-        F.col("l_orderkey").alias("o_orderkey")
-    )
-    return (
-        orders.join(returned, "o_orderkey", "left_semi")
-        .join(discounted, "o_orderkey", "left_anti")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@query(
-    "rel_q15_top_supplier",
-    """
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        AND l_shipdate <  TIMESTAMP '1996-04-01'
-      GROUP BY l_suppkey)
-    SELECT s.s_suppkey, s.s_name, r.total_revenue
-    FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
-    WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
-    """,
-)
-def rel_q15_top_supplier(spark, sf):
-    """TPC-H Q15 shape (top supplier): a revenue view consumed TWICE —
-    once as the join input, once reduced to a scalar max the filter
-    compares against. The optimizer question is view reuse — and Spark
-    does NOT reuse it by itself: the round-9 plan audit showed the
-    unpersisted form scanning lineitem twice (zero ReusedExchange), so
-    the per-supplier view persists explicitly before its two consumers
-    (the f8 multi-consumer rule; it is supplier-count-bounded and
-    2 columns wide). The 1-row max broadcasts back as a cross join and
-    the supplier dim broadcasts onto the winner(s). Revenue is snapped
-    to 2dp BEFORE the max comparison in both engines so the equality
-    predicate is exact."""
-    li = load_table(spark, sf, "lineitem")
-    sup = load_table(spark, sf, "supplier")
-    revenue = (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1996-04-01")
-        )
-        .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("total_revenue")
-        )
-        .persist()
-    )
-    top = revenue.agg(F.max("total_revenue").alias("__top"))
-    return (
-        revenue.crossJoin(F.broadcast(top))
-        .filter(F.col("total_revenue") == F.col("__top"))
-        .join(
-            F.broadcast(sup),
-            F.col("supplier_no") == F.col("s_suppkey"),
-        )
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-@query(
-    "rel_q20_part_promotion_suppliers",
-    """
-    SELECT s.s_suppkey, s.s_name
-    FROM supplier s
-    WHERE s.s_suppkey IN (
-      SELECT l.l_suppkey FROM lineitem l
-      WHERE l.l_partkey IN (
-        SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-        AND l.l_quantity > 30)
-    """,
-)
-def rel_q20_part_promotion_suppliers(spark, sf):
-    """TPC-H Q20 shape (suppliers of promoted parts): a CHAIN of
-    semi-joins — parts matching a name prefix, lineitems of those parts
-    over a quantity floor, suppliers of those lineitems. Each level only
-    asks "exists", so every join is left-semi with the probe side
-    pre-filtered; the part filter is a prefix LIKE that pushes to the
-    scan as a StringStartsWith. Nothing materializes wider than the
-    surviving keys at any level."""
-    sup = load_table(spark, sf, "supplier")
-    li = load_table(spark, sf, "lineitem")
-    part = load_table(spark, sf, "part")
-    promoted = part.filter(F.col("p_name").startswith("red")).select(
-        F.col("p_partkey").alias("l_partkey")
-    )
-    qualifying = (
-        li.filter(F.col("l_quantity") > 30)
-        .join(promoted, "l_partkey", "left_semi")
-        .select(F.col("l_suppkey").alias("s_suppkey"))
-    )
-    return sup.join(qualifying, "s_suppkey", "left_semi").select(
-        "s_suppkey", "s_name"
-    )
-
-
 @query("c3_artifact_survivors", _F33_SQL)
 def c3_artifact_survivors(spark, sf):
     """The corpus-prep CHECKPOINT path, oracle-faced: build the
@@ -4679,331 +3568,6 @@ def c3_artifact_survivors(spark, sf):
         out = art.survivors(docs)
         out = spark.createDataFrame(out.collect(), out.schema)
     return out
-
-
-_C4_SQL = f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    c0 AS (SELECT vec_id AS cid, v AS cemb FROM e WHERE vec_id < 8),
-    {_kmeans_round_sql('c0', 1)},
-    {_kmeans_round_sql('c1', 2)},
-    asg AS (
-      SELECT vec_id, cid AS centroid_id FROM (
-        SELECT e.vec_id, c.cid, row_number() OVER (
-          PARTITION BY e.vec_id ORDER BY {_KM_DIST} ASC, c.cid ASC) AS rn
-        FROM e CROSS JOIN c2 c) t WHERE rn = 1),
-    corpus AS (
-      SELECT a.vec_id AS c_id, e.v AS c_emb, a.centroid_id
-      FROM asg a JOIN e USING (vec_id)),
-    q AS (SELECT vec_id AS q_id, v AS q_emb FROM e WHERE vec_id < 10),
-    qp AS (
-      SELECT q.q_id, q.q_emb, c.cid AS centroid_id,
-             row_number() OVER (
-               PARTITION BY q.q_id
-               ORDER BY round(list_sum(list_transform(
-                   range(1, len(q.q_emb) + 1),
-                   i -> (q.q_emb[i] - c.cemb[i]) * (q.q_emb[i] - c.cemb[i])
-                 )), 4) ASC, c.cid ASC) AS rn
-      FROM q CROSS JOIN c2 c),
-    probed AS (SELECT q_id, q_emb, centroid_id FROM qp WHERE rn <= 2),
-    sims AS (
-      SELECT p.q_id, s.c_id,
-             round(list_cosine_similarity(p.q_emb, s.c_emb), 4) AS cosine_sim
-      FROM probed p JOIN corpus s ON p.centroid_id = s.centroid_id
-      WHERE p.q_id != s.c_id)
-    SELECT q_id, c_id, cosine_sim, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY cosine_sim DESC, c_id ASC) AS rank
-      FROM sims) t
-    WHERE rank <= 5
-"""
-
-
-@query("c4_index_search", _C4_SQL)
-def c4_index_search(spark, sf):
-    """The persisted-IVF-index path, oracle-faced: train + assign + write
-    `VectorIndex` (partitioned inverted lists, pre-folded norms) in a
-    scratch workdir, reopen, and run the partition-pruned search. The
-    oracle unrolls the identical trained quantizer (f20's snapped Lloyd
-    recurrence), the rounded-argmin assignment, the 2-list probe, and the
-    cosine top-5 — so a hash match proves the whole persist/reload/prune
-    path returns exactly what the declarative IVF computation does."""
-    import tempfile
-
-    from borsa_spark.functions.vector_index import VectorIndex
-
-    emb = load_table(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    with tempfile.TemporaryDirectory() as work:
-        idx = VectorIndex(spark, work, k=8, iters=2)
-        idx.build(emb)
-        out = idx.search(q, k=5, n_probe=2)
-        out = out.withColumn("rank", F.col("rank").cast("long"))
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
-
-
-@query(
-    "rel_q2_min_cost_supplier",
-    """
-    WITH cost AS (
-      SELECT l_partkey, l_suppkey,
-             min(l_extendedprice / l_quantity) AS unit_cost
-      FROM lineitem WHERE l_quantity > 0
-      GROUP BY l_partkey, l_suppkey),
-    best AS (
-      SELECT l_partkey, min(unit_cost) AS best_cost
-      FROM cost GROUP BY l_partkey)
-    SELECT p.p_partkey, s.s_name, n.n_name, r.r_name,
-           c.unit_cost AS best_unit_cost
-    FROM cost c
-    JOIN best b ON b.l_partkey = c.l_partkey AND c.unit_cost = b.best_cost
-    JOIN part p ON p.p_partkey = c.l_partkey
-    JOIN supplier s ON s.s_suppkey = c.l_suppkey
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    JOIN region r ON r.r_regionkey = n.n_regionkey
-    WHERE p.p_size <= 10 AND r.r_name = 'EUROPE'
-    """,
-)
-def rel_q2_min_cost_supplier(spark, sf):
-    """TPC-H Q2 shape (minimum-cost supplier), re-keyed to this schema:
-    the correlated subquery "suppliers matching the per-part minimum
-    cost" decorrelates into a per-part min aggregate equality-joined back
-    to the per-(part, supplier) cost table — the same rewrite as Q17 but
-    the scalar feeds a JOIN PREDICATE, not a filter, so ties surface as
-    multiple rows (deterministic: all min-cost suppliers emitted). The
-    three dim joins (supplier -> nation -> region) broadcast. Unit cost
-    is deliberately UNROUNDED: the division is a single IEEE op
-    (bit-identical cross-engine), so min and the equality join are
-    exact — while a 4dp round hits decimal-half boundaries constantly
-    here because 2dp prices over small integer quantities produce exact
-    4dp halves (the sf0.1 sweep caught 111.10075 rounding 111.1007 in
-    Spark vs 111.1008 in DuckDB; Spark rounds the shortest decimal
-    string, DuckDB the binary value)."""
-    li = load_table(spark, sf, "lineitem")
-    part = load_table(spark, sf, "part")
-    sup = load_table(spark, sf, "supplier")
-    nat = load_table(spark, sf, "nation")
-    reg = load_table(spark, sf, "region")
-    cost = (
-        li.filter(F.col("l_quantity") > 0)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(
-            F.min(F.col("l_extendedprice") / F.col("l_quantity"))
-            .alias("unit_cost")
-        )
-    )
-    best = cost.groupBy("l_partkey").agg(F.min("unit_cost").alias("best_cost"))
-    dims = (
-        sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), F.col("n_regionkey") == reg.r_regionkey)
-        .filter(F.col("r_name") == "EUROPE")
-    )
-    return (
-        cost.join(best, "l_partkey")
-        .filter(F.col("unit_cost") == F.col("best_cost"))
-        .join(
-            F.broadcast(part.filter(F.col("p_size") <= 10)),
-            F.col("l_partkey") == part.p_partkey,
-        )
-        .join(F.broadcast(dims), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            "p_partkey",
-            "s_name",
-            "n_name",
-            "r_name",
-            F.col("unit_cost").alias("best_unit_cost"),
-        )
-    )
-
-
-@query(
-    "rel_q9_nation_year_profit",
-    """
-    SELECT n.n_name AS nation,
-           extract(year FROM o.o_orderdate)::BIGINT AS o_year,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS profit,
-           count(*)::BIGINT AS n_lines
-    FROM lineitem l
-    JOIN orders o   ON o.o_orderkey = l.l_orderkey
-    JOIN part p     ON p.p_partkey = l.l_partkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN nation n   ON n.n_nationkey = s.s_nationkey
-    WHERE p.p_name LIKE '%widget%'
-    GROUP BY n.n_name, o_year
-    """,
-)
-def rel_q9_nation_year_profit(spark, sf):
-    """TPC-H Q9 shape (product-line profit by nation and year): the
-    widest star in the suite — lineitem joined to orders, part, supplier,
-    and nation with a substring filter on the part name. Plan texture:
-    the part filter prunes before its broadcast (a contains-LIKE cannot
-    push to the scan as a native filter, but it runs in the same
-    codegen stage), every dim broadcasts, orders co-shuffles with
-    lineitem on the order key only if too big to broadcast (AQE
-    decides), and the aggregate combines map-side over (nation, year)."""
-    li = load_table(spark, sf, "lineitem")
-    orders = load_table(spark, sf, "orders")
-    part = load_table(spark, sf, "part")
-    sup = load_table(spark, sf, "supplier")
-    nat = load_table(spark, sf, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(
-            F.broadcast(part.filter(F.col("p_name").contains("widget"))),
-            li.l_partkey == part.p_partkey,
-        )
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").cast("long").alias("o_year"),
-        )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("profit"),
-            F.count("*").alias("n_lines"),
-        )
-    )
-
-
-@query(
-    "rel_q7_nation_volume",
-    """
-    SELECT n1.n_name AS cust_nation, n2.n_name AS supp_nation,
-           extract(year FROM o.o_orderdate)::BIGINT AS l_year,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM lineitem l
-    JOIN orders o   ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n1  ON n1.n_nationkey = c.c_nationkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN nation n2  ON n2.n_nationkey = s.s_nationkey
-    WHERE (n1.n_name = 'NATION_0' AND n2.n_name = 'NATION_1')
-       OR (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_0')
-    GROUP BY 1, 2, 3
-    """,
-)
-def rel_q7_nation_volume(spark, sf):
-    """TPC-H Q7 shape (volume shipping between two nations): the SAME
-    dimension table joined twice in different roles — nation as the
-    customer's country and again as the supplier's country — with a
-    cross-role disjunction that only resolves after both joins. Plan
-    texture: both nation aliases broadcast independently (Spark treats
-    the aliased relations as separate broadcast builds), the per-role
-    name filters CANNOT push below their joins (each disjunct constrains
-    the pair), but the derived implication n_name IN (A, B) can and
-    does prune both dimension scans."""
-    li = load_table(spark, sf, "lineitem")
-    orders = load_table(spark, sf, "orders")
-    cust = load_table(spark, sf, "customer")
-    sup = load_table(spark, sf, "supplier")
-    nat = load_table(spark, sf, "nation")
-    n1 = nat.select(
-        F.col("n_nationkey").alias("c_nationkey"),
-        F.col("n_name").alias("cust_nation"),
-    )
-    n2 = nat.select(
-        F.col("n_nationkey").alias("s_nationkey"),
-        F.col("n_name").alias("supp_nation"),
-    )
-    pair = (
-        (F.col("cust_nation") == "NATION_0")
-        & (F.col("supp_nation") == "NATION_1")
-    ) | (
-        (F.col("cust_nation") == "NATION_1")
-        & (F.col("supp_nation") == "NATION_0")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), "c_nationkey")
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(n2), "s_nationkey")
-        .filter(pair)
-        .groupBy(
-            "cust_nation",
-            "supp_nation",
-            F.year("o_orderdate").cast("long").alias("l_year"),
-        )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-    )
-
-
-@query(
-    "rel_q8_market_share",
-    """
-    WITH volume AS (
-      SELECT extract(year FROM o.o_orderdate)::BIGINT AS o_year,
-             l.l_extendedprice * (1 - l.l_discount) AS vol,
-             n.n_name AS supp_nation
-      FROM lineitem l
-      JOIN orders o   ON o.o_orderkey = l.l_orderkey
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN nation n   ON n.n_nationkey = s.s_nationkey
-      JOIN part p     ON p.p_partkey = l.l_partkey
-      WHERE p.p_type = (SELECT min(p_type) FROM part))
-    SELECT o_year,
-           round(sum(CASE WHEN supp_nation = 'NATION_0' THEN vol ELSE 0 END)
-                 / sum(vol), 6) AS mkt_share,
-           count(*)::BIGINT AS n_lines
-    FROM volume GROUP BY o_year
-    """,
-)
-def rel_q8_market_share(spark, sf):
-    """TPC-H Q8 shape (national market share): one nation's fraction of
-    the total volume in a product segment per year — a ratio of a
-    CONDITIONAL sum to the group total, both computed in the same
-    aggregation pass (no second scan, no self-join; the CASE folds the
-    numerator map-side alongside the denominator). The segment selector
-    is itself a scalar subquery (min p_type — deterministic), broadcast
-    into the part filter. Ratio snapped at 6dp: numerator and denominator
-    are both exact multiples of 0.0001, their quotient is not, and both
-    engines divide the identically-accumulated doubles."""
-    li = load_table(spark, sf, "lineitem")
-    orders = load_table(spark, sf, "orders")
-    sup = load_table(spark, sf, "supplier")
-    nat = load_table(spark, sf, "nation")
-    part = load_table(spark, sf, "part")
-    seg = part.agg(F.min("p_type").alias("__seg"))
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    v = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .join(
-            F.broadcast(
-                part.crossJoin(F.broadcast(seg)).filter(
-                    F.col("p_type") == F.col("__seg")
-                )
-            ),
-            li.l_partkey == part.p_partkey,
-        )
-        .select(
-            F.year("o_orderdate").cast("long").alias("o_year"),
-            vol.alias("vol"),
-            F.col("n_name").alias("supp_nation"),
-        )
-    )
-    return v.groupBy("o_year").agg(
-        F.round(
-            F.sum(
-                F.when(F.col("supp_nation") == "NATION_0", F.col("vol"))
-                .otherwise(0.0)
-            )
-            / F.sum("vol"),
-            6,
-        ).alias("mkt_share"),
-        F.count("*").alias("n_lines"),
-    )
 
 
 @query(
@@ -5338,132 +3902,6 @@ def f62_flac_features(spark, sf):
         F.col("duration_ms").cast("long").alias("duration_ms"),
         F.round("rms", 6).alias("rms"),
         "decoder",
-    )
-
-
-@query(
-    "rel_q11_important_stock",
-    """
-    WITH val AS (
-      SELECT l.l_partkey,
-             round(sum(l.l_extendedprice * (1 - l.l_discount)), 4)
-               AS stock_value
-      FROM lineitem l
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN nation n ON n.n_nationkey = s.s_nationkey
-      WHERE n.n_name = 'NATION_0'
-      GROUP BY l.l_partkey),
-    tot AS (SELECT avg(stock_value) AS t FROM val)
-    SELECT v.l_partkey AS p_partkey, v.stock_value
-    FROM val v CROSS JOIN tot
-    WHERE v.stock_value > tot.t * 2.0
-    """,
-)
-def rel_q11_important_stock(spark, sf):
-    """TPC-H Q11 shape (important stock identification), re-keyed to
-    this schema (no partsupp table — per-part supplier value rebuilt
-    from lineitem, the rel_q2 convention): per-part value of NATION_0's
-    suppliers, keeping parts whose value exceeds a MULTIPLE OF THE MEAN
-    part value. TPC-H's spec threshold is a fraction of the total scaled
-    by 1/SF (`0.0001/SF`); a fixed fraction goes vacuous as the part
-    count grows (the r6 form returned 0 rows at the sf1 tier), so this
-    uses the scale-invariant 2x-mean form — same rows at any SF ratio,
-    non-empty witness at every tier (77 rows sf0.01, 1299 sf1). The
-    defining feature is unchanged: a scalar subquery over the SAME
-    aggregated relation — computed once (the per-part relation persists
-    before its two consumers: the round-9 plan audit showed the
-    unpersisted form re-executing the whole 3-table agg subtree, 6
-    parquet scans and zero ReusedExchange, despite the crossJoin
-    pattern), its mean broadcast into the filter as a 1-row crossJoin
-    (rel_q22's pattern). Group sums snap at 4dp before the threshold
-    compare (the discounted-revenue convention).
-
-    Scale shape: one shuffle to build val (nation filter broadcast into
-    the lineitem scan), then a broadcast scalar — the HAVING-fraction
-    runs at val's cardinality (parts, not line items)."""
-    li = load_table(spark, sf, "lineitem")
-    sup = load_table(spark, sf, "supplier")
-    nat = load_table(spark, sf, "nation")
-    nation_sup = sup.join(
-        F.broadcast(nat.filter(F.col("n_name") == "NATION_0")),
-        sup.s_nationkey == nat.n_nationkey,
-    ).select("s_suppkey")
-    val = (
-        li.join(F.broadcast(nation_sup), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                4,
-            ).alias("stock_value")
-        )
-        .persist()
-    )
-    tot = val.agg(F.avg("stock_value").alias("__t"))
-    return (
-        val.crossJoin(F.broadcast(tot))
-        .filter(F.col("stock_value") > F.col("__t") * 2.0)
-        .select(F.col("l_partkey").alias("p_partkey"), "stock_value")
-    )
-
-
-@query(
-    "rel_q16_supplier_part_counts",
-    """
-    WITH ps AS (
-      SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-      WHERE l_suppkey NOT IN
-            (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0))
-    SELECT p.p_brand, p.p_type, p.p_size::BIGINT AS p_size,
-           count(DISTINCT ps.l_suppkey)::BIGINT AS supplier_cnt
-    FROM ps JOIN part p ON p.p_partkey = ps.l_partkey
-    WHERE p.p_brand <> 'Brand#1'
-      AND p.p_type NOT LIKE 'PROMO%'
-      AND p.p_size IN (1, 2, 3, 4, 5)
-    GROUP BY 1, 2, 3
-    """,
-)
-def rel_q16_supplier_part_counts(spark, sf):
-    """TPC-H Q16 shape (parts/supplier relationship), re-keyed to this
-    schema: distinct supplier counts per (brand, type, size) over the
-    part-supplier relation rebuilt from lineitem, EXCLUDING an
-    exclusion list via anti-join (Q16's NOT IN complaint-suppliers —
-    here suppliers with negative account balance, the schema's natural
-    problem-supplier analog), with the brand<>/type NOT LIKE/size IN
-    dimensional filters pushed into a broadcast part join.
-
-    Scale shape: the distinct (partkey, suppkey) projection partial-
-    aggregates map-side before its one shuffle; the exclusion list is a
-    broadcast anti-join (never a NOT IN subquery per row); part filters
-    prune BEFORE the join so the count(distinct) shuffle carries only
-    qualifying parts."""
-    li = load_table(spark, sf, "lineitem")
-    sup = load_table(spark, sf, "supplier")
-    part = load_table(spark, sf, "part")
-    excl = sup.filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    ps = (
-        li.select("l_partkey", "l_suppkey")
-        .join(
-            F.broadcast(excl),
-            li.l_suppkey == F.col("s_suppkey"),
-            "left_anti",
-        )
-        .distinct()
-    )
-    pdim = part.filter(
-        (F.col("p_brand") != "Brand#1")
-        & (~F.col("p_type").startswith("PROMO"))
-        & (F.col("p_size").isin(1, 2, 3, 4, 5))
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    return (
-        ps.join(F.broadcast(pdim), ps.l_partkey == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").cast("long").alias("supplier_cnt"))
-        .select(
-            "p_brand", "p_type",
-            F.col("p_size").cast("long").alias("p_size"),
-            "supplier_cnt",
-        )
     )
 
 
@@ -6028,33 +4466,6 @@ def f81_bpe_compression(spark, sf):
     return bpe_token_counts(docs, 8)
 
 
-@query("f82_embedding_covariance")
-def f82_embedding_covariance(spark, sf):
-    """The data-sized half of distributed PCA (functions/pca.py):
-    the 64x64 embedding covariance in ONE corpus pass — in-row outer
-    products AND raw elements ride a single posexplode into a
-    (d^2+d)-key partial agg (4160 keys at d=64; map-side combine
-    collapses the amplification before the shuffle,
-    corpus-size-independent key count), so the mean sums share the
-    products' exchange. Double-cast before multiplication so both engines
-    accumulate in float64; 8dp round. The eigensolve half is bounded
-    64x64 driver math, pinned by tests/test_pca.py.
-
-    Round 13: served by `embedding_covariance_fast` — the module's
-    documented 100 TB path (per-partition numpy X^T X partials via
-    Arrow mapInPandas, one d²+d+1-key agg) instead of the (d²+d)-row
-    posexplode amplification. Equivalence proven before the switch:
-    cell-for-cell equal to the explode path at sf0.01 AND sf0.1 (4096
-    cells each, zero differing after the shared 8dp round; schema
-    identical), and the DuckDB oracle replay stays green — the oracle
-    SQL is unchanged. Measured same-process: 13.6 s -> 6.2 s cold at
-    sf0.01, 4.7 -> 2.5 s at sf0.1."""
-    from borsa_spark.functions.pca import embedding_covariance_fast
-
-    embs = load_table(spark, sf, "embeddings")
-    return embedding_covariance_fast(embs)
-
-
 @query(
     "f83_corpus_card",
     """
@@ -6227,361 +4638,6 @@ def f86_c4_line_filter(spark, sf):
         out["n_kept"].alias("n_kept"),
         out["page_flagged"].alias("page_flagged"),
     )
-
-
-@query(
-    "f87_pq_adc_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    js AS (SELECT unnest(range(0, 4))::BIGINT AS j),
-    books AS (
-      SELECT js.j, e.vec_id AS cid, e.v[(js.j*16+1):(js.j*16+16)] AS cemb
-      FROM e CROSS JOIN js WHERE e.vec_id < 8),
-    sub AS (
-      SELECT e.vec_id, js.j, e.v[(js.j*16+1):(js.j*16+16)] AS sv
-      FROM e CROSS JOIN js),
-    enc AS (
-      SELECT vec_id, j, cid FROM (
-        SELECT s.vec_id, s.j, b.cid, row_number() OVER (
-          PARTITION BY s.vec_id, s.j ORDER BY
-            round(list_sum(list_transform(range(1, 17),
-              i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-            ASC, b.cid ASC) AS rn
-        FROM sub s JOIN books b USING (j)) t
-      WHERE rn = 1),
-    qd AS (
-      SELECT s.vec_id AS q_id, s.j, b.cid,
-             round(list_sum(list_transform(range(1, 17),
-               i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-               AS d
-      FROM sub s JOIN books b USING (j) WHERE s.vec_id < 10),
-    adc AS (
-      SELECT qd.q_id, enc.vec_id AS c_id, round(sum(qd.d), 4) AS adc_dist
-      FROM enc JOIN qd ON qd.j = enc.j AND qd.cid = enc.cid
-      WHERE qd.q_id <> enc.vec_id
-      GROUP BY 1, 2)
-    SELECT q_id, c_id, adc_dist, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                 ORDER BY adc_dist ASC, c_id ASC) AS rank
-      FROM adc) t
-    WHERE rank <= 5
-    """,
-)
-def f87_pq_adc_topk(spark, sf):
-    """Product-quantization ANN (functions/pq.py, Jegou et al. 2011 —
-    the FAISS PQ core): d=64 vectors split into m=4 subspaces, each
-    quantized against an 8-centroid codebook (seed codebooks = sliced
-    lowest-id vectors, the f15 convention so the oracle replays
-    exactly; trained codebooks are the pq_train_codebooks path, pinned
-    by pytest recall), then ADC top-5 per query — the query stays
-    exact, each corpus vector costs m table lookups. The fourth scale
-    path next to brute force (f10), hyperplane LSH (f11), and IVF
-    (f15), and the one that shrinks corpus memory 64x.
-
-    Scale shape: codebooks m x k rows and the query distance table
-    q x m x k rows (both broadcast); encode is one partial-agg argmin
-    keyed (vec, j); the corpus never shuffles except the (query, vec)
-    ADC partial agg."""
-    from borsa_spark.functions.pq import pq_adc_topk, pq_codebooks_seed
-
-    emb = load_table(spark, sf, "embeddings")
-    books = pq_codebooks_seed(emb, m=4, k=8)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = pq_adc_topk(emb, q, books, m=4, k_top=5)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@query(
-    "f88_pq_rerank_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    js AS (SELECT unnest(range(0, 4))::BIGINT AS j),
-    books AS (
-      SELECT js.j, e.vec_id AS cid, e.v[(js.j*16+1):(js.j*16+16)] AS cemb
-      FROM e CROSS JOIN js WHERE e.vec_id < 8),
-    sub AS (
-      SELECT e.vec_id, js.j, e.v[(js.j*16+1):(js.j*16+16)] AS sv
-      FROM e CROSS JOIN js),
-    enc AS (
-      SELECT vec_id, j, cid FROM (
-        SELECT s.vec_id, s.j, b.cid, row_number() OVER (
-          PARTITION BY s.vec_id, s.j ORDER BY
-            round(list_sum(list_transform(range(1, 17),
-              i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-            ASC, b.cid ASC) AS rn
-        FROM sub s JOIN books b USING (j)) t
-      WHERE rn = 1),
-    qd AS (
-      SELECT s.vec_id AS q_id, s.j, b.cid,
-             round(list_sum(list_transform(range(1, 17),
-               i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-               AS d
-      FROM sub s JOIN books b USING (j) WHERE s.vec_id < 10),
-    adc AS (
-      SELECT qd.q_id, enc.vec_id AS c_id, round(sum(qd.d), 4) AS adc_dist
-      FROM enc JOIN qd ON qd.j = enc.j AND qd.cid = enc.cid
-      WHERE qd.q_id <> enc.vec_id
-      GROUP BY 1, 2),
-    short AS (
-      SELECT q_id, c_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY q_id
-                   ORDER BY adc_dist ASC, c_id ASC) AS rn
-        FROM adc) t
-      WHERE rn <= 50),
-    ex AS (
-      SELECT s.q_id, s.c_id,
-             round(list_sum(list_transform(range(1, 65),
-               i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i]))), 4)
-               AS l2_dist
-      FROM short s JOIN e q ON q.vec_id = s.q_id
-                   JOIN e c ON c.vec_id = s.c_id)
-    SELECT q_id, c_id, l2_dist, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                 ORDER BY l2_dist ASC, c_id ASC) AS rank
-      FROM ex) t
-    WHERE rank <= 5
-    """,
-)
-def f88_pq_rerank_topk(spark, sf):
-    """The production PQ shape (functions/pq.py `pq_adc_rerank_topk`):
-    ADC over the 4-byte codes selects a 50-candidate shortlist per
-    query, exact L2 re-ranks the shortlist only — float vectors are
-    touched for 50 x queries rows, never scanned per query. Same seed
-    codebooks as f87 so the whole two-stage pipeline (encode -> ADC ->
-    shortlist -> exact rerank) replays exactly in SQL; a wrong
-    shortlist rank, a lost tie-break, or rerank reading anything
-    outside the shortlist hash-mismatches.
-
-    Scale shape: f87's + one shortlist-sized equi-join back to the
-    vectors (candidates broadcast against the corpus at 100 TB)."""
-    from borsa_spark.functions.pq import (
-        pq_adc_rerank_topk,
-        pq_codebooks_seed,
-    )
-
-    emb = load_table(spark, sf, "embeddings")
-    books = pq_codebooks_seed(emb, m=4, k=8)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = pq_adc_rerank_topk(emb, q, books, m=4, k_top=5, shortlist=50)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@query(
-    "f89_ivfpq_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    js AS (SELECT unnest(range(0, 4))::BIGINT AS j),
-    coarse AS (SELECT vec_id AS ccid, v AS cv FROM e WHERE vec_id < 8),
-    lists AS (
-      SELECT vec_id, ccid AS centroid_id FROM (
-        SELECT e.vec_id, c.ccid, row_number() OVER (
-          PARTITION BY e.vec_id ORDER BY
-            list_sum(list_transform(range(1, 65),
-              i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))) ASC,
-            c.ccid ASC) AS rn
-        FROM e CROSS JOIN coarse c) t WHERE rn = 1),
-    books AS (
-      SELECT js.j, e.vec_id AS cid, e.v[(js.j*16+1):(js.j*16+16)] AS cemb
-      FROM e CROSS JOIN js WHERE e.vec_id < 8),
-    sub AS (
-      SELECT e.vec_id, js.j, e.v[(js.j*16+1):(js.j*16+16)] AS sv
-      FROM e CROSS JOIN js),
-    enc AS (
-      SELECT vec_id, j, cid FROM (
-        SELECT s.vec_id, s.j, b.cid, row_number() OVER (
-          PARTITION BY s.vec_id, s.j ORDER BY
-            round(list_sum(list_transform(range(1, 17),
-              i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-            ASC, b.cid ASC) AS rn
-        FROM sub s JOIN books b USING (j)) t
-      WHERE rn = 1),
-    probed AS (
-      SELECT q_id, ccid AS centroid_id FROM (
-        SELECT q.vec_id AS q_id, c.ccid, row_number() OVER (
-          PARTITION BY q.vec_id ORDER BY
-            list_sum(list_transform(range(1, 65),
-              i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))) ASC,
-            c.ccid ASC) AS rn
-        FROM e q CROSS JOIN coarse c WHERE q.vec_id < 10) t
-      WHERE rn <= 2),
-    qd AS (
-      SELECT s.vec_id AS q_id, s.j, b.cid,
-             round(list_sum(list_transform(range(1, 17),
-               i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-               AS d
-      FROM sub s JOIN books b USING (j) WHERE s.vec_id < 10),
-    adc AS (
-      SELECT qd.q_id, enc.vec_id AS c_id, round(sum(qd.d), 4) AS adc_dist
-      FROM enc
-      JOIN lists ON lists.vec_id = enc.vec_id
-      JOIN probed ON probed.centroid_id = lists.centroid_id
-      JOIN qd ON qd.q_id = probed.q_id AND qd.j = enc.j
-             AND qd.cid = enc.cid
-      WHERE qd.q_id <> enc.vec_id
-      GROUP BY 1, 2)
-    SELECT q_id, c_id, adc_dist, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                 ORDER BY adc_dist ASC, c_id ASC) AS rank
-      FROM adc) t
-    WHERE rank <= 5
-    """,
-)
-def f89_ivfpq_topk(spark, sf):
-    """The full FAISS IVFPQ composition (functions/pq.py `ivfpq_topk`):
-    f15's coarse quantizer narrows each query to its 2 probed inverted
-    lists, f87's PQ-ADC scores only those lists' CODE rows — per query
-    the scan is n_probe/n_lists of a table already 64x smaller than
-    the vectors; the two reductions compose. Seed coarse centroids and
-    seed codebooks (the f15/f87 conventions) so assignment, encoding,
-    probing, and ADC all replay exactly in SQL. Raw-vector codes, not
-    residuals (documented simplification — one broadcast codebook; the
-    recall cost is measured in tests/test_pq.py, not hidden).
-
-    Scale shape: coarse assignment and encode are broadcast-join scans;
-    the per-query work is an equi-join on centroid_id against the code
-    table + the (q, vec)-keyed ADC partial agg."""
-    from borsa_spark.functions.pq import ivfpq_topk, pq_codebooks_seed
-
-    emb = load_table(spark, sf, "embeddings")
-    coarse = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    books = pq_codebooks_seed(emb, m=4, k=8)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = ivfpq_topk(emb, q, coarse, books, m=4, k_top=5, n_probe=2)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-@query(
-    "f97_ivfpq_residual_topk",
-    """
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-      FROM embeddings),
-    js AS (SELECT unnest(range(0, 4))::BIGINT AS j),
-    coarse AS (SELECT vec_id AS ccid, v AS cv FROM e WHERE vec_id < 8),
-    lists AS (
-      SELECT vec_id, ccid AS centroid_id FROM (
-        SELECT e.vec_id, c.ccid, row_number() OVER (
-          PARTITION BY e.vec_id ORDER BY
-            list_sum(list_transform(range(1, 65),
-              i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))) ASC,
-            c.ccid ASC) AS rn
-        FROM e CROSS JOIN coarse c) t WHERE rn = 1),
-    res AS (
-      SELECT e.vec_id, l.centroid_id,
-             list_transform(range(1, 65), i -> e.v[i] - c.cv[i]) AS r
-      FROM e JOIN lists l ON l.vec_id = e.vec_id
-      JOIN coarse c ON c.ccid = l.centroid_id),
-    seedr AS (
-      SELECT * FROM res WHERE vec_id >= 8
-      QUALIFY row_number() OVER (ORDER BY vec_id) <= 8),
-    books AS (
-      SELECT js.j, s.vec_id AS cid,
-             s.r[(js.j*16+1):(js.j*16+16)] AS cemb
-      FROM seedr s CROSS JOIN js),
-    sub AS (
-      SELECT r.vec_id, r.centroid_id, js.j,
-             r.r[(js.j*16+1):(js.j*16+16)] AS sv
-      FROM res r CROSS JOIN js),
-    enc AS (
-      SELECT vec_id, centroid_id, j, cid FROM (
-        SELECT s.vec_id, s.centroid_id, s.j, b.cid, row_number() OVER (
-          PARTITION BY s.vec_id, s.j ORDER BY
-            round(list_sum(list_transform(range(1, 17),
-              i -> (s.sv[i] - b.cemb[i]) * (s.sv[i] - b.cemb[i]))), 4)
-            ASC, b.cid ASC) AS rn
-        FROM sub s JOIN books b USING (j)) t
-      WHERE rn = 1),
-    probed AS (
-      SELECT q_id, ccid AS centroid_id FROM (
-        SELECT q.vec_id AS q_id, c.ccid, row_number() OVER (
-          PARTITION BY q.vec_id ORDER BY
-            list_sum(list_transform(range(1, 65),
-              i -> (q.v[i] - c.cv[i]) * (q.v[i] - c.cv[i]))) ASC,
-            c.ccid ASC) AS rn
-        FROM e q CROSS JOIN coarse c WHERE q.vec_id < 10) t
-      WHERE rn <= 2),
-    qres AS (
-      SELECT p.q_id, p.centroid_id,
-             list_transform(range(1, 65), i -> q.v[i] - c.cv[i]) AS qr
-      FROM probed p JOIN e q ON q.vec_id = p.q_id
-      JOIN coarse c ON c.ccid = p.centroid_id),
-    qd AS (
-      SELECT qres.q_id, qres.centroid_id, js.j, b.cid,
-             round(list_sum(list_transform(range(1, 17),
-               i -> (qres.qr[js.j*16 + i] - b.cemb[i])
-                  * (qres.qr[js.j*16 + i] - b.cemb[i]))), 4) AS d
-      FROM qres CROSS JOIN js JOIN books b ON b.j = js.j),
-    adc AS (
-      SELECT qd.q_id, enc.vec_id AS c_id, round(sum(qd.d), 4) AS adc_dist
-      FROM enc
-      JOIN qd ON qd.centroid_id = enc.centroid_id AND qd.j = enc.j
-             AND qd.cid = enc.cid
-      WHERE qd.q_id <> enc.vec_id
-      GROUP BY 1, 2)
-    SELECT q_id, c_id, adc_dist, rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id
-                 ORDER BY adc_dist ASC, c_id ASC) AS rank
-      FROM adc) t
-    WHERE rank <= 5
-    """,
-)
-def f97_ivfpq_residual_topk(spark, sf):
-    """RESIDUAL-coded IVFPQ (functions/pq.py `ivfpq_residual_topk` —
-    Jegou et al. 2011 §IV-A, the form f89's docstring marks raw coding
-    as simplifying away; round-10 verdict task #3): codes quantize
-    ``x − coarse_centroid(x)``, and at query time the ADC table is
-    built per probed list from the query's residual against that
-    list's centroid, so the coarse offset CANCELS instead of being
-    re-approximated by the codebook. Seed residual codebooks come from
-    the 8 lowest-id vectors AT OR ABOVE id 8 — the coarse seeds' own
-    residuals are exactly zero (they are the f15-convention lowest-id
-    vectors), and an all-zero codebook is degenerate — keeping every
-    stage deterministic and exactly SQL-replayable: assignment,
-    residual subtraction, encode argmin, per-list query tables, ADC
-    sums, and the rank tie-break all recompose in the oracle. Trained
-    residual codebooks (`pq_train_codebooks_residual`, with
-    distinct-subvector seeding — naive lowest-id seeds are
-    systematically degenerate on residuals) are the production path;
-    tests/test_pq.py pins bit-equality to an independent numpy model,
-    set-recall 1.0 where residuals compress, and measured PARITY with
-    raw coding on incompressible fixtures (the honest envelope —
-    §IV-A's strict win needs cell counts toy corpora can't stage).
-
-    Scale shape: f89's (broadcast coarse + codebooks, probed equi-join
-    against the code table, (q, vec)-keyed partial agg); the residual
-    subtraction is an in-row zip_with at scan speed and the query
-    table grows only n_probe× (still broadcast-sized)."""
-    from borsa_spark.functions.pq import (
-        ivfpq_residual_topk,
-        pq_codebooks_seed_residual,
-    )
-
-    emb = load_table(spark, sf, "embeddings")
-    coarse = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    books = pq_codebooks_seed_residual(emb, coarse, m=4, k=8, min_id=8)
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = ivfpq_residual_topk(
-        emb, q, coarse, books, m=4, k_top=5, n_probe=2
-    )
-    return out.withColumn("rank", F.col("rank").cast("long"))
 
 
 @query(
@@ -7570,9 +5626,6 @@ def _register_late_oracles() -> None:
 
     ORACLES["f80_bpe_train"] = sql_learn_bpe(12)
     ORACLES["f81_bpe_compression"] = sql_bpe_token_counts(8)
-    from borsa_spark.functions.pca import sql_embedding_covariance
-
-    ORACLES["f82_embedding_covariance"] = sql_embedding_covariance()
     from borsa_spark.functions.langid import (
         langid_fixture_duckdb_sql,
         sql_charngram_nb_langid,

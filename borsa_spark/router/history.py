@@ -107,6 +107,18 @@ class HistoryResult:
 ALL_SYMBOLS = "*"
 
 
+def _symbol_filter(
+    df: DataFrame, req: HistoryRequest, symbols: list[str] | str | None
+) -> DataFrame:
+    """Restrict ``df`` to the requested symbols: ``ALL_SYMBOLS`` adds no
+    predicate, a batch is an ``isin``, and None means ``req.symbol``."""
+    if symbols == ALL_SYMBOLS:
+        return df
+    if symbols is not None:
+        return df.filter(F.col("symbol").isin(symbols))
+    return df.filter(F.col("symbol") == req.symbol)
+
+
 def _scan_provider(
     source: Source,
     req: HistoryRequest,
@@ -121,12 +133,7 @@ def _scan_provider(
     df = source.table("history")
     if "interval" in df.columns:
         df = df.filter(F.col("interval") == interval).drop("interval")
-    if symbols == ALL_SYMBOLS:
-        pass  # full-catalog scan: no symbol predicate
-    elif symbols is not None:
-        df = df.filter(F.col("symbol").isin(symbols))
-    else:
-        df = df.filter(F.col("symbol") == req.symbol)
+    df = _symbol_filter(df, req, symbols)
     if req.start is not None:
         df = df.filter(F.col("ts") >= F.lit(req.start))
     if req.end is not None:
@@ -282,14 +289,9 @@ def history(
             df = df.withColumn("priority", F.lit(idx))
             frames.append(df)
             if req.include_actions and source.supports("actions"):
-                adf = source.table("actions")
-                if symbols == ALL_SYMBOLS:
-                    pass
-                elif symbols is not None:
-                    adf = adf.filter(F.col("symbol").isin(symbols))
-                else:
-                    adf = adf.filter(F.col("symbol") == req.symbol)
-                actions_frames.append(adf)
+                actions_frames.append(
+                    _symbol_filter(source.table("actions"), req, symbols)
+                )
         except BorsaSparkError as e:
             e.connector = e.connector or source.name
             errors.append(e)

@@ -327,14 +327,6 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
 #: Multimodal assets: opaque binary payload + typed metadata. Decode /
 #: feature-extraction runs as Pandas UDFs over mapInPandas (functions/multimodal).
 MEDIA_ASSETS = T.StructType(

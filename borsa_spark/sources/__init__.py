@@ -7,12 +7,10 @@ from borsa_spark.sources.rest import (
     socket_quote_stream,
     stream_source,
 )
-from borsa_spark.sources.tables import TABLES, load_table, register_views
+from borsa_spark.sources.tables import load_table
 
 __all__ = [
-    "TABLES",
     "load_table",
-    "register_views",
     "FakeTransport",
     "RestAdapter",
     "UrllibTransport",

@@ -21,19 +21,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -70,13 +57,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # and matches DuckDB's naive-timestamp view of the same file.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver table and register <name> temp views."""
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

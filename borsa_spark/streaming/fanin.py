@@ -70,7 +70,6 @@ def option_stream(
 def streaming_exact_dedup(
     updates: DataFrame,
     keys: list[str],
-    ts_col: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Streaming exact dedup: drop replays of the same key within the
@@ -82,7 +81,7 @@ def streaming_exact_dedup(
     hash to dedup documents as they arrive. State is bounded by the
     watermark (the gate's state never expires without TTL).
     """
-    return updates.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return updates.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys
     )
 
@@ -91,7 +90,6 @@ def candle_stream(
     updates: DataFrame,
     interval_seconds: int,
     watermark: str = "30 seconds",
-    ts_col: str = "ts",
     final_mode: bool = True,
 ) -> DataFrame:
     """T12: tick stream -> OHLCV bars at a tumbling interval.
@@ -115,8 +113,11 @@ def candle_stream(
     an append-mode stream of the same aggregation, treating presence in
     the append stream as the closed marker.
     """
-    win = F.window(F.col(ts_col), f"{interval_seconds} seconds")
-    ord_key: Column = F.struct(F.col(ts_col), F.col("seq")) if "seq" in updates.columns else F.col(ts_col)
+    ts = F.col("ts")
+    win = F.window(ts, f"{interval_seconds} seconds")
+    ord_key: Column = (
+        F.struct(ts, F.col("seq")) if "seq" in updates.columns else ts
+    )
     volume = ["volume"] if "volume" in updates.columns else []
     aggs = [
         F.min_by("price", ord_key).alias("open"),
@@ -127,7 +128,7 @@ def candle_stream(
         *[F.sum(c).alias(c) for c in volume],
     ]
     return (
-        updates.withWatermark(ts_col, watermark)
+        updates.withWatermark("ts", watermark)
         .groupBy(F.col("symbol"), win.alias("window"))
         .agg(*aggs)
         .select(

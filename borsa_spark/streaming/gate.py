@@ -28,12 +28,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 GATE_TTL_MS = 24 * 60 * 60 * 1000  # filters.rs ENTRY_TTL = 24h
 
 
-def _gate_fn(
-    out_schema_cols: list[str],
-    ts_col: str,
-    order_col: str | None,
-    ttl_ms: int | None,
-):
+def _gate_fn(out_schema_cols: list[str], ttl_ms: int | None):
     def fn(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
@@ -44,9 +39,8 @@ def _gate_fn(
             return
         hwm = state.get[0] if state.exists else None
         for pdf in pdfs:
-            if order_col is not None:
-                pdf = pdf.sort_values(order_col, kind="stable")
-            ts = pdf[ts_col].astype("int64").to_numpy()  # ns since epoch
+            pdf = pdf.sort_values("seq", kind="stable")
+            ts = pdf["ts"].astype("int64").to_numpy()  # ns since epoch
             if len(ts) == 0:
                 continue
             # Vectorized drop-older-keep-equal: the HWM before row i is
@@ -71,14 +65,12 @@ def _gate_fn(
 def streaming_monotonic_gate(
     updates: DataFrame,
     key: str = "symbol",
-    ts_col: str = "ts",
-    order_col: str | None = "seq",
     ttl_ms: int | None = None,
 ) -> DataFrame:
     """Apply the drop-older-keep-equal gate to a streaming DataFrame.
 
-    ``order_col`` fixes intra-batch arrival order (the fan-in sequence
-    number); pass None to trust batch row order.
+    ``updates`` carries event time in ``ts`` and the fan-in sequence
+    number in ``seq``, which fixes intra-batch arrival order.
 
     ``ttl_ms`` enables the reference's 24h idle-state reaper
     (pass GATE_TTL_MS) for CONTINUOUS production streams. Leave None for
@@ -94,7 +86,7 @@ def streaming_monotonic_gate(
         else GroupStateTimeout.ProcessingTimeTimeout
     )
     return updates.groupBy(key).applyInPandasWithState(
-        _gate_fn(cols, ts_col, order_col, ttl_ms),
+        _gate_fn(cols, ttl_ms),
         outputStructType=schema,
         stateStructType="hwm long",
         outputMode="append",

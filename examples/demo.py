@@ -12,8 +12,6 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from borsa_spark.plans import RoutingPolicy  # noqa: E402
 from borsa_spark.queries import _event_catalog  # noqa: E402
 from borsa_spark.router import (  # noqa: E402
@@ -82,17 +80,6 @@ def main() -> None:
     print("== latency-race quote winner ==")
     q.select("provider", "symbol", "price").show(1)
     hang.release()
-
-    # k-means-trained IVF (round 2)
-    from borsa_spark.functions.similarity import ivf_topk, kmeans_centroids
-
-    emb = load_table(spark, SF, "embeddings")
-    cents = kmeans_centroids(emb, k=4, iters=2)
-    qs = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    print("== IVF top-3 with trained centroids ==")
-    ivf_topk(emb, qs, cents, k=3, n_probe=2).show(6)
 
     spark.stop()
 

@@ -1,6 +1,6 @@
-"""Training-data pipeline tour: dedup -> cluster -> quality gate -> split,
-plus similarity search — the beyond-reference operator families, composed
-the way a corpus-prep job would.
+"""Training-data pipeline tour: dedup -> cluster -> quality gate -> split
+— the beyond-reference operator families, composed the way a corpus-prep
+job would.
 
 Run: python examples/training_data_tour.py
 """
@@ -15,7 +15,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from borsa_spark.functions import dedup as dd  # noqa: E402
-from borsa_spark.functions import similarity as sim  # noqa: E402
 from borsa_spark.functions import text as tx  # noqa: E402
 from borsa_spark.session import get_spark  # noqa: E402
 from borsa_spark.sources import load_table  # noqa: E402
@@ -56,23 +55,14 @@ def main() -> None:
     print("== final corpus by split ==")
     kept.groupBy("split").count().show()
 
-    # 4. similarity: trained k-means centroids feeding IVF top-k
-    emb = load_table(spark, SF, "embeddings")
-    cents = sim.kmeans_centroids(emb, k=4, iters=2)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    print("== IVF ANN top-3 ==")
-    sim.ivf_topk(emb, queries, cents, k=3, n_probe=2).show(9)
-
-    # 5. continuous ingest: screen a "new batch" against the existing
+    # 4. continuous ingest: screen a "new batch" against the existing
     # corpus (cross-set pairs only — in-batch and in-corpus dups are
     # other stages' jobs)
     incoming = dd.minhash_pairs_against(sh, (F.col("id") % 5) == 0, 0.5)
     print("== new-batch docs near-duplicating the corpus ==")
     incoming.show(5)
 
-    # 6. leakage-safe split + mixture planning (queries f36/f34): whole
+    # 5. leakage-safe split + mixture planning (queries f36/f34): whole
     # dup-clusters share a split; per-source weights hit a uniform target
     from borsa_spark.queries import QUERIES
 
@@ -83,13 +73,12 @@ def main() -> None:
     QUERIES["f34_mixture_weights"](spark, SF) \
         .orderBy(F.col("weight").desc()).show(5)
 
-    # 7. production checkpoints: build the shared dedup relations ONCE
+    # 6. production checkpoints: build the shared dedup relations ONCE
     # (parquet + marker-last), admit a later batch incrementally, and
     # serve survivor selection from the stored clusters
     import tempfile
 
     from borsa_spark.functions.pipeline import CorpusArtifacts
-    from borsa_spark.functions.vector_index import VectorIndex
 
     with tempfile.TemporaryDirectory() as work:
         art = CorpusArtifacts(spark, f"{work}/corpus")
@@ -100,14 +89,7 @@ def main() -> None:
         print("== survivors from stored clusters ==")
         art.survivors(docs).orderBy("component").show(5)
 
-        # 8. persisted IVF index: train+assign once, probe with a static
-        # partition filter (only the probed lists are read from disk)
-        idx = VectorIndex(spark, f"{work}/index", k=4, iters=2)
-        print("== index build ==", idx.build(emb))
-        print("== partition-pruned ANN search ==")
-        idx.search(queries, k=3, n_probe=2).show(9)
-
-    # 9. admission + ordering (queries f53/f54): blocklist density gate
+    # 7. admission + ordering (queries f53/f54): blocklist density gate
     # at scan speed, then the seeded shuffle that fixes training order
     print("== blocklist verdicts ==")
     QUERIES["f53_blocklist_filter"](spark, SF) \
@@ -116,7 +98,7 @@ def main() -> None:
     QUERIES["f54_training_order"](spark, SF) \
         .orderBy("position").show(5)
 
-    # 10. round-6 quality + fingerprinting: repetition signals rank the
+    # 8. round-6 quality + fingerprinting: repetition signals rank the
     # spammiest docs; winnowing fingerprints give the position-robust
     # near-dup signature at 1/w the shingle storage; stratified_sample
     # rebalances the language mix deterministically
@@ -133,7 +115,7 @@ def main() -> None:
               .withColumnRenamed("count", "after"), "lang") \
         .orderBy("lang").show()
 
-    # 11. round-7 crawl family: paragraph-level dedup accounting, the
+    # 9. round-7 crawl family: paragraph-level dedup accounting, the
     # corpus-self-trained LM quality score, DSIR importance weights +
     # the deterministic Gumbel-top-k selection they feed, and the
     # Bloom-prefiltered (exact-semantics) decontamination
@@ -158,7 +140,7 @@ def main() -> None:
     bloom_decontaminate(docs, F.col("id") % 7 == 0, n=8) \
         .orderBy(F.desc("n_shared")).show(5)
 
-    # 12. both halves of the CCNet quality filter: the trained
+    # 10. both halves of the CCNet quality filter: the trained
     # discriminative classifier (f77) and the Stupid Backoff LM whose
     # held-out docs pay the backoff penalty on unseen bigrams (f78)
     from borsa_spark.functions.classifier import hashed_logreg_scores
@@ -171,7 +153,7 @@ def main() -> None:
     tx.bigram_backoff_scores(docs, F.col("doc_id") % 4 != 0) \
         .orderBy("avg_logscore").show(5)
 
-    # 13. train a BPE tokenizer ON the corpus (one scan; every merge
+    # 11. train a BPE tokenizer ON the corpus (one scan; every merge
     # round touches only the distinct-word relation), then score each
     # doc by how well the learned merges compress it — poor compression
     # means far from the training distribution (f80/f81)
@@ -184,17 +166,6 @@ def main() -> None:
         "tokens_per_word",
         F.round(F.col("n_bpe_tokens") / F.col("n_words"), 3),
     ).orderBy(F.desc("tokens_per_word")).show(5)
-
-    # 14. distributed PCA over the embedding table: one covariance
-    # pass, bounded driver eigensolve, in-row whitening (f82)
-    from borsa_spark.functions.pca import pca_fit, pca_project
-
-    embs = load_table(spark, SF, "embeddings")
-    model = pca_fit(embs, k=4)
-    print("== PCA: top-4 variances ==")
-    print([round(v, 4) for v in model["variances"]])
-    print("== whitened projections (first rows) ==")
-    pca_project(embs, model, whiten=True).orderBy("vec_id").show(3)
 
     spark.stop()
 

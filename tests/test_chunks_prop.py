@@ -1,6 +1,6 @@
 """Property test: doc_chunks covers every token, chunk boundaries follow
 the stride arithmetic exactly, and chunk hashes reconstruct the document
-(functions/retrieval.py)."""
+(functions/dedup.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import hashlib
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from borsa_spark.functions.retrieval import doc_chunks
+from borsa_spark.functions.dedup import doc_chunks
 
 SETTINGS = settings(
     max_examples=8,

@@ -158,7 +158,7 @@ def test_delivered_updates_match_reference_model(steps):
         [list(SYMBOLS) for _ in range(N_PROVIDERS)],
         min_backoff_ms=1, max_backoff_ms=1, factor=1,
     )
-    kernel = _gate_fn(["provider", "symbol", "ts", "seq"], "ts", "seq", None)
+    kernel = _gate_fn(["provider", "symbol", "ts", "seq"], None)
 
     # --- reference model state (dicts only) ---
     pending: dict[int, tuple[str, ...]] = {}

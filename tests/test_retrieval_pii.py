@@ -1,20 +1,15 @@
-"""Retrieval ops (functions/retrieval.py) + PII scrub (functions/text.py).
+"""Document chunking (functions/dedup.py) + PII scrub (functions/text.py).
 
-The registry queries f44-f47 pin these against the DuckDB oracle on the
-fixture corpus; these tests pin the behavior the clean corpus cannot
-witness — dirty PII text, chunk-boundary math, postings caps, BM25
-ordering — on constructed rows."""
+The registry queries f44 and f47 pin these against the DuckDB oracle on
+the fixture corpus; these tests pin the behavior the clean corpus cannot
+witness — dirty PII text and chunk-boundary math — on constructed rows."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from borsa_spark.functions.retrieval import (
-    bm25_topk,
-    doc_chunks,
-    inverted_index,
-)
+from borsa_spark.functions.dedup import doc_chunks
 from borsa_spark.functions.text import pii_scrub
 
 
@@ -48,41 +43,6 @@ class TestDocChunks:
     def test_invalid_params(self, spark):
         with pytest.raises(ValueError):
             doc_chunks(_docs(spark, [(1, "a")]), window=0)
-
-
-class TestInvertedIndex:
-    def test_postings_cap_keeps_true_df(self, spark):
-        rows = [(i, "common word") for i in range(30)]
-        got = {
-            r.term: r
-            for r in inverted_index(_docs(spark, rows), postings_cap=5).collect()
-        }
-        assert got["common"].df == 30 and got["common"].cf == 30
-        assert got["common"].postings == "0,1,2,3,4"  # capped, ascending
-
-    def test_cf_counts_occurrences(self, spark):
-        got = inverted_index(_docs(spark, [(7, "a a a b")])).collect()
-        by = {r.term: r for r in got}
-        assert by["a"].df == 1 and by["a"].cf == 3 and by["b"].cf == 1
-
-
-class TestBM25:
-    def test_rarer_term_scores_higher(self, spark):
-        rows = [(1, "rare common"), (2, "common filler"), (3, "common junk")]
-        panel = [(1, "rare"), (2, "common")]
-        got = bm25_topk(_docs(spark, rows), panel=panel, k=3).collect()
-        rare_hits = [r for r in got if r.query_id == 1]
-        common_hits = [r for r in got if r.query_id == 2]
-        assert [r.doc_id for r in rare_hits] == [1]
-        assert len(common_hits) == 3
-        # idf of the corpus-wide term is lower than the singleton term's
-        assert rare_hits[0].score > max(r.score for r in common_hits)
-
-    def test_rank_deterministic_on_ties(self, spark):
-        rows = [(5, "tie x"), (3, "tie y"), (4, "tie z")]
-        got = bm25_topk(_docs(spark, rows), panel=[(1, "tie")], k=3).collect()
-        # identical tf/dl -> identical score; doc_id breaks the tie
-        assert [r.doc_id for r in sorted(got, key=lambda r: r.rank)] == [3, 4, 5]
 
 
 class TestPiiScrub:

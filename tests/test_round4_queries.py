@@ -1,8 +1,7 @@
 """Unit pins for the round-4 additions beyond their sf0.01 oracle rows:
-blocklist density rule, seeded training order, and SemDeDup's
-cluster-bounded candidate generation. Each test drives the registered
-query (or its underlying rule) on tiny synthetic inputs where the expected
-answer is hand-checkable.
+blocklist density rule and seeded training order. Each test drives the
+registered query (or its underlying rule) on tiny synthetic inputs where
+the expected answer is hand-checkable.
 """
 
 from __future__ import annotations
@@ -78,27 +77,6 @@ class TestTrainingOrder:
         assert by_pos != sorted(by_pos)  # md5 actually shuffled
 
 
-class TestSemDeDup:
-    def test_pairs_are_cluster_bounded(self, spark):
-        out = QUERIES["f52_semdedup"](spark, SF001)
-        # every reported vector names the cluster it was deduped within,
-        # and its neighbor count is bounded by that cluster's size - 1
-        from borsa_spark.functions import similarity as _sim
-
-        emb = spark.read.parquet(f"{SF001}/embeddings.parquet")
-        cents = _sim.kmeans_centroids(emb, k=8, iters=2)
-        sizes = {
-            r["cluster"]: r["n"]
-            for r in _sim.kmeans_assign(emb, cents)
-            .groupBy("cluster")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        for r in out.collect():
-            assert r["n_dup_neighbors"] <= sizes[r["cluster"]] - 1
-            assert 0.0 <= r["max_cos"] <= 1.0001
-
-
 class TestTrainingOrderModel:
     def test_positions_match_independent_hash_model(self, spark):
         """The hierarchical rank (prefix-bucket local ranks + broadcast
@@ -121,51 +99,3 @@ class TestTrainingOrderModel:
         )
         want = {d: i + 1 for i, d in enumerate(keyed)}
         assert got == want
-
-
-class TestSemDeDupProduction:
-    def test_auto_k_finds_planted_near_identical_dups(self, spark):
-        """The auto-k production path must catch near-identical vectors
-        (the regime SemDeDup targets: epsilon-close copies almost never
-        straddle a Voronoi boundary at any k) with zero false positives
-        against the brute-force truth at the same tau."""
-        import math
-
-        from borsa_spark.functions.similarity import dot, norm2, semdedup
-
-        # 200 diverse base vectors + 40 planted near-copies (tiny
-        # deterministic perturbation -> cosine ~0.9999 to their base)
-        def vec(seed, dim=16):
-            return [
-                math.sin(0.7 * seed + 1.3 * i) for i in range(dim)
-            ]
-
-        rows = [(i, vec(i)) for i in range(200)]
-        rows += [
-            (1000 + i, [x + 0.001 * ((i + j) % 3) for j, x in enumerate(vec(i))])
-            for i in range(40)
-        ]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        flagged = {r["vec_id"] for r in semdedup(emb, tau=0.95).collect()}
-        e = emb.select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-        ).withColumn("n", norm2(F.col("v")))
-        a = e.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"),
-                     F.col("n").alias("na"))
-        b = e.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"),
-                     F.col("n").alias("nb"))
-        cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        truth = {
-            r["ia"]
-            for r in a.crossJoin(b)
-            .filter(F.col("ib") < F.col("ia"))
-            .filter(cos >= 0.95)
-            .select("ia")
-            .distinct()
-            .collect()
-        }
-        assert flagged <= truth                   # no false positives ever
-        assert len(truth) >= 40                   # the plants are real dups
-        planted = {1000 + i for i in range(40)}
-        assert len(flagged & planted) >= 38       # near-total recall

@@ -292,6 +292,33 @@ class TestHistoryRouter:
                     strategy="fallback", symbols=["AAPL", "MSFT"])
         assert calls == []
 
+    def test_deep_batch_actions_follow_the_symbol_set(self, spark):
+        # The actions scan takes the same symbol predicate as the candle
+        # scan: a batch keeps only its symbols, ALL_SYMBOLS keeps every one.
+        from borsa_spark.router import ALL_SYMBOLS
+        from tests.conftest import action, make_actions
+
+        syms = ["AAPL", "MSFT", "GOOG"]
+        cat = Catalog().register(
+            fixture_source(
+                "provA", history_intervals=("1d",),
+                history=make_candles(
+                    spark, [candle("provA", symbol=s) for s in syms]
+                ),
+                actions=make_actions(
+                    spark, [action("provA", symbol=s) for s in syms]
+                ),
+            )
+        )
+        req = HistoryRequest(symbol="AAPL", include_actions=True)
+
+        def action_symbols(symbols):
+            res = history(spark, cat, req, strategy="deep", symbols=symbols)
+            return sorted(r.symbol for r in res.actions.collect())
+
+        assert action_symbols(["AAPL", "MSFT"]) == ["AAPL", "MSFT"]
+        assert action_symbols(ALL_SYMBOLS) == ["AAPL", "GOOG", "MSFT"]
+
 
 def quote_row(provider, symbol, price, exchange=None, shortname=None):
     from decimal import Decimal

@@ -479,148 +479,6 @@ class TestRocksDBStateStore:
                 )
 
 
-class TestSessionWindowStreaming:
-    """A session_window aggregation runs under Structured Streaming with
-    a watermark — closed sessions match the batch computation over the
-    same feed (T12's append-mode pattern for session windows)."""
-
-    def test_closed_sessions_match_batch(self, spark, tmp_path):
-        import datetime as dt
-
-        import pyspark.sql.functions as F
-
-        def ts(minute):
-            return dt.datetime(2024, 1, 1) + dt.timedelta(minutes=minute)
-
-        schema = "user_id long, ts timestamp"
-        # user 1: events at 0,10 (one session), 50 (second session);
-        # user 2: single event; a late final event moves the watermark
-        rows = [
-            (1, ts(0)), (1, ts(10)), (1, ts(50)),
-            (2, ts(5)),
-            (9, ts(400)),  # watermark pusher
-        ]
-        path = tmp_path / "sess_events"
-        path.mkdir()
-        spark.createDataFrame(rows, schema).repartition(1).write.parquet(
-            str(path / "b0")
-        )
-        src = spark.readStream.schema(schema).parquet(str(path / "b*"))
-        agg = (
-            src.withWatermark("ts", "10 seconds")
-            .groupBy(
-                "user_id",
-                F.session_window("ts", "30 minutes").alias("w"),
-            )
-            .agg(F.count("*").alias("n_events"), F.min("ts").alias("start"))
-        )
-        out = _run_stream(spark, agg, tmp_path, "sess_out", "append")
-        got = {
-            (r.user_id, r.start): r.n_events
-            for r in out.collect()
-            if r.user_id != 9
-        }
-        # batch reference over the same rows
-        batch = (
-            spark.createDataFrame(rows, schema)
-            .filter(F.col("user_id") != 9)
-            .groupBy(
-                "user_id",
-                F.session_window("ts", "30 minutes").alias("w"),
-            )
-            .agg(F.count("*").alias("n_events"), F.min("ts").alias("start"))
-        )
-        want = {(r.user_id, r.start): r.n_events for r in batch.collect()}
-        assert got == want
-        assert got[(1, ts(0))] == 2   # 0 and 10 merged
-        assert got[(1, ts(50))] == 1  # 50 is a fresh session (gap 40m)
-
-    def test_late_event_merges_open_session_across_batches(
-        self, spark, tmp_path
-    ):
-        """The r6-verdict late-merge case: an event arriving in a LATER
-        micro-batch, inside an open session's gap, must MERGE into
-        (extend) that session before it closes — and a truly late event
-        must be dropped, diverging from the batch computation in exactly
-        that one row (watermark discipline, not a bug).
-
-        Two empirically-pinned Spark semantics this test documents:
-        late rows drop on session-window END vs watermark (not event
-        time), and the watermark used for filtering/eviction in batch N
-        is the one COMMITTED after batch N-1 — it lags the data by one
-        batch, which is why the drop needs a second pusher batch."""
-        import datetime as dt
-
-        import pyspark.sql.functions as F
-
-        def ts(minute):
-            return dt.datetime(2024, 1, 1) + dt.timedelta(minutes=minute)
-
-        schema = "user_id long, ts timestamp"
-        batches = [
-            # b0: user 1 session opens [0, 40) — events at 0 and 10
-            [(1, ts(0)), (1, ts(10))],
-            # b1: event at 25 — 15 min after the session's last event,
-            # inside the 30-min gap: must merge, extending to [0, 55)
-            [(1, ts(25))],
-            # b2+b3: watermark pushers. After b2 the watermark computed
-            # from its data is ~399:50, but filtering in b3 is what
-            # first USES it (one-batch lag) — b3 closes/emits user 1's
-            # merged session and commits the watermark for b4
-            [(9, ts(400))],
-            [(9, ts(401))],
-            # b4: user 3's session window [1, 31) ends below the
-            # committed watermark -> dropped by the stream, kept by the
-            # batch reference
-            [(3, ts(1))],
-        ]
-        path = tmp_path / "sess_late"
-        path.mkdir()
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).repartition(1).write.parquet(
-                str(path / f"b{i}")
-            )
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(path / "b*"))
-        )
-        agg = (
-            src.withWatermark("ts", "10 seconds")
-            .groupBy(
-                "user_id",
-                F.session_window("ts", "30 minutes").alias("w"),
-            )
-            .agg(F.count("*").alias("n_events"), F.max("ts").alias("last"))
-        )
-        out = _run_stream(spark, agg, tmp_path, "sess_late_out", "append")
-        got = {
-            (r.user_id, r.w.start): r for r in out.collect() if r.user_id != 9
-        }
-        # the late arrival merged: ONE session for user 1, 3 events,
-        # window extended to last-event + gap
-        assert set(got) == {(1, ts(0))}
-        sess = got[(1, ts(0))]
-        assert sess.n_events == 3
-        assert sess.last == ts(25)
-        assert sess.w.end == ts(25 + 30)
-        # batch over the same rows keeps user 3; the stream dropped it
-        # below the watermark — assert the difference is exactly that row
-        batch_rows = [r for b in batches for r in b]
-        batch = (
-            spark.createDataFrame(batch_rows, schema)
-            .filter(F.col("user_id") != 9)
-            .groupBy(
-                "user_id",
-                F.session_window("ts", "30 minutes").alias("w"),
-            )
-            .agg(F.count("*").alias("n_events"))
-        )
-        want = {(r.user_id, r.w.start) for r in batch.collect()}
-        assert want - set(got) == {(3, ts(1))}
-        assert set(got) <= want
-
-
 class TestDropDuplicatesWithinWatermark:
     """Streaming dedup with bounded state: dropDuplicatesWithinWatermark
     keeps the dedup key only while it can still collide (the watermark

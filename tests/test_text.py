@@ -146,36 +146,6 @@ class TestIncrementalDedup:
         assert capped.count() == 0  # hot bucket excluded wholesale
 
 
-class TestVectorizedTopK:
-    def test_matches_jvm_brute_force(self, spark):
-        """The numpy-matmul path must agree exactly with the JVM fold path
-        (same rounding, same rank tie-breaks) on real driver embeddings."""
-        from pyspark.sql import functions as F
-
-        from borsa_spark.functions.similarity import (
-            brute_force_topk,
-            brute_force_topk_vectorized,
-        )
-        from borsa_spark.sources import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        )
-        c = emb.select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb")
-        )
-        jvm = {
-            (r.q_id, r.rank): (r.c_id, r.cosine_sim)
-            for r in brute_force_topk(q, c, k=5).collect()
-        }
-        vec = {
-            (r.q_id, r.rank): (r.c_id, r.cosine_sim)
-            for r in brute_force_topk_vectorized(q.toPandas(), c, k=5).collect()
-        }
-        assert jvm == vec
-
-
 class TestDupClusters:
     def test_chain_and_singletons(self, spark):
         from borsa_spark.functions import dedup as dd
@@ -336,36 +306,6 @@ class TestShingleHashModes:
         assert moved > 0
 
 
-class TestKMeansIvf:
-    def test_trained_centroids_drop_into_ivf(self, spark):
-        """kmeans_centroids output satisfies ivf_topk's (cid, cemb)
-        contract and returns full top-k for every query."""
-        from pyspark.sql import functions as F
-
-        from borsa_spark.functions.similarity import (
-            ivf_topk,
-            kmeans_assign,
-            kmeans_centroids,
-        )
-        from borsa_spark.sources import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        cents = kmeans_centroids(emb, k=4, iters=2)
-        assert cents.count() <= 4  # empty clusters may drop out
-        q = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        )
-        out = ivf_topk(emb, q, cents, k=3, n_probe=2)
-        got = {(r.q_id, r.rank): r.c_id for r in out.collect()}
-        assert len(got) == 9  # 3 queries x top-3
-
-        # every vector lands in exactly one cluster
-        assign = kmeans_assign(emb, cents)
-        n = emb.count()
-        assert assign.count() == n
-        assert assign.select("vec_id").distinct().count() == n
-
-
 class TestDupClustersRandomized:
     import pytest as _pytest
 
@@ -502,40 +442,6 @@ class TestMixtureAndSampling:
         total = sum(r.n_tokens for r in rows)
         for r in rows:
             assert abs(r.weight * r.n_tokens - total / len(rows)) < total * 1e-3
-
-
-class TestQuantizedCosine:
-    def test_recall_vs_full_precision(self, spark):
-        """int8-quantized top-5 must substantially agree with the exact
-        float top-5 on real driver embeddings (the quantization is 7-bit;
-        neighbors are not adversarially close)."""
-        from borsa_spark.queries import QUERIES
-
-        sf = "/root/testdata/sf0.001"
-        exact = QUERIES["f10_cosine_topk"](spark, sf).collect()
-        quant = QUERIES["f37_quantized_cosine_topk"](spark, sf).collect()
-        exact_sets: dict = {}
-        for r in exact:
-            exact_sets.setdefault(r.q_id, set()).add(r.c_id)
-        hits = total = 0
-        for r in quant:
-            total += 1
-            hits += r.c_id in exact_sets.get(r.q_id, set())
-        assert total > 0
-        assert hits / total >= 0.8  # >=80% top-5 recall
-
-    def test_quantized_scores_close_to_exact(self, spark):
-        from borsa_spark.queries import QUERIES
-
-        sf = "/root/testdata/sf0.001"
-        quant = {(r.q_id, r.c_id): r.approx_cos
-                 for r in QUERIES["f37_quantized_cosine_topk"](spark, sf).collect()}
-        exact = {(r.q_id, r.c_id): r.cosine_sim
-                 for r in QUERIES["f10_cosine_topk"](spark, sf).collect()}
-        common = set(quant) & set(exact)
-        assert common
-        for k in common:
-            assert abs(quant[k] - exact[k]) < 0.02  # 7-bit error envelope
 
 
 class TestSimhashInRow:

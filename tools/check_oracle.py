@@ -17,10 +17,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents"]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -82,8 +79,8 @@ def main():
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')"
             )
         except duckdb.Error:
-            # partial table sets (scale_data tiers carry only documents/
-            # embeddings) — queries touching a missing view fail loudly
+            # partial table sets (a tier may carry only documents) —
+            # queries touching a missing view fail loudly
             pass
 
     qs, oracles = m.queries(), m.oracle_sql()
