@@ -902,7 +902,7 @@ def a6_actions_dedup(spark, sf):
 )
 def a8_quotes_batch_failures(spark, sf):
     """A8 via the real quotes() router: batch lookup over a 3-provider
-    catalog; unknown symbols surface in the failures anti-join, found
+    catalog; unknown symbols surface in the failures list, found
     symbols carry the min-priority provider's latest price."""
     from pyspark.sql import Window as W
 
@@ -935,11 +935,7 @@ def a8_quotes_batch_failures(spark, sf):
         cat.register(fixture_source(f"prov{p}", quote=tbl))
     requested = ["click", "view", "purchase", "signup", "error",
                  "GHOST1", "GHOST2"]
-    # persist=True is the harness-owned-cache opt-in (round-10 flipped
-    # the router default to False): both outputs are consumed here and
-    # the bench/oracle harness releases caches after each query, so the
-    # single-scan plan (a8 plan guard) is safe to keep
-    best, failures = quotes_router(spark, cat, requested, persist=True)
+    best, failures = quotes_router(spark, cat, requested)
     ok = best.select(
         "symbol",
         F.round(F.col("price").cast("double"), 2).alias("price"),

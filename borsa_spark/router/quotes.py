@@ -60,7 +60,7 @@ def quote(
     ``strategy='priority'`` (PriorityWithFallback, core.rs:499-558) is the
     declarative path: highest-priority surviving provider row out of one
     union — over table sources the "try next on failure" loop collapses
-    into a window filter.
+    into a top-1 by priority, which plans without an exchange.
 
     ``strategy='latency'`` (R4, core.rs:560-616) is a wall-clock race:
     every eligible provider's fetch runs concurrently, each bounded by
@@ -79,12 +79,11 @@ def quote(
         return _quote_latency_race(
             spark, catalog, ctx, symbol, provider_timeout
         )
-    union = _quote_union(catalog, ctx).filter(F.col("symbol") == symbol)
-    w = Window.partitionBy("symbol").orderBy(F.col("priority").asc())
     return (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        _quote_union(catalog, ctx)
+        .filter(F.col("symbol") == symbol)
+        .orderBy("priority")
+        .limit(1)
     )
 
 
@@ -130,28 +129,18 @@ def quotes(
     catalog: Catalog,
     symbols: list[str],
     kind: str | None = None,
-    persist: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """A8: batch quotes -> (successes, failures). Failures are requested
-    symbols with no surviving row from any provider (quotes.rs:38-71) — an
-    anti-join, not an exception, preserving partial results.
+    symbols with no surviving row from any provider, in request order
+    (quotes.rs:38-71): a list, not an exception, preserving partial
+    results.
 
-    ``persist=True`` caches the <= len(symbols)-row winner relation so
-    the per-provider union executes once, not once per output (the
-    round-9 audit found 6 identical provider scans). The DEFAULT is
-    False (round-10 flip): each call's symbol list makes a distinct
-    plan, so a long-lived router process that never unpersists leaks
-    one cached relation per request — safety is the default, and a
-    caller that consumes both outputs under a harness-owned cache
-    lifetime (bench/oracle: `release_all_cached` per query) opts in to
-    the single-scan plan with persist=True.
-
-    What each output executes: ``best`` runs the provider union and the
-    per-symbol window. ``failures`` anti-joins the requested symbols, a
-    ``LocalRelation`` built through Arrow, against that same union, so
-    without ``persist`` it runs the union again. A REST provider is
-    fetched once per call, while the union is built; both outputs read
-    its rows as a ``LocalRelation``, and neither starts a Python worker."""
+    The call is eager: it runs the provider union and the per-symbol
+    window once, as one collect of at most ``len(symbols)`` rows, and
+    returns both outputs as ``LocalRelation``s built from those rows. It
+    caches nothing and starts no Python worker, and reading the outputs
+    does not run the union again. A REST provider is fetched once per
+    call, while the union is built."""
     if len(set(symbols)) != len(symbols):
         # duplicate-symbol validation (download.rs:10-26 applies the same rule)
         raise ValueError("duplicate symbols in batch quote request")
@@ -160,20 +149,17 @@ def quotes(
         F.col("symbol").isin(symbols)
     )
     w = Window.partitionBy("symbol").orderBy(F.col("priority").asc())
-    # best is <= len(symbols) rows and feeds BOTH outputs (the success
-    # set and the failure anti-join) — persist it or the whole
-    # per-provider union re-executes per consumer (round-9 audit: a8
-    # ran 6 identical provider scans, 3 providers x 2 consumers)
     best = (
         union.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if persist:
-        best = best.persist()
-    requested = _local_frame(spark, [(s,) for s in symbols], "symbol string")
-    failures = requested.join(best, "symbol", "left_anti")
-    return best, failures
+    won = best.toArrow()
+    quoted = set(won.column("symbol").to_pylist())
+    failures = _local_frame(
+        spark, [(s,) for s in symbols if s not in quoted], "symbol string"
+    )
+    return spark.createDataFrame(won, best.schema), failures
 
 
 def quote_or_raise(

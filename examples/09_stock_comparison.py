@@ -76,10 +76,7 @@ def main() -> None:
 
     print(f"# Comparing {', '.join(WATCHLIST)} — one plan, {len(WATCHLIST)} "
           "symbols\n")
-    # persist=True: both outputs are consumed below, and the example
-    # releases the cache at exit (round-10: the router default flipped
-    # to persist=False so long-lived services don't leak per request)
-    best, _failures = quotes(spark, cat, WATCHLIST, persist=True)
+    best, _failures = quotes(spark, cat, WATCHLIST)
     q = best.select("symbol", "price", "previous_close")
     cmp_df = (
         q.join(rt.earnings(cat, WATCHLIST)

@@ -1,9 +1,9 @@
 """22 — Multi quotes: batch quote fetch with partial-failure reporting
 (reference: borsa/examples/22_multi_quotes.rs).
 
-`quotes()` returns (successes, failures) as two DataFrames from ONE
-union plan — symbols no provider carries land in the failures
-anti-join instead of raising (A8 partial results).
+`quotes()` runs the provider union once and returns (successes,
+failures) as local frames — symbols no provider carries land in the
+failures list instead of raising (A8 partial results).
 
 Run: python examples/22_multi_quotes.py
 """
@@ -27,10 +27,7 @@ def main() -> None:
 
     requested = ["click", "purchase", "view", "NOPE", "ALSO_MISSING"]
     print(f"Fetching quotes for {requested}...")
-    # persist=True opts into the one-union plan the header describes;
-    # the default is persist=False (leak-safe for long-lived routers)
-    # and re-executes the union once per consumed output
-    ok, failed = quotes(spark, cat, requested, persist=True)
+    ok, failed = quotes(spark, cat, requested)
 
     print("\n## Successes")
     ok.select("symbol", "price", "currency", "provider").orderBy(

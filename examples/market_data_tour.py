@@ -243,8 +243,7 @@ def main() -> None:
 
     # 22_multi_quotes: batch with partial failure
     print("== 22 multi quotes (with one unknown symbol) ==")
-    ok, failed = quotes(spark, cat, ["click", "view", "GHOST"],
-                        persist=True)
+    ok, failed = quotes(spark, cat, ["click", "view", "GHOST"])
     ok.select("symbol", "price").show()
     print("failures:", [r.symbol for r in failed.collect()])
 

@@ -7,32 +7,28 @@ import pytest
 from pyspark.sql import SparkSession
 
 from borsa_spark import schemas
+from borsa_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("borsa_spark_tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # Round-11 flake fix (r10 verdict #1): the full suite runs
-        # ~10k Spark jobs through ONE shared session, and the late
-        # tests (test_pipeline_artifacts, stages 8-10k) flaked with
-        # shuffle-fetch/heap errors under the JVM DEFAULT 1g driver
-        # heap — block-manager metadata, shuffle state, and broadcast
-        # remnants accumulate faster than the ContextCleaner's
-        # GC-triggered weak refs fire (default periodicGC is 30min —
-        # longer than the suite). 8g of headroom plus a 5min forced
-        # cleaner GC keeps the shared-session tail stable; the
-        # per-module cache sweep below returns persisted blocks that a
-        # test forgot to free.
-        .config("spark.driver.memory", "8g")
-        .config("spark.cleaner.periodicGC.interval", "5min")
-        .getOrCreate()
+    s = get_spark(
+        "borsa_spark_tests",
+        extra_conf={
+            # Round-11 flake fix (r10 verdict #1): the full suite runs
+            # ~10k Spark jobs through ONE shared session, and the late
+            # tests (test_pipeline_artifacts, stages 8-10k) flaked with
+            # shuffle-fetch/heap errors under the JVM DEFAULT 1g driver
+            # heap — block-manager metadata, shuffle state, and broadcast
+            # remnants accumulate faster than the ContextCleaner's
+            # GC-triggered weak refs fire (default periodicGC is 30min —
+            # longer than the suite). 8g of headroom plus a 5min forced
+            # cleaner GC keeps the shared-session tail stable; the
+            # per-module cache sweep below returns persisted blocks that a
+            # test forgot to free.
+            "spark.driver.memory": "8g",
+            "spark.cleaner.periodicGC.interval": "5min",
+        },
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -44,7 +44,7 @@ class TestQueriesLeaveNoResidue:
     # minhash self-join (f7), clustering fixpoint (f17), cross-set
     # bands (f35), substring anchors (f61),
     # pair-restricted spans (f93), image band localCheckpoint (f90),
-    # bloom probe set (f76), router quote persist (a8), history e2e
+    # bloom probe set (f76), router batch quotes (a8), history e2e
     SWEEP = [
         "f7_minhash_dedup_pairs",
         "f17_dup_clusters",

@@ -372,6 +372,44 @@ class TestQuoteRouter:
         assert [r.symbol for r in best.collect()] == ["AAPL"]
         assert [r.symbol for r in failures.collect()] == ["GHOST"]
 
+    def test_batch_is_one_eager_run_that_caches_nothing(self, spark):
+        # A8 as a plain call: the union runs once inside quotes(), both
+        # outputs come back as local relations, and nothing stays cached.
+        cat = Catalog().register(
+            quote_source(spark, "provA", [quote_row("provA", "MSFT", 10)])
+        ).register(
+            quote_source(spark, "provB", [quote_row("provB", "AAPL", 20)])
+        )
+        sc = spark.sparkContext
+        cached = sc._jsc.getPersistentRDDs().size()
+        sc.setJobGroup("quotes_batch_jobs", "quotes_batch_jobs")
+        try:
+            best, failures = quotes(
+                spark, cat, ["ZZZ", "AAPL", "GHOST", "MSFT"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("quotes_batch_jobs")
+        assert 1 <= len(jobs) <= 2, jobs
+        assert sc._jsc.getPersistentRDDs().size() == cached
+        for df in (best, failures):
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert plan.startswith("LocalRelation"), plan
+        assert [r.symbol for r in failures.collect()] == ["ZZZ", "GHOST"]
+        assert {r.symbol: r.provider for r in best.collect()} == {
+            "AAPL": "provB", "MSFT": "provA"}
+
+    def test_single_quote_plans_no_exchange(self, spark):
+        cat = Catalog().register(
+            quote_source(spark, "provA", [quote_row("provA", "AAPL", 10)])
+        ).register(
+            quote_source(spark, "provB", [quote_row("provB", "AAPL", 20)])
+        )
+        one = quote(spark, cat, "AAPL")
+        plan = one._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert [r.provider for r in one.collect()] == ["provA"]
+
     def test_duplicate_symbols_rejected(self, spark):
         cat = Catalog().register(
             quote_source(spark, "provA", [quote_row("provA", "AAPL", 10)])

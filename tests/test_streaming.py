@@ -391,35 +391,6 @@ class TestOptionStream:
         assert sorted(r.seq for r in out.collect()) == list(range(7))
 
 
-class TestStreamingExactDedup:
-    def test_replays_dropped_within_watermark(self, spark, tmp_path):
-        import datetime as dt
-
-        from borsa_spark.streaming.fanin import streaming_exact_dedup
-
-        def ts(sec):
-            return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=sec)
-
-        rows = [
-            ("AAPL", ts(0), 10.0, 0),
-            ("AAPL", ts(0), 10.0, 1),   # exact replay -> dropped
-            ("AAPL", ts(5), 11.0, 2),
-            ("MSFT", ts(0), 20.0, 3),
-            ("MSFT", ts(0), 20.0, 4),   # replay -> dropped
-        ]
-        df = spark.createDataFrame(
-            rows, "symbol string, ts timestamp, price double, seq long"
-        )
-        path = str(tmp_path / "replays")
-        df.repartition(1).write.parquet(path)
-        src = spark.readStream.schema(df.schema).parquet(path)
-        deduped = streaming_exact_dedup(src, ["symbol", "ts", "price"])
-        out = _run_stream(spark, deduped, tmp_path, "dedup_out")
-        assert sorted((r.symbol, r.price) for r in out.collect()) == [
-            ("AAPL", 10.0), ("AAPL", 11.0), ("MSFT", 20.0),
-        ]
-
-
 class TestClockSkew:
     def test_per_symbol_clocks_do_not_interfere(self, spark, tmp_path):
         """router_stream_clock_skew.rs: symbols with wildly different clock
@@ -480,13 +451,15 @@ class TestRocksDBStateStore:
 
 
 class TestDropDuplicatesWithinWatermark:
-    """Streaming dedup with bounded state: dropDuplicatesWithinWatermark
-    keeps the dedup key only while it can still collide (the watermark
-    horizon) — the native form of the ingest path's md5 anti-join for
-    at-the-source tick dedup."""
+    """Streaming dedup with bounded state: ``streaming_exact_dedup`` keeps
+    the dedup key only while it can still collide (the watermark
+    horizon), so a replay is dropped within one micro-batch and across
+    micro-batches alike."""
 
     def test_in_window_duplicates_dropped(self, spark, tmp_path):
         import datetime as dt
+
+        from borsa_spark.streaming.fanin import streaming_exact_dedup
 
         schema = "symbol string, seq long, ts timestamp, price double"
 
@@ -508,8 +481,7 @@ class TestDropDuplicatesWithinWatermark:
             .option("maxFilesPerTrigger", "1")
             .parquet(str(path / "b*"))
         )
-        dedup = src.withWatermark("ts", "1 hour") \
-            .dropDuplicatesWithinWatermark(["symbol", "seq"])
+        dedup = streaming_exact_dedup(src, ["symbol", "seq"])
         out = _run_stream(spark, dedup, tmp_path, "ddw_out", "append")
         rows = out.collect()
         seqs = sorted((r.symbol, r.seq) for r in rows)
