@@ -7,8 +7,8 @@ from __future__ import annotations
 import importlib
 
 __all__ = [
-    "bpe", "classifier", "dedup", "flac", "gif", "jpeg", "langid",
-    "multimodal", "packing", "pipeline", "text",
+    "bpe", "classifier", "dedup", "gif", "jpeg", "langid", "multimodal",
+    "packing", "text",
 ]
 
 

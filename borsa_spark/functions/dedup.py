@@ -354,18 +354,7 @@ def minhash_signature_inrow(df: DataFrame, n: int = 3,
     )
 
 
-#: domain-separation constant for the SECOND band hash
-#: (`lsh_band_keys(with_key2=True)`): prefixing xxhash64's input with a
-#: distinct literal gives a second output that behaves independently of
-#: the primary key's in the heuristic random-oracle sense (not a
-#: provably independent family — see the lsh_band_keys docstring), so
-#: two different band tuples colliding on BOTH keys is ~2^-128 under
-#: that model — physically never
-_KEY2_SALT = 0x243F6A8885A308D3  # pi's hex digits; fits in int64
-
-
-def lsh_band_keys(sig: DataFrame, with_values: bool = False,
-                  with_key2: bool = False) -> DataFrame:
+def lsh_band_keys(sig: DataFrame, with_values: bool = False) -> DataFrame:
     """Explode signatures into (id, band, band_key) for the banded LSH join.
 
     The band key is xxhash64 over the band's row values — an 8-byte join
@@ -382,19 +371,7 @@ def lsh_band_keys(sig: DataFrame, with_values: bool = False,
     the cap BOTH legitimate buckets would be excluded — a collision
     REMOVING true pairs, the one direction the invariant above forbids
     (round-10 review). With exact-tuple counting the oracle SQL's string
-    keys and the engine's cap agree at any corpus size.
-
-    ``with_key2=True`` adds ``band_key2``, a SECOND 64-bit hash of the
-    same tuple. Honesty note: key2 is DOMAIN-SEPARATED xxhash64 (the
-    same mixer with a salt constant prefixed), not a hash from an
-    independent family — the ~2^-128 both-keys collision figure treats
-    the two outputs as independent, which domain separation gives
-    heuristically (standard practice, e.g. HMAC-style salting) but not
-    provably. PERSISTED band state uses it instead of band_vals:
-    counting cap occupancy by (band_key, band_key2) keeps stored rows
-    at 16 bytes while making a both-keys collision the only way two
-    buckets can merge — the round-11 verdict's streaming-ingest cap
-    fix."""
+    keys and the engine's cap agree at any corpus size."""
     bands = []
     for b in range(LSH_BANDS):
         cols = [F.col(f"h{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
@@ -404,11 +381,6 @@ def lsh_band_keys(sig: DataFrame, with_values: bool = False,
         ]
         if with_values:
             fields.append(F.array(*cols).alias("vals"))
-        if with_key2:
-            fields.append(
-                F.xxhash64(F.lit(_KEY2_SALT), F.lit(b), *cols)
-                .alias("key2")
-            )
         bands.append(F.struct(*fields))
     out_cols = [
         "id",
@@ -417,8 +389,6 @@ def lsh_band_keys(sig: DataFrame, with_values: bool = False,
     ]
     if with_values:
         out_cols.append(F.col("bk.vals").alias("band_vals"))
-    if with_key2:
-        out_cols.append(F.col("bk.key2").alias("band_key2"))
     return sig.select(
         "id", F.explode(F.array(*bands)).alias("bk")
     ).select(*out_cols)

@@ -1,26 +1,20 @@
-"""GIF (87a/89a) codec in pure Python + numpy — the last common
-web-crawl image format the multimodal layer lacked (BMP/PPM/PNG/JPEG
+"""GIF (87a/89a) still-image codec in pure Python + numpy — the last
+common web-crawl image format the multimodal layer lacked (BMP/PPM/PNG/JPEG
 already decode for real). Everything derives from the public GIF89a
 specification; no image library is consulted.
 
 Decoder scope: global and local color tables, real LZW decompression
 (variable code width 3-12 bits, LSB-first bit packing, clear/end codes,
 deferred-clear full-table handling), interlaced row ordering.
-`decode_gif` returns the FIRST image frame raw (the still-image path —
-transparency ignored, extensions skipped); `decode_gif_frames` is the
-ANIMATION path: full logical-screen compositing with Graphic Control
-Extension semantics — per-frame sub-rect placement, transparent-index
-skip, and disposal methods 0/1 (leave), 2 (restore region to the
-background color) and 3 (restore to the previous canvas). Malformed
-streams raise ValueError and route to the multimodal corrupt-fallback,
-never a silently wrong image.
+`decode_gif` returns the FIRST image frame raw (transparency ignored,
+extensions skipped). Malformed streams raise ValueError and route to the
+multimodal corrupt-fallback, never a silently wrong image.
 
 Encoder scope (fixtures/tests): builds a palette from the image's unique
 colors (<= 256, else ValueError) and emits a REAL LZW-compressed stream
 (dictionary growth, width bumps, clear-on-full) with optional interlace,
-so the decoder's dictionary arithmetic is exercised for real — the same
-philosophy as the FLAC fixture encoder (genuinely compressed,
-spec-conformant, never pass-through).
+so the decoder's dictionary arithmetic is exercised for real (genuinely
+compressed, spec-conformant, never pass-through).
 """
 
 from __future__ import annotations
@@ -213,143 +207,6 @@ def decode_gif(data: bytes) -> np.ndarray:
     raise ValueError("GIF missing image data")
 
 
-def decode_gif_frames(
-    data: bytes, max_frames: int | None = None
-) -> list[np.ndarray]:
-    """Animated GIF -> list of COMPOSITED logical-screen canvases, each
-    (screen_h, screen_w, 3) uint8 RGB — what a viewer shows after each
-    frame, not the raw sub-images. Implements the GIF89a Graphic Control
-    Extension: frames place at their (left, top) sub-rect; pixels equal
-    to the GCE transparent index leave the underlying canvas untouched;
-    disposal 0/1 leaves the canvas as drawn, disposal 2 restores the
-    frame's rect to the BACKGROUND color (the spec reading — browsers
-    render transparent there, but this layer has no alpha channel; the
-    choice is deterministic and documented), disposal 3 restores the
-    canvas to its pre-frame state. The canvas starts as the background
-    color (global-table backgroundIndex, else black). ``max_frames``
-    bounds work on hostile inputs. Malformed streams raise ValueError."""
-    if len(data) < 13 or data[:4] != b"GIF8" or data[4:6] not in (b"7a", b"9a"):
-        raise ValueError("not a GIF payload")
-    sw, sh, packed, bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
-    if sw == 0 or sh == 0:
-        raise ValueError("GIF zero-sized logical screen")
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(data[pos : pos + 3 * n], np.uint8)
-        if gct.size != 3 * n:
-            raise ValueError("GIF global color table truncated")
-        gct = gct.reshape(n, 3)
-        pos += 3 * n
-
-    background = (
-        gct[bg] if gct is not None and bg < gct.shape[0]
-        else np.zeros(3, np.uint8)
-    )
-    canvas = np.broadcast_to(background, (sh, sw, 3)).copy()
-    frames: list[np.ndarray] = []
-    # GCE state applies to the NEXT image only, then resets.
-    disposal, transparent = 0, None
-
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            if pos >= len(data):
-                raise ValueError("GIF extension truncated")
-            label = data[pos]
-            pos += 1
-            if label == 0xF9:  # Graphic Control Extension
-                if pos + 6 > len(data) or data[pos] != 4:
-                    raise ValueError("GIF GCE malformed")
-                gpacked, _delay, tindex = struct.unpack_from(
-                    "<BHB", data, pos + 1
-                )
-                disposal = (gpacked >> 2) & 0x07
-                transparent = tindex if gpacked & 0x01 else None
-                pos += 5
-            # skip (remaining) sub-blocks for any extension label
-            while pos < len(data) and data[pos] != 0:
-                pos += 1 + data[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02X}")
-        left, top, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
-        pos += 9
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            pal = np.frombuffer(data[pos : pos + 3 * n], np.uint8)
-            if pal.size != 3 * n:
-                raise ValueError("GIF local color table truncated")
-            pal = pal.reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF image has no color table")
-        if w == 0 or h == 0:
-            raise ValueError("GIF zero-sized image")
-        if left + w > sw or top + h > sh:
-            raise ValueError("GIF frame rect outside logical screen")
-        min_code_size = data[pos]
-        pos += 1
-        if not 2 <= min_code_size <= 11:
-            raise ValueError("GIF bad LZW minimum code size")
-        chunks = bytearray()
-        while pos < len(data) and data[pos] != 0:
-            ln = data[pos]
-            chunks += data[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = np.frombuffer(
-            _lzw_decode(bytes(chunks), min_code_size, w * h), np.uint8
-        )
-        if idx.size != w * h:
-            raise ValueError("GIF pixel data short")
-        opaque_max = int(
-            idx[idx != transparent].max(initial=0)
-            if transparent is not None else idx.max(initial=0)
-        )
-        if opaque_max >= pal.shape[0]:
-            raise ValueError("GIF pixel index outside color table")
-        rows = idx.reshape(h, w)
-        if ipacked & 0x40:  # interlaced
-            ordered = np.empty_like(rows)
-            src = 0
-            for off, step in _INTERLACE:
-                for y in range(off, h, step):
-                    ordered[y] = rows[src]
-                    src += 1
-            rows = ordered
-
-        saved = canvas.copy() if disposal == 3 else None
-        region = canvas[top : top + h, left : left + w]
-        if transparent is not None:
-            mask = rows != transparent
-            # palette-lookup only the opaque pixels (transparent index
-            # may lie outside the palette: legal, it's never rendered)
-            safe = np.where(mask, rows, 0)
-            region[mask] = pal[safe][mask]
-        else:
-            region[:] = pal[rows]
-        frames.append(canvas.copy())
-        if max_frames is not None and len(frames) >= max_frames:
-            return frames
-
-        if disposal == 2:
-            canvas[top : top + h, left : left + w] = background
-        elif disposal == 3:
-            canvas = saved
-        disposal, transparent = 0, None
-
-    if not frames:
-        raise ValueError("GIF missing image data")
-    return frames
-
-
 def encode_gif(px: np.ndarray, interlace: bool = False) -> bytes:
     """(h, w, 3) uint8 RGB -> GIF89a bytes. The palette is the image's
     unique colors (<= 256 required); the pixel stream is genuinely
@@ -392,101 +249,4 @@ def encode_gif(px: np.ndarray, interlace: bool = False) -> bytes:
         out.append(len(chunk))
         out += chunk
     out += b"\x00\x3b"
-    return bytes(out)
-
-
-def _pack24(rgb: np.ndarray) -> np.ndarray:
-    r = rgb.reshape(-1, 3).astype(np.int64)
-    return (r[:, 0] << 16) | (r[:, 1] << 8) | r[:, 2]
-
-
-def encode_gif_animation(
-    frames: list[dict],
-    screen: tuple[int, int] | None = None,
-    background: tuple[int, int, int] = (0, 0, 0),
-) -> bytes:
-    """Animated GIF89a fixture encoder — real GCEs, sub-rect frames,
-    transparency, disposal methods, genuine LZW per frame; exercises
-    everything `decode_gif_frames` composites. Each entry of ``frames``:
-
-        {"px": (h, w, 3) uint8, "left": int = 0, "top": int = 0,
-         "disposal": int = 0, "mask": optional (h, w) bool — False
-         pixels are written as the transparent index, "delay": int = 0
-         (centiseconds)}
-
-    ``screen`` is (width, height), default the max frame extent. The
-    GLOBAL palette is background + every opaque color (+ one reserved
-    transparent slot when any mask is present); > 256 raises."""
-    if not frames:
-        raise ValueError("encode_gif_animation wants >= 1 frame")
-    norm = []
-    for f in frames:
-        px = np.asarray(f["px"], np.uint8)
-        if px.ndim != 3 or px.shape[2] != 3:
-            raise ValueError("frame px must be (h, w, 3)")
-        mask = f.get("mask")
-        if mask is not None:
-            mask = np.asarray(mask, bool)
-            if mask.shape != px.shape[:2]:
-                raise ValueError("mask shape must match frame")
-        norm.append({
-            "px": px, "mask": mask,
-            "left": int(f.get("left", 0)), "top": int(f.get("top", 0)),
-            "disposal": int(f.get("disposal", 0)),
-            "delay": int(f.get("delay", 0)),
-        })
-    sw = max(f["left"] + f["px"].shape[1] for f in norm)
-    sh = max(f["top"] + f["px"].shape[0] for f in norm)
-    if screen is not None:
-        sw, sh = max(sw, screen[0]), max(sh, screen[1])
-
-    any_mask = any(f["mask"] is not None for f in norm)
-    opaque = [np.asarray(background, np.uint8).reshape(1, 3)]
-    for f in norm:
-        flat = f["px"].reshape(-1, 3)
-        if f["mask"] is not None:
-            flat = flat[f["mask"].reshape(-1)]
-        opaque.append(flat)
-    colors = np.unique(np.concatenate(opaque), axis=0)
-    n_needed = colors.shape[0] + (1 if any_mask else 0)
-    if n_needed > 256:
-        raise ValueError(f"encode_gif_animation: {n_needed} colors > 256")
-    t_index = colors.shape[0]  # reserved slot, color irrelevant
-    bits = 1
-    while (1 << bits) < n_needed:
-        bits += 1
-    bits = max(bits, 2)
-    table = np.zeros((1 << bits, 3), np.uint8)
-    table[: colors.shape[0]] = colors
-    keys = _pack24(colors)  # unique-sorted already (np.unique on rows)
-    bg_index = int(np.searchsorted(keys, _pack24(
-        np.asarray(background, np.uint8).reshape(1, 3))[0]))
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", sw, sh, 0x80 | (bits - 1), bg_index, 0)
-    out += table.tobytes()
-    for f in norm:
-        h, w = f["px"].shape[:2]
-        idx = np.searchsorted(keys, _pack24(f["px"])).astype(np.uint8)
-        has_t = f["mask"] is not None
-        if has_t:
-            idx = np.where(f["mask"].reshape(-1), idx, t_index).astype(
-                np.uint8
-            )
-        gpacked = (f["disposal"] << 2) | (1 if has_t else 0)
-        out += struct.pack(
-            "<BBBBHBB", 0x21, 0xF9, 4, gpacked, f["delay"],
-            t_index if has_t else 0, 0,
-        )
-        out += struct.pack(
-            "<BHHHHB", 0x2C, f["left"], f["top"], w, h, 0
-        )
-        out.append(bits)
-        lzw = _lzw_encode(idx.tobytes(), bits)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
-    out += b"\x3b"
     return bytes(out)

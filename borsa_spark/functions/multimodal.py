@@ -1,7 +1,7 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Image columns: media as opaque binary + typed metadata.
 
 Spark-side plumbing is REAL (schemas, Arrow-batched mapInPandas pipelines,
-partition sizing). The codec layer has one REAL path and one stub:
+partition sizing). The codec layer decodes images only:
 
 - Uncompressed 24-bit BMP, binary PPM (P6), and non-interlaced 8-bit PNG
   (gray/RGB/gray+alpha/RGBA; zlib inflate + full scanline unfilter,
@@ -12,28 +12,10 @@ partition sizing). The codec layer has one REAL path and one stub:
   T.81 — Huffman entropy decode, dequant, IDCT, YCbCr->RGB, 4:2:0/4:2:2
   subsampling, restart markers); progressive/arithmetic/12-bit reject to
   the corrupt-fallback path.
-- RIFF/WAVE PCM audio (8/16-bit, any channel count) decodes for real too
-  (`decode_wav`: chunk walk + numpy sample math), as does FLAC
-  (`functions/flac.py`: rice-coded fixed-predictor subframes, stereo
-  decorrelation, CRC-verified) — `audio_features` takes sample rate /
-  duration / rms from the bytes, decoder='wav'/'flac'.
-- Uncompressed AVI video decodes for real (`decode_avi`: RIFF walker +
-  DIB frame math); `video_frame_features` emits per-frame rows whose
-  pHashes drive video near-dup via the image band join.
-- Lossy audio (mp3 — ID3/frame-sync magic; ogg — OggS) would need
-  soundfile/ffmpeg for the SIGNAL, which this container lacks. Real
-  bytes in those formats are NEVER summarized with fabricated numbers:
-  when the container headers parse (`_lossy_header_info` — MPEG1/2/2.5
-  Layer III framing, Vorbis I / Opus id headers, final-page granule),
-  `audio_features` emits decoder='mp3-header'/'ogg-header' with the
-  REAL sample rate + duration estimate those headers carry and NULL
-  signal features; otherwise decoder='unsupported-lossy' with all
-  features NULL (sha256 stays real) so downstream can drop, not trust.
-  The deterministic
-  digest-derived stub (decoder='fake-deterministic') remains only for
-  unrecognized synthetic fixture bytes, or everywhere behind the opt-in
-  `fake_features=True` flag — same output schema either way, so swapping
-  in real codecs changes no plan shape.
+- A still GIF's first frame decodes through `functions/gif.py`.
+- Magic-matching but undecodable payloads are tagged 'corrupt-fallback';
+  unrecognized bytes get a deterministic digest-derived stub tagged
+  'fake-deterministic' — same output schema either way.
 
 Design for 100 TB of media:
 - payloads stay in `binary` columns; nothing ever collects to the driver;
@@ -42,9 +24,7 @@ Design for 100 TB of media:
   payloads (a 10 MB image at the default 10k rows/batch would be a 100 GB
   Arrow batch; `media_batch_conf` computes a sane value);
 - feature extraction emits SMALL typed rows (never re-emit the payload) so
-  downstream shuffles move features, not media;
-- frame sampling is metadata-only arithmetic (no decode) and explodes to one
-  row per frame JVM-side.
+  downstream shuffles move features, not media.
 """
 
 from __future__ import annotations
@@ -69,11 +49,6 @@ except Exception:  # noqa: BLE001
 IMAGE_FEATURES_SCHEMA = (
     "asset_id long, width int, height int, n_channels int, "
     "mean_luma double, sha256 string, decoder string"
-)
-
-AUDIO_FEATURES_SCHEMA = (
-    "asset_id long, sample_rate int, duration_ms long, rms double, "
-    "n_windows int, sha256 string, decoder string"
 )
 
 THUMBNAIL_SCHEMA = (
@@ -136,154 +111,6 @@ def autotune_arrow_batch(
     )
     assets.sparkSession.conf.set(ARROW_BATCH_KEY, str(rows))
     return rows
-
-
-def _is_lossy_audio(data: bytes) -> bool:
-    """True for real-world lossy audio containers we deliberately do NOT
-    decode (no codec libs in scope): mp3 — an ID3v2 tag or a bare MPEG
-    audio frame sync (11 set bits: 0xFF then 0xE0 mask; public ISO 11172-3
-    framing) — and ogg (RFC 3533 'OggS' capture pattern). These route to
-    decoder='unsupported-lossy' with NULL features so downstream never
-    consumes fabricated numbers for real recordings."""
-    if data[:3] == b"ID3" or data[:4] == b"OggS":
-        return True
-    return len(data) >= 2 and data[0] == 0xFF and (data[1] & 0xE0) == 0xE0
-
-
-_MP3_BR_V1L3 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                224, 256, 320, 0)
-_MP3_BR_V2L3 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128,
-                144, 160, 0)
-_MP3_SR = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000),
-           0: (11025, 12000, 8000)}
-
-
-def _mp3_header_info(data: bytes) -> tuple[int, int] | None:
-    """(sample_rate, est_duration_ms) from an MPEG Layer III frame
-    header (public ISO/IEC 11172-3 / 13818-3 framing; ID3v2.x tag
-    skipped via its synchsafe size). Header fields only — no audio
-    decode; duration is the CBR estimate bytes*8/bitrate. Strict by
-    design: reserved version/layer bits, 'free'/'bad' bitrate indexes,
-    or no sync in the first 4 KiB all return None so junk that merely
-    starts with an ID3 tag (the f70 policy fixtures) is never
-    summarized."""
-    off = 0
-    if data[:3] == b"ID3":
-        if len(data) < 10 or any(b & 0x80 for b in data[6:10]):
-            return None
-        off = 10 + (
-            (data[6] << 21) | (data[7] << 14) | (data[8] << 7) | data[9]
-        )
-    end = min(len(data) - 4, off + 4096)
-    for i in range(off, end + 1):
-        if data[i] != 0xFF or (data[i + 1] & 0xE0) != 0xE0:
-            continue
-        b1, b2 = data[i + 1], data[i + 2]
-        ver = (b1 >> 3) & 3
-        layer = (b1 >> 1) & 3
-        if ver == 1 or layer != 1:  # reserved version / not Layer III
-            continue
-        bi, si = (b2 >> 4) & 15, (b2 >> 2) & 3
-        if not 0 < bi < 15 or si > 2:
-            continue
-        kbps = (_MP3_BR_V1L3 if ver == 3 else _MP3_BR_V2L3)[bi]
-        sr = _MP3_SR[ver][si]
-        return sr, (len(data) - i) * 8 // kbps
-    return None
-
-
-def _ogg_header_info(data: bytes) -> tuple[int, int] | None:
-    """(sample_rate, est_duration_ms) from Ogg page headers (RFC 3533)
-    holding a Vorbis I or Opus (RFC 7845) identification header.
-    Header fields only: sample rate from the id header on the BOS
-    page, duration from the LAST page's granule position (total PCM
-    samples for Vorbis; 48 kHz units for Opus). No audio decode."""
-    if data[:4] != b"OggS" or len(data) < 28 or data[4] != 0:
-        return None
-    if not data[5] & 0x02:  # first page must be beginning-of-stream
-        return None
-    nseg = data[26]
-    body = 27 + nseg
-    if len(data) < body:
-        return None
-    payload = data[body:body + sum(data[27:body])]
-    if payload[:7] == b"\x01vorbis" and len(payload) >= 16:
-        sr = int.from_bytes(payload[12:16], "little")
-        unit = sr
-    elif payload[:8] == b"OpusHead" and len(payload) >= 16:
-        sr = int.from_bytes(payload[12:16], "little") or 48_000
-        unit = 48_000
-    else:
-        return None
-    if sr <= 0:
-        return None
-    last = data.rfind(b"OggS")
-    granule = 0
-    if last >= 0 and len(data) >= last + 14:
-        granule = max(
-            0, int.from_bytes(data[last + 6:last + 14], "little",
-                              signed=True)
-        )
-    return sr, granule * 1000 // unit
-
-
-def encode_mp3_header_stub(pad: int, bitrate_index: int = 9,
-                           sr_index: int = 0) -> bytes:
-    """Fixture builder (the encode_wav convention): an empty ID3v2.4
-    tag + one valid MPEG1 Layer III frame header + ``pad`` zero bytes.
-    The header fields are real and parse under `_mp3_header_info`; the
-    audio payload is silence-shaped filler, which is exactly why
-    `audio_features` reports header metadata only, never signal
-    features, for this format."""
-    hdr = bytes([0xFF, 0xFB, (bitrate_index << 4) | (sr_index << 2), 0])
-    return b"ID3\x04\x00\x00\x00\x00\x00\x00" + hdr + b"\x00" * pad
-
-
-def _ogg_page(header_type: int, granule: int, payload: bytes) -> bytes:
-    lacing = bytes([len(payload)]) if payload else b""
-    return (
-        b"OggS\x00" + bytes([header_type])
-        + granule.to_bytes(8, "little")
-        + b"\x01\x00\x00\x00" + b"\x00\x00\x00\x00"
-        + b"\x00\x00\x00\x00"
-        + bytes([1 if payload else 0]) + lacing + payload
-    )
-
-
-def encode_ogg_header_stub(codec: str, sample_rate: int,
-                           granule: int) -> bytes:
-    """Fixture builder: a BOS page carrying a real Vorbis I / Opus id
-    header plus an EOS page whose granule position encodes the stream
-    length — the two pages `_ogg_header_info` reads. No audio pages."""
-    if codec == "vorbis":
-        ident = (
-            b"\x01vorbis" + (0).to_bytes(4, "little")
-            + bytes([1]) + sample_rate.to_bytes(4, "little")
-            + b"\x00" * 12 + b"\x66" + b"\x01"
-        )
-    elif codec == "opus":
-        ident = (
-            b"OpusHead" + bytes([1, 1]) + (0).to_bytes(2, "little")
-            + sample_rate.to_bytes(4, "little")
-            + (0).to_bytes(2, "little") + bytes([0])
-        )
-    else:
-        raise ValueError(codec)
-    return _ogg_page(0x02, 0, ident) + _ogg_page(0x04, granule, b"")
-
-
-def _lossy_header_info(data: bytes) -> tuple[str, int, int] | None:
-    """(decoder_tag, sample_rate, duration_ms) for lossy audio whose
-    CONTAINER HEADERS parse cleanly — honest metadata extracted from
-    the real bytes without pretending to decode the audio — else
-    None (the row stays 'unsupported-lossy')."""
-    got = _mp3_header_info(data)
-    if got is not None:
-        return ("mp3-header", *got)
-    got = _ogg_header_info(data)
-    if got is not None:
-        return ("ogg-header", *got)
-    return None
 
 
 def _fake_dims(digest: bytes) -> tuple[int, int, int]:
@@ -616,94 +443,6 @@ def _gray_gif(data: bytes) -> np.ndarray:
     return decode_gif(data).astype(np.float64).mean(axis=2) / 255.0
 
 
-def _wav_pcm_ints(data: bytes) -> tuple[int, int, np.ndarray, float]:
-    """Shared RIFF/WAVE walk: (sample_rate, n_channels, interleaved
-    INTEGER samples int32 — int16 values for 16-bit, (u8 - 128) for
-    8-bit — truncated to whole frames, full_scale divisor). The integer
-    domain is what `audio_dhash`'s exact-arithmetic envelope needs;
-    `decode_wav` normalizes by full_scale for its float rms."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = None
-    pcm = None
-    while pos + 8 <= len(data):
-        ctype = data[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", data, pos + 4)
-        body = data[pos + 8 : pos + 8 + length]
-        if len(body) < length:
-            raise ValueError("truncated WAV chunk")
-        if ctype == b"fmt ":
-            if length < 16:
-                raise ValueError("short WAV fmt chunk")
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif ctype == b"data":
-            pcm = body
-        pos += 8 + length + (length & 1)  # chunks pad to even offsets
-    if fmt is None or pcm is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_format, n_channels, sample_rate, _, block_align, bits = fmt
-    if audio_format != 1 or bits not in (8, 16):
-        raise ValueError(
-            f"unsupported WAV (format={audio_format}, bits={bits})"
-        )
-    if n_channels < 1 or sample_rate <= 0:
-        raise ValueError("invalid WAV fmt values")
-    if block_align != n_channels * (bits // 8):
-        raise ValueError("inconsistent WAV block alignment")
-    if bits == 16:
-        n = len(pcm) // 2
-        x = np.frombuffer(pcm, dtype="<i2", count=n).astype(np.int32)
-        full_scale = 32768.0
-    else:
-        x = np.frombuffer(pcm, dtype=np.uint8).astype(np.int32) - 128
-        full_scale = 128.0
-    n_frames = len(x) // n_channels
-    if n_frames == 0:
-        raise ValueError("empty WAV data")
-    return sample_rate, n_channels, x[: n_frames * n_channels], full_scale
-
-
-def decode_wav(data: bytes) -> tuple[int, int, int, int, float]:
-    """Decode a RIFF/WAVE PCM payload: (sample_rate, n_channels,
-    n_frames, duration_ms, rms). Stdlib-only: RIFF chunk walk, fmt
-    parse, 8-bit unsigned / 16-bit signed PCM sample math in numpy.
-    rms is over all channels, normalized to [0, 1] full scale.
-    Compressed/float formats and other bit depths raise ValueError
-    (-> deterministic-fallback path downstream), never silent noise."""
-    sample_rate, n_channels, ints, full_scale = _wav_pcm_ints(data)
-    x = ints.astype(np.float64) / full_scale
-    n_frames = len(x) // n_channels
-    rms = float(np.sqrt(np.mean(x * x)))
-    duration_ms = n_frames * 1000 // sample_rate
-    return sample_rate, n_channels, n_frames, int(duration_ms), rms
-
-
-def encode_wav(
-    samples: np.ndarray, sample_rate: int = 16_000
-) -> bytes:
-    """Fixture encoder: float samples in [-1, 1] (1-D mono or (frames,
-    channels)) -> 16-bit PCM RIFF/WAVE — the test/oracle side of
-    `decode_wav`."""
-    arr = np.asarray(samples, dtype=np.float64)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    n_channels = arr.shape[1]
-    pcm = (
-        np.clip(arr, -1.0, 1.0 - 1.0 / 32768) * 32768.0
-    ).astype("<i2").tobytes()
-    fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, sample_rate,
-        sample_rate * n_channels * 2, n_channels * 2, 16,
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(pcm)) + pcm
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 def encode_bmp(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
     """Fixture encoder: solid-color uncompressed 24-bit bottom-up BMP with
     correct row padding — the test/oracle side of `decode_bmp`."""
@@ -804,101 +543,6 @@ def image_features(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
     )
 
 
-def audio_features(
-    assets: DataFrame,
-    window_ms: int = 25,
-    auto_batch: bool = True,
-    fake_features: bool = False,
-) -> DataFrame:
-    """Audio feature rows: REAL decode for RIFF/WAVE PCM payloads
-    (8/16-bit, any channel count — `decode_wav`, decoder='wav', with
-    sample rate / duration / rms taken from the BYTES, metadata columns
-    ignored as a real pipeline must) and FLAC (decoder='flac'). Lossy
-    formats we cannot decode (mp3 — ID3 tag or MPEG frame sync; ogg —
-    OggS capture pattern) are NEVER summarized with fabricated numbers:
-    they emit decoder='unsupported-lossy' with NULL sample_rate /
-    duration_ms / rms / n_windows (sha256 stays real, so dedup and
-    provenance still work), and downstream filters can drop them rather
-    than trust made-up features. A WAV/FLAC-magic payload that fails to
-    parse degrades to 'corrupt-fallback' rather than killing the job.
-    Unrecognized bytes (synthetic test fixtures, not a known audio
-    container) keep the deterministic hash-derived stub tagged
-    decoder='fake-deterministic'; passing ``fake_features=True`` (an
-    opt-in FIXTURE flag, never for real data) extends that stub to the
-    lossy formats for deterministic-pipeline tests. ``auto_batch`` sizes
-    the Arrow batch from a sampled payload probe (see image_features)."""
-    if auto_batch:
-        autotune_arrow_batch(assets)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                data = bytes(row.payload) if row.payload is not None else b""
-                digest = hashlib.sha256(data).digest()
-                # nullable integer columns surface as NaN floats in pandas
-                dur = 0 if pd.isna(row.duration_ms) else int(row.duration_ms)
-                sr = 16_000 if pd.isna(row.sample_rate) else int(row.sample_rate)
-                if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-                    try:
-                        sr, _ch, _fr, dur, rms = decode_wav(data)
-                        dec = "wav"
-                    except (ValueError, struct.error):
-                        rms = int.from_bytes(digest[:4], "big") / 0xFFFFFFFF
-                        dec = "corrupt-fallback"
-                elif data[:4] == b"fLaC":
-                    try:
-                        from borsa_spark.functions.flac import decode_flac
-
-                        x, sr, fbps = decode_flac(data)
-                        full = float(1 << (fbps - 1))
-                        xf = x.astype(np.float64) / full
-                        rms = float(np.sqrt(np.mean(xf * xf)))
-                        dur = int(x.shape[0] * 1000 // sr)
-                        dec = "flac"
-                    except (ValueError, struct.error):
-                        rms = int.from_bytes(digest[:4], "big") / 0xFFFFFFFF
-                        dec = "corrupt-fallback"
-                elif not fake_features and _is_lossy_audio(data):
-                    # Real bytes in a format we can't decode. If the
-                    # container HEADERS parse, emit the honest metadata
-                    # they carry (sample rate, CBR/granule duration
-                    # estimate) with NULL signal features; otherwise a
-                    # pure NULL-feature marker row. Never fabricated
-                    # numbers either way.
-                    hdr = _lossy_header_info(data)
-                    if hdr is not None:
-                        tag, hsr, hdur = hdr
-                        out.append(
-                            (row.asset_id, hsr, hdur, None, None,
-                             digest.hex(), tag)
-                        )
-                    else:
-                        out.append(
-                            (row.asset_id, None, None, None, None,
-                             digest.hex(), "unsupported-lossy")
-                        )
-                    continue
-                else:
-                    rms = int.from_bytes(digest[:4], "big") / 0xFFFFFFFF
-                    dec = "fake-deterministic"
-                out.append(
-                    (row.asset_id, sr, dur, rms, max(0, dur // window_ms),
-                     digest.hex(), dec)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "sample_rate", "duration_ms", "rms",
-                    "n_windows", "sha256", "decoder",
-                ],
-            )
-
-    return assets.select(
-        "asset_id", "payload", "duration_ms", "sample_rate"
-    ).mapInPandas(fn, schema=AUDIO_FEATURES_SCHEMA)
-
-
 def resize_images(
     assets: DataFrame, width: int, height: int, auto_batch: bool = True
 ) -> DataFrame:
@@ -957,222 +601,6 @@ def resize_images(
 
     return assets.select("asset_id", "payload").mapInPandas(
         fn, schema=THUMBNAIL_SCHEMA
-    )
-
-
-def decode_avi(data: bytes) -> tuple[np.ndarray, int]:
-    """Decode an uncompressed RGB AVI (RIFF 'AVI ', '00db' DIB frames):
-    (frames (n, h, w, 3) uint8 top-down RGB, fps). The DIB frames follow
-    BMP conventions — bottom-up rows, BGR, 4-byte row padding. Compressed
-    streams (any non-zero biCompression / '00dc'-only movi) and malformed
-    headers raise ValueError (-> corrupt-fallback downstream)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-
-    def walk(buf: bytes, pos: int, end: int):
-        while pos + 8 <= end:
-            ctype = buf[pos : pos + 4]
-            (length,) = struct.unpack_from("<I", buf, pos + 4)
-            body_start = pos + 8
-            if body_start + length > end:
-                raise ValueError("truncated AVI chunk")
-            yield ctype, body_start, length
-            pos = body_start + length + (length & 1)
-
-    width = height = None
-    fps = 0
-    frames: list[np.ndarray] = []
-    stride = None
-
-    def parse_list(pos: int, end: int) -> None:
-        nonlocal width, height, fps, stride
-        for ctype, start, length in walk(data, pos, end):
-            if ctype == b"LIST":
-                parse_list(start + 4, start + length)
-            elif ctype == b"avih":
-                if length < 40:
-                    raise ValueError("short AVI main header")
-                (us_per_frame,) = struct.unpack_from("<I", data, start)
-                fps = round(1_000_000 / us_per_frame) if us_per_frame else 0
-            elif ctype == b"strf" and width is None:
-                # BITMAPINFOHEADER of the first video stream
-                if length < 40:
-                    continue
-                w, h = struct.unpack_from("<ii", data, start + 4)
-                (bpp,) = struct.unpack_from("<H", data, start + 14)
-                (compression,) = struct.unpack_from("<I", data, start + 16)
-                if bpp != 24 or compression != 0:
-                    raise ValueError(
-                        f"unsupported AVI (bpp={bpp}, "
-                        f"compression={compression})"
-                    )
-                width, height = w, abs(h)
-                stride = (width * 3 + 3) & ~3
-            elif ctype in (b"00db", b"00dc"):
-                if ctype == b"00dc":
-                    raise ValueError("compressed AVI frames unsupported")
-                if width is None or stride is None:
-                    raise ValueError("AVI frame before stream format")
-                if length < stride * height:
-                    raise ValueError("truncated AVI frame")
-                rows = np.frombuffer(
-                    data, np.uint8, stride * height, start
-                ).reshape(height, stride)[:, : width * 3]
-                bgr = rows.reshape(height, width, 3)[::-1]  # bottom-up
-                frames.append(bgr[:, :, ::-1].copy())  # BGR -> RGB
-
-    parse_list(12, len(data))
-    if width is None or not frames:
-        raise ValueError("AVI missing video stream/frames")
-    return np.stack(frames), fps
-
-
-def encode_avi(frames: np.ndarray, fps: int = 10) -> bytes:
-    """Fixture encoder: (n, h, w, 3) uint8 top-down RGB -> uncompressed
-    AVI ('00db' DIB frames, bottom-up BGR, padded rows) — the test/
-    oracle side of `decode_avi`."""
-    frames = np.asarray(frames, dtype=np.uint8)
-    n, h, w, _ = frames.shape
-    stride = (w * 3 + 3) & ~3
-
-    def chunk(ctype: bytes, payload: bytes) -> bytes:
-        pad = b"\x00" if len(payload) & 1 else b""
-        return ctype + struct.pack("<I", len(payload)) + payload + pad
-
-    def lst(kind: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", kind + payload)
-
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // max(1, fps), 0, 0, 0x10, n, 0, 1, 0, w, h,
-        0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"DIB ", 0, 0, 0, 0, 1, max(1, fps), 0, n,
-        stride * h, 0, 0, 0, 0, w, h,
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 0, 0, 0, 0
-    )
-    movi_frames = []
-    for f in frames:
-        bgr = f[:, :, ::-1][::-1]  # RGB -> BGR, top-down -> bottom-up
-        rows = np.zeros((h, stride), dtype=np.uint8)
-        rows[:, : w * 3] = bgr.reshape(h, w * 3)
-        movi_frames.append(chunk(b"00db", rows.tobytes()))
-    body = (
-        lst(b"hdrl", chunk(b"avih", avih)
-            + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-        + lst(b"movi", b"".join(movi_frames))
-    )
-    return chunk(b"RIFF", b"AVI " + body)
-
-
-VIDEO_FRAME_PHASH_SCHEMA = (
-    "asset_id long, frame_idx int, width int, height int, "
-    "frame_luma double, phash long, decoder string"
-)
-
-
-def video_frame_features(
-    assets: DataFrame, every_n: int = 1, auto_batch: bool = True
-) -> DataFrame:
-    """REAL video frame extraction + per-frame features: one row per
-    sampled frame (every ``every_n``-th) with dimensions, mean luma and
-    the 64-bit perceptual hash — the decode stage `sample_video_frames`'
-    docstring promises, for the one container-decodable format
-    (uncompressed AVI). Frame pHashes feed `phash_near_pairs` unchanged,
-    which makes VIDEO near-dup detection (same clip re-encoded shifted /
-    re-muxed) a first-class pipeline: hash frames, band-join, count
-    matching frames per video pair. Animated GIFs (a real web-crawl
-    "video" format) go through `decode_gif_frames` — every sampled row
-    is the COMPOSITED logical-screen canvas (disposal + transparency
-    applied), decoder='gif', so a GIF re-encode of an AVI clip pairs
-    with it frame-for-frame. Other payloads emit one deterministic fake
-    row (decoder='fake-deterministic'); corrupt AVIs/GIFs degrade to
-    'corrupt-fallback' — the job never dies inside the UDF."""
-    if auto_batch:
-        autotune_arrow_batch(assets)
-    step = max(1, every_n)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from borsa_spark.functions.gif import decode_gif_frames
-
-        def emit_frames(asset_id, frames_list, dec, out):
-            for i in range(0, len(frames_list), step):
-                g = frames_list[i].astype(np.float64).mean(axis=2) / 255.0
-                bits = phash64(g)
-                if bits >= 1 << 63:
-                    bits -= 1 << 64
-                out.append((
-                    asset_id, i, g.shape[1], g.shape[0],
-                    float(g.mean()), bits, dec,
-                ))
-
-        for pdf in batches:
-            out = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                digest = hashlib.sha256(data).digest()
-                if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-                    try:
-                        frames, _fps = decode_avi(data)
-                        emit_frames(asset_id, list(frames), "avi", out)
-                        continue
-                    except (ValueError, struct.error):
-                        dec = "corrupt-fallback"
-                elif data[:4] == b"GIF8":
-                    try:
-                        emit_frames(
-                            asset_id, decode_gif_frames(data), "gif", out
-                        )
-                        continue
-                    except (ValueError, struct.error):
-                        dec = "corrupt-fallback"
-                else:
-                    dec = "fake-deterministic"
-                w, h, _ = _fake_dims(digest)
-                bits = int.from_bytes(digest[:8], "big")
-                if bits >= 1 << 63:
-                    bits -= 1 << 64
-                out.append((
-                    asset_id, 0, w, h,
-                    sum(digest[:16]) / (16 * 255.0), bits, dec,
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "frame_idx", "width", "height",
-                    "frame_luma", "phash", "decoder",
-                ],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        fn, schema=VIDEO_FRAME_PHASH_SCHEMA
-    )
-
-
-def sample_video_frames(
-    assets: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """One row per sampled frame timestamp — metadata-only, fully JVM-side
-    (sequence + explode); the actual frame decode would hang off this plan
-    as a mapInPandas stage exactly like image_features."""
-    n = (F.coalesce(F.col("duration_ms"), F.lit(0)) / every_ms).cast("int")
-    return (
-        assets.filter(F.col("modality") == "video")
-        .select(
-            "asset_id",
-            F.explode(
-                F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)))
-            ).alias("frame_idx"),
-        )
-        .select(
-            "asset_id",
-            "frame_idx",
-            (F.col("frame_idx") * every_ms).cast("long").alias("frame_ts_ms"),
-        )
     )
 
 
@@ -1388,7 +816,7 @@ def _band_near_pairs(
     in BOTH copies).
 
     The band relation is a handful of ints per asset but its LINEAGE is
-    the full decode (MapInPandas over raw image/frame bytes). A lazy
+    the full decode (MapInPandas over raw image bytes). A lazy
     self-join therefore executes that decode once per join side — at
     crawl scale decode dominates, so doubling it is the scale bug (the
     f8 persist lesson). localCheckpoint(eager=True) materializes the
@@ -1397,7 +825,7 @@ def _band_near_pairs(
 
     ``max_bucket_size`` is the hot-bucket guard ported from
     `dedup.minhash_candidates`: real crawls are full of constant-color
-    images and flat video frames, which dHash/pHash map to IDENTICAL
+    images, which dHash/pHash map to IDENTICAL
     band keys (all-zero rows), so one bucket can hold millions of ids
     and the candidate join goes O(n²) exactly on production inputs.
     Buckets above the cap are EXCLUDED FROM CANDIDATES, not sampled —
@@ -1441,7 +869,7 @@ def _band_near_pairs(
 def band_oversized_buckets(
     bk: DataFrame, max_bucket_size: int
 ) -> DataFrame:
-    """The accounting side of the image/video band guard: (band,
+    """The accounting side of the image band guard: (band,
     band_key, n_assets) for every band bucket the cap excluded — the
     `dedup.oversized_buckets` contract over a (id, band, band_key)
     relation (use `phash_band_keys` / `dhash_band_keys` to build one
@@ -1554,9 +982,8 @@ def phash_near_pairs(
     whose every shared band is oversized — by construction those live in
     giant near-identical cohorts better served by exact dedup.
     ``bytes_per_band``: the wide-band density lever (phash_band_keys) —
-    at crawl density prefer 2 (the video path's frame hashes are full
-    of near-constant frames, the dHash scale drill's saturation
-    case)."""
+    at crawl density prefer 2 (near-constant images are the dHash
+    scale drill's saturation case)."""
     max_hamming, max_bucket_size, bytes_per_band = _resolve_band_profile(
         profile, max_hamming, max_bucket_size, bytes_per_band
     )
@@ -1660,71 +1087,6 @@ def dhash_band_keys(dh: DataFrame, rows_per_band: int = 1) -> DataFrame:
     ).select(
         "id", "bands",
         F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"),
-    )
-
-
-def audio_dhash(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
-    """(asset_id, bands array<int>, decoder): EXACT-ARITHMETIC envelope
-    difference hash for audio — `image_dhash`'s contract over a
-    waveform. The first channel's |integer PCM| is summed over 72
-    equal-length blocks (q = n_frames // 72 frames each, tail
-    ignored; integer sums — no float in the hash path, so every bit is
-    SQL-stateable through the REAL RIFF/WAVE decode); bit x of band y =
-    1 iff block_sum[y*9 + x + 1] > block_sum[y*9 + x] — the 8x9
-    block-mean grid of the image form flattened onto the time axis.
-    The output schema IS `image_dhash`'s, so the whole guarded band
-    machinery (`dhash_near_pairs`, wide bands, `max_bucket_size`,
-    `band_oversized_buckets`) applies to audio near-dup verbatim:
-    re-encoded or lightly edited audio lands within a small hamming,
-    constant tones hash to all-zero bands (route through the cap to
-    exact dedup, exactly like flat images).
-
-    Payloads that do not decode (non-WAV magic handled by the usual
-    tag contract) or carry fewer than 72 frames degrade to the sha256
-    fallback: 'corrupt-fallback' when RIFF-magic'd, else
-    'fake-deterministic'."""
-    import pandas as pd
-
-    if auto_batch:
-        autotune_arrow_batch(assets)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                is_wav = (
-                    len(data) >= 12
-                    and data[:4] == b"RIFF" and data[8:12] == b"WAVE"
-                )
-                try:
-                    if not is_wav:
-                        raise ValueError("no RIFF/WAVE magic")
-                    _, n_ch, ints, _ = _wav_pcm_ints(data)
-                    ch0 = np.abs(ints[::n_ch]).astype(np.int64)
-                    q = len(ch0) // 72
-                    if q == 0:
-                        raise ValueError("under 72 frames")
-                    sums = ch0[: 72 * q].reshape(72, q).sum(axis=1)
-                    bands = []
-                    for y in range(8):
-                        b = 0
-                        for x in range(8):
-                            if sums[y * 9 + x + 1] > sums[y * 9 + x]:
-                                b |= 1 << x
-                        bands.append(b)
-                    dec = "wav"
-                except (ValueError, struct.error):
-                    digest = hashlib.sha256(data).digest()
-                    bands = list(digest[:8])
-                    dec = _fallback_tag("wav" if is_wav else None)
-                out.append((asset_id, bands, dec))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "bands", "decoder"]
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        fn, schema="asset_id long, bands array<int>, decoder string"
     )
 
 

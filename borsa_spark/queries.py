@@ -3320,29 +3320,6 @@ def f47_pii_scrub(spark, sf):
     return _tx.pii_scrub(load_table(spark, sf, "documents"))
 
 
-def _register_ingest():
-    from borsa_spark.streaming.ingest import admission_frame, sql_ingest_admission
-
-    @query("f48_ingest_admission", sql_ingest_admission("doc_id % 2 = 0"))
-    def f48_ingest_admission(spark, sf):
-        """The streaming dedup-admission pipeline's decision, oracle-faced:
-        odd doc_ids arrive as a crawl batch against a corpus pre-seeded
-        with the evens; admitted iff first-of-md5 within the batch, text
-        absent from the corpus, and no verified cross-set near-dup at 0.5
-        (f35's exact pair semantics). The stateful multi-batch form lives
-        in streaming/ingest.py `DedupIngest` (tests/test_ingest.py drives
-        it over a live foreachBatch stream + crash-replay scenarios)."""
-        docs = load_table(spark, sf, "documents")
-        # max_bucket_size=None is EXPLICIT: this oracle replays the
-        # uncapped cross-set pairs (the round-10 flip made the capped
-        # form the library default)
-        return admission_frame(docs, lambda c: c % 2 == 0, threshold=0.5,
-                               max_bucket_size=None)
-
-
-_register_ingest()
-
-
 @query(
     "f49_bpe_pair_counts",
     """
@@ -3541,98 +3518,6 @@ def f54_training_order(spark, sf):
     )
 
 
-@query("c3_artifact_survivors", _F33_SQL)
-def c3_artifact_survivors(spark, sf):
-    """The corpus-prep CHECKPOINT path, oracle-faced: build the
-    `CorpusArtifacts` parquet stages (shingle arrays -> signatures ->
-    LSH-verified pairs -> star-contraction clusters, marker-last commits)
-    in a scratch workdir, then serve survivor selection from the STORED
-    clusters. Must hash-match f33 — the same rule computed by the
-    self-contained query — proving the materialize/reload round-trip
-    loses nothing (schemas, hash domains, cluster labels all survive
-    parquet). Scale notes live with the module (functions/pipeline.py);
-    this entry exists so the driver witnesses the checkpoint path, not
-    just the in-session one."""
-    import tempfile
-
-    from borsa_spark.functions.pipeline import CorpusArtifacts
-
-    docs = load_table(spark, sf, "documents")
-    with tempfile.TemporaryDirectory() as work:
-        art = CorpusArtifacts(spark, work)
-        art.build(docs)
-        out = art.survivors(docs)
-        out = spark.createDataFrame(out.collect(), out.schema)
-    return out
-
-
-@query(
-    "f58_audio_features",
-    """
-    SELECT doc_id AS asset_id,
-           8000::BIGINT AS sample_rate,
-           ((800 + (doc_id % 5) * 400) / 8)::BIGINT AS duration_ms,
-           round(floor((1 + doc_id % 9) / 10.0 * 32768) / 32768, 6) AS rms,
-           (((800 + (doc_id % 5) * 400) / 8) / 25)::BIGINT AS n_windows,
-           'wav' AS decoder
-    FROM documents
-    """,
-)
-def f58_audio_features(spark, sf):
-    """Multimodal audio: REAL RIFF/WAVE PCM decode end-to-end (f16's
-    pattern for the audio path). Synthesizes one 16-bit PCM WAV per
-    document — a square wave whose amplitude (1+doc_id%9)/10 and frame
-    count 800+(doc_id%5)*400 derive from doc_id alone — runs
-    `decode_wav` inside `audio_features`'s mapInPandas stage, and checks
-    (sample_rate, duration, rms, window count, decoder) against an
-    ANALYTIC oracle computed from doc_id, never the bytes. The rms is
-    EXACT: a quantized square wave's rms is floor(a*32768)/32768, so a
-    decoder that misreads the fmt chunk, block alignment, or sample
-    encoding fails the hash-match. Metadata columns are deliberately
-    absent — the decode must take everything from the payload.
-
-    Scale shape: same as f16 — payloads live in a binary column, Arrow
-    batches stream through mapInPandas, features leave the executor as
-    small typed rows; nothing collects."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                a = (1 + did % 9) / 10.0
-                n = 800 + (did % 5) * 400
-                wave = np.where(np.arange(n) % 2 == 0, a, -a)
-                out.append((did, mm.encode_wav(wave, 8000)))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(
-        gen, "asset_id long, payload binary"
-    ).select(
-        "asset_id", "payload",
-        F.lit(None).cast("long").alias("duration_ms"),
-        F.lit(None).cast("int").alias("sample_rate"),
-    )
-    feats = mm.audio_features(assets)
-    return feats.select(
-        "asset_id",
-        F.col("sample_rate").cast("long").alias("sample_rate"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        F.round("rms", 6).alias("rms"),
-        F.col("n_windows").cast("long").alias("n_windows"),
-        "decoder",
-    )
-
-
 @query(
     "f59_jpeg_features",
     """
@@ -3705,85 +3590,6 @@ def f59_jpeg_features(spark, sf):
 
 
 @query(
-    "f60_video_frame_features",
-    """
-    WITH f AS (
-      SELECT doc_id, unnest(range(0, 2 + doc_id % 4)) AS frame_idx
-      FROM documents)
-    SELECT doc_id AS asset_id,
-           frame_idx::BIGINT AS frame_idx,
-           (4 + doc_id % 13)::BIGINT AS width,
-           (4 + doc_id % 7)::BIGINT  AS height,
-           round((((doc_id + frame_idx) % 256)
-                  + ((doc_id * 7 + frame_idx * 11) % 256)
-                  + ((doc_id * 13 + frame_idx * 17) % 256))
-                 / 3.0 / 255.0, 4) AS frame_luma,
-           'avi' AS decoder
-    FROM f
-    """,
-)
-def f60_video_frame_features(spark, sf):
-    """Multimodal video: REAL frame extraction end-to-end. Synthesizes
-    one uncompressed AVI per document (2 + doc_id%4 solid-color DIB
-    frames whose RGB derives from (doc_id, frame_idx) alone), decodes it
-    with the pure-Python RIFF walker inside `video_frame_features`'s
-    mapInPandas stage, and checks (frame count, dims, per-frame luma,
-    decoder) against an ANALYTIC oracle from doc_id — EXACT values, the
-    format is lossless. A decoder that misreads the bottom-up row order,
-    BGR channel order, row padding, or chunk walk fails the hash-match.
-    The same operator's per-frame pHash column (not oracled here — flat
-    frames hash to 0 by construction) feeds `phash_near_pairs` to pair
-    near-duplicate VIDEOS by matching frame hashes.
-
-    Scale shape: same as f16/f59 — Arrow-batched binary in, small typed
-    frame rows out; a frame row never carries pixels."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 4 + did % 7
-                n = 2 + did % 4
-                frames = np.stack([
-                    np.tile(
-                        np.array(
-                            [
-                                (did + i) % 256,
-                                (did * 7 + i * 11) % 256,
-                                (did * 13 + i * 17) % 256,
-                            ],
-                            dtype=np.uint8,
-                        ),
-                        (h, w, 1),
-                    )
-                    for i in range(n)
-                ])
-                out.append((did, mm.encode_avi(frames, fps=10)))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(gen, "asset_id long, payload binary")
-    feats = mm.video_frame_features(assets)
-    return feats.select(
-        "asset_id",
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.round("frame_luma", 4).alias("frame_luma"),
-        "decoder",
-    )
-
-
-@query(
     "f61_substring_spans",
     """
     WITH words AS (
@@ -3836,68 +3642,6 @@ def f61_substring_spans(spark, sf):
         F.col("start_a").cast("long").alias("start_a"),
         F.col("start_b").cast("long").alias("start_b"),
         F.col("len_tokens").cast("long").alias("len_tokens"),
-    )
-
-
-@query(
-    "f62_flac_features",
-    """
-    SELECT doc_id AS asset_id,
-           8000::BIGINT AS sample_rate,
-           ((800 + (doc_id % 5) * 400) / 8)::BIGINT AS duration_ms,
-           round(floor((1 + doc_id % 9) / 10.0 * 32768) / 32768, 6) AS rms,
-           'flac' AS decoder
-    FROM documents
-    """,
-)
-def f62_flac_features(spark, sf):
-    """Multimodal audio, compressed: REAL FLAC decode end-to-end
-    (functions/flac.py — rice-coded fixed-predictor subframes, CRC-8/16
-    verified). EXACTLY f58's analytic oracle: the same quantized square
-    waves, FLAC-encoded instead of WAV — lossless means the decoded rms
-    is floor(a*32768)/32768 to the bit, so this query and f58 sharing
-    one oracle IS the compression-transparency proof (a rice/predictor/
-    CRC bug surfaces as an rms hash-mismatch or a loud decode error).
-
-    Scale shape: same as f58 — compressed binary in via Arrow batches,
-    one small typed row out per asset."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-    from borsa_spark.functions.flac import encode_flac
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                a = (1 + did % 9) / 10.0
-                q = int(a * 32768)  # same quantized level as f58's int16
-                n = 800 + (did % 5) * 400
-                wave = np.where(np.arange(n) % 2 == 0, q, -q)
-                out.append((did, encode_flac(wave, 8000, blocksize=512)))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(
-        gen, "asset_id long, payload binary"
-    ).select(
-        "asset_id", "payload",
-        F.lit(None).cast("long").alias("duration_ms"),
-        F.lit(None).cast("int").alias("sample_rate"),
-    )
-    feats = mm.audio_features(assets)
-    return feats.select(
-        "asset_id",
-        F.col("sample_rate").cast("long").alias("sample_rate"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        F.round("rms", 6).alias("rms"),
-        "decoder",
     )
 
 
@@ -4045,158 +3789,6 @@ def f68_winnow_pairs(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     return winnow_pairs(docs, k=3, w=4, min_shared=2, max_fp_df=50)
-
-
-@query(
-    "f69_gif_animation_features",
-    """
-    WITH g AS (
-      SELECT doc_id,
-             32 * (doc_id % 8) AS g0,
-             50 * (doc_id % 5) AS g1,
-             40 * (doc_id % 6) AS g2
-      FROM documents)
-    SELECT doc_id AS asset_id, t.frame_idx::INT AS frame_idx,
-           8 AS width, 6 AS height, 'gif' AS decoder,
-           CASE t.frame_idx
-             WHEN 0 THEN 48 * g0
-             WHEN 1 THEN 42 * g0 + 6 * g1
-             ELSE        36 * g0 + 12 * g2
-           END::BIGINT AS luma_sum
-    FROM g CROSS JOIN (VALUES (0), (1), (2)) AS t(frame_idx)
-    """,
-)
-def f69_gif_animation_features(spark, sf):
-    """Multimodal video, animated GIF: REAL GCE compositing end-to-end
-    (functions/gif.py `decode_gif_frames` — sub-rect placement,
-    transparent-index skip, disposal restore-to-previous) through
-    `video_frame_features`, against an ANALYTIC integer oracle. Per doc,
-    a 3-frame 8x6 animation derived from doc_id alone: frame 0 a
-    full-screen gray g0; frame 1 a 4x3 rect at (2,1) in g1 under a
-    checkerboard transparency mask (6 of 12 cells opaque) with disposal
-    3; frame 2 a 4x3 rect at (0,0) in g2 whose rect OVERLAPS frame 1's.
-    The per-frame pixel sums are therefore exact integers — 48*g0,
-    42*g0 + 6*g1, 36*g0 + 12*g2 — and the third only holds if disposal
-    3 actually restored the canvas (a leave-as-drawn bug yields
-    28*g0 + 4*g1 + ... through the overlap; a transparency bug breaks
-    frame 1's 42/6 split). The integer-sum convention (luma * n_px *
-    255, rounded to BIGINT) removes the cross-engine float-rounding
-    surface entirely.
-
-    Scale shape: f60's — payload bytes through Arrow `mapInPandas`,
-    per-file decode work, one small typed row per composited frame."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-    from borsa_spark.functions.gif import encode_gif_animation
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-    mask = (np.add.outer(np.arange(3), np.arange(4)) % 2) == 0
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g0, g1, g2 = 32 * (did % 8), 50 * (did % 5), 40 * (did % 6)
-                payload = encode_gif_animation(
-                    [
-                        {"px": np.full((6, 8, 3), g0, np.uint8),
-                         "disposal": 1},
-                        {"px": np.full((3, 4, 3), g1, np.uint8),
-                         "left": 2, "top": 1, "mask": mask, "disposal": 3},
-                        {"px": np.full((3, 4, 3), g2, np.uint8)},
-                    ],
-                    background=(0, 0, 0),
-                )
-                out.append((did, payload))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(gen, "asset_id long, payload binary")
-    feats = mm.video_frame_features(assets, every_n=1)
-    return feats.select(
-        "asset_id", "frame_idx", "width", "height", "decoder",
-        F.round(F.col("frame_luma") * (48 * 255)).cast("long")
-        .alias("luma_sum"),
-    )
-
-
-@query(
-    "f70_lossy_audio_policy",
-    """
-    SELECT doc_id AS asset_id,
-           CASE WHEN doc_id % 3 = 0 THEN 8000 END::BIGINT AS sample_rate,
-           CASE WHEN doc_id % 3 = 0
-                THEN (800 + (doc_id % 5) * 400) / 8 END::BIGINT
-             AS duration_ms,
-           CASE WHEN doc_id % 3 = 0
-                THEN round(floor((1 + doc_id % 9) / 10.0 * 32768) / 32768, 6)
-           END AS rms,
-           CASE WHEN doc_id % 3 = 0 THEN 'wav'
-                ELSE 'unsupported-lossy' END AS decoder
-    FROM documents
-    """,
-)
-def f70_lossy_audio_policy(spark, sf):
-    """The round-7 honesty contract as an oracle-gated query: a mixed
-    audio corpus — one third real WAV (f58's analytic square waves),
-    one third mp3-magic bytes (ID3 tag), one third ogg-magic bytes
-    (OggS) — through `audio_features`. WAV rows must carry the EXACT
-    bytes-derived features; lossy rows must carry decoder=
-    'unsupported-lossy' with NULL sample_rate/duration/rms — the oracle
-    hash-match fails if the engine ever again fabricates numbers for
-    real lossy payloads (the pre-r7 digest-stub behavior) or
-    misclassifies the magic.
-
-    Scale shape: f58's — binary in via Arrow batches, one typed row per
-    asset, NULL features carry no compute."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                kind = did % 3
-                if kind == 0:
-                    a = (1 + did % 9) / 10.0
-                    n = 800 + (did % 5) * 400
-                    wave = np.where(np.arange(n) % 2 == 0, a, -a)
-                    payload = mm.encode_wav(wave, 8000)
-                elif kind == 1:
-                    payload = b"ID3\x04\x00" + did.to_bytes(8, "big") * 4
-                else:
-                    payload = b"OggS\x00" + did.to_bytes(8, "big") * 4
-                out.append((did, payload))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(
-        gen, "asset_id long, payload binary"
-    ).select(
-        "asset_id", "payload",
-        F.lit(None).cast("long").alias("duration_ms"),
-        F.lit(None).cast("int").alias("sample_rate"),
-    )
-    feats = mm.audio_features(assets)
-    return feats.select(
-        "asset_id",
-        F.col("sample_rate").cast("long").alias("sample_rate"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        F.round("rms", 6).alias("rms"),
-        "decoder",
-    )
 
 
 @query("f72_paragraph_dedup", None)
@@ -4347,79 +3939,6 @@ def f78_bigram_backoff_score(spark, sf):
 
     docs = load_table(spark, sf, "documents")
     return bigram_backoff_scores(docs, F.col("doc_id") % 4 != 0)
-
-
-@query(
-    "f79_lossy_header_metadata",
-    """
-    SELECT doc_id AS asset_id,
-           CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 8000
-                ELSE 16000 END::BIGINT AS sample_rate,
-           CASE doc_id % 3 WHEN 0 THEN (104 + doc_id % 50) * 8 // 128
-                WHEN 1 THEN 100 * (1 + doc_id % 5)
-                ELSE 100 * (1 + doc_id % 7) END::BIGINT AS duration_ms,
-           CASE doc_id % 3 WHEN 0 THEN 'mp3-header'
-                ELSE 'ogg-header' END AS decoder
-    FROM documents
-    """,
-)
-def f79_lossy_header_metadata(spark, sf):
-    """The lossy-audio policy's honest upgrade (multimodal.py
-    `_lossy_header_info`): when mp3 / ogg CONTAINER HEADERS parse, the
-    engine reports the real metadata they carry — sample rate from the
-    MPEG1-L3 / Vorbis / Opus id header, duration from the CBR byte
-    estimate or the final Ogg page's granule position — with NULL
-    signal features (still never fabricated). The oracle states every
-    expected value ANALYTICALLY from the fixture construction (the f69
-    pattern): a wrong bitrate table, a mis-skipped ID3 tag, or a
-    granule misread all hash-mismatch. f70's junk-bytes fixtures still
-    land on 'unsupported-lossy' — strict parsing is part of the
-    contract.
-
-    Scale shape: f58's — binary in via Arrow batches, header-only
-    byte math per asset, one typed row out."""
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                kind = did % 3
-                if kind == 0:
-                    payload = mm.encode_mp3_header_stub(100 + did % 50)
-                elif kind == 1:
-                    payload = mm.encode_ogg_header_stub(
-                        "vorbis", 8000, 800 * (1 + did % 5)
-                    )
-                else:
-                    payload = mm.encode_ogg_header_stub(
-                        "opus", 16_000, 4800 * (1 + did % 7)
-                    )
-                out.append((did, payload))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(
-        gen, "asset_id long, payload binary"
-    ).select(
-        "asset_id", "payload",
-        F.lit(None).cast("long").alias("duration_ms"),
-        F.lit(None).cast("int").alias("sample_rate"),
-    )
-    feats = mm.audio_features(assets)
-    return feats.select(
-        "asset_id",
-        F.col("sample_rate").cast("long").alias("sample_rate"),
-        F.col("duration_ms").cast("long").alias("duration_ms"),
-        "decoder",
-    )
 
 
 @query("f80_bpe_train")
@@ -4940,132 +4459,6 @@ def f91_image_band_guard(spark, sf):
     # counts, so the band width is pinned via the exhaustive profile
     return mm.dhash_near_pairs(
         dh, max_hamming=6, max_bucket_size=10, profile="exhaustive"
-    ).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("hamming").cast("long").alias("hamming"),
-    )
-
-
-@query(
-    "f92_audio_envelope_pairs",
-    """
-    WITH g AS (
-      SELECT doc_id,
-             doc_id % 5 = 0 AS textured,
-             CASE WHEN doc_id % 10 = 5 THEN doc_id - 5
-                  ELSE doc_id END AS base,
-             (doc_id % 10 = 5) AS pert
-      FROM documents),
-    amps AS (
-      SELECT doc_id,
-             list_transform(range(0, 72), b ->
-               CASE WHEN NOT textured THEN 77
-                    WHEN pert AND b = 0
-                    THEN (((((base*37 + 97) * (base*37 + 97)) % 65536)
-                           * (((base*37 + 97) * (base*37 + 97)) % 65536)
-                           >> 7) + 7) % 256
-                    ELSE ((((base*37 + (b+1)*97)
-                            * (base*37 + (b+1)*97)) % 65536)
-                          * (((base*37 + (b+1)*97)
-                              * (base*37 + (b+1)*97)) % 65536)
-                          >> 7) % 256
-               END) AS a
-      FROM g),
-    bands AS (
-      SELECT doc_id, t.y AS band,
-             list_sum(list_transform(range(0, 8), x ->
-               CASE WHEN a[t.y*9 + x + 2] > a[t.y*9 + x + 1]
-                    THEN 1 << x ELSE 0 END))::BIGINT AS key
-      FROM amps, unnest(range(0, 8)) AS t(y)),
-    wide AS (
-      SELECT a1.doc_id, a1.band // 2 AS wband,
-             a1.key + 256 * a2.key AS wkey
-      FROM bands a1 JOIN bands a2
-        ON a2.doc_id = a1.doc_id AND a2.band = a1.band + 1
-      WHERE a1.band % 2 = 0),
-    cnt AS (
-      SELECT wband, wkey, count(*) AS n FROM wide GROUP BY 1, 2),
-    keep AS (
-      SELECT w.doc_id, w.wband, w.wkey
-      FROM wide w JOIN cnt ON cnt.wband = w.wband AND cnt.wkey = w.wkey
-      WHERE cnt.n <= 10),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM keep a JOIN keep b
-        ON a.wband = b.wband AND a.wkey = b.wkey
-        AND a.doc_id < b.doc_id),
-    ham AS (
-      SELECT c.id_a, c.id_b,
-             sum(bit_count(xor(ba.key, bb.key)))::BIGINT AS hamming
-      FROM cand c
-      JOIN bands ba ON ba.doc_id = c.id_a
-      JOIN bands bb ON bb.doc_id = c.id_b AND bb.band = ba.band
-      GROUP BY 1, 2)
-    SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3
-    """,
-)
-def f92_audio_envelope_pairs(spark, sf):
-    """Audio near-dup detection with REAL decode in the loop
-    (multimodal.py `audio_dhash` + the SHARED guarded band machinery):
-    the image family's round-9 scale shape — wide 16-bit bands
-    (rows_per_band=2, the round-9 drill's scale path), hot-bucket cap
-    10, pigeonhole max_hamming=3 — applied to waveforms. One 16-bit
-    PCM WAV per document: 80% constant tones (every |sample| equal →
-    envelope blocks equal → all-zero bands, the crawl-degenerate flat
-    cohort the cap must exclude), 20% 'textured' — 72 blocks of 25
-    frames whose per-block amplitude a_b = the f90/f91 double-squared
-    analytic (a_b/256 full scale quantizes to EXACTLY a_b*128 int16,
-    so the integer block sums are 25*128*a_b and every dHash bit is
-    SQL-stateable through the REAL RIFF walk + int16 parse); docs with
-    doc_id % 10 = 5 carry a COPY of base doc_id-5's waveform with one
-    block's amplitude bumped — hamming <= 1, band 0 bit 0 — the
-    re-encode/light-edit shape. A decoder that misreads block
-    alignment, channel interleave, or sample signedness, a banding
-    that breaks the wide-key composition, or a cap applied on one side
-    only hash-mismatches.
-
-    Scale shape: identical to f91 — Arrow-batched decode emits 8 ints
-    per asset, the band relation localCheckpoints once, the only
-    shuffle is the wide-band equi-join, and the cap's count agg
-    broadcasts (<= 4x65536 buckets)."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # NOT widened (round-13 interleaved A/B: min 2.28 s unwidened vs
-    # 3.72 s widened, every pair agreeing) — unlike f90's image gen,
-    # the WAV encode is cheap per row and the query's wall lives in
-    # the decode+band join below, so the widen exchange + 32-worker
-    # Arrow fan-out costs more than the single-task gen it removes
-    docs = load_table(spark, sf, "documents").select("doc_id")
-
-    def gen(batches):
-        sign = np.where(np.arange(1800) % 2 == 0, 1.0, -1.0)
-        flat = mm.encode_wav(sign * (77.0 / 256.0), 8000)
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 5 != 0:
-                    out.append((did, flat))
-                    continue
-                base = did - 5 if did % 10 == 5 else did
-                b = np.arange(72, dtype=np.int64)
-                h = base * 37 + (b + 1) * 97
-                g = (h * h) % 65536
-                a = ((g * g) >> 7) % 256
-                if did % 10 == 5:
-                    a[0] = (int(a[0]) + 7) % 256
-                wave = sign * (np.repeat(a, 25) / 256.0)
-                out.append((did, mm.encode_wav(wave, 8000)))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(gen, "asset_id long, payload binary")
-    dh = mm.audio_dhash(assets)
-    return mm.dhash_near_pairs(
-        dh, max_hamming=3, max_bucket_size=10, rows_per_band=2
     ).select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),

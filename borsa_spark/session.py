@@ -16,6 +16,9 @@
   timestamps are UTC epoch seconds and the DuckDB oracle compares UTC-naive.
 - Arrow on: every Pandas-UDF boundary (stateful gate, minhash, multimodal)
   moves columnar batches, not pickled rows.
+- The driver heap defaults to half the memory the process may use: the
+  cgroup v2 ``memory.max`` when it holds a number, capped by physical
+  memory. ``SPARK_GRAFT_DRIVER_MEM`` (e.g. ``2g``) overrides it.
 - On a real cluster the same builder is used with `master` unset (picked up
   from spark-submit) — nothing here is local-mode specific except defaults.
 """
@@ -25,6 +28,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+def _default_driver_memory() -> str:
+    """Half of the host's usable memory, in megabytes, as a Spark size."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+    except OSError:
+        limit = ""
+    if limit.isdigit():  # "max" means no limit
+        usable = min(usable, int(limit))
+    return f"{max(1, usable // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -43,7 +58,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1,16 +1,11 @@
-"""29 — Multimodal codecs: every common format decoded for REAL with
+"""29 — Image codecs: every common image format decoded for REAL with
 zero external dependencies (no reference analog — borsa has no media
 path; this is the training-data-pipeline side of the engine).
 
 BMP, PPM, PNG (zlib inflate + full scanline unfilter), baseline JPEG
-(Huffman + IDCT + YCbCr), RIFF/WAVE PCM audio, and uncompressed AVI
-video all decode in pure Python + numpy inside Arrow-batched
-mapInPandas stages. The demo builds one asset of each kind, extracts
-features, pHashes the images, and pairs two near-duplicate videos by
-their frame hashes. Animated GIFs decode as a VIDEO format (round 7):
-GCE compositing — disposal methods + transparency — yields one
-composited canvas row per frame, and real lossy audio (mp3/ogg) gets
-the honest `unsupported-lossy` NULL-feature marker instead of numbers.
+(Huffman + IDCT + YCbCr) and still GIF (LZW) all decode in pure Python
++ numpy inside Arrow-batched mapInPandas stages. The demo builds one
+asset of each kind, extracts features and pHashes the images.
 
 Run: python examples/29_multimodal_codecs.py
 """
@@ -26,10 +21,7 @@ import numpy as np  # noqa: E402
 
 from borsa_spark import schemas  # noqa: E402
 from borsa_spark.functions import multimodal as mm  # noqa: E402
-from borsa_spark.functions.gif import (  # noqa: E402
-    encode_gif,
-    encode_gif_animation,
-)
+from borsa_spark.functions.gif import encode_gif  # noqa: E402
 from borsa_spark.functions.jpeg import encode_jpeg  # noqa: E402
 from borsa_spark.session import get_spark  # noqa: E402
 
@@ -42,10 +34,6 @@ def main() -> None:
     img = np.stack([sm, sm * 0.7 + 30, 255 - sm], axis=2)
     img = img.clip(0, 255).astype(np.uint8)
 
-    t = np.arange(8000)
-    wav = mm.encode_wav(0.3 * np.sin(2 * np.pi * 220 * t / 8000), 8000)
-    clip = np.stack([np.roll(img, s, axis=0) for s in (0, 4, 8)])
-
     rows = [
         (1, "image", "image/bmp", mm.encode_bmp(6, 4, (200, 40, 40)),
          None, None, None, None, None),
@@ -54,34 +42,14 @@ def main() -> None:
          None, None),
         (3, "image", "image/jpeg", encode_jpeg(img, quality=90),
          None, None, None, None, None),
-        (4, "audio", "audio/wav", wav, None, None, None, None, None),
-        (5, "video", "video/avi", mm.encode_avi(clip, fps=10),
-         None, None, None, None, None),
         # GIF needs a palette: quantize the gradient to <= 64 colors
-        (6, "image", "image/gif", encode_gif(img // 64 * 64),
-         None, None, None, None, None),
-        # animated GIF: 3 frames with disposal + transparency — decodes
-        # as VIDEO (one composited-canvas row per frame)
-        (7, "video", "image/gif", encode_gif_animation([
-            {"px": np.full((6, 8, 3), 60, np.uint8), "disposal": 1},
-            {"px": np.full((3, 4, 3), 200, np.uint8), "left": 2, "top": 1,
-             "mask": np.indices((3, 4)).sum(0) % 2 == 0, "disposal": 3},
-            {"px": np.full((3, 4, 3), 255, np.uint8)},
-        ]), None, None, None, None, None),
-        # real-world lossy audio: honest marker, never fabricated numbers
-        (8, "audio", "audio/mpeg", b"ID3\x04\x00fake-id3-payload",
+        (4, "image", "image/gif", encode_gif(img // 64 * 64),
          None, None, None, None, None),
     ]
     assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
 
     print("== image features (real decode per magic bytes) ==")
     mm.image_features(assets).orderBy("asset_id").show(truncate=False)
-
-    print("== audio features (rms/duration from the bytes) ==")
-    mm.audio_features(assets.filter("modality = 'audio'")).show()
-
-    print("== per-frame video features ==")
-    mm.video_frame_features(assets.filter("modality = 'video'")).show()
 
     # PNG and JPEG of the SAME pixels: pHash lands within near-dup range
     ph = {r.asset_id: r.phash for r in mm.image_phash(assets).collect()}

@@ -73,23 +73,7 @@ def main() -> None:
     QUERIES["f34_mixture_weights"](spark, SF) \
         .orderBy(F.col("weight").desc()).show(5)
 
-    # 6. production checkpoints: build the shared dedup relations ONCE
-    # (parquet + marker-last), admit a later batch incrementally, and
-    # serve survivor selection from the stored clusters
-    import tempfile
-
-    from borsa_spark.functions.pipeline import CorpusArtifacts
-
-    with tempfile.TemporaryDirectory() as work:
-        art = CorpusArtifacts(spark, f"{work}/corpus")
-        first = docs.filter(F.col("doc_id") % 3 != 0)
-        later = docs.filter(F.col("doc_id") % 3 == 0)
-        print("== artifact build (first batch) ==", art.build(first))
-        print("== incremental admission ==", art.extend(later))
-        print("== survivors from stored clusters ==")
-        art.survivors(docs).orderBy("component").show(5)
-
-    # 7. admission + ordering (queries f53/f54): blocklist density gate
+    # 6. admission + ordering (queries f53/f54): blocklist density gate
     # at scan speed, then the seeded shuffle that fixes training order
     print("== blocklist verdicts ==")
     QUERIES["f53_blocklist_filter"](spark, SF) \
@@ -98,7 +82,7 @@ def main() -> None:
     QUERIES["f54_training_order"](spark, SF) \
         .orderBy("position").show(5)
 
-    # 8. round-6 quality + fingerprinting: repetition signals rank the
+    # 7. round-6 quality + fingerprinting: repetition signals rank the
     # spammiest docs; winnowing fingerprints give the position-robust
     # near-dup signature at 1/w the shingle storage; stratified_sample
     # rebalances the language mix deterministically
@@ -115,7 +99,7 @@ def main() -> None:
               .withColumnRenamed("count", "after"), "lang") \
         .orderBy("lang").show()
 
-    # 9. round-7 crawl family: paragraph-level dedup accounting, the
+    # 8. round-7 crawl family: paragraph-level dedup accounting, the
     # corpus-self-trained LM quality score, DSIR importance weights +
     # the deterministic Gumbel-top-k selection they feed, and the
     # Bloom-prefiltered (exact-semantics) decontamination
@@ -140,7 +124,7 @@ def main() -> None:
     bloom_decontaminate(docs, F.col("id") % 7 == 0, n=8) \
         .orderBy(F.desc("n_shared")).show(5)
 
-    # 10. both halves of the CCNet quality filter: the trained
+    # 9. both halves of the CCNet quality filter: the trained
     # discriminative classifier (f77) and the Stupid Backoff LM whose
     # held-out docs pay the backoff penalty on unseen bigrams (f78)
     from borsa_spark.functions.classifier import hashed_logreg_scores
@@ -153,7 +137,7 @@ def main() -> None:
     tx.bigram_backoff_scores(docs, F.col("doc_id") % 4 != 0) \
         .orderBy("avg_logscore").show(5)
 
-    # 11. train a BPE tokenizer ON the corpus (one scan; every merge
+    # 10. train a BPE tokenizer ON the corpus (one scan; every merge
     # round touches only the distinct-word relation), then score each
     # doc by how well the learned merges compress it — poor compression
     # means far from the training distribution (f80/f81)

@@ -134,7 +134,6 @@ class TestMinhashCapDefaults:
 
     def test_signature_defaults_flipped(self):
         from borsa_spark.functions import dedup as dd
-        from borsa_spark.functions.pipeline import PrepParams
 
         cap = dd.CRAWL_MAX_BUCKET
 
@@ -147,7 +146,6 @@ class TestMinhashCapDefaults:
         assert default_of(
             dd.minhash_pairs_against_inrow, "max_bucket_size"
         ) == cap
-        assert PrepParams().max_bucket_size == cap
 
     def test_default_cap_binds_on_a_hot_bucket(self, spark):
         # CRAWL_MAX_BUCKET identical docs +1: every band bucket holds

@@ -6,7 +6,6 @@ import pytest
 
 from borsa_spark import schemas
 from borsa_spark.functions.multimodal import (
-    audio_features,
     decode_bmp,
     decode_ppm,
     encode_bmp,
@@ -14,7 +13,6 @@ from borsa_spark.functions.multimodal import (
     image_features,
     media_batch_conf,
     resize_images,
-    sample_video_frames,
 )
 
 
@@ -239,23 +237,10 @@ class TestMultimodal:
         assert (out[11].width, out[11].height, out[11].decoder) == (4, 2, "ppm")
         assert out[11].mean_luma == pytest.approx(60 / 255.0)
 
-    def test_audio_features_window_count(self, assets):
-        out = {r.asset_id: r for r in audio_features(assets).collect()}
-        assert out[3].n_windows == 100  # 2500ms / 25ms
-        assert out[3].sample_rate == 44100
-        assert 0.0 <= out[3].rms <= 1.0
-
     def test_resize_emits_fixed_size_thumbs(self, assets):
         out = resize_images(assets.filter("modality = 'image'"), 8, 8).collect()
         assert all(len(r.thumb) == 64 for r in out)
         assert {r.asset_id for r in out} == {1, 2, 5}
-
-    def test_video_frame_sampling_metadata_only(self, assets):
-        out = sample_video_frames(assets, every_ms=1000).collect()
-        # 3500ms -> frames at 0,1000,2000 (n = 3500//1000 = 3)
-        assert [(r.frame_idx, r.frame_ts_ms) for r in sorted(out, key=lambda r: r.frame_idx)] == [
-            (0, 0), (1, 1000), (2, 2000),
-        ]
 
     def test_batch_conf_sizing(self):
         assert media_batch_conf(10 * 1 << 20) == 25  # 10MB payloads -> 25/batch
@@ -443,185 +428,6 @@ class TestPerceptualHash:
                 spark.conf.unset(ARROW_BATCH_KEY)
 
 
-class TestWavCodec:
-    """Stdlib-only RIFF/WAVE PCM decode: hand-built golden bytes with
-    spec-derived expected values, known-signal RMS, round-trips, error
-    paths, and the audio_features dispatch."""
-
-    @staticmethod
-    def _wav_8bit_golden():
-        import struct
-
-        # 4 unsigned 8-bit samples: 128, 255, 0, 128 -> 0.0, 127/128,
-        # -1.0, 0.0 per the (x-128)/128 rule
-        pcm = bytes([128, 255, 0, 128])
-        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", 4) + pcm
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
-
-    def test_golden_8bit_rms_by_hand(self):
-        import math
-
-        from borsa_spark.functions.multimodal import decode_wav
-
-        sr, ch, fr, dur, rms = decode_wav(self._wav_8bit_golden())
-        assert (sr, ch, fr, dur) == (8000, 1, 4, 0)
-        want = math.sqrt((0.0 + (127 / 128) ** 2 + 1.0 + 0.0) / 4)
-        assert rms == pytest.approx(want, abs=1e-12)
-
-    def test_known_signal_rms(self):
-        import numpy as np
-
-        from borsa_spark.functions.multimodal import decode_wav, encode_wav
-
-        t = np.arange(16000)
-        sine = 0.5 * np.sin(2 * np.pi * 440 * t / 16000)
-        sr, ch, fr, dur, rms = decode_wav(encode_wav(sine, 16000))
-        assert (sr, ch, fr, dur) == (16000, 1, 16000, 1000)
-        # amplitude a sine -> rms a/sqrt(2); 16-bit quantization ~1e-4
-        assert rms == pytest.approx(0.5 / np.sqrt(2), abs=1e-3)
-        # stereo: per-channel mirrored signal, same rms, 2 channels
-        st = np.stack([sine, -sine], axis=1)
-        sr, ch, fr, dur, rms2 = decode_wav(encode_wav(st, 16000))
-        assert (ch, fr, dur) == (2, 16000, 1000)
-        assert rms2 == pytest.approx(rms, abs=1e-6)
-
-    def test_error_paths(self):
-        import struct as _s
-
-        from borsa_spark.functions.multimodal import decode_wav
-
-        with pytest.raises(ValueError):
-            decode_wav(b"RIFF-fake")  # RIFF magic but not WAVE
-        with pytest.raises(ValueError):
-            decode_wav(self._wav_8bit_golden()[:30])  # truncated chunk
-        # float format (3) rejected, never silent noise
-        fmt = _s.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-        body = (
-            b"WAVE" + b"fmt " + _s.pack("<I", 16) + fmt
-            + b"data" + _s.pack("<I", 4) + b"\x00" * 4
-        )
-        with pytest.raises(ValueError):
-            decode_wav(b"RIFF" + _s.pack("<I", len(body)) + body)
-
-    def test_audio_features_dispatches_wav(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions.multimodal import encode_wav
-
-        t = np.arange(8000)
-        wav = encode_wav(0.25 * np.sin(2 * np.pi * 100 * t / 8000), 8000)
-        rows = [
-            # metadata columns LIE (2500 ms, 44100 Hz): the real decode
-            # must override them from the bytes
-            (40, "audio", "audio/wav", wav, None, None, 2500, 44100, None),
-            (41, "audio", "audio/mpeg", b"ID3-fake-mp3", None, None,
-             1000, 22050, None),
-            (42, "audio", "audio/wav", wav[:20], None, None, 100, 8000,
-             None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        out = {r.asset_id: r for r in audio_features(assets).collect()}
-        assert out[40].decoder == "wav"
-        assert (out[40].sample_rate, out[40].duration_ms) == (8000, 1000)
-        assert out[40].rms == pytest.approx(0.25 / np.sqrt(2), abs=1e-3)
-        assert out[40].n_windows == 1000 // 25
-        # real mp3 bytes are NEVER summarized with fabricated features
-        assert out[41].decoder == "unsupported-lossy"
-        assert out[41].sample_rate is None and out[41].duration_ms is None
-        assert out[42].decoder == "corrupt-fallback"
-
-    def test_audio_lossy_formats_get_unsupported_marker(self, spark):
-        """mp3 (ID3 tag or bare MPEG frame sync) and ogg payloads emit a
-        NULL-feature marker row — sha256 stays real for dedup/provenance —
-        instead of digest-derived fake numbers. The stub survives ONLY
-        behind the opt-in fixture flag."""
-        rows = [
-            # ID3 magic but a nonsense synchsafe size -> headers do NOT
-            # parse -> pure marker row
-            (50, "audio", "audio/mpeg", b"ID3\x04\x00tag-then-frames",
-             None, None, 1000, 44100, None),
-            # a bare VALID MPEG1-L3 sync now yields honest header
-            # metadata (see test_lossy_header_metadata); this row's ogg
-            # magic with a truncated page stays a marker
-            (52, "audio", "audio/ogg", b"OggS\x00vorbis-ish",
-             None, None, 3000, 48000, None),
-            (53, "audio", "application/octet-stream", b"not-any-audio",
-             None, None, 4000, 16000, None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        out = {r.asset_id: r for r in audio_features(assets).collect()}
-        for k in (50, 52):
-            assert out[k].decoder == "unsupported-lossy"
-            assert out[k].sample_rate is None
-            assert out[k].duration_ms is None
-            assert out[k].rms is None
-            assert out[k].n_windows is None
-            assert len(out[k].sha256) == 64  # provenance digest stays real
-        # unrecognized bytes (synthetic fixtures) keep the documented stub
-        assert out[53].decoder == "fake-deterministic"
-        # opt-in fixture flag restores deterministic features everywhere
-        fake = {
-            r.asset_id: r
-            for r in audio_features(assets, fake_features=True).collect()
-        }
-        for k in (50, 52, 53):
-            assert fake[k].decoder == "fake-deterministic"
-            assert fake[k].rms is not None
-
-    def test_lossy_header_metadata(self, spark):
-        """mp3/ogg payloads whose CONTAINER HEADERS parse report the
-        real metadata those headers carry (sample rate; CBR/granule
-        duration estimate) — signal features stay NULL, since nothing
-        was decoded."""
-        from borsa_spark.functions.multimodal import (
-            encode_mp3_header_stub,
-            encode_ogg_header_stub,
-        )
-
-        rows = [
-            # metadata columns LIE; header parse must override from bytes
-            (60, "audio", "audio/mpeg", encode_mp3_header_stub(1596),
-             None, None, 9, 8000, None),
-            (61, "audio", "audio/ogg",
-             encode_ogg_header_stub("vorbis", 22050, 44100),
-             None, None, 9, 8000, None),
-            (62, "audio", "audio/ogg",
-             encode_ogg_header_stub("opus", 16000, 96000),
-             None, None, 9, 8000, None),
-            (63, "audio", "audio/mpeg", b"\xff\xfb\x90\x00" + b"\x00" * 60,
-             None, None, 9, 8000, None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        out = {r.asset_id: r for r in audio_features(assets).collect()}
-        # mp3: ID3(10) + frame(4) + pad(1596) -> 1600 audio bytes at
-        # 128 kbps -> 100 ms
-        assert (out[60].decoder, out[60].sample_rate,
-                out[60].duration_ms) == ("mp3-header", 44100, 100)
-        # vorbis: granule is PCM samples at the id-header rate
-        assert (out[61].decoder, out[61].sample_rate,
-                out[61].duration_ms) == ("ogg-header", 22050, 2000)
-        # opus: granule is 48 kHz units regardless of input rate
-        assert (out[62].decoder, out[62].sample_rate,
-                out[62].duration_ms) == ("ogg-header", 16000, 2000)
-        # tagless bare sync: 64 bytes at 128 kbps -> 4 ms
-        assert (out[63].decoder, out[63].sample_rate,
-                out[63].duration_ms) == ("mp3-header", 44100, 4)
-        for k in (60, 61, 62, 63):
-            assert out[k].rms is None and out[k].n_windows is None
-        # opt-in fixture flag bypasses even the header path
-        fake = {
-            r.asset_id: r
-            for r in audio_features(assets, fake_features=True).collect()
-        }
-        for k in (60, 61, 62, 63):
-            assert fake[k].decoder == "fake-deterministic"
-            assert fake[k].rms is not None
-
-
 class TestJpegCodec:
     """Pure-Python baseline JPEG (functions/jpeg.py): quantization-bounded
     round-trips across quality/subsampling/restart settings, exact flat
@@ -769,201 +575,6 @@ class TestJpegCodec:
         ph = {r.asset_id: r for r in image_phash(assets).collect()}
         assert ph[50].decoder == "jpeg"
         assert ph[51].decoder == "corrupt-fallback"
-
-
-class TestAviCodec:
-    """Uncompressed-AVI decode (RIFF walker + DIB frame math): lossless
-    round-trips, frame sampling, video near-dup via frame pHashes,
-    error paths, and Spark dispatch."""
-
-    @staticmethod
-    def _frames(n=4, h=9, w=13, seed=5):
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        return rng.integers(0, 256, size=(n, h, w, 3), dtype=np.uint8)
-
-    def test_lossless_round_trip(self):
-        import numpy as np
-
-        from borsa_spark.functions.multimodal import decode_avi, encode_avi
-
-        frames = self._frames()
-        back, fps = decode_avi(encode_avi(frames, fps=12))
-        assert fps == 12
-        assert np.array_equal(back, frames)
-
-    def test_error_paths(self):
-        from borsa_spark.functions.multimodal import decode_avi, encode_avi
-
-        enc = encode_avi(self._frames())
-        with pytest.raises(ValueError):
-            decode_avi(enc[:100])  # truncated
-        with pytest.raises(ValueError):
-            decode_avi(b"RIFF\x00\x00\x00\x00WAVE")  # wrong RIFF kind
-
-    def test_video_frame_features_sampling_and_dispatch(self, spark):
-        from borsa_spark.functions.multimodal import (
-            encode_avi,
-            video_frame_features,
-        )
-
-        frames = self._frames(n=6)
-        rows = [
-            (60, "video", "video/avi", encode_avi(frames), None, None,
-             None, None, None),
-            (61, "video", "video/mp4", b"mp4-fake-bytes", None, None,
-             3500, None, None),
-            (62, "video", "video/avi", encode_avi(frames)[:80], None,
-             None, None, None, None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        out = video_frame_features(assets, every_n=2).collect()
-        by_id = {}
-        for r in out:
-            by_id.setdefault(r.asset_id, []).append(r)
-        # every_n=2 over 6 frames -> frames 0, 2, 4
-        got = sorted(r.frame_idx for r in by_id[60])
-        assert got == [0, 2, 4]
-        assert all(r.decoder == "avi" for r in by_id[60])
-        assert all(
-            (r.width, r.height) == (13, 9) for r in by_id[60]
-        )
-        assert by_id[61][0].decoder == "fake-deterministic"
-        assert by_id[62][0].decoder == "corrupt-fallback"
-
-    def test_video_near_dup_by_frame_phash(self, spark):
-        # the pipeline claim: two AVIs sharing frames pair via the
-        # existing pHash band join over their frame hashes
-        import numpy as np
-
-        import pyspark.sql.functions as F
-        from borsa_spark.functions.multimodal import (
-            encode_avi,
-            phash_near_pairs,
-            video_frame_features,
-        )
-
-        gy, gx = np.mgrid[0:24, 0:32]
-        base = np.stack([
-            (128 + 90 * np.sin(gy / 5.0) * np.cos(gx / (7.0 + k)))
-            for k in range(3)
-        ], axis=2).clip(0, 255).astype(np.uint8)
-        clip_a = np.stack([np.roll(base, s, axis=0) for s in (0, 3, 6)])
-        # clip B shares A's frames plus 2% noise (a re-encode analog)
-        rng = np.random.default_rng(9)
-        noise = rng.integers(-5, 6, clip_a.shape)
-        clip_b = np.clip(clip_a.astype(int) + noise, 0, 255).astype(
-            np.uint8
-        )
-        # clip C is unrelated
-        clip_c = self._frames(n=3, h=24, w=32, seed=77)
-        rows = [
-            (70, "video", "video/avi", encode_avi(clip_a), None, None,
-             None, None, None),
-            (71, "video", "video/avi", encode_avi(clip_b), None, None,
-             None, None, None),
-            (72, "video", "video/avi", encode_avi(clip_c), None, None,
-             None, None, None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        frames = video_frame_features(assets)
-        # frame-level ids: asset*10 + frame so the band join's id
-        # tie-break never collides across assets
-        ph = frames.select(
-            (F.col("asset_id") * 10 + F.col("frame_idx")).alias(
-                "asset_id"
-            ),
-            "phash",
-        )
-        pairs = phash_near_pairs(ph, max_hamming=6,
-                                 profile="exhaustive").collect()
-        cross = {
-            (min(r.id_a // 10, r.id_b // 10), max(r.id_a // 10, r.id_b // 10))
-            for r in pairs
-            if r.id_a // 10 != r.id_b // 10
-        }
-        assert (70, 71) in cross        # noisy re-encode pairs
-        assert (70, 72) not in cross    # unrelated does not
-        assert (71, 72) not in cross
-
-
-class TestFlacCodec:
-    """FLAC (functions/flac.py): bit-exact round-trips across subframe
-    types and channel counts, CRC detection, LPC rejection, dispatch."""
-
-    def test_roundtrip_sine_exact_and_compressed(self):
-        import numpy as np
-
-        from borsa_spark.functions.flac import decode_flac, encode_flac
-
-        t = np.arange(10_000)
-        sine = (0.4 * np.sin(2 * np.pi * 220 * t / 16000) * 32767)
-        sine = sine.astype(np.int64)
-        enc = encode_flac(sine, 16000, blocksize=4096)
-        dec, sr, bps = decode_flac(enc)
-        assert sr == 16000 and bps == 16
-        assert np.array_equal(dec[:, 0], sine)
-        # a smooth signal must actually compress (fixed predictors +
-        # rice at work, not verbatim passthrough)
-        assert len(enc) < 0.7 * len(sine) * 2
-
-    def test_roundtrip_constant_ramp_noise(self):
-        import numpy as np
-
-        from borsa_spark.functions.flac import decode_flac, encode_flac
-
-        left = np.full(5000, 1234, dtype=np.int64)      # CONSTANT
-        right = (np.arange(5000) % 2000 - 1000)         # FIXED order 1+
-        st = np.stack([left, right], axis=1)
-        dec, sr, _ = decode_flac(encode_flac(st, 8000, blocksize=1000))
-        assert np.array_equal(dec, st)
-        rng = np.random.default_rng(3)
-        noise = rng.integers(-32768, 32768, 3000)       # high rice param
-        dec, _, _ = decode_flac(encode_flac(noise, 44100, blocksize=777))
-        assert np.array_equal(dec[:, 0], noise)
-
-    def test_crc_and_truncation_detected(self):
-        import numpy as np
-
-        from borsa_spark.functions.flac import decode_flac, encode_flac
-
-        enc = encode_flac(np.arange(2000) % 500, 8000, blocksize=512)
-        with pytest.raises(ValueError):
-            decode_flac(enc[:50])
-        bad = bytearray(enc)
-        bad[60] ^= 0xFF
-        with pytest.raises(ValueError):
-            decode_flac(bytes(bad))
-        with pytest.raises(ValueError):
-            decode_flac(b"fLaX" + enc[4:])
-
-    def test_audio_features_dispatches_flac(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions.flac import encode_flac
-        from borsa_spark.functions.multimodal import encode_wav
-
-        # identical samples through WAV and FLAC: identical rms, both
-        # real decodes — the compression-transparency check
-        t = np.arange(8000)
-        f = 0.25 * np.sin(2 * np.pi * 100 * t / 8000)
-        ints = (np.clip(f, -1, 1 - 1 / 32768) * 32768).astype(np.int64)
-        rows = [
-            (80, "audio", "audio/wav", encode_wav(f, 8000), None, None,
-             None, None, None),
-            (81, "audio", "audio/flac", encode_flac(ints, 8000), None,
-             None, None, None, None),
-            (82, "audio", "audio/flac", b"fLaC-corrupt", None, None,
-             500, 8000, None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        out = {r.asset_id: r for r in audio_features(assets).collect()}
-        assert out[80].decoder == "wav"
-        assert out[81].decoder == "flac"
-        assert out[81].rms == pytest.approx(out[80].rms, abs=1e-12)
-        assert (out[81].sample_rate, out[81].duration_ms) == (8000, 1000)
-        assert out[82].decoder == "corrupt-fallback"
 
 
 class TestPngColorTypes:
@@ -1154,112 +765,6 @@ class TestGifCodec:
         ph = {r.asset_id: r for r in image_phash(assets).collect()}
         assert ph[1].decoder == "gif"
         assert ph[2].decoder == "corrupt-fallback"
-
-
-class TestGifAnimation:
-    """Round-7 stretch: animation compositing (decode_gif_frames) — the
-    GCE disposal methods and transparency against a hand-computed
-    compositing oracle, and animated GIFs flowing through
-    video_frame_features as a real multi-frame video format."""
-
-    @staticmethod
-    def _animation_and_oracle():
-        import numpy as np
-
-        from borsa_spark.functions.gif import encode_gif_animation
-
-        f0 = np.zeros((4, 6, 3), np.uint8)
-        f0[:, :3] = (255, 0, 0)
-        f0[:, 3:] = (0, 0, 255)
-        f1 = np.full((2, 2, 3), (0, 255, 0), np.uint8)
-        m1 = np.array([[True, False], [False, True]])
-        f2 = np.full((2, 3, 3), (255, 255, 0), np.uint8)
-        f3 = np.full((4, 6, 3), (128, 128, 128), np.uint8)
-        data = encode_gif_animation(
-            [
-                {"px": f0, "disposal": 1},            # leave as drawn
-                {"px": f1, "left": 2, "top": 1,
-                 "mask": m1, "disposal": 3},          # restore-to-previous
-                {"px": f2, "left": 3, "top": 2,
-                 "disposal": 2},                      # restore-to-background
-                {"px": f3},
-            ],
-            background=(10, 20, 30),
-        )
-        # hand compositing: what a viewer shows after each frame
-        c0 = f0.copy()
-        c1 = c0.copy()
-        for y in range(2):
-            for x in range(2):
-                if m1[y, x]:
-                    c1[1 + y, 2 + x] = f1[y, x]
-        c2 = c0.copy()          # disposal 3 restored c1's frame
-        c2[2:4, 3:6] = f2
-        c3 = f3                 # disposal 2 cleared the rect, then full draw
-        return data, [c0, c1, c2, c3]
-
-    def test_disposal_and_transparency_golden(self):
-        import numpy as np
-
-        from borsa_spark.functions.gif import decode_gif, decode_gif_frames
-
-        data, want = self._animation_and_oracle()
-        frames = decode_gif_frames(data)
-        assert len(frames) == 4
-        for got, exp in zip(frames, want):
-            assert np.array_equal(got, exp)
-        # the still-image path still returns the raw first frame
-        assert np.array_equal(decode_gif(data), want[0])
-        # max_frames bounds hostile inputs
-        assert len(decode_gif_frames(data, max_frames=2)) == 2
-
-    def test_frame_rect_outside_screen_rejected(self):
-        import numpy as np
-
-        from borsa_spark.functions.gif import (
-            decode_gif_frames,
-            encode_gif_animation,
-        )
-
-        data = encode_gif_animation(
-            [
-                {"px": np.zeros((2, 2, 3), np.uint8)},
-                {"px": np.full((2, 2, 3), 9, np.uint8), "left": 1, "top": 1},
-            ],
-            screen=(3, 3),
-        )
-        # second frame rect [1:3, 1:3] fits a 3x3 screen: fine
-        assert len(decode_gif_frames(data)) == 2
-        # corrupt the second descriptor's left to 200 -> loud reject
-        bad = bytearray(data)
-        idx = bad.rindex(b"\x2c")
-        bad[idx + 1 : idx + 3] = (200).to_bytes(2, "little")
-        with pytest.raises(ValueError):
-            decode_gif_frames(bytes(bad))
-
-    def test_video_frame_features_animated_gif(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions.multimodal import video_frame_features
-
-        data, want = self._animation_and_oracle()
-        assets = spark.createDataFrame(
-            [(70, bytearray(data)), (71, bytearray(data[: len(data) // 2]))],
-            "asset_id long, payload binary",
-        )
-        out = video_frame_features(assets, every_n=2).collect()
-        by_id = {}
-        for r in out:
-            by_id.setdefault(r.asset_id, []).append(r)
-        got = sorted(r.frame_idx for r in by_id[70])
-        assert got == [0, 2]  # every_n=2 over 4 composited frames
-        assert all(r.decoder == "gif" for r in by_id[70])
-        assert all((r.width, r.height) == (6, 4) for r in by_id[70])
-        lumas = {r.frame_idx: r.frame_luma for r in by_id[70]}
-        for i in (0, 2):
-            exp = want[i].astype(np.float64).mean() / 255.0
-            assert abs(lumas[i] - exp) < 1e-9
-        assert by_id[71][0].decoder == "corrupt-fallback"
 
 
 class TestRealThumbnails:
@@ -1534,81 +1039,6 @@ class TestBandHotBucketGuard:
         assert len(wide) == 4
         for i in range(4):
             assert wide[i] == narrow[2 * i] + 256 * narrow[2 * i + 1]
-
-
-class TestAudioDhash:
-    """Envelope dHash (multimodal.audio_dhash): image_dhash's contract
-    over waveforms — exact integer block sums, shared band machinery."""
-
-    def _assets(self, spark, rows):
-        return spark.createDataFrame(
-            [(i, bytearray(p)) for i, p in rows],
-            "asset_id long, payload binary",
-        )
-
-    def _wave(self, amps, q=25):
-        import numpy as np
-
-        sign = np.where(np.arange(len(amps) * q) % 2 == 0, 1.0, -1.0)
-        return sign * (np.repeat(np.asarray(amps, dtype=np.int64), q)
-                       / 256.0)
-
-    def test_constant_tone_hashes_to_zero(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        wav = mm.encode_wav(self._wave([77] * 72), 8000)
-        out = mm.audio_dhash(self._assets(spark, [(1, wav)])).collect()[0]
-        assert list(out.bands) == [0] * 8 and out.decoder == "wav"
-
-    def test_perturbed_copy_is_near(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        amps = (np.random.default_rng(3).integers(0, 256, 72)
-                .astype(np.int64))
-        amps2 = amps.copy()
-        amps2[0] = (int(amps2[0]) + 7) % 256
-        dh = mm.audio_dhash(self._assets(spark, [
-            (1, mm.encode_wav(self._wave(amps), 8000)),
-            (2, mm.encode_wav(self._wave(amps2), 8000)),
-        ]))
-        pairs = mm.dhash_near_pairs(dh, max_hamming=3,
-                                    rows_per_band=2).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
-        assert pairs[0].hamming <= 1
-
-    def test_stereo_hashes_first_channel(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        amps = (np.random.default_rng(5).integers(0, 256, 72)
-                .astype(np.int64))
-        mono = self._wave(amps)
-        # identical channel 0; channel 1 is a constant tone — the hash
-        # must read the interleave correctly and ignore channel 1
-        stereo = np.stack([mono, self._wave([50] * 72)], axis=1)
-        dh = {r.asset_id: list(r.bands)
-              for r in mm.audio_dhash(self._assets(spark, [
-                  (1, mm.encode_wav(mono, 8000)),
-                  (2, mm.encode_wav(stereo, 8000)),
-              ])).collect()}
-        assert dh[1] == dh[2]
-
-    def test_short_and_corrupt_payloads_degrade(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        short = mm.encode_wav(self._wave([10] * 71, q=1), 8000)  # 71 < 72
-        rows = {r.asset_id: r.decoder
-                for r in mm.audio_dhash(self._assets(spark, [
-                    (1, short),
-                    (2, b"RIFF1234WAVEtruncated"),
-                    (3, b"not audio at all"),
-                ])).collect()}
-        assert rows[1] == "corrupt-fallback"   # valid WAV, too short
-        assert rows[2] == "corrupt-fallback"
-        assert rows[3] == "fake-deterministic"
 
 
 class TestPhashWideBands:

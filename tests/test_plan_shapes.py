@@ -391,15 +391,6 @@ class TestRound8PlanShapes:
         assert "MapInPandas" not in plan
         assert "BroadcastHashJoin" in plan
 
-    def test_audio_band_pairing_inherits_image_guards(self, spark):
-        # f92 rides the shared _band_near_pairs: decode once
-        # (checkpointed band relation, no MapInPandas in the join) and
-        # the bucket-count guard broadcasts
-        plan = plan_of(spark, "f92_audio_envelope_pairs")
-        assert "MapInPandas" not in plan
-        assert "ExistingRDD" in plan
-        assert "BroadcastHashJoin" in plan
-
     def test_c12_training_mix_topk_and_bounded_scans(self, spark):
         # the training-mix DAG: the DSIR draw must compile to
         # TakeOrderedAndProject (per-partition k-heaps, never a global

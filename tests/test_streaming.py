@@ -602,3 +602,36 @@ class TestFrozenPartitionCount:
             capture_output=True, text=True, timeout=300, check=True,
         )
         assert out.stdout.strip().splitlines()[-1] == "2"
+
+
+class TestDefaultDriverHeap:
+    """``get_spark`` sizes the driver heap from the host when
+    ``SPARK_GRAFT_DRIVER_MEM`` is unset, so a long-lived router cannot
+    grow its heap past physical memory."""
+
+    def test_unset_default_is_below_physical_memory(self):
+        import os
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+        env.pop("SPARK_GRAFT_DRIVER_MEM", None)
+        env.pop("SPARK_GRAFT_MASTER", None)
+        probe = (
+            "from borsa_spark.session import get_spark\n"
+            "s = get_spark('heap-default')\n"
+            "print(s.conf.get('spark.driver.memory'))\n"
+            "print(s.sparkContext._jvm.java.lang.Runtime.getRuntime()"
+            ".maxMemory())\n"
+            "s.stop()\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", probe], cwd=repo, env=env,
+            capture_output=True, text=True, timeout=300, check=True,
+        )
+        conf, jvm_max = out.stdout.strip().splitlines()[-2:]
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        assert conf.endswith("m")
+        assert 0 < int(conf[:-1]) * 2**20 < physical
+        assert 0 < int(jvm_max) < physical
