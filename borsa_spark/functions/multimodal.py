@@ -39,13 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # pragma: no cover - not installed in this container
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except Exception:  # noqa: BLE001
-    _HAVE_PIL = False
-
 IMAGE_FEATURES_SCHEMA = (
     "asset_id long, width int, height int, n_channels int, "
     "mean_luma double, sha256 string, decoder string"
@@ -471,10 +464,11 @@ def image_features(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
     mean_luma, sha256, decoder).
 
     REAL decode for uncompressed BMP (magic ``BM``), binary PPM (``P6``)
-    and 8-bit PNG (full signature) via the pure-Python codecs above; other
-    formats fall back to PIL when available, else the deterministic fake
-    (decoder column says which path produced each row). The mapInPandas
-    shape, schema, and batch handling are identical across paths.
+    and 8-bit PNG (full signature) via the pure-Python codecs above, plus
+    baseline JPEG and GIF (first frame); any other payload gets the
+    deterministic fake (decoder column says which path produced each row).
+    The mapInPandas shape, schema, and batch handling are identical across
+    paths.
 
     ``auto_batch`` (default on) probes a bounded payload sample and sizes
     the Arrow batch so one batch stays ~256 MB however large the images —
@@ -512,11 +506,6 @@ def image_features(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
                     elif data[:4] == b"GIF8":
                         w, h, ch, luma = decode_gif_features(data)
                         dec = "gif"
-                    elif _HAVE_PIL:  # pragma: no cover - PIL absent here
-                        raise NotImplementedError(
-                            "real PIL decode path not exercised in this"
-                            " container"
-                        )
                     else:
                         raise ValueError("no known magic")
                 except (ValueError, struct.error):

@@ -11,10 +11,18 @@ program — per-provider scans are unioned with an explicit priority column and
 the adjustedness ordering/filter is expressed with window functions instead
 of driver-side collects. The only driver-side work is pure-Python planning
 (which scans run, at which native interval, with which resample plan), the
-analog of Catalyst's rule phase. One Spark job executes the whole thing; at
-scale that means: parquet predicate pushdown on (symbol, ts), a single
-shuffle for each resample (keyed symbol×bucket), one shuffle for the merge
-window (keyed symbol×ts), and no Python in the row path.
+analog of Catalyst's rule phase. Scans push their (symbol, ts) predicates to
+the source and no Python runs in the row path. The program has two shapes:
+
+- One symbol (``symbols`` unset, a bare string or a one-element list): the
+  scans are coalesced to one partition before any resample, so every
+  aggregate, the adjustedness window and the final sort run in that one
+  partition with no exchange — one Spark job with one task, the reference's
+  single sorted in-memory pass over one series (merge.rs:39,
+  resample.rs:34-36).
+- A batch or ``ALL_SYMBOLS``: a shuffle for the resample keyed on
+  (provider, symbol, bucket), one on ``symbol`` for the adjustedness window
+  that the merge aggregate reuses, and a global range sort on (symbol, ts).
 
 Deep vs Fallback strategy (R5, history.rs:405-519): Deep unions every
 eligible provider (gap backfill); Fallback takes the first provider whose
@@ -217,10 +225,11 @@ def history(
     resamples to daily iff the merged series is subdaily (infer.rs:122-158).
 
     ``symbols`` widens the scan to a symbol batch sharing ``req``'s plan
-    (bulk download path — every operator downstream is symbol-partitioned,
-    so a batch costs the same number of shuffles as one symbol). Pass
-    ``ALL_SYMBOLS`` ("*") to scan every symbol the providers carry without
-    enumerating them on the driver.
+    (bulk download path). A batch of two or more symbols, or
+    ``ALL_SYMBOLS`` ("*", every symbol the providers carry, never
+    enumerated on the driver), runs symbol-partitioned shuffles and a global
+    ``(symbol, ts)`` sort; a single symbol runs in one partition with no
+    exchange (see the module docstring).
 
     ``validate_currency`` enforces the reference's currency invariant before
     merging (merge.rs:55-68): a mixed-currency input raises CurrencyError
@@ -257,6 +266,17 @@ def history(
     deadline = Deadline(request_timeout, f"history({req.symbol})")
     plans, warnings = plan_history(catalog, req)
 
+    # One symbol's series is a few dozen rows: run the whole program in one
+    # partition, where every aggregate, the window and the sort find their
+    # distribution already met and Spark plans no exchange. Batches keep
+    # their symbol-keyed shuffles.
+    one_symbol = symbols is None or (
+        symbols != ALL_SYMBOLS and len(symbols) == 1
+    )
+
+    def coalesced(df: DataFrame) -> DataFrame:
+        return df.coalesce(1) if one_symbol else df
+
     # When every provider shares one (interval, resample) plan — the common
     # case under a uniform policy — defer the resample until after the union
     # so ONE aggregation keyed (provider, symbol, bucket) covers all
@@ -285,7 +305,7 @@ def history(
                 ),
             )
             if rplan is not None and not uniform_plan:
-                df = resample(df, rplan.kind, rplan.minutes)
+                df = resample(coalesced(df), rplan.kind, rplan.minutes)
             df = df.withColumn("priority", F.lit(idx))
             frames.append(df)
             if req.include_actions and source.supports("actions"):
@@ -313,9 +333,9 @@ def history(
                 break
         if chosen is None:
             raise NotFoundError(f"history for {req.symbol}")
-        union = chosen
+        union = coalesced(chosen)
     else:
-        union = reduce(lambda a, b: a.unionByName(b), frames)
+        union = coalesced(reduce(lambda a, b: a.unionByName(b), frames))
         if uniform_plan:
             rplan = plans[0][3]
             union = resample(
@@ -366,6 +386,12 @@ def history(
         from borsa_spark.operators.infer import is_subdaily
 
         flags = is_subdaily(merged)
+        if one_symbol:
+            # Spark shuffles the one-partition sides of a sort-merge join
+            # when their estimated size passes
+            # spark.sql.maxSinglePartitionBytes; one symbol's flag is one
+            # row, so broadcast it.
+            flags = F.broadcast(flags)
         tagged = merged.join(flags, "symbol", "left")
         sub = tagged.filter(F.coalesce(F.col("subdaily"), F.lit(False))).drop(
             "subdaily"
@@ -378,7 +404,9 @@ def history(
             "daily",
             keys=["provider", "symbol"],
         )
-        merged = sub_daily.unionByName(rest.select(*sub_daily.columns))
+        merged = coalesced(
+            sub_daily.unionByName(rest.select(*sub_daily.columns))
+        )
 
     if resampling in ("daily", "weekly") or auto_resample_subdaily_to_daily:
         # strip_unadjusted (timeseries/util.rs via history.rs:659-662)
@@ -387,7 +415,11 @@ def history(
         )
 
     return HistoryResult(
-        candles=merged.orderBy("symbol", "ts"),
+        candles=(
+            merged.sortWithinPartitions("symbol", "ts")
+            if one_symbol
+            else merged.orderBy("symbol", "ts")
+        ),
         actions=actions,
         attribution=attribution,
         warnings=warnings,

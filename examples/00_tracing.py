@@ -32,12 +32,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     cat = get_catalog(spark)
 
-    print("# Quote plan (one union + priority window, filters pushed down)")
+    # Over several providers the top-1 plans as a TakeOrderedAndProject;
+    # this catalog has one, so Spark drops the sort. The exchange in it
+    # belongs to the example's latest-tick quote view.
+    print("# Quote plan (one union, top-1 by priority, filters pushed down)")
     q = quote(spark, cat, "purchase")
     q.explain("formatted")
     q.show(1)
 
-    print("# History plan (6mo daily: scan -> gate -> resample -> merge)")
+    print("# History plan (one symbol, 6mo daily: scan -> resample -> merge"
+          " in one partition, no exchange)")
     res = history(spark, cat, HistoryRequest(symbol="purchase", range="6mo",
                                              interval="1d"))
     res.candles.explain("formatted")

@@ -319,6 +319,117 @@ class TestHistoryRouter:
         assert action_symbols(["AAPL", "MSFT"]) == ["AAPL", "MSFT"]
         assert action_symbols(ALL_SYMBOLS) == ["AAPL", "GOOG", "MSFT"]
 
+    # One symbol runs in one partition: no exchange, one job. Provider B's
+    # 30m or 1h bars start two hours after A's and overlap them.
+    _A30 = [candle("provA", sec=i * 1800, o=float(i), volume=1, seq=i)
+            for i in range(8)]
+    _B = {
+        "30m": [candle("provB", sec=7200 + i * 1800, o=100.0 + i, volume=1,
+                       seq=i) for i in range(8)],
+        "1h": [candle("provB", sec=7200 + i * 3600, o=100.0 + i, volume=1,
+                      seq=i) for i in range(4)],
+    }
+
+    def _two_provider_catalog(self, spark, b_interval):
+        return Catalog().register(
+            hist_source(spark, "provA", self._A30, intervals=("30m",))
+        ).register(
+            hist_source(spark, "provB", self._B[b_interval],
+                        intervals=(b_interval,))
+        )
+
+    @staticmethod
+    def _executed_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    @pytest.mark.parametrize("b_interval", ["30m", "1h"],
+                             ids=["uniform_resample", "per_provider_resample"])
+    def test_single_symbol_plans_no_exchange_and_runs_one_job(
+        self, spark, b_interval
+    ):
+        cat = self._two_provider_catalog(spark, b_interval)
+        candles = history(
+            spark, cat, HistoryRequest(symbol="AAPL", interval="1h")
+        ).candles
+        plan = self._executed_plan(candles)
+        assert "Exchange" not in plan, plan
+        sc = spark.sparkContext
+        group = f"one_symbol_history_{b_interval}"
+        sc.setJobGroup(group, group)
+        try:
+            out = candles.toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        # provA's four hourly bars win the overlap; provB fills hours 4-5.
+        assert list(out.ts) == [ts(h * 3600) for h in range(6)]
+        assert list(out.provider) == ["provA"] * 4 + ["provB"] * 2
+
+    @pytest.mark.parametrize(
+        "kw", [{"symbols": "AAPL"}, {"symbols": ["AAPL"]},
+               {"strategy": "fallback"}],
+        ids=["bare_string", "one_element_list", "fallback"])
+    def test_every_one_symbol_form_plans_no_exchange(self, spark, kw):
+        cat = self._two_provider_catalog(spark, "1h")
+        req = HistoryRequest(symbol="AAPL", interval="1h")
+        candles = history(spark, cat, req, **kw).candles
+        plan = self._executed_plan(candles)
+        assert "Exchange" not in plan, plan
+        rows = [(r.ts, r.provider) for r in candles.collect()]
+        assert rows == sorted(rows)
+        assert rows[0] == (ts(0), "provA")
+
+    def test_batch_keeps_the_global_symbol_ts_order(self, spark):
+        # Each provider's frame lists both symbols, latest bar first, and
+        # the providers alternate days. Small shuffles may be coalesced to
+        # one partition at run time, so the plan check is what pins the
+        # global sort.
+        a = [candle("provA", symbol=s, sec=d * DAY, o=float(d), seq=d)
+             for s in ("MSFT", "AAPL") for d in (4, 2, 0)]
+        b = [candle("provB", symbol=s, sec=d * DAY, o=100.0 + d, seq=d)
+             for s in ("MSFT", "AAPL") for d in (5, 3, 1)]
+        cat = Catalog().register(
+            hist_source(spark, "provA", a)
+        ).register(hist_source(spark, "provB", b))
+        candles = history(spark, cat, HistoryRequest(symbol="AAPL"),
+                          symbols=["MSFT", "AAPL"]).candles
+        assert "rangepartitioning" in self._executed_plan(candles)
+        rows = [(r.symbol, r.ts, r.provider) for r in candles.collect()]
+        assert rows == [
+            (s, ts(d * DAY), "provA" if d % 2 == 0 else "provB")
+            for s in ("AAPL", "MSFT") for d in range(6)
+        ]
+
+    @pytest.mark.parametrize(
+        "kw", [{"resampling": "daily"},
+               {"auto_resample_subdaily_to_daily": True}],
+        ids=["daily", "auto_subdaily"])
+    def test_one_symbol_final_resample_matches_the_batch_plan(self, spark, kw):
+        # Hourly bars over two days from both providers; a batch with a
+        # symbol nobody carries still takes the shuffled plan, so it is
+        # the reference for the one-partition answer.
+        a = [candle("provA", sec=i * 3600, o=float(i), volume=1, seq=i)
+             for i in range(30)]
+        b = [candle("provB", sec=i * 3600, o=100.0 + i, volume=2, seq=i)
+             for i in range(20, 48)]
+        cat = Catalog().register(
+            hist_source(spark, "provA", a, intervals=("1h",))
+        ).register(hist_source(spark, "provB", b, intervals=("1h",)))
+        req = HistoryRequest(symbol="AAPL", interval="1h")
+        one = history(spark, cat, req, **kw).candles
+        batch = history(spark, cat, req, symbols=["AAPL", "GHOST"],
+                        **kw).candles
+        exchanges = [line for line in self._executed_plan(one).splitlines()
+                     if "Exchange" in line]
+        assert all("BroadcastExchange" in line for line in exchanges), exchanges
+        rows = one.collect()
+        assert [tuple(r) for r in rows] == [tuple(r) for r in batch.collect()]
+        # Day 0: provA hours 0-23. Day 1: provA hours 24-29, provB 30-47.
+        assert [(r.ts, float(r.open), r.volume) for r in rows] == [
+            (ts(0), 0.0, 24), (ts(DAY), 24.0, 6 + 18 * 2),
+        ]
+
 
 def quote_row(provider, symbol, price, exchange=None, shortname=None):
     from decimal import Decimal
