@@ -266,10 +266,11 @@ def history(
     deadline = Deadline(request_timeout, f"history({req.symbol})")
     plans, warnings = plan_history(catalog, req)
 
-    # One symbol's series is a few dozen rows: run the whole program in one
-    # partition, where every aggregate, the window and the sort find their
-    # distribution already met and Spark plans no exchange. Batches keep
-    # their symbol-keyed shuffles.
+    # One request for one symbol is one series: run the whole program in one
+    # partition, as the reference merges one series in a single in-memory
+    # pass (merge.rs:39). One partition meets every distribution the
+    # aggregates, the window and the final sort ask for, so Spark plans no
+    # exchange. Batches keep their symbol-keyed shuffles.
     one_symbol = symbols is None or (
         symbols != ALL_SYMBOLS and len(symbols) == 1
     )
@@ -385,13 +386,9 @@ def history(
         # daily resample; others pass through untouched (history.rs:646-658).
         from borsa_spark.operators.infer import is_subdaily
 
-        flags = is_subdaily(merged)
-        if one_symbol:
-            # Spark shuffles the one-partition sides of a sort-merge join
-            # when their estimated size passes
-            # spark.sql.maxSinglePartitionBytes; one symbol's flag is one
-            # row, so broadcast it.
-            flags = F.broadcast(flags)
+        # One small row per symbol: broadcast it rather than shuffle both
+        # sides of a sort-merge join.
+        flags = F.broadcast(is_subdaily(merged))
         tagged = merged.join(flags, "symbol", "left")
         sub = tagged.filter(F.coalesce(F.col("subdaily"), F.lit(False))).drop(
             "subdaily"
@@ -415,11 +412,7 @@ def history(
         )
 
     return HistoryResult(
-        candles=(
-            merged.sortWithinPartitions("symbol", "ts")
-            if one_symbol
-            else merged.orderBy("symbol", "ts")
-        ),
+        candles=merged.orderBy("symbol", "ts"),
         actions=actions,
         attribution=attribution,
         warnings=warnings,
