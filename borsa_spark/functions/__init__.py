@@ -7,8 +7,7 @@ from __future__ import annotations
 import importlib
 
 __all__ = [
-    "bpe", "classifier", "dedup", "gif", "jpeg", "langid", "multimodal",
-    "packing", "text",
+    "classifier", "dedup", "gif", "jpeg", "multimodal", "packing", "text",
 ]
 
 

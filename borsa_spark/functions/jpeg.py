@@ -13,11 +13,8 @@ T.81 Annex K example quantization and Huffman tables (the tables every
 library ships as defaults), optional quality scaling via the IJG
 formula. Encoding exists so tests can drive the decoder without PIL:
 the natural oracles are (a) decode(encode(img)) ≈ img within the
-quantization-error bound that the chosen tables imply, (b) flat-color
-images reconstruct to within one quantization step, and (c) the
-perceptual hash of a JPEG'd image matches the hash of the same pixels
-through the lossless PNG path within a small hamming distance — pHash's
-defining robustness property.
+quantization-error bound that the chosen tables imply, and (b)
+flat-color images reconstruct to within one quantization step.
 
 Everything here is derived from the public T.81 spec; no image library
 is consulted (none exists in this container).

@@ -187,7 +187,7 @@ _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 def _png_chunks(data: bytes):
     """Yield (type, payload) for each chunk, verifying lengths and CRCs.
-    A bad CRC raises ValueError — image_phash maps that to the
+    A bad CRC raises ValueError — image_features maps that to the
     corrupt-fallback path instead of trusting mangled pixels."""
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
@@ -488,8 +488,7 @@ def image_features(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
                 # A magic-matching but corrupt payload (truncated crawl,
                 # progressive JPEG, 16-bit PPM...) must not kill the
                 # Spark job from inside the UDF: it degrades to the
-                # deterministic fallback, tagged for downstream audit —
-                # same discipline as image_phash.
+                # deterministic fallback, tagged for downstream audit.
                 try:
                     if data[:2] == b"BM":
                         w, h, ch, luma = decode_bmp(data)
@@ -536,12 +535,11 @@ def resize_images(
     assets: DataFrame, width: int, height: int, auto_batch: bool = True
 ) -> DataFrame:
     """Thumbnail pipeline: REAL grayscale thumbnails for every decodable
-    payload (BMP/PPM/PNG/JPEG/GIF via the shared magic dispatch +
-    `_block_mean` integral-image resampling — the pHash resampler at an
-    arbitrary target size), row-major ``width * height`` uint8 bytes.
+    payload (BMP/PPM/PNG/JPEG/GIF by magic bytes + `_block_mean`
+    integral-image resampling), row-major ``width * height`` uint8 bytes.
     Undecodable payloads keep the deterministic hash-expanded
     pseudo-thumbnail; the ``decoder`` column says which path produced
-    each row, same contract as `image_features`/`image_phash`.
+    each row, same contract as `image_features`.
     ``auto_batch`` sizes the Arrow batch from a sampled payload probe."""
     if auto_batch:
         autotune_arrow_batch(assets)
@@ -594,10 +592,7 @@ def resize_images(
 
 
 # ---------------------------------------------------------------------------
-# Perceptual hashing: image near-dup detection over binary payloads.
-# Standard pHash (block-mean resize -> 2D DCT-II -> top-left 8x8 minus DC,
-# thresholded at the median) in pure numpy — the DCT is two matrix
-# multiplies against a precomputed basis, no scipy needed.
+# Grayscale pixel grids and the block-mean resampler behind resize_images.
 # ---------------------------------------------------------------------------
 
 
@@ -615,8 +610,8 @@ def _gray_bmp(data: bytes) -> np.ndarray:
     n_rows = abs(height)
     stride = (width * 3 + 3) & ~3
     # same bounds discipline as decode_bmp: a magic-matching but
-    # truncated payload must raise ValueError (which image_phash maps to
-    # the corrupt-fallback path), never a numpy buffer error
+    # truncated payload must raise ValueError (which resize_images maps
+    # to the corrupt-fallback path), never a numpy buffer error
     if width <= 0 or n_rows == 0 or len(data) < pixel_off + stride * n_rows:
         raise ValueError("truncated BMP payload")
     rows = np.frombuffer(
@@ -659,16 +654,10 @@ def _gray_ppm(data: bytes) -> np.ndarray:
     return px.astype(np.float64).mean(axis=2) / maxval
 
 
-_DCT_N = 32
-_DCT_BASIS = np.cos(
-    np.pi / _DCT_N * (np.arange(_DCT_N)[:, None] + 0.5) * np.arange(_DCT_N)[None, :]
-).T  # [k, n] DCT-II basis
-
-
 def _block_mean(gray: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Block-mean resample a grayscale grid to (out_h, out_w) via one
     cumulative-sum integral image — the exact-arithmetic resampler
-    shared by pHash (32x32) and `resize_images` (arbitrary thumbs)."""
+    behind `resize_images`."""
     h, w = gray.shape
     ys = (np.arange(out_h + 1) * h // out_h).clip(1, h)
     xs = (np.arange(out_w + 1) * w // out_w).clip(1, w)
@@ -690,431 +679,3 @@ def _block_mean(gray: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
                 csum[y1, x1] - csum[y0, x1] - csum[y1, x0] + csum[y0, x0]
             ) / area
     return small
-
-
-def phash64(gray: np.ndarray) -> int:
-    """64-bit perceptual hash of a grayscale grid: block-mean resample to
-    32x32, 2D DCT-II, keep the top-left 8x8 block minus the DC term,
-    set bit i iff coefficient i exceeds the median. Robust to uniform
-    brightness shifts (DC excluded) and small pixel noise (low-frequency
-    coefficients dominate)."""
-    small = _block_mean(gray, _DCT_N, _DCT_N)
-    coeffs = _DCT_BASIS @ small @ _DCT_BASIS.T
-    block = coeffs[:8, :8].flatten()[1:]  # drop DC
-    med = np.median(block)
-    bits = 0
-    for i, v in enumerate(block):
-        if v > med:
-            bits |= 1 << i
-    return bits
-
-
-def _image_magic(data: bytes) -> str | None:
-    """Decoder name by magic bytes, or None for unknown formats — the
-    ONE dispatch behind image_features/image_phash/image_dhash (it had
-    grown four diverging copies; round-8 review)."""
-    if data[:2] == b"BM":
-        return "bmp"
-    if data[:2] == b"P6":
-        return "ppm"
-    if data[:8] == _PNG_SIG:
-        return "png"
-    if data[:2] == b"\xff\xd8":
-        return "jpeg"
-    if data[:4] == b"GIF8":
-        return "gif"
-    return None
-
-
-_GRAY_DECODERS = {}
-
-
-def _gray_decode(data: bytes, dec: str) -> np.ndarray:
-    """Grayscale grid for a magic-identified payload (raises
-    ValueError/struct.error on corrupt bytes, like the _gray_* it
-    dispatches to)."""
-    if not _GRAY_DECODERS:
-        _GRAY_DECODERS.update({
-            "bmp": _gray_bmp, "ppm": _gray_ppm, "png": _gray_png,
-            "jpeg": _gray_jpeg, "gif": _gray_gif,
-        })
-    return _GRAY_DECODERS[dec](data)
-
-
-def _fallback_tag(dec: str | None) -> str:
-    """The module-wide decoder-tag contract: magic-matching but
-    undecodable payloads are 'corrupt-fallback'; unknown formats are
-    'fake-deterministic' (module docstring)."""
-    return "corrupt-fallback" if dec else "fake-deterministic"
-
-
-def image_phash(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
-    """Perceptual hash per image payload: (asset_id, phash, decoder). Same
-    dispatch as `image_features` — real pixels for BMP/PPM, deterministic
-    fake (sha256-derived bits) for undecodable payloads so the plumbing
-    is exercised end-to-end without an image library. The hash leaves the
-    executor as one int64; downstream near-dup pairing never moves
-    pixels."""
-    if auto_batch:
-        autotune_arrow_batch(assets)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                # A magic-matching but corrupt payload (truncated crawl,
-                # unsupported bpp, 16-bit PPM) must not kill the Spark
-                # job from inside the UDF: it degrades to the
-                # deterministic fallback, tagged so downstream can audit.
-                dec = _image_magic(data)
-                try:
-                    if dec is None:
-                        raise ValueError("no known magic")
-                    bits = phash64(_gray_decode(data, dec))
-                except (ValueError, struct.error):
-                    digest = hashlib.sha256(data).digest()
-                    bits = int.from_bytes(digest[:8], "big")
-                    dec = _fallback_tag(dec)
-                # two's-complement into int64 for the Spark LongType
-                if bits >= 1 << 63:
-                    bits -= 1 << 64
-                out.append((asset_id, bits, dec))
-            yield pd.DataFrame(out, columns=["asset_id", "phash", "decoder"])
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        fn, schema="asset_id long, phash long, decoder string"
-    )
-
-
-def _band_near_pairs(
-    bk: DataFrame,
-    ham,
-    max_hamming: int,
-    max_bucket_size: int | None = None,
-    n_bands: int = 8,
-) -> DataFrame:
-    """The shared band-LSH pairing skeleton behind phash_near_pairs and
-    dhash_near_pairs: self-join on (band, band_key) with id ordering,
-    exact hamming filter. ``bk`` carries (id, band, band_key) plus
-    whatever columns ``ham(aCol, bCol)`` needs; ``ham`` receives the
-    two aliased sides and returns the hamming Column. max_hamming >
-    n_bands - 1 is refused: n bands pigeonhole only <= n-1 differing
-    bits — beyond that a qualifying pair can miss every band and the
-    recall guarantee silently breaks (previously an undocumented hole
-    in BOTH copies).
-
-    The band relation is a handful of ints per asset but its LINEAGE is
-    the full decode (MapInPandas over raw image bytes). A lazy
-    self-join therefore executes that decode once per join side — at
-    crawl scale decode dominates, so doubling it is the scale bug (the
-    f8 persist lesson). localCheckpoint(eager=True) materializes the
-    tiny relation here so both join legs — and the bucket-count agg
-    when the guard is on — read stored blocks.
-
-    ``max_bucket_size`` is the hot-bucket guard ported from
-    `dedup.minhash_candidates`: real crawls are full of constant-color
-    images, which dHash/pHash map to IDENTICAL
-    band keys (all-zero rows), so one bucket can hold millions of ids
-    and the candidate join goes O(n²) exactly on production inputs.
-    Buckets above the cap are EXCLUDED FROM CANDIDATES, not sampled —
-    `band_oversized_buckets` accounts for what was skipped (never a
-    silent cap); flat-image cohorts are near-identical by construction,
-    so routing them through exact (full-hash) dedup is the right call.
-    """
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"{n_bands}-band LSH guarantees recall only for "
-            f"max_hamming <= {n_bands - 1}"
-        )
-    bk = bk.localCheckpoint(eager=True)
-    if max_bucket_size is not None:
-        counts = bk.groupBy("band", "band_key").agg(
-            F.count("*").alias("__n")
-        )
-        bk = (
-            bk.join(F.broadcast(counts), ["band", "band_key"])
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
-    a, b = bk.alias("a"), bk.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham(a, b).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def band_oversized_buckets(
-    bk: DataFrame, max_bucket_size: int
-) -> DataFrame:
-    """The accounting side of the image band guard: (band,
-    band_key, n_assets) for every band bucket the cap excluded — the
-    `dedup.oversized_buckets` contract over a (id, band, band_key)
-    relation (use `phash_band_keys` / `dhash_band_keys` to build one
-    from a hash DataFrame)."""
-    return (
-        bk.groupBy("band", "band_key")
-        .agg(F.count("*").alias("n_assets"))
-        .filter(F.col("n_assets") > max_bucket_size)
-    )
-
-
-_UNSET = object()
-
-#: Coherent presets for the band candidate joins (round-10: safe by
-#: DEFAULT). The three knobs are not independent: a 500k-image scale
-#: drill showed byte bands + a cap collapsing recall (1,951/2,048 buckets
-#: oversized -> 231/50,030 planted pairs found) while byte bands WITHOUT
-#: a cap go O(n²) on flat cohorts — only the (wide bands, finite cap)
-#: pair is crawl-viable, so the preset switches them together.
-#:
-#: - "crawl" (default): 16-bit bands (4 bands -> pigeonhole recall
-#:   bound hamming <= 3, hence the matching max_hamming default) + a
-#:   finite hot-bucket cap. What a 100-TB user gets without tuning
-#:   the knobs. Excluded buckets are never silent: account with
-#:   `band_oversized_buckets` and route those near-identical cohorts
-#:   through exact (full-hash) dedup.
-#: - "exhaustive": byte bands, no cap, hamming <= 6 — the all-pairs
-#:   research/baseline form (f90's documented shape). Opt-in only;
-#:   quadratic on flat cohorts at crawl density.
-#:
-#: Any explicitly passed argument overrides its preset component.
-BAND_PROFILES: dict[str, dict] = {
-    "crawl": {"max_hamming": 3, "max_bucket_size": 64, "band_width": 2},
-    "exhaustive": {"max_hamming": 6, "max_bucket_size": None,
-                   "band_width": 1},
-}
-
-
-def _resolve_band_profile(profile, max_hamming, max_bucket_size,
-                          band_width):
-    if profile not in BAND_PROFILES:
-        raise ValueError(
-            f"unknown profile {profile!r}; one of {sorted(BAND_PROFILES)}"
-        )
-    p = BAND_PROFILES[profile]
-    return (
-        p["max_hamming"] if max_hamming is None else max_hamming,
-        p["max_bucket_size"] if max_bucket_size is _UNSET
-        else max_bucket_size,
-        p["band_width"] if band_width is None else band_width,
-    )
-
-
-def phash_band_keys(
-    ph: DataFrame, bytes_per_band: int = 1
-) -> DataFrame:
-    """(id, phash, band, band_key): the 64-bit pHash split into
-    8/bytes_per_band bands, the input relation for `_band_near_pairs`
-    / `band_oversized_buckets`. ``bytes_per_band`` is the dHash
-    `rows_per_band` density lever (see dhash_band_keys): 1 → 8 byte
-    bands (256-value keys — saturate at crawl density), 2 → 4 16-bit
-    bands (recall bound hamming <= 3), 4 → 2 32-bit bands (<= 1).
-    Must divide 8."""
-    if 8 % bytes_per_band:
-        raise ValueError("bytes_per_band must divide the 8 hash bytes")
-    n = 8 // bytes_per_band
-    mask = (1 << (8 * bytes_per_band)) - 1
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("phash"), 8 * bytes_per_band * b)
-            .bitwiseAND(F.lit(mask)).alias("key"),
-        )
-        for b in range(n)
-    ])
-    return ph.select(
-        F.col("asset_id").alias("id"), "phash", F.explode(bands).alias("bk")
-    ).select(
-        "id", "phash",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"),
-    )
-
-
-def phash_near_pairs(
-    ph: DataFrame,
-    max_hamming: int | None = None,
-    max_bucket_size=_UNSET,
-    bytes_per_band: int | None = None,
-    profile: str = "crawl",
-) -> DataFrame:
-    """Image near-dup pairs by pHash: the 64-bit hash split into bands,
-    candidates on any shared band, exact hamming filter.
-
-    Defaults come from ``BAND_PROFILES[profile]`` — "crawl" (16-bit
-    bands + finite hot-bucket cap + hamming <= 3) unless a knob is
-    passed explicitly; the unguarded byte-band all-pairs form requires
-    an explicit ``profile="exhaustive"`` (round-10 flip: the old
-    defaults handed a crawl-scale caller the O(n²)-prone shape).
-
-    Pigeonhole guarantee: hamming <= n_bands - 1 differing bits cannot
-    touch every band, so every pair within ``max_hamming`` shares at
-    least one intact band and is ALWAYS generated — no recall hole. (The text
-    SimHash path uses 4 bands because its hash is 32-bit; reusing it here
-    would silently band only the low half.)
-
-    ``max_bucket_size`` caps quadratic hot buckets (flat images hash
-    identically); excluded buckets are reported by
-    `band_oversized_buckets(phash_band_keys(ph), cap)`, never silently
-    dropped. Note the cap weakens the pigeonhole guarantee for pairs
-    whose every shared band is oversized — by construction those live in
-    giant near-identical cohorts better served by exact dedup.
-    ``bytes_per_band``: the wide-band density lever (phash_band_keys) —
-    at crawl density prefer 2 (near-constant images are the dHash
-    scale drill's saturation case)."""
-    max_hamming, max_bucket_size, bytes_per_band = _resolve_band_profile(
-        profile, max_hamming, max_bucket_size, bytes_per_band
-    )
-    return _band_near_pairs(
-        phash_band_keys(ph, bytes_per_band),
-        lambda a, b: F.bit_count(
-            F.col("a.phash").bitwiseXOR(F.col("b.phash"))
-        ),
-        max_hamming,
-        max_bucket_size,
-        n_bands=8 // bytes_per_band,
-    )
-
-
-def image_dhash(assets: DataFrame, auto_batch: bool = True) -> DataFrame:
-    """(asset_id, bands array<int>, decoder): 64-bit difference hash as
-    8 per-row bytes — the EXACT-ARITHMETIC perceptual hash next to
-    `image_phash`'s DCT form: block-mean resample to 9x8 (the shared
-    `_block_mean`, identity on a native 9x8 image — which is what lets
-    the f90 oracle state every bit analytically through the REAL
-    decoder), then bit x of row y = 1 iff px[y, x+1] > px[y, x].
-    Integer-safe band keys (0..255) slot straight into the LSH band
-    join; hamming(a, b) = sum of bit_count(xor) over the 8 bytes.
-    Corrupt payloads degrade to the sha256 fallback like image_phash.
-    """
-    import pandas as pd
-
-    if auto_batch:
-        autotune_arrow_batch(assets)  # session conf ratchet, not a df
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                dec = _image_magic(data)
-                try:
-                    if dec is None:
-                        raise ValueError("no known magic")
-                    gray = _gray_decode(data, dec)
-                    # quantize the block means back to 8-bit levels
-                    # before comparing: the integral-image cumsum
-                    # carries ~1-ulp float noise, and a strict > on a
-                    # CONSTANT region would otherwise emit spurious
-                    # bits (dHash is defined over 8-bit pixels anyway)
-                    small = np.rint(
-                        _block_mean(gray, 8, 9) * 255.0
-                    ).astype(np.int64)
-                    bands = []
-                    for y in range(8):
-                        b = 0
-                        for x in range(8):
-                            if small[y, x + 1] > small[y, x]:
-                                b |= 1 << x
-                        bands.append(b)
-                except (ValueError, struct.error):
-                    digest = hashlib.sha256(data).digest()
-                    bands = list(digest[:8])
-                    dec = _fallback_tag(dec)
-                out.append((asset_id, bands, dec))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "bands", "decoder"]
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        fn, schema="asset_id long, bands array<int>, decoder string"
-    )
-
-
-def dhash_band_keys(dh: DataFrame, rows_per_band: int = 1) -> DataFrame:
-    """(id, bands, band, band_key): the dHash's 8 row bytes grouped
-    ``rows_per_band`` at a time into band keys — the input relation for
-    `_band_near_pairs` / `band_oversized_buckets`.
-
-    rows_per_band widens the band KEY SPACE, the density lever for
-    crawl scale: 1 → 8 bands of 8-bit keys (256 values — every bucket
-    goes hot once a partition-population far exceeds ~256·cap, and the
-    guard starts excluding everything); 2 → 4 bands of 16-bit keys
-    (65536 values, 256× lower bucket density, pigeonhole recall bound
-    tightens to hamming <= 3); 4 → 2 bands of 32-bit keys (<= 1).
-    Must divide 8."""
-    if 8 % rows_per_band:
-        raise ValueError("rows_per_band must divide the 8 dHash rows")
-    n = 8 // rows_per_band
-    grouped = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            sum(
-                (
-                    F.col("bands")[i * rows_per_band + j]
-                    .cast("long") * F.lit(1 << (8 * j))
-                )
-                for j in range(rows_per_band)
-            ).alias("key"),
-        )
-        for i in range(n)
-    ])
-    return dh.select(
-        F.col("asset_id").alias("id"), "bands",
-        F.explode(grouped).alias("bk"),
-    ).select(
-        "id", "bands",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key"),
-    )
-
-
-def dhash_near_pairs(
-    dh: DataFrame,
-    max_hamming: int | None = None,
-    max_bucket_size=_UNSET,
-    rows_per_band: int | None = None,
-    profile: str = "crawl",
-) -> DataFrame:
-    """Image near-dup pairs by dHash: the 8 row bytes grouped into band
-    keys, candidates on any shared band, exact hamming filter — the
-    `phash_near_pairs` pigeonhole (8/rows_per_band bands
-    recall-guarantee hamming <= n_bands - 1) with the bands already
-    materialized as the hash encoding.
-
-    Defaults come from ``BAND_PROFILES[profile]`` — "crawl"
-    (rows_per_band=2 → 16-bit bands, finite hot-bucket cap,
-    hamming <= 3) unless a knob is passed explicitly; the unguarded
-    byte-band all-pairs form requires an explicit
-    ``profile="exhaustive"`` (round-10 flip). ``max_bucket_size`` /
-    `band_oversized_buckets`: see `phash_near_pairs` — flat images make
-    one band key quadratic at crawl scale without the guard; 16-bit
-    keys cut benign bucket collisions 256× so the cap excludes only
-    genuine hot cohorts (see dhash_band_keys)."""
-    max_hamming, max_bucket_size, rows_per_band = _resolve_band_profile(
-        profile, max_hamming, max_bucket_size, rows_per_band
-    )
-    return _band_near_pairs(
-        dhash_band_keys(dh, rows_per_band),
-        lambda a, b: F.aggregate(
-            F.zip_with(
-                F.col("a.bands"), F.col("b.bands"),
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ),
-        max_hamming,
-        max_bucket_size,
-        n_bands=8 // rows_per_band,
-    )

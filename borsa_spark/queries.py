@@ -3941,46 +3941,6 @@ def f78_bigram_backoff_score(spark, sf):
     return bigram_backoff_scores(docs, F.col("doc_id") % 4 != 0)
 
 
-@query("f80_bpe_train")
-def f80_bpe_train(spark, sf):
-    """Distributed BPE tokenizer training (functions/bpe.py
-    `learn_bpe`, Sennrich et al. 2016): 12 merge rounds learned from
-    frequency-weighted pair counts over the word-vocabulary relation —
-    the corpus is scanned ONCE; every round touches only the distinct-
-    word relation. The loop is fully declarative (1-row broadcast
-    argmax per round, in-row replace cascade, per-round
-    checkpointing), so the DuckDB oracle replays it byte-for-byte as
-    12 unrolled MATERIALIZED CTE rounds — a wrong pair count, a wrong
-    tie-break, or a divergent merge application all hash-mismatch.
-
-    Scale shape: vocab is |distinct words| << corpus; each round is
-    one partial-agg groupBy + a TakeOrdered(1) + a broadcast
-    crossJoin. Beyond-reference LLM-pipeline operator."""
-    from borsa_spark.functions.bpe import learn_bpe
-
-    docs = load_table(spark, sf, "documents")
-    return learn_bpe(docs, 12)
-
-
-@query("f81_bpe_compression")
-def f81_bpe_compression(spark, sf):
-    """BPE compression-ratio signal (functions/bpe.py
-    `bpe_token_counts`): apply the 8-round corpus-trained tokenizer
-    back to every document — (doc_id, n_words, n_bpe_tokens). Text the
-    tokenizer compresses poorly is far from the training distribution,
-    a standard LLM-data quality filter one step past f73/f78's LM
-    scores.
-
-    Scale shape: the merged segmentation lives on the word-vocab
-    relation; documents join to it word-keyed (AQE broadcasts the
-    small vocab; equi-join at 100 TB) — the corpus is never
-    re-segmented row by row."""
-    from borsa_spark.functions.bpe import bpe_token_counts
-
-    docs = load_table(spark, sf, "documents")
-    return bpe_token_counts(docs, 8)
-
-
 @query(
     "f83_corpus_card",
     """
@@ -4152,317 +4112,6 @@ def f86_c4_line_filter(spark, sf):
         out["n_lines"].alias("n_lines"),
         out["n_kept"].alias("n_kept"),
         out["page_flagged"].alias("page_flagged"),
-    )
-
-
-@query(
-    "f90_image_dhash_pairs",
-    """
-    WITH g AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 10 = 9 THEN doc_id - 9
-                  ELSE doc_id END AS base,
-             (doc_id % 10 = 9) AS pert
-      FROM documents),
-    px AS (
-      SELECT doc_id, t.y,
-             list_transform(range(0, 9), x ->
-               CASE WHEN pert AND x = 0 AND t.y = 0
-                    THEN (((((base*37 + (x*8 + t.y + 1)*97)
-                             * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                           * (((base*37 + (x*8 + t.y + 1)*97)
-                               * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                           >> 7) + 7) % 256
-                    ELSE ((((base*37 + (x*8 + t.y + 1)*97)
-                            * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                          * (((base*37 + (x*8 + t.y + 1)*97)
-                              * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                          >> 7) % 256
-               END) AS row
-      FROM g, unnest(range(0, 8)) AS t(y)),
-    bands AS (
-      SELECT doc_id, y AS band,
-             list_sum(list_transform(range(0, 8), x ->
-               CASE WHEN row[x+2] > row[x+1]
-                    THEN 1 << x ELSE 0 END))::BIGINT AS key
-      FROM px),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    ham AS (
-      SELECT c.id_a, c.id_b,
-             sum(bit_count(xor(ba.key, bb.key)))::BIGINT AS hamming
-      FROM cand c
-      JOIN bands ba ON ba.doc_id = c.id_a
-      JOIN bands bb ON bb.doc_id = c.id_b AND bb.band = ba.band
-      GROUP BY 1, 2)
-    SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 6
-    """,
-)
-def f90_image_dhash_pairs(spark, sf):
-    """Image near-dup detection with REAL decode in the loop
-    (multimodal.py `image_dhash` + `dhash_near_pairs`): one 9x8
-    grayscale PNG per document (Paeth-filtered — the hardest unfilter
-    branch) with a double-squared analytic luma (h=37*base+97*k;
-    ((h^2 mod 2^16)^2 >> 7) mod 256 — nonlinear in BOTH base and pixel
-    index, so unrelated documents' hashes land ~32 bits apart and the
-    planted pairs are the ONLY survivors: pair emission is O(planted),
-    never O(n^2); verified 50/50 planted + 0 extras at 500 docs), and
-    every 10th document carrying a COPY of another document's image
-    with one pixel bumped — the crawl re-encode/near-duplicate shape.
-    The exact-arithmetic dHash (bit = right pixel > left pixel, 8
-    row-byte bands) lets the oracle state every bit ANALYTICALLY from
-    doc_id, so the gate covers the PNG decode, the hash, the band
-    join, and the hamming filter end-to-end — unlike the DCT pHash,
-    which stays pytest-pinned. A decoder that misreads the Paeth
-    recurrence or a banding that loses the pigeonhole guarantee
-    (hamming <= 7 always shares a band) hash-mismatches.
-
-    Scale shape: Arrow-batched decode (bytes in, 8 ints out); the only
-    shuffle is the band-key equi-join (the f9/SimHash shape) — hot
-    bands are genuinely-duplicate clusters, the dedup signal itself."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                base = did - 9 if did % 10 == 9 else did
-                def luma(y, x):
-                    h = base * 37 + (x * 8 + y + 1) * 97
-                    g = (h * h) % 65536
-                    return ((g * g) >> 7) % 256
-
-                px = np.fromfunction(
-                    luma, (8, 9), dtype=np.int64
-                ).astype(np.uint8)
-                if did % 10 == 9:
-                    px[0, 0] = (int(px[0, 0]) + 7) % 256
-                data = mm.encode_png_pixels(
-                    px[:, :, None], filter_type=4
-                )
-                out.append((did, data))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(gen, "asset_id long, payload binary")
-    dh = mm.image_dhash(assets)
-    # the documented exhaustive BASELINE form (byte bands, no cap) — the
-    # library default is the crawl profile since round 10; f91 carries
-    # the guarded shape
-    return mm.dhash_near_pairs(dh, max_hamming=6, profile="exhaustive").select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("hamming").cast("long").alias("hamming"),
-    )
-
-
-@query("f85_langid_nb", None)
-def f85_langid_nb(spark, sf):
-    """Trained language ID (functions/langid.py `charngram_nb_langid`):
-    char-bigram multinomial Naive Bayes fit in-engine on an 80% md5
-    split (the f78 train/score pattern), holdout predictions returned.
-    The fixture generates (lang, text) ANALYTICALLY from doc_id —
-    12 words from per-language pools (`LANG_POOLS`): each language's
-    5 stopwords (f4's own vocabulary) plus 3 distinctive words; a third
-    of docs draw ONLY distinctive words, where the f4 stopword-argmax
-    degenerates to its all-tie default while the NB still reads the
-    character signature (held-out accuracy assertion in
-    tests/test_langid.py). Oracle: the identical count-closed-form NB
-    in SQL (`sql_charngram_nb_langid` — no iteration; scores snapped to
-    4dp before the argmax, ties on ascending label, the portable-float
-    convention).
-
-    Scale shape: one corpus scan for the tf relation; the model is
-    charset² × n_langs rows (broadcast); scoring is tf × 5-label panel
-    with a doc_id-keyed agg and a 5-rows-per-doc argmax window."""
-    from borsa_spark.functions.langid import (
-        charngram_nb_langid,
-        langid_fixture_spark_sql,
-    )
-    from borsa_spark.functions.text import hash_bucket
-
-    # NOT widened (round-13 A/B): charngram's shared-exchange DAG has
-    # ~10 pruning-variant consumers of this scan; a widen repartition
-    # multiplies into one extra Exchange per consumer (59 vs 49
-    # measured) and costs ~0.9 s at sf0.1 with no reuse gain
-    docs = load_table(spark, sf, "documents").selectExpr(
-        "doc_id", *langid_fixture_spark_sql()
-    )
-    scored = charngram_nb_langid(
-        docs, train=hash_bucket(F.col("doc_id"), "f85", 10) < 8
-    )
-    return scored.filter(
-        hash_bucket(F.col("doc_id"), "f85", 10) >= 8
-    )
-
-
-def _crawl_image_assets(spark, sf):
-    """The crawl-degenerate image fixture shared by f91 and c13: 80% of
-    documents carry one constant-color PNG (dHash all-zero bands); the
-    textured 20% (doc_id % 5 = 0) use the f90 double-squared analytic
-    luma, with one-pixel-perturbed planted copies at doc_id % 10 = 5
-    (hamming <= 1 from their base)."""
-    import numpy as np
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        flat = mm.encode_png_pixels(
-            np.full((8, 9, 1), 77, dtype=np.uint8), filter_type=4
-        )
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 5 != 0:
-                    out.append((did, flat))
-                    continue
-                # mod 262139: identity at driver SFs, int64-safe at
-                # replica-scale ids (see the oracle chain's note)
-                base = (did - 5 if did % 10 == 5 else did) % 262139
-
-                def luma(y, x):
-                    h = base * 37 + (x * 8 + y + 1) * 97
-                    g = (h * h) % 65536
-                    return ((g * g) >> 7) % 256
-
-                px = np.fromfunction(
-                    luma, (8, 9), dtype=np.int64
-                ).astype(np.uint8)
-                if did % 10 == 5:
-                    px[0, 0] = (int(px[0, 0]) + 7) % 256
-                out.append(
-                    (did, mm.encode_png_pixels(px[:, :, None],
-                                               filter_type=4))
-                )
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    return docs.mapInPandas(gen, "asset_id long, payload binary")
-
-
-#: Analytic dHash byte-band relation for the crawl-degenerate image
-#: fixture (`_crawl_image_assets`), shared by f91 (byte-band guard) and
-#: c13 (wide-band crawl-profile clustering): `bands` is (doc_id, band
-#: 0..7, key = the dHash row byte), flat docs all-zero by the
-#: requantization pin, textured rows restated from the double-squared
-#: luma.
-_IMG_BANDS_SQL = """g AS (
-      -- base reduced mod 262139 (prime): identity at every driver SF
-      -- (doc_id < 262139 there) while keeping the luma's squared term
-      -- inside int64 at replica-scale ids — scale_data doc_ids reach
-      -- 9e7, where (base*37)^2 overflows and DuckDB (checked 64-bit
-      -- arithmetic) refuses what Spark would silently wrap
-      SELECT doc_id,
-             doc_id % 5 = 0 AS textured,
-             (CASE WHEN doc_id % 10 = 5 THEN doc_id - 5
-                   ELSE doc_id END) % 262139 AS base,
-             (doc_id % 10 = 5) AS pert
-      FROM documents),
-    px AS (
-      SELECT doc_id, t.y,
-             list_transform(range(0, 9), x ->
-               CASE WHEN pert AND x = 0 AND t.y = 0
-                    THEN (((((base*37 + (x*8 + t.y + 1)*97)
-                             * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                           * (((base*37 + (x*8 + t.y + 1)*97)
-                               * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                           >> 7) + 7) % 256
-                    ELSE ((((base*37 + (x*8 + t.y + 1)*97)
-                            * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                          * (((base*37 + (x*8 + t.y + 1)*97)
-                              * (base*37 + (x*8 + t.y + 1)*97)) % 65536)
-                          >> 7) % 256
-               END) AS row
-      FROM g, unnest(range(0, 8)) AS t(y)
-      WHERE textured),
-    tb AS (
-      SELECT doc_id, y AS band,
-             list_sum(list_transform(range(0, 8), x ->
-               CASE WHEN row[x+2] > row[x+1]
-                    THEN 1 << x ELSE 0 END))::BIGINT AS key
-      FROM px),
-    fb AS (
-      SELECT doc_id, t.b AS band, 0::BIGINT AS key
-      FROM g, unnest(range(0, 8)) AS t(b)
-      WHERE NOT textured),
-    bands AS (SELECT * FROM tb UNION ALL SELECT * FROM fb)"""
-
-
-@query(
-    "f91_image_band_guard",
-    f"""
-    WITH {_IMG_BANDS_SQL},
-    cnt AS (
-      SELECT band, key, count(*) AS n FROM bands GROUP BY 1, 2),
-    keep AS (
-      SELECT b.doc_id, b.band, b.key
-      FROM bands b JOIN cnt ON cnt.band = b.band AND cnt.key = b.key
-      WHERE cnt.n <= 10),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM keep a JOIN keep b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    ham AS (
-      SELECT c.id_a, c.id_b,
-             sum(bit_count(xor(ba.key, bb.key)))::BIGINT AS hamming
-      FROM cand c
-      JOIN bands ba ON ba.doc_id = c.id_a
-      JOIN bands bb ON bb.doc_id = c.id_b AND bb.band = ba.band
-      GROUP BY 1, 2)
-    SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 6
-    """,
-)
-def f91_image_band_guard(spark, sf):
-    """The crawl-degenerate case f90's engineered fixture dodges, with
-    the hot-bucket guard ORACLE-FACED (multimodal.py `dhash_near_pairs
-    (max_bucket_size=10)`, the `minhash_candidates` guard ported to the
-    image band join): 80% of documents carry a CONSTANT-COLOR image —
-    dHash maps every one to the all-zero bands, so one band bucket
-    holds the whole cohort and an unguarded candidate join goes O(n²)
-    exactly on what a real crawl serves (flat backgrounds, blank
-    frames). The cap excludes those buckets from candidates — flat
-    cohorts are near-identical by construction and belong to exact
-    dedup — while the textured 20% (the f90 double-squared analytic
-    luma, planted one-pixel-perturbed copies at doc_id % 10 = 5) keeps
-    its planted pairs: their band buckets stay under the cap. The
-    oracle recomputes bands analytically (flat rows are 0 by the
-    requantization pin), mirrors the bucket-count cap in SQL, and
-    hash-matches pairs — a guard that drops the wrong buckets, skips
-    the count, or caps silently on one side mismatches. Exclusion
-    accounting is `band_oversized_buckets` (pytest-pinned:
-    TestBandHotBucketGuard).
-
-    Scale shape: the guard adds one (band, key) count agg over the
-    localCheckpointed 8-ints-per-image relation + a broadcast semi-join
-    (<= 2048 distinct byte-keyed buckets); candidate emission drops
-    from O(n²) to O(planted)."""
-    from borsa_spark.functions import multimodal as mm
-
-    dh = mm.image_dhash(_crawl_image_assets(spark, sf))
-    # byte bands + explicit cap: the oracle mirrors the BYTE-band bucket
-    # counts, so the band width is pinned via the exhaustive profile
-    return mm.dhash_near_pairs(
-        dh, max_hamming=6, max_bucket_size=10, profile="exhaustive"
-    ).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("hamming").cast("long").alias("hamming"),
     )
 
 
@@ -4646,9 +4295,9 @@ def f94_span_removal_rewrite(spark, sf):
 
 # --- f95: the crawl-profile minhash default, oracle-faced ----------------
 
-#: f95 fixture: 80% of docs are ONE boilerplate sentence (the text
-#: analog of f91's flat-image cohort — identical signatures, so every
-#: band bucket holds the whole cohort and blows past CRAWL_MAX_BUCKET),
+#: f95 fixture: 80% of docs are ONE boilerplate sentence (identical
+#: signatures, so every band bucket holds the whole cohort and blows
+#: past CRAWL_MAX_BUCKET),
 #: 20% unique 12-word docs with a planted near-copy per pair of tens
 #: (last word swapped: the 12-word doc has 10 trigram shingles and the
 #: last word sits in exactly one of them, so 9 of 11 distinct shingles
@@ -4708,8 +4357,8 @@ _F95_TEXT_SQL = f"""CASE WHEN doc_id % 5 <> 0 THEN '{_F95_BOILER}'
 )
 def f95_minhash_crawl_guard(spark, sf):
     """The round-10 DEFAULT (minhash_dedup_pairs with
-    max_bucket_size=CRAWL_MAX_BUCKET) oracle-faced — f91's guarded-form
-    story for the TEXT path: an 80% boilerplate cohort (identical
+    max_bucket_size=CRAWL_MAX_BUCKET) oracle-faced on the TEXT path:
+    an 80% boilerplate cohort (identical
     signatures, every band bucket = the whole cohort, quadratically
     hot) is EXCLUDED by the cap while the planted near-copies among
     the unique 20% still pair and verify. The oracle replays the full
@@ -4743,92 +4392,6 @@ def _f95_fixture(spark, sf):
     )
     return load_table(spark, sf, "documents").select(
         "doc_id", text.alias("text")
-    )
-
-
-@query(
-    "c13_image_crawl_clusters",
-    f"""
-    WITH RECURSIVE {_IMG_BANDS_SQL},
-    tw AS (
-      SELECT a.doc_id, a.band // 2 AS band,
-             a.key + 256 * b.key AS key
-      FROM tb a
-      JOIN tb b ON b.doc_id = a.doc_id AND b.band = a.band + 1
-      WHERE a.band % 2 = 0),
-    fw AS (
-      SELECT doc_id, t.b AS band, 0::BIGINT AS key
-      FROM g, unnest(range(0, 4)) AS t(b)
-      WHERE NOT textured),
-    wbands AS (SELECT * FROM tw UNION ALL SELECT * FROM fw),
-    wcnt AS (SELECT band, key, count(*) AS n
-             FROM wbands GROUP BY 1, 2),
-    keep AS (
-      SELECT w.doc_id, w.band, w.key
-      FROM wbands w JOIN wcnt ON wcnt.band = w.band AND wcnt.key = w.key
-      WHERE wcnt.n <= 64),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM keep a JOIN keep b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-    ham AS (
-      SELECT c.id_a, c.id_b,
-             sum(bit_count(xor(ba.key, bb.key)))::BIGINT AS hamming
-      FROM cand c
-      JOIN bands ba ON ba.doc_id = c.id_a
-      JOIN bands bb ON bb.doc_id = c.id_b AND bb.band = ba.band
-      GROUP BY 1, 2),
-    pairs AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    cc AS (
-      SELECT doc_id AS id, doc_id AS comp FROM documents
-      UNION
-      SELECT e.dst AS id, cc.comp FROM cc JOIN edges e ON cc.id = e.src)
-    SELECT id AS asset_id, min(comp)::BIGINT AS component,
-           (id = min(comp)) AS kept
-    FROM cc GROUP BY id
-    """,
-)
-def c13_image_crawl_clusters(spark, sf):
-    """The image-dedup lifecycle under the round-10 CRAWL DEFAULTS,
-    end-to-end and oracle-faced: decode (`image_dhash` over the f91
-    crawl-degenerate fixture) -> `dhash_near_pairs()` with NO arguments
-    — the shipped profile (16-bit bands, cap 64, hamming <= 3) is
-    itself what's under test — -> star-contraction connected components
-    (`dup_clusters`) -> keep-first representatives (kept = id ==
-    component, the `drop_repeated_paragraphs` keep-first rule at the
-    asset level). The 80% flat cohort's combined wide bucket blows past
-    the cap, so every flat image is its own singleton component (the
-    guard's documented semantics: hot cohorts route to exact dedup, not
-    the band join), while each planted one-pixel pair forms a 2-cluster
-    whose lower id is kept. The oracle restates the dHash bits
-    analytically, composes the WIDE keys (byte 2i + 256*byte 2i+1),
-    mirrors the cap, hamming gate, and a recursive min-reachable-id
-    component fold — a profile default drifting to byte bands, a cap
-    miscount, or a component mislabel all hash-mismatch.
-
-    Scale shape: decode once (localCheckpointed band relation), guarded
-    wide-band equi-join, O(log² n) star contraction over planted-pair-
-    sized edges; nothing touches O(n²)."""
-    from borsa_spark.functions import multimodal as mm
-
-    assets = _crawl_image_assets(spark, sf)
-    dh = mm.image_dhash(assets)
-    pairs = mm.dhash_near_pairs(dh)  # the crawl DEFAULT, deliberately bare
-    # node set from the docs scan, NOT from dh: the band join reads the
-    # localCheckpointed band relation, but a dh-derived node list would
-    # be a second consumer of the decode subtree and re-run the
-    # MapInPandas decode (round-10 plan audit caught exactly this)
-    nodes = load_table(spark, sf, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    comp = _dd.dup_clusters(pairs.select("id_a", "id_b"), nodes)
-    return comp.select(
-        F.col("id").cast("long").alias("asset_id"),
-        F.col("comp").cast("long").alias("component"),
-        (F.col("id") == F.col("comp")).alias("kept"),
     )
 
 
@@ -5010,22 +4573,6 @@ def _register_late_oracles() -> None:
 
     ORACLES["f77_logreg_quality_score"] = sql_hashed_logreg_scores(
         "source IN ('src0', 'src1')"
-    )
-    from borsa_spark.functions.bpe import sql_bpe_token_counts, sql_learn_bpe
-
-    ORACLES["f80_bpe_train"] = sql_learn_bpe(12)
-    ORACLES["f81_bpe_compression"] = sql_bpe_token_counts(8)
-    from borsa_spark.functions.langid import (
-        langid_fixture_duckdb_sql,
-        sql_charngram_nb_langid,
-    )
-    from borsa_spark.functions.text import sql_hash_bucket
-
-    _f85_bkt = sql_hash_bucket("doc_id", "f85", 10)
-    ORACLES["f85_langid_nb"] = sql_charngram_nb_langid(
-        langid_fixture_duckdb_sql(),
-        f"({_f85_bkt}) < 8",
-        out_where=f"({_f85_bkt}) >= 8",
     )
     ORACLES["c12_training_mix"] = _c12_oracle_sql()
 

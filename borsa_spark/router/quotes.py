@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from borsa_spark.errors import NotFoundError, UnsupportedError
+from borsa_spark.errors import (
+    BorsaSparkError,
+    NotFoundError,
+    UnsupportedError,
+    collapse_errors,
+)
 from borsa_spark.plans.routing_policy import RoutingContext
 from borsa_spark.sources.provider import Catalog, _local_frame
 
@@ -32,8 +37,19 @@ def _quote_union(
     if not eligible:
         raise UnsupportedError("quote: no eligible provider")
     frames = []
+    errors: list[BorsaSparkError] = []
     for idx, source in eligible:
-        frames.append(source.table("quote").withColumn("priority", F.lit(idx)))
+        # A provider that fails (quota, blacklist, 5xx) is skipped, as
+        # PriorityWithFallback moves on to the next one (quotes.rs:38-71).
+        try:
+            df = source.table("quote")
+        except BorsaSparkError as e:
+            e.connector = e.connector or source.name
+            errors.append(e)
+            continue
+        frames.append(df.withColumn("priority", F.lit(idx)))
+    if not frames:
+        raise collapse_errors(len(eligible), errors, "quote")
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)

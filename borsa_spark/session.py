@@ -74,8 +74,8 @@ def get_spark(
 def release_all_cached(spark: SparkSession) -> int:
     """Free EVERY cached relation in the session: catalog-cached plans
     (``clearCache``) AND RDD-level persists, which ``clearCache`` does
-    not touch — ``localCheckpoint`` blocks (the band-join checkpoint in
-    ``_band_near_pairs``, bloom probe sets, BPE per-round vocabularies)
+    not touch — ``localCheckpoint`` blocks (the cluster-fixpoint rounds
+    in ``dup_clusters``, bloom probe sets, the logreg feature relation)
     live in the RDD layer, not the CacheManager, and accumulate across a
     long session otherwise (round-9 ADVICE). Returns the number of RDDs
     unpersisted.

@@ -40,12 +40,18 @@ def main() -> None:
     q.explain("formatted")
     q.show(1)
 
-    print("# History plan (one symbol, 6mo daily: scan -> resample -> merge"
-          " in one partition, no exchange)")
-    res = history(spark, cat, HistoryRequest(symbol="purchase", range="6mo",
+    # range="max": a relative range such as "6mo" resolves against the
+    # wall clock, and the fixture's events may all lie outside it
+    print("# History plan (one symbol, full range daily: scan -> resample"
+          " -> merge in one partition, no exchange)")
+    res = history(spark, cat, HistoryRequest(symbol="purchase", range="max",
                                              interval="1d"))
     res.candles.explain("formatted")
-    print(f"history rows: {res.candles.count()}")
+    n_rows = res.candles.count()
+    print(f"history rows: {n_rows}")
+    if n_rows == 0:
+        spark.stop()
+        sys.exit("00_tracing: the history request returned no rows")
 
     print("# Search plan (exchange-preference dedup rank)")
     s = search(spark, cat, "pur", limit=5)

@@ -5,7 +5,7 @@ path; this is the training-data-pipeline side of the engine).
 BMP, PPM, PNG (zlib inflate + full scanline unfilter), baseline JPEG
 (Huffman + IDCT + YCbCr) and still GIF (LZW) all decode in pure Python
 + numpy inside Arrow-batched mapInPandas stages. The demo builds one
-asset of each kind, extracts features and pHashes the images.
+asset of each kind and extracts its features.
 
 Run: python examples/29_multimodal_codecs.py
 """
@@ -50,12 +50,6 @@ def main() -> None:
 
     print("== image features (real decode per magic bytes) ==")
     mm.image_features(assets).orderBy("asset_id").show(truncate=False)
-
-    # PNG and JPEG of the SAME pixels: pHash lands within near-dup range
-    ph = {r.asset_id: r.phash for r in mm.image_phash(assets).collect()}
-    ham = bin(ph[2] ^ ph[3]).count("1")
-    print(f"pHash(PNG) vs pHash(JPEG q90) of the same image: "
-          f"hamming {ham}/64 (pairs at <= 6)")
     spark.stop()
 
 

@@ -1,17 +1,13 @@
 """34 — Crawl-safe dedup defaults + corpus-wide span removal (round
 10): what a 100-TB user gets WITHOUT tuning anything.
 
-Three demonstrations, each from its own oracled operator:
+Two demonstrations, each from its own oracled operator:
 
     1. The minhash candidate join under the shipped default cap
        (CRAWL_MAX_BUCKET=256, the f95 query): an 80%-boilerplate
        corpus's band buckets are excluded with ACCOUNTING
        (`oversized_buckets`), planted near-copies still pair.
-    2. The image lifecycle under the bare crawl profile (the c13
-       query): decode -> dhash_near_pairs() with no arguments ->
-       star-contraction clusters -> keep-first representatives; the
-       flat cohort stays singleton, planted pairs form 2-clusters.
-    3. Corpus-wide span removal (the f94 query): winnow screen ->
+    2. Corpus-wide span removal (the f94 query): winnow screen ->
        pair-gated exact spans -> "remove the duplicate span from all
        but one document" (Lee et al. 2022), then a rerun proving the
        rewrite converged.
@@ -56,25 +52,14 @@ def main() -> None:
               "to see the guard bind)")
     release_all_cached(spark)
 
-    # -- 2. image lifecycle under the bare crawl profile -------------
-    clusters = QUERIES["c13_image_crawl_clusters"](spark, SF)
-    agg = clusters.groupBy("component").count()
-    n_multi = agg.filter("count > 1").count()
-    n_single = agg.filter("count = 1").count()
-    kept = clusters.filter("kept").count()
-    print(f"[2] image clusters (bare dhash_near_pairs() defaults): "
-          f"{n_multi} planted 2-clusters, {n_single} singletons "
-          f"(flat cohort routed to exact dedup), {kept} representatives")
-    release_all_cached(spark)
-
-    # -- 3. corpus-wide span removal, then convergence ----------------
+    # -- 2. corpus-wide span removal, then convergence ----------------
     rewrite = QUERIES["f94_span_removal_rewrite"](spark, SF)
     stats = rewrite.agg(
         F.count("*").alias("docs"),
         F.sum("n_tokens_removed").alias("tokens_removed"),
         F.count(F.when(F.col("n_tokens_removed") > 0, 1)).alias("cut"),
     ).collect()[0]
-    print(f"[3] span removal: {stats.docs} docs, {stats.cut} rewritten, "
+    print(f"[2] span removal: {stats.docs} docs, {stats.cut} rewritten, "
           f"{stats.tokens_removed} tokens removed (keep-first)")
     from borsa_spark.functions.text import winnow_pairs
 

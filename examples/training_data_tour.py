@@ -137,20 +137,6 @@ def main() -> None:
     tx.bigram_backoff_scores(docs, F.col("doc_id") % 4 != 0) \
         .orderBy("avg_logscore").show(5)
 
-    # 10. train a BPE tokenizer ON the corpus (one scan; every merge
-    # round touches only the distinct-word relation), then score each
-    # doc by how well the learned merges compress it — poor compression
-    # means far from the training distribution (f80/f81)
-    from borsa_spark.functions.bpe import bpe_token_counts, learn_bpe
-
-    print("== learned BPE merge table (12 rounds) ==")
-    learn_bpe(docs, 12).orderBy("step").show(12)
-    print("== tokenizer-fit signal: worst-compressed docs ==")
-    bpe_token_counts(docs, 8).withColumn(
-        "tokens_per_word",
-        F.round(F.col("n_bpe_tokens") / F.col("n_words"), 3),
-    ).orderBy(F.desc("tokens_per_word")).show(5)
-
     spark.stop()
 
 

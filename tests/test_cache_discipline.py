@@ -3,11 +3,11 @@
 Library functions persist() multi-consumer intermediates and the
 HARNESS frees them (`borsa_spark.__doc__`). This sweep runs the
 queries() entries that persist or localCheckpoint the most — the
-minhash family, substring spans, the image band join, the router
-persists — end-to-end, then asserts `release_all_cached`
-returns the session to ZERO cached blocks: no catalog-cached plans, no
-RDD-layer persists, no stranded localCheckpoints. A new persist added
-without a release path shows up here as a nonzero residue."""
+minhash family, substring spans, the router persists — end-to-end,
+then asserts `release_all_cached` returns the session to ZERO cached
+blocks: no catalog-cached plans, no RDD-layer persists, no stranded
+localCheckpoints. A new persist added without a release path shows up
+here as a nonzero residue."""
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -42,9 +42,9 @@ class TestQueriesLeaveNoResidue:
 
     # persist/localCheckpoint-heavy entries, one per family:
     # minhash self-join (f7), clustering fixpoint (f17), cross-set
-    # bands (f35), substring anchors (f61),
-    # pair-restricted spans (f93), image band localCheckpoint (f90),
-    # bloom probe set (f76), router batch quotes (a8), history e2e
+    # bands (f35), substring anchors (f61), pair-restricted spans
+    # (f93), bloom probe set (f76), router batch quotes (a8), history
+    # e2e
     SWEEP = [
         "f7_minhash_dedup_pairs",
         "f17_dup_clusters",
@@ -52,7 +52,6 @@ class TestQueriesLeaveNoResidue:
         "f61_substring_spans",
         "f93_candidate_substring_spans",
         "f94_span_removal_rewrite",
-        "f90_image_dhash_pairs",
         "f76_bloom_decontaminate",
         "a8_quotes_batch_failures",
         "hist_e2e_daily_merge",

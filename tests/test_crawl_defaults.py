@@ -1,132 +1,12 @@
-"""Round-10 contract: the candidate-join DEFAULTS are the crawl-safe
-guarded forms. A 500k-image scale drill showed the old defaults
-(byte bands, no cap) collapsing exactly at crawl density — byte bands
-without a cap go O(n²) on flat cohorts, byte bands WITH a cap lose
-recall (1,951/2,048 buckets oversized -> 231/50,030 planted pairs).
-Only (wide bands, finite cap) is viable unattended, so that is what a
-caller gets without tuning anything; the exhaustive all-pairs shapes
-require an explicit opt-in (``profile="exhaustive"`` /
-``max_bucket_size=None``). These tests pin the flip so a refactor
-cannot quietly hand the 100-TB user the quadratic shape back."""
+"""Round-10 contract: the MinHash candidate join's DEFAULT is the
+crawl-safe guarded form. An uncapped band join goes O(n²) on a
+boilerplate cohort, so a caller gets the finite cap
+(``dedup.CRAWL_MAX_BUCKET``) without tuning anything; the exhaustive
+all-pairs shape requires an explicit ``max_bucket_size=None``. These
+tests pin the default so a refactor cannot quietly hand the 100-TB
+user the quadratic shape back."""
 
 import inspect
-
-import pytest
-
-
-class TestBandProfileDefaults:
-    """dhash/phash_near_pairs resolve their knobs from BAND_PROFILES."""
-
-    N_FLAT = 70  # > the crawl cap of 64, so the default guard binds
-
-    def _fixture(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        rows = [
-            # distinct colors: distinct payload bytes, identical
-            # all-zero dHash — the crawl-scale hot cohort
-            (i, mm.encode_png_pixels(
-                np.full((8, 9, 1), (i * 3) % 256, dtype=np.uint8),
-                filter_type=4,
-            ))
-            for i in range(self.N_FLAT)
-        ]
-        rng = np.random.default_rng(23)
-        px = rng.integers(0, 256, size=(8, 9, 1)).astype(np.uint8)
-        px2 = px.copy()
-        px2[0, 0, 0] = (int(px2[0, 0, 0]) + 9) % 256
-        rows.append((1000, mm.encode_png_pixels(px)))
-        rows.append((1001, mm.encode_png_pixels(px2)))
-        return spark.createDataFrame(
-            rows, "asset_id long, payload binary"
-        )
-
-    def test_crawl_profile_values(self):
-        from borsa_spark.functions import multimodal as mm
-
-        assert mm.BAND_PROFILES["crawl"] == {
-            "max_hamming": 3, "max_bucket_size": 64, "band_width": 2,
-        }
-        assert mm.BAND_PROFILES["exhaustive"] == {
-            "max_hamming": 6, "max_bucket_size": None, "band_width": 1,
-        }
-
-    def test_default_call_is_guarded_wide_band(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        # 70-strong flat cohort > cap 64 -> excluded; planted pair kept
-        pairs = mm.dhash_near_pairs(dh).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(1000, 1001)]
-
-    def test_exhaustive_is_explicit_opt_in(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        n = mm.dhash_near_pairs(dh, profile="exhaustive").count()
-        assert n == self.N_FLAT * (self.N_FLAT - 1) // 2 + 1
-
-    def test_unknown_profile_refused(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        with pytest.raises(ValueError, match="profile"):
-            mm.dhash_near_pairs(dh, profile="yolo")
-
-    def test_explicit_args_override_profile(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        # overriding every knob under the default profile reproduces
-        # the exhaustive shape exactly
-        n = mm.dhash_near_pairs(
-            dh, max_hamming=6, max_bucket_size=None, rows_per_band=1
-        ).count()
-        assert n == self.N_FLAT * (self.N_FLAT - 1) // 2 + 1
-
-    def test_wide_bands_refuse_byte_band_hamming(self, spark):
-        # a caller porting old code with max_hamming=6 must get a loud
-        # pigeonhole error under the crawl default, not silent recall loss
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        with pytest.raises(ValueError, match="max_hamming <= 3"):
-            mm.dhash_near_pairs(dh, max_hamming=6)
-        ph_one = mm.image_phash(
-            self._fixture(spark).limit(1)
-        )
-        with pytest.raises(ValueError, match="max_hamming <= 3"):
-            mm.phash_near_pairs(ph_one, max_hamming=6)
-
-    def test_phash_default_guarded(self, spark):
-        # pHash thresholds near-zero DCT noise on flat images, so
-        # DISTINCT colors don't share one hash — the hot-cohort pin
-        # here uses identical payloads (same-color flat copies),
-        # which do: one bucket of 70 > 64 is excluded by the default
-        # cap while the planted near pair survives
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        flat = mm.encode_png_pixels(
-            np.full((8, 9, 1), 77, dtype=np.uint8), filter_type=4
-        )
-        rows = [(i, flat) for i in range(self.N_FLAT)]
-        rng = np.random.default_rng(23)
-        px = rng.integers(0, 256, size=(8, 9, 1)).astype(np.uint8)
-        px2 = px.copy()
-        px2[0, 0, 0] = (int(px2[0, 0, 0]) + 9) % 256
-        rows.append((1000, mm.encode_png_pixels(px)))
-        rows.append((1001, mm.encode_png_pixels(px2)))
-        ph = mm.image_phash(spark.createDataFrame(
-            rows, "asset_id long, payload binary"
-        ))
-        pairs = mm.phash_near_pairs(ph).collect()
-        ids = [(p.id_a, p.id_b) for p in pairs]
-        assert (1000, 1001) in ids
-        assert all(a >= 1000 for a, _ in ids)
 
 
 class TestMinhashCapDefaults:

@@ -123,27 +123,6 @@ class TestPngCodec:
             assert (w, h, ch) == (bw, bh, bch) == (9, 5, 3)
             assert luma == pytest.approx(bluma, abs=1e-12)
 
-    def test_phash_cross_codec_invariance(self):
-        # The same pixel grid through the PNG and PPM pixel paths must
-        # produce the SAME 64-bit pHash — the natural oracle for "the
-        # PNG decode returns real pixels, not plausible ones".
-        import numpy as np
-
-        from borsa_spark.functions.multimodal import (
-            _gray_png,
-            _gray_ppm,
-            encode_png_pixels,
-            phash64,
-        )
-
-        gy, gx = np.mgrid[0:24, 0:32]
-        grad = np.stack(
-            [(gy * 7) % 256, (gx * 11) % 256, ((gx + gy) * 5) % 256], axis=2
-        ).astype(np.uint8)
-        png = encode_png_pixels(grad, filter_type=4)
-        ppm = b"P6\n32 24\n255\n" + grad.tobytes()
-        assert phash64(_gray_png(png)) == phash64(_gray_ppm(ppm))
-
     def test_error_paths(self):
         from borsa_spark.functions.multimodal import _png_pixels
 
@@ -182,23 +161,6 @@ class TestPngCodec:
         out = {r.asset_id: r for r in image_features(assets).collect()}
         assert (out[20].width, out[20].height, out[20].decoder) == (6, 4, "png")
         assert out[20].mean_luma == pytest.approx(60 / 255.0)
-
-    def test_image_phash_corrupt_png_degrades(self, spark):
-        from borsa_spark.functions.multimodal import image_phash
-
-        corrupt = bytearray(self.GOLDEN_PNG)
-        corrupt[45] ^= 0xFF
-        rows = [
-            (30, "image", "image/png", bytes(corrupt),
-             None, None, None, None, None),
-            (31, "image", "image/png", self.GOLDEN_PNG,
-             None, None, None, None, None),
-        ]
-        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
-        out = {r.asset_id: r for r in image_phash(assets).collect()}
-        assert out[30].decoder == "corrupt-fallback"
-        assert out[31].decoder == "png"
-
 
 @pytest.fixture()
 def assets(spark):
@@ -294,120 +256,6 @@ class TestMultimodal:
             if prev is not None:
                 spark.conf.set(ARROW_BATCH_KEY, prev)
 
-
-class TestPerceptualHash:
-    """pHash image near-dup: real PPM pixels -> DCT hash -> band-paired
-    hamming. Textured fixtures (noise-perturbed copies vs an independent
-    image) pin the robustness contract end-to-end through Spark."""
-
-    @staticmethod
-    def _ppm(gray):
-        import numpy as np
-
-        h, w = gray.shape
-        rgb = np.repeat((gray * 255).astype("uint8")[:, :, None], 3, axis=2)
-        return b"P6\n%d %d\n255\n" % (w, h) + rgb.tobytes()
-
-    @staticmethod
-    def _textured(seed, h=48, w=64, n=12):
-        import numpy as np
-
-        rs = np.random.RandomState(seed)
-        y, x = np.mgrid[0:h, 0:w]
-        g = sum(
-            rs.rand()
-            * np.sin(2 * np.pi * (rs.rand() * 3 * x / w + rs.rand() * 3 * y / h + rs.rand()))
-            for _ in range(n)
-        )
-        return (g - g.min()) / (g.max() - g.min())
-
-    def test_noise_robust_and_discriminative(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions.multimodal import image_phash, phash_near_pairs
-
-        base = self._textured(7)
-        rs = np.random.RandomState(1)
-        near = np.clip(base + rs.normal(0, 0.02, base.shape), 0, 1)
-        other = self._textured(8)
-        assets = spark.createDataFrame(
-            [
-                (1, bytearray(self._ppm(base))),
-                (2, bytearray(self._ppm(near))),
-                (3, bytearray(self._ppm(other))),
-                (4, bytearray(b"not an image")),
-            ],
-            "asset_id long, payload binary",
-        )
-        ph = image_phash(assets, auto_batch=False)
-        rows = {r["asset_id"]: r for r in ph.collect()}
-        assert rows[1]["decoder"] == "ppm"
-        assert rows[4]["decoder"] == "fake-deterministic"
-
-        def ham(a, b):
-            return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-        assert ham(rows[1]["phash"], rows[2]["phash"]) <= 6
-        assert ham(rows[1]["phash"], rows[3]["phash"]) > 10
-
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in phash_near_pairs(ph, max_hamming=6,
-                                      profile="exhaustive").collect()
-        }
-        assert (1, 2) in pairs
-        assert (1, 3) not in pairs and (2, 3) not in pairs
-
-    def test_identical_payloads_hash_equal(self, spark):
-        from borsa_spark.functions.multimodal import image_phash
-
-        img = bytearray(self._ppm(self._textured(3)))
-        assets = spark.createDataFrame(
-            [(1, img), (2, bytearray(bytes(img)))],
-            "asset_id long, payload binary",
-        )
-        got = {r["asset_id"]: r["phash"] for r in image_phash(assets, auto_batch=False).collect()}
-        assert got[1] == got[2]
-
-    def test_band_guarantee_covers_all_64_bits(self, spark):
-        # two hashes differing by 4 bits spread across the four LOW bytes
-        # (the case a 32-bit band reuse would miss) and by bits in the
-        # HIGH bytes only — both must pair under the 8-band pigeonhole
-        from borsa_spark.functions.multimodal import phash_near_pairs
-
-        low_spread = 0x01010101            # one bit in each low byte
-        high_only = 0x0303 << 48           # 4 bits, high bytes only
-        ph = spark.createDataFrame(
-            [(1, 12345), (2, 12345 ^ low_spread),
-             (3, 54321 << 32), (4, (54321 << 32) ^ high_only)],
-            "asset_id long, phash long",
-        )
-        pairs = {
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in phash_near_pairs(ph, max_hamming=6,
-                                      profile="exhaustive").collect()
-        }
-        assert (1, 2, 4) in pairs
-        assert (3, 4, 4) in pairs
-
-    def test_corrupt_magic_payloads_degrade_not_crash(self, spark):
-        # magic-matching but truncated/unsupported payloads must take the
-        # fallback path with an audit tag, never abort the Spark job
-        from borsa_spark.functions.multimodal import image_phash
-
-        assets = spark.createDataFrame(
-            [
-                (1, bytearray(b"BM" + b"\x00" * 10)),        # truncated BMP
-                (2, bytearray(b"P6\n2 2\n65535\n" + b"\x00" * 24)),  # 16-bit PPM
-                (3, bytearray(self._ppm(self._textured(5)))),  # healthy
-            ],
-            "asset_id long, payload binary",
-        )
-        rows = {r["asset_id"]: r for r in image_phash(assets, auto_batch=False).collect()}
-        assert rows[1]["decoder"] == "corrupt-fallback"
-        assert rows[2]["decoder"] == "corrupt-fallback"
-        assert rows[3]["decoder"] == "ppm"
-
     def test_autotune_treats_nonpositive_conf_as_uncapped(self, spark):
         from borsa_spark.functions.multimodal import (
             ARROW_BATCH_KEY,
@@ -431,8 +279,7 @@ class TestPerceptualHash:
 class TestJpegCodec:
     """Pure-Python baseline JPEG (functions/jpeg.py): quantization-bounded
     round-trips across quality/subsampling/restart settings, exact flat
-    color, pHash cross-codec invariance vs the lossless PNG path, and
-    loud rejection of unsupported modes."""
+    color, and loud rejection of unsupported modes."""
 
     @staticmethod
     def _gradient(h=24, w=32):
@@ -443,21 +290,6 @@ class TestJpegCodec:
         return np.stack(
             [sm, sm * 0.8 + 20, sm * 0.5 + 60], axis=2
         ).astype(np.uint8)
-
-    @staticmethod
-    def _textured(n=64):
-        # multi-frequency 64x64 image: its DCT coefficients sit far from
-        # the pHash median, so hash bits are stable under q90 loss (a
-        # tiny smooth gradient has many knife-edge coefficients and is
-        # NOT a fair robustness probe)
-        import numpy as np
-
-        gy, gx = np.mgrid[0:n, 0:n]
-        sm = (128 + 90 * np.sin(gy / 5.0) * np.cos(gx / 7.0)
-              + 30 * np.sin((gx + gy) / 3.0))
-        return np.stack(
-            [sm, sm * 0.7 + 30, 255 - sm], axis=2
-        ).clip(0, 255).astype(np.uint8)
 
     def test_flat_color_round_trips_exactly(self):
         import numpy as np
@@ -506,25 +338,6 @@ class TestJpegCodec:
             back[:, :, 0].astype(int) - g.astype(int)
         ).mean() < 1.5
 
-    def test_phash_cross_codec_vs_png(self):
-        # JPEG is lossy, but pHash is DESIGNED to survive that: the same
-        # pixels through the lossless PNG path and a q90 JPEG must land
-        # within the near-dup pairing distance (<= 6 of 64 bits).
-        from borsa_spark.functions.jpeg import decode_jpeg, encode_jpeg
-        from borsa_spark.functions.multimodal import (
-            _gray_png,
-            encode_png_pixels,
-            phash64,
-        )
-
-        img = self._textured()
-        ph_png = phash64(_gray_png(encode_png_pixels(img)))
-        import numpy as np
-
-        jp = decode_jpeg(encode_jpeg(img, quality=90))
-        ph_jpeg = phash64(jp.astype(np.float64).mean(axis=2) / 255.0)
-        assert bin(ph_png ^ ph_jpeg).count("1") <= 6
-
     def test_unsupported_modes_reject(self):
         import struct as _s
 
@@ -551,11 +364,8 @@ class TestJpegCodec:
         except ValueError:
             pass  # ...or rejects; both are acceptable, crashing is not
 
-    def test_image_features_and_phash_dispatch_jpeg(self, spark):
-        import numpy as np
-
+    def test_image_features_dispatches_jpeg(self, spark):
         from borsa_spark.functions.jpeg import encode_jpeg
-        from borsa_spark.functions.multimodal import image_phash
 
         img = self._gradient()
         rows = [
@@ -572,9 +382,6 @@ class TestJpegCodec:
         assert feats[51].decoder == "corrupt-fallback"
         want_luma = img.astype(float).mean() / 255.0
         assert abs(feats[50].mean_luma - want_luma) < 0.02
-        ph = {r.asset_id: r for r in image_phash(assets).collect()}
-        assert ph[50].decoder == "jpeg"
-        assert ph[51].decoder == "corrupt-fallback"
 
 
 class TestPngColorTypes:
@@ -711,23 +518,6 @@ class TestGifCodec:
         assert len(enc) < 64 * 64 // 4  # real compression, no pass-through
         assert np.array_equal(decode_gif(enc), flat)
 
-    def test_phash_cross_codec_invariance(self):
-        # identical pixels through GIF and PPM must hash identically —
-        # the cross-codec oracle every image decoder here satisfies
-        import numpy as np
-
-        from borsa_spark.functions.gif import encode_gif
-        from borsa_spark.functions.multimodal import (
-            _gray_gif,
-            _gray_ppm,
-            phash64,
-        )
-
-        rng = np.random.default_rng(11)
-        px = (rng.integers(0, 4, (24, 31, 3)) * 80).astype(np.uint8)
-        ppm = b"P6\n31 24\n255\n" + px.tobytes()
-        assert phash64(_gray_gif(encode_gif(px))) == phash64(_gray_ppm(ppm))
-
     def test_error_paths(self):
         import numpy as np
 
@@ -744,11 +534,10 @@ class TestGifCodec:
         with pytest.raises(ValueError):
             encode_gif(rng.integers(0, 256, (32, 32, 3)).astype(np.uint8))
 
-    def test_feature_and_phash_dispatch(self, spark):
+    def test_image_features_dispatches_gif(self, spark):
         import numpy as np
 
         from borsa_spark.functions.gif import encode_gif
-        from borsa_spark.functions.multimodal import image_phash
 
         px = np.full((6, 8, 3), 120, np.uint8)
         good = encode_gif(px)
@@ -762,9 +551,6 @@ class TestGifCodec:
         assert (feats[1].width, feats[1].height) == (8, 6)
         assert abs(feats[1].mean_luma - 120 / 255) < 1e-9
         assert feats[2].decoder == "corrupt-fallback"
-        ph = {r.asset_id: r for r in image_phash(assets).collect()}
-        assert ph[1].decoder == "gif"
-        assert ph[2].decoder == "corrupt-fallback"
 
 
 class TestRealThumbnails:
@@ -828,250 +614,3 @@ class TestRealThumbnails:
         assert rows[1].decoder == "fake-deterministic"
         assert rows[2].decoder == "corrupt-fallback"
         assert all(len(r.thumb) == 64 for r in rows.values())
-
-
-class TestImageDhash:
-    """Exact-arithmetic perceptual hash (multimodal.image_dhash): the
-    SQL-replayable sibling of the DCT pHash."""
-
-    def _assets(self, spark, rows):
-        return spark.createDataFrame(
-            rows, "asset_id long, payload binary"
-        )
-
-    def test_constant_image_hashes_to_zero(self, spark):
-        # the round-8 float-noise pin: _block_mean's integral image
-        # carries ~1-ulp noise; without 8-bit requantization a CONSTANT
-        # image emitted spurious bits through the strict >
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        px = np.full((8, 9, 1), 32, dtype=np.uint8)
-        out = mm.image_dhash(
-            self._assets(
-                spark, [(1, mm.encode_png_pixels(px, filter_type=4))]
-            )
-        ).collect()[0]
-        assert list(out.bands) == [0] * 8 and out.decoder == "png"
-
-    def test_perturbed_copy_is_near(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        rng = np.random.default_rng(7)
-        px = rng.integers(0, 256, size=(8, 9, 1)).astype(np.uint8)
-        px2 = px.copy()
-        px2[0, 0, 0] = (int(px2[0, 0, 0]) + 7) % 256
-        dh = mm.image_dhash(self._assets(spark, [
-            (1, mm.encode_png_pixels(px)),
-            (2, mm.encode_png_pixels(px2)),
-        ]))
-        pairs = mm.dhash_near_pairs(dh).collect()  # crawl-profile default
-        assert len(pairs) == 1
-        assert (pairs[0].id_a, pairs[0].id_b) == (1, 2)
-        assert pairs[0].hamming <= 1
-
-    def test_corrupt_payload_degrades(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        out = mm.image_dhash(
-            self._assets(spark, [(1, b"\x89PNG\r\n\x1a\ntruncated")])
-        ).collect()[0]
-        assert out.decoder == "corrupt-fallback"
-        assert len(out.bands) == 8
-
-    def test_no_magic_payload_is_fake_deterministic(self, spark):
-        # the module-wide tag contract: unknown formats are
-        # 'fake-deterministic', NOT 'corrupt-fallback' (round-8 review:
-        # this copy of the dispatch had dropped the distinction)
-        from borsa_spark.functions import multimodal as mm
-
-        out = mm.image_dhash(
-            self._assets(spark, [(1, b"<html>not an image</html>")])
-        ).collect()[0]
-        assert out.decoder == "fake-deterministic"
-
-    def test_max_hamming_beyond_pigeonhole_refused(self, spark):
-        import pytest
-
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(
-            self._assets(spark, [(1, b"x")])
-        )
-        with pytest.raises(ValueError, match="max_hamming"):
-            mm.dhash_near_pairs(dh, max_hamming=8)
-
-    def test_ppm_and_png_same_pixels_same_hash(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        rng = np.random.default_rng(11)
-        gray = rng.integers(0, 256, size=(8, 9)).astype(np.uint8)
-        rgb = np.repeat(gray[:, :, None], 3, axis=2)
-        png = mm.encode_png_pixels(gray[:, :, None])
-        # cross-format pin via PPM raster (P6 carries the same rgb
-        # grid; encode_bmp is solid-color only, so the BMP branch is
-        # covered by its own decode tests, not cross-format here)
-        header = f"P6\n9 8\n255\n".encode()
-        ppm = header + rgb.tobytes()
-        dh = {r.asset_id: (list(r.bands), r.decoder)
-              for r in mm.image_dhash(self._assets(spark, [
-                  (1, png), (2, ppm)])).collect()}
-        assert dh[1][1] == "png" and dh[2][1] == "ppm"
-        assert dh[1][0] == dh[2][0]
-
-class TestBandHotBucketGuard:
-    """The crawl-scale degenerate case: constant-color images all hash
-    to the SAME bands (dHash rows are 0 by construction — pinned above
-    by test_constant_image_hashes_to_zero), so one band bucket holds the
-    whole flat cohort and the candidate self-join goes O(n²) exactly on
-    production inputs. `max_bucket_size` must bound emission, account
-    for what it skipped, and NOT cost the planted pair among normal
-    images."""
-
-    N_FLAT = 40
-
-    def _fixture(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        rows = []
-        flat = np.full((8, 9, 1), 77, dtype=np.uint8)
-        flat_png = mm.encode_png_pixels(flat, filter_type=4)
-        for i in range(self.N_FLAT):
-            rows.append((i, flat_png))
-        rng = np.random.default_rng(23)
-        px = rng.integers(0, 256, size=(8, 9, 1)).astype(np.uint8)
-        px2 = px.copy()
-        px2[0, 0, 0] = (int(px2[0, 0, 0]) + 9) % 256
-        rows.append((1000, mm.encode_png_pixels(px)))
-        rows.append((1001, mm.encode_png_pixels(px2)))
-        return spark.createDataFrame(
-            rows, "asset_id long, payload binary"
-        )
-
-    def test_unguarded_flat_cohort_is_quadratic(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        n = mm.dhash_near_pairs(dh, max_hamming=6,
-                                profile="exhaustive").count()
-        # C(40,2) flat pairs + 1 planted — the blowup the guard exists for
-        assert n == self.N_FLAT * (self.N_FLAT - 1) // 2 + 1
-
-    def test_guard_bounds_emission_keeps_planted_pair(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        pairs = mm.dhash_near_pairs(
-            dh, max_hamming=6, max_bucket_size=10, profile="exhaustive"
-        ).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(1000, 1001)]
-
-    def test_oversized_accounting_names_the_flat_bucket(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        over = mm.band_oversized_buckets(
-            mm.dhash_band_keys(dh), max_bucket_size=10
-        ).collect()
-        # all 8 bands of the flat cohort (key 0) are oversized
-        assert len(over) == 8
-        assert all(r.band_key == 0 and r.n_assets == self.N_FLAT
-                   for r in over)
-        assert sorted(r.band for r in over) == list(range(8))
-
-    def test_phash_guard_same_contract(self, spark):
-        from borsa_spark.functions import multimodal as mm
-
-        ph = mm.image_phash(self._fixture(spark))
-        pairs = mm.phash_near_pairs(
-            ph, max_hamming=6, max_bucket_size=10, profile="exhaustive"
-        ).collect()
-        # identical flat images share every phash band -> all excluded;
-        # the planted near-identical pair survives the cap
-        assert (1000, 1001) in [(p.id_a, p.id_b) for p in pairs]
-        assert all(p.id_a >= 1000 for p in pairs)
-        over = mm.band_oversized_buckets(
-            mm.phash_band_keys(ph), max_bucket_size=10
-        ).collect()
-        assert len(over) == 8
-        assert all(r.n_assets == self.N_FLAT for r in over)
-
-    def test_wide_bands_keep_planted_pair_tighter_pigeonhole(self, spark):
-        import pytest
-
-        from borsa_spark.functions import multimodal as mm
-
-        dh = mm.image_dhash(self._fixture(spark))
-        # 16-bit bands: 4 bands recall-guarantee hamming <= 3; the
-        # planted one-pixel bump flips <= 1 bit, so it must survive
-        pairs = mm.dhash_near_pairs(
-            dh, max_hamming=3, max_bucket_size=10, rows_per_band=2
-        ).collect()
-        assert [(p.id_a, p.id_b) for p in pairs] == [(1000, 1001)]
-        # pigeonhole bound moves with the band count
-        with pytest.raises(ValueError, match="max_hamming <= 3"):
-            mm.dhash_near_pairs(dh, max_hamming=4, rows_per_band=2)
-        with pytest.raises(ValueError, match="divide"):
-            mm.dhash_near_pairs(dh, max_hamming=1, rows_per_band=3)
-
-    def test_wide_band_keys_compose_bytes(self, spark):
-        import numpy as np
-
-        from borsa_spark.functions import multimodal as mm
-
-        rng = np.random.default_rng(31)
-        px = rng.integers(0, 256, size=(8, 9, 1)).astype(np.uint8)
-        dh = mm.image_dhash(spark.createDataFrame(
-            [(1, mm.encode_png_pixels(px))],
-            "asset_id long, payload binary",
-        ))
-        narrow = {r.band: r.band_key
-                  for r in mm.dhash_band_keys(dh, 1).collect()}
-        wide = {r.band: r.band_key
-                for r in mm.dhash_band_keys(dh, 2).collect()}
-        assert len(wide) == 4
-        for i in range(4):
-            assert wide[i] == narrow[2 * i] + 256 * narrow[2 * i + 1]
-
-
-class TestPhashWideBands:
-    """pHash side of the wide-band density lever (borrows the flat+
-    planted image fixture builder — not a subclass, which would
-    re-collect the guard tests)."""
-
-    N_FLAT = TestBandHotBucketGuard.N_FLAT
-    _fixture = TestBandHotBucketGuard._fixture
-
-    def test_phash_wide_bands_compose_and_bound(self, spark):
-        import numpy as np
-        import pytest
-
-        from borsa_spark.functions import multimodal as mm
-
-        ph = mm.image_phash(self._fixture(spark))
-        pairs = mm.phash_near_pairs(
-            ph, max_hamming=3, max_bucket_size=10, bytes_per_band=2
-        ).collect()
-        assert (1000, 1001) in [(p.id_a, p.id_b) for p in pairs]
-        # key composition: wide key i == byte key 2i + 256 * byte key 2i+1
-        narrow = {(r.id, r.band): r.band_key
-                  for r in mm.phash_band_keys(ph, 1).collect()}
-        wide = {(r.id, r.band): r.band_key
-                for r in mm.phash_band_keys(ph, 2).collect()}
-        ids = {i for i, _ in narrow}
-        for i in ids:
-            for w in range(4):
-                assert wide[(i, w)] == (
-                    narrow[(i, 2 * w)] + 256 * narrow[(i, 2 * w + 1)]
-                )
-        with pytest.raises(ValueError, match="max_hamming <= 3"):
-            mm.phash_near_pairs(ph, max_hamming=4, bytes_per_band=2)
-        with pytest.raises(ValueError, match="divide"):
-            mm.phash_band_keys(ph, 3)

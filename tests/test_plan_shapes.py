@@ -308,88 +308,11 @@ class TestRound7PlanShapes:
         assert "ReusedExchange" in final
 
 
-class TestBpeAndRollupShapes:
-    """Round-7 additions: BPE training rounds must keep their measured
-    shapes — vocab-sized partial aggs, 1-row TakeOrdered argmax,
-    broadcast merge application, Python-free."""
-
-    def test_bpe_round_is_partial_agg_plus_takeordered(self, spark):
-        import contextlib
-        import io
-
-        from borsa_spark.functions.bpe import _merge_round, _word_vocab
-        from borsa_spark.sources import load_table
-
-        docs = load_table(spark, SF, "documents")
-        vocab = _word_vocab(docs, "text")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            _merge_round(vocab).explain("formatted")
-        plan = buf.getvalue()
-        assert "partial_sum" in plan  # map-side combine on pair counts
-        assert "TakeOrderedAndProject" in plan  # argmax, no global sort
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan
-
-    def test_bpe_merge_application_broadcasts_argmax(self, spark):
-        import contextlib
-        import io
-
-        from borsa_spark.functions.bpe import (
-            _apply_merge,
-            _merge_round,
-            _word_vocab,
-        )
-        from borsa_spark.sources import load_table
-
-        docs = load_table(spark, SF, "documents")
-        vocab = _word_vocab(docs, "text").localCheckpoint(eager=True)
-        best = _merge_round(vocab).localCheckpoint(eager=True)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            _apply_merge(vocab, best).explain("formatted")
-        plan = buf.getvalue()
-        # 1-row argmax rides as a broadcast relation; the vocab side
-        # must not shuffle or sort to apply a merge
-        assert "BroadcastNestedLoopJoin" in plan
-        assert "SortMergeJoin" not in plan
-        assert "Exchange hashpartitioning" not in plan
-
-
 class TestRound8PlanShapes:
-    def test_langid_nb_model_relations_broadcast(self, spark):
-        # the NB model (counts/totals/priors/vocab) is bounded by
-        # charset^2 x n_langs: every join against the corpus-sized tf
-        # relation must be broadcast, never a sort-merge shuffle
-        plan = plan_of(spark, "f85_langid_nb")
-        assert "SortMergeJoin" not in plan
-        assert plan.count("BroadcastHashJoin") >= 3
-        assert "BroadcastNestedLoopJoin" in plan  # tiny label panel
-        assert "EvalPython" not in plan
-
     def test_c4_line_filter_is_scan_plus_project_zero_shuffle(self, spark):
         plan = plan_of(spark, "f86_c4_line_filter")
         assert "EvalPython" not in plan
         assert "Exchange" not in plan
-
-    def test_image_band_join_decodes_once(self, spark):
-        # the round-9 f90 fix: the band relation is localCheckpointed
-        # inside _band_near_pairs, so the pairing join's legs read
-        # stored blocks (ExistingRDD) and the PNG-decode MapInPandas
-        # subtree appears ZERO times in the join plan — previously it
-        # ran once per join side (2x decode, the dominant cost at
-        # image-crawl scale)
-        plan = plan_of(spark, "f90_image_dhash_pairs")
-        assert "MapInPandas" not in plan
-        assert "ExistingRDD" in plan
-
-    def test_image_band_guard_broadcasts_bucket_counts(self, spark):
-        # the hot-bucket guard's count relation is <= 2048 rows (8
-        # bands x 256 byte keys): it must broadcast into the semi-join,
-        # never shuffle the band relation a second time
-        plan = plan_of(spark, "f91_image_band_guard")
-        assert "MapInPandas" not in plan
-        assert "BroadcastHashJoin" in plan
 
     def test_c12_training_mix_topk_and_bounded_scans(self, spark):
         # the training-mix DAG: the DSIR draw must compile to
@@ -411,22 +334,6 @@ class TestRound8PlanShapes:
         assert len(scan_ids) <= 3
         assert "ExistingRDD" in plan
         assert "SortMergeJoin" not in plan
-
-    def test_langid_runtime_reuse(self, spark):
-        # f85's round-9 final form: train-side quantities are
-        # CONDITIONAL sums over the shared tf exchange (the f74/f78
-        # de-canonicalization rule — a pushed-down train filter
-        # specialized every consumer's scan: 7 real corpus scans,
-        # zero reuse, final-plan verified). The FINAL AQE plan must
-        # hold at <= 3 scans (scores' full-width explode + counts'
-        # pruned explode variant Catalyst collapses to, + the light
-        # pre-explode doc-count scan) with ReusedExchange live.
-        # Checkpoint (3 eager scans) and tf-persist (10x text bytes)
-        # forms were measured and rejected this round.
-        final = final_plan_of(spark, "f85_langid_nb")
-        assert final.count("Scan parquet") <= 3
-        assert "ReusedExchange" in final
-        spark.catalog.clearCache()
 
     def test_self_join_intermediates_persist(self, spark):
         # round-9 audit, second batch: relations feeding a df-cap agg
@@ -494,9 +401,7 @@ class TestRound8PlanShapes:
 
 
 class TestRound10PlanShapes:
-    """Final-AQE-plan guards for the round-10 queries (the audit that
-    wrote them caught c13's node list re-running the decode outside
-    the checkpoint — these pin the fixed shapes)."""
+    """Final-AQE-plan guards for the round-10 queries."""
 
     def test_f94_rewrite_bounded_scans_and_jvm_only(self, spark):
         # span removal reads the corpus parquet at most twice (screen
@@ -524,19 +429,6 @@ class TestRound10PlanShapes:
         assert len(scan_ids) == 1
         assert "MapInPandas" not in plan
         assert "EvalPython" not in plan
-        spark.catalog.clearCache()
-
-    def test_c13_decodes_once_into_checkpoint(self, spark):
-        # the decode subtree must be cut by the band-relation
-        # localCheckpoint (ExistingRDD) and NOT re-run for the node
-        # list — nodes come from the docs scan (1 parquet scan total)
-        import re
-
-        plan = final_plan_of(spark, "c13_image_crawl_clusters")
-        scan_ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", plan))
-        assert len(scan_ids) == 1
-        assert "ExistingRDD" in plan
-        assert "MapInPandas" not in plan
         spark.catalog.clearCache()
 
 

@@ -169,6 +169,45 @@ class TestRouterMount:
         row = quote(spark, cat, "AAPL").limit(1).collect()[0]
         assert row.provider == "yf" and float(row.price) == 190.5
 
+    def test_failing_provider_is_skipped(self, spark):
+        """A REST provider out of quota drops out of quote() and quotes()
+        while a table provider still answers; only when every provider
+        fails does the call raise."""
+        from borsa_spark.errors import QuotaExceeded
+        from borsa_spark.middleware import QuotaGuard
+        from borsa_spark.router import quote, quotes
+        from borsa_spark.sources.provider import Catalog, fixture_source
+        from borsa_spark.sources.rest import QUOTE_SCHEMA
+
+        transport = FakeTransport(dict([
+            canned("/v1/quote", {"symbols": "AAPL"}, {"quotes": [
+                {"symbol": "AAPL", "price": 190.5, "currency": "USD"},
+            ]}),
+        ]))
+        ad = RestAdapter(
+            "yf", BASE, transport,
+            middleware=MiddlewareStack(quota=QuotaGuard(1), connector="yf"),
+        )
+        rest = rest_source(spark, ad, ["AAPL"])
+        table = fixture_source("tbl", quote=spark.createDataFrame(
+            [("tbl", "AAPL", "EQUITY", None, 189.0, None, "USD")],
+            QUOTE_SCHEMA,
+        ))
+        cat = Catalog().register(rest).register(table)
+        # the first call spends the REST provider's quota of one
+        assert quote(spark, cat, "AAPL").collect()[0].provider == "yf"
+        assert quote(spark, cat, "AAPL").collect()[0].provider == "tbl"
+        won, failed = quotes(spark, cat, ["AAPL"])
+        assert [r.provider for r in won.collect()] == ["tbl"]
+        assert failed.count() == 0
+        assert len(transport.calls) == 1
+
+        alone = Catalog().register(rest)
+        with pytest.raises(QuotaExceeded):
+            quote(spark, alone, "AAPL")
+        with pytest.raises(QuotaExceeded):
+            quotes(spark, alone, ["AAPL"])
+
 
 class TestSocketQuoteStream:
     def test_live_lines_through_gate(self, spark, tmp_path):
