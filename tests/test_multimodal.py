@@ -123,6 +123,27 @@ class TestPngCodec:
             assert (w, h, ch) == (bw, bh, bch) == (9, 5, 3)
             assert luma == pytest.approx(bluma, abs=1e-12)
 
+    def test_phash_cross_codec_invariance(self):
+        # The same pixel grid through the PNG and PPM pixel paths must
+        # produce the SAME grayscale grid (the input of every thumbnail)
+        # — the natural oracle for "the PNG decode returns real pixels,
+        # not plausible ones".
+        import numpy as np
+
+        from borsa_spark.functions.multimodal import (
+            _gray_png,
+            _gray_ppm,
+            encode_png_pixels,
+        )
+
+        gy, gx = np.mgrid[0:24, 0:32]
+        grad = np.stack(
+            [(gy * 7) % 256, (gx * 11) % 256, ((gx + gy) * 5) % 256], axis=2
+        ).astype(np.uint8)
+        png = encode_png_pixels(grad, filter_type=4)
+        ppm = b"P6\n32 24\n255\n" + grad.tobytes()
+        assert np.array_equal(_gray_png(png), _gray_ppm(ppm))
+
     def test_error_paths(self):
         from borsa_spark.functions.multimodal import _png_pixels
 
@@ -161,6 +182,21 @@ class TestPngCodec:
         out = {r.asset_id: r for r in image_features(assets).collect()}
         assert (out[20].width, out[20].height, out[20].decoder) == (6, 4, "png")
         assert out[20].mean_luma == pytest.approx(60 / 255.0)
+
+    def test_image_phash_corrupt_png_degrades(self, spark):
+        corrupt = bytearray(self.GOLDEN_PNG)
+        corrupt[45] ^= 0xFF
+        rows = [
+            (30, "image", "image/png", bytes(corrupt),
+             None, None, None, None, None),
+            (31, "image", "image/png", self.GOLDEN_PNG,
+             None, None, None, None, None),
+        ]
+        assets = spark.createDataFrame(rows, schema=schemas.MEDIA_ASSETS)
+        out = {r.asset_id: r for r in resize_images(assets, 3, 2).collect()}
+        assert out[30].decoder == "corrupt-fallback"
+        assert out[31].decoder == "png"
+
 
 @pytest.fixture()
 def assets(spark):
@@ -256,6 +292,49 @@ class TestMultimodal:
             if prev is not None:
                 spark.conf.set(ARROW_BATCH_KEY, prev)
 
+
+
+class TestPerceptualHash:
+    """Guards every per-asset image UDF shares: magic-matching but
+    undecodable payloads degrade to a tagged fallback instead of failing
+    the Spark job, and the Arrow batch autotune still caps huge payloads
+    when the conf says "unlimited"."""
+
+    @staticmethod
+    def _ppm(gray):
+        import numpy as np
+
+        h, w = gray.shape
+        rgb = np.repeat((gray * 255).astype("uint8")[:, :, None], 3, axis=2)
+        return b"P6\n%d %d\n255\n" % (w, h) + rgb.tobytes()
+
+    def test_corrupt_magic_payloads_degrade_not_crash(self, spark):
+        # magic-matching but truncated/unsupported payloads must take the
+        # fallback path with an audit tag, never abort the Spark job
+        import numpy as np
+
+        gy, gx = np.mgrid[0:12, 0:16]
+        healthy = self._ppm((gy * 16 + gx) / 255.0)
+        assets = spark.createDataFrame(
+            [
+                (1, bytearray(b"BM" + b"\x00" * 10)),        # truncated BMP
+                (2, bytearray(b"P6\n2 2\n65535\n" + b"\x00" * 24)),  # 16-bit PPM
+                (3, bytearray(healthy)),
+            ],
+            "asset_id long, payload binary",
+        )
+        feats = {
+            r["asset_id"]: r["decoder"]
+            for r in image_features(assets, auto_batch=False).collect()
+        }
+        thumbs = {
+            r["asset_id"]: r["decoder"]
+            for r in resize_images(assets, 4, 4, auto_batch=False).collect()
+        }
+        want = {1: "corrupt-fallback", 2: "corrupt-fallback", 3: "ppm"}
+        assert feats == want
+        assert thumbs == want
+
     def test_autotune_treats_nonpositive_conf_as_uncapped(self, spark):
         from borsa_spark.functions.multimodal import (
             ARROW_BATCH_KEY,
@@ -279,7 +358,8 @@ class TestMultimodal:
 class TestJpegCodec:
     """Pure-Python baseline JPEG (functions/jpeg.py): quantization-bounded
     round-trips across quality/subsampling/restart settings, exact flat
-    color, and loud rejection of unsupported modes."""
+    color, cross-codec agreement with the lossless PNG path, and loud
+    rejection of unsupported modes."""
 
     @staticmethod
     def _gradient(h=24, w=32):
@@ -290,6 +370,19 @@ class TestJpegCodec:
         return np.stack(
             [sm, sm * 0.8 + 20, sm * 0.5 + 60], axis=2
         ).astype(np.uint8)
+
+    @staticmethod
+    def _textured(n=64):
+        # multi-frequency 64x64 image, so q90 loss is spread over many
+        # DCT coefficients rather than one smooth ramp
+        import numpy as np
+
+        gy, gx = np.mgrid[0:n, 0:n]
+        sm = (128 + 90 * np.sin(gy / 5.0) * np.cos(gx / 7.0)
+              + 30 * np.sin((gx + gy) / 3.0))
+        return np.stack(
+            [sm, sm * 0.7 + 30, 255 - sm], axis=2
+        ).clip(0, 255).astype(np.uint8)
 
     def test_flat_color_round_trips_exactly(self):
         import numpy as np
@@ -338,6 +431,30 @@ class TestJpegCodec:
             back[:, :, 0].astype(int) - g.astype(int)
         ).mean() < 1.5
 
+    def test_phash_cross_codec_vs_png(self):
+        # JPEG is lossy, but the same pixels through the lossless PNG
+        # path and a q90 JPEG must give nearly the same grayscale grid,
+        # and 8x8 block means (what resize_images emits) within one level.
+        import numpy as np
+
+        from borsa_spark.functions.jpeg import encode_jpeg
+        from borsa_spark.functions.multimodal import (
+            _block_mean,
+            _gray_jpeg,
+            _gray_png,
+            encode_png_pixels,
+        )
+
+        img = self._textured()
+        g_png = _gray_png(encode_png_pixels(img))
+        g_jpeg = _gray_jpeg(encode_jpeg(img, quality=90))
+        assert g_png.shape == g_jpeg.shape == (64, 64)
+        assert np.abs(g_png - g_jpeg).mean() * 255 < 1.5
+        thumb_gap = np.abs(
+            _block_mean(g_png, 8, 8) - _block_mean(g_jpeg, 8, 8)
+        )
+        assert thumb_gap.max() * 255 < 1.0
+
     def test_unsupported_modes_reject(self):
         import struct as _s
 
@@ -364,7 +481,7 @@ class TestJpegCodec:
         except ValueError:
             pass  # ...or rejects; both are acceptable, crashing is not
 
-    def test_image_features_dispatches_jpeg(self, spark):
+    def test_image_features_and_phash_dispatch_jpeg(self, spark):
         from borsa_spark.functions.jpeg import encode_jpeg
 
         img = self._gradient()
@@ -382,6 +499,9 @@ class TestJpegCodec:
         assert feats[51].decoder == "corrupt-fallback"
         want_luma = img.astype(float).mean() / 255.0
         assert abs(feats[50].mean_luma - want_luma) < 0.02
+        th = {r.asset_id: r for r in resize_images(assets, 8, 6).collect()}
+        assert th[50].decoder == "jpeg"
+        assert th[51].decoder == "corrupt-fallback"
 
 
 class TestPngColorTypes:
@@ -518,6 +638,20 @@ class TestGifCodec:
         assert len(enc) < 64 * 64 // 4  # real compression, no pass-through
         assert np.array_equal(decode_gif(enc), flat)
 
+    def test_phash_cross_codec_invariance(self):
+        # identical pixels through GIF and PPM must give identical
+        # grayscale grids — the cross-codec oracle every image decoder
+        # here satisfies
+        import numpy as np
+
+        from borsa_spark.functions.gif import encode_gif
+        from borsa_spark.functions.multimodal import _gray_gif, _gray_ppm
+
+        rng = np.random.default_rng(11)
+        px = (rng.integers(0, 4, (24, 31, 3)) * 80).astype(np.uint8)
+        ppm = b"P6\n31 24\n255\n" + px.tobytes()
+        assert np.array_equal(_gray_gif(encode_gif(px)), _gray_ppm(ppm))
+
     def test_error_paths(self):
         import numpy as np
 
@@ -534,7 +668,7 @@ class TestGifCodec:
         with pytest.raises(ValueError):
             encode_gif(rng.integers(0, 256, (32, 32, 3)).astype(np.uint8))
 
-    def test_image_features_dispatches_gif(self, spark):
+    def test_feature_and_phash_dispatch(self, spark):
         import numpy as np
 
         from borsa_spark.functions.gif import encode_gif
@@ -551,6 +685,9 @@ class TestGifCodec:
         assert (feats[1].width, feats[1].height) == (8, 6)
         assert abs(feats[1].mean_luma - 120 / 255) < 1e-9
         assert feats[2].decoder == "corrupt-fallback"
+        th = {r.asset_id: r for r in resize_images(assets, 4, 3).collect()}
+        assert th[1].decoder == "gif"
+        assert th[2].decoder == "corrupt-fallback"
 
 
 class TestRealThumbnails:
