@@ -40,10 +40,6 @@ class UnsupportedError(BorsaSparkError):
     retry_class = RetryClass.PERMANENT
 
 
-class InvalidArgError(BorsaSparkError):
-    retry_class = RetryClass.PERMANENT
-
-
 class DataError(BorsaSparkError):
     """Malformed / inconsistent data from a provider."""
 

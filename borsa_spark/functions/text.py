@@ -370,19 +370,6 @@ def stratified_sample(
     return docs.filter(bucket < cut)
 
 
-def sql_stratified_cut(stratum_sql: str, rates: dict[str, float],
-                       default_rate: float) -> str:
-    """DuckDB CASE expression mirroring stratified_sample's cut points."""
-    whens = " ".join(
-        f"WHEN '{name}' THEN {int(round(rate * 10_000))}"
-        for name, rate in rates.items()
-    )
-    return (
-        f"CASE {stratum_sql} {whens} "
-        f"ELSE {int(round(default_rate * 10_000))} END"
-    )
-
-
 def winnow_fingerprints(
     docs: DataFrame, k: int = 3, w: int = 4, text_col: str = "text"
 ) -> DataFrame:

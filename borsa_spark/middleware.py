@@ -77,18 +77,6 @@ def history_key(symbol: str, kind: str, interval: str,
     return ("history", symbol, kind, interval, str(start), str(end), bits)
 
 
-def search_key(query: str, kind: str | None, limit: int | None) -> tuple:
-    return ("search", query, kind, limit)
-
-
-def news_key(symbol: str, count: int, tab: str = "news") -> tuple:
-    return ("news", symbol, count, tab)
-
-
-def option_chain_key(symbol: str, expiry: Any = None) -> tuple:
-    return ("option_chain", symbol, str(expiry))
-
-
 class TTLCache:
     """Per-capability TTL+LRU cache with negative caching and per-key
     stampede protection. Safe to share between threads: ``hits`` and

@@ -33,11 +33,6 @@ from typing import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CANDLE_COLS = [
-    "symbol", "kind", "ts", "open", "high", "low", "close", "close_unadj",
-    "volume", "currency", "adjusted", "timezone", "utc_offset_seconds",
-]
-
 
 def with_priority(df: DataFrame, priorities: Mapping[str, int]) -> DataFrame:
     """Attach an explicit priority column from a provider->rank mapping.

@@ -19,8 +19,6 @@ from dataclasses import dataclass
 from borsa_spark.errors import UnsupportedError
 from borsa_spark.schemas import INTERVAL_SECONDS, INTRADAY_INTERVALS
 
-INTERVALS = list(INTERVAL_SECONDS)
-
 
 def interval_minutes(interval: str) -> int | None:
     """Minutes for intraday intervals, None for calendar ones."""
@@ -36,10 +34,6 @@ def interval_seconds(interval: str) -> int:
         raise UnsupportedError(f"unknown interval {interval!r}")
     return INTERVAL_SECONDS[interval]
 
-
-#: Range vocabulary (the reference re-exports the yfinance-style Range enum;
-#: Range::M6 is the download default, borsa/src/router/download.rs:50,156).
-RANGES = ["1d", "5d", "1mo", "3mo", "6mo", "1y", "2y", "5y", "ytd", "max"]
 
 _RANGE_DAYS = {
     "1d": 1, "5d": 5, "1mo": 30, "3mo": 91, "6mo": 182,

@@ -34,9 +34,6 @@ from borsa_spark.errors import (
 
 T = TypeVar("T")
 
-#: config.rs:161 — default per-provider call budget.
-DEFAULT_PROVIDER_TIMEOUT = 5.0
-
 
 def provider_call_with_timeout(
     connector_name: str,

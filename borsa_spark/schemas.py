@@ -135,146 +135,6 @@ SEARCH_RESULTS = T.StructType(
     ]
 )
 
-#: Fundamentals rows — one table per statement, keyed (symbol, period,
-#: quarterly) (IncomeStatementRow/BalanceSheetRow/CashflowRow,
-#: borsa-core/src/types.rs:40-43, providers connector.rs:52-97).
-def _statement(*extra: T.StructField) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("provider", T.StringType(), False),
-            T.StructField("symbol", T.StringType(), False),
-            T.StructField("period", T.StringType(), False),
-            T.StructField("quarterly", T.BooleanType(), False),
-            T.StructField("currency", T.StringType(), True),
-            *extra,
-        ]
-    )
-
-
-INCOME_STATEMENT = _statement(
-    T.StructField("revenue", MONEY, True),
-    T.StructField("gross_profit", MONEY, True),
-    T.StructField("operating_income", MONEY, True),
-    T.StructField("net_income", MONEY, True),
-    T.StructField("eps", T.DoubleType(), True),
-)
-
-BALANCE_SHEET = _statement(
-    T.StructField("total_assets", MONEY, True),
-    T.StructField("total_liabilities", MONEY, True),
-    T.StructField("total_equity", MONEY, True),
-    T.StructField("cash", MONEY, True),
-    T.StructField("debt", MONEY, True),
-)
-
-CASHFLOW = _statement(
-    T.StructField("operating_cashflow", MONEY, True),
-    T.StructField("investing_cashflow", MONEY, True),
-    T.StructField("financing_cashflow", MONEY, True),
-    T.StructField("free_cashflow", MONEY, True),
-)
-
-EARNINGS = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("period", T.StringType(), False),
-        T.StructField("quarterly", T.BooleanType(), False),
-        T.StructField("eps_actual", T.DoubleType(), True),
-        T.StructField("eps_estimate", T.DoubleType(), True),
-        T.StructField("revenue", MONEY, True),
-        T.StructField("currency", T.StringType(), True),
-    ]
-)
-
-CALENDAR = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("event", T.StringType(), False),  # earnings|dividend|...
-        T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-PRICE_TARGET = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("mean", MONEY, True),
-        T.StructField("high", MONEY, True),
-        T.StructField("low", MONEY, True),
-        T.StructField("currency", T.StringType(), True),
-        T.StructField("n_analysts", T.IntegerType(), True),
-    ]
-)
-
-RECOMMENDATIONS = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("firm", T.StringType(), True),
-        T.StructField("to_grade", T.StringType(), True),
-        T.StructField("from_grade", T.StringType(), True),
-        T.StructField("action", T.StringType(), True),
-    ]
-)
-
-HOLDERS = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("holder", T.StringType(), False),
-        T.StructField("shares", T.LongType(), True),
-        T.StructField("pct_out", T.DoubleType(), True),
-        T.StructField("value", MONEY, True),
-        T.StructField("as_of", T.TimestampType(), True),
-    ]
-)
-
-PROFILE = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("sector", T.StringType(), True),
-        T.StructField("industry", T.StringType(), True),
-        T.StructField("country", T.StringType(), True),
-        T.StructField("website", T.StringType(), True),
-        T.StructField("summary", T.StringType(), True),
-    ]
-)
-
-NEWS = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("publisher", T.StringType(), True),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("tab", T.StringType(), True),  # news|press_releases|all
-    ]
-)
-
-OPTION_CHAIN = T.StructType(
-    [
-        T.StructField("provider", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("expiry", T.DateType(), False),
-        T.StructField("contract", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # call|put
-        T.StructField("strike", MONEY, True),
-        T.StructField("last_price", MONEY, True),
-        T.StructField("bid", MONEY, True),
-        T.StructField("ask", MONEY, True),
-        T.StructField("volume", T.LongType(), True),
-        T.StructField("open_interest", T.LongType(), True),
-        T.StructField("implied_volatility", T.DoubleType(), True),
-        T.StructField("currency", T.StringType(), True),
-    ]
-)
-
 ESG = T.StructType(
     [
         T.StructField("provider", T.StringType(), False),
@@ -302,30 +162,9 @@ SOURCE_CATALOG = T.StructType(
     ]
 )
 
-ROUTING_RULES = T.StructType(
-    [
-        T.StructField("rule_idx", T.IntegerType(), False),
-        T.StructField("symbol", T.StringType(), True),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("exchange", T.StringType(), True),
-        T.StructField("providers", T.ArrayType(T.StringType()), False),
-        T.StructField("strict", T.BooleanType(), False),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Training-data pipeline tables (beyond-reference operators)
 # ---------------------------------------------------------------------------
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
 
 #: Multimodal assets: opaque binary payload + typed metadata. Decode /
 #: feature-extraction runs as Pandas UDFs over mapInPandas (functions/multimodal).

@@ -4,9 +4,9 @@
   queries at run time, but not those of stateful streaming operators (the
   monotonic gate, candle and dedup state): their partition count is frozen
   into the checkpoint when a query first starts, and every state partition
-  costs one Python task and one state-store commit on every micro-batch,
-  whatever its data. More partitions than cores only add those fixed
-  costs. A query restarted from a checkpoint keeps the checkpoint's count.
+  costs one task and one state-store commit on every micro-batch, whatever
+  its data. More partitions than cores only add those fixed costs. A
+  query restarted from a checkpoint keeps the checkpoint's count.
   ``extra_conf={"spark.sql.shuffle.partitions": ...}`` sets another count.
 - Streaming state lives in Spark's default HDFS-backed store, which keeps
   every key's state on the JVM heap. For large keyed state, pass
@@ -14,8 +14,8 @@
   "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"}``.
 - UTC session timezone is a *correctness* requirement: all reference
   timestamps are UTC epoch seconds and the DuckDB oracle compares UTC-naive.
-- Arrow on: every Pandas-UDF boundary (stateful gate, minhash, multimodal)
-  moves columnar batches, not pickled rows.
+- Arrow on: every Pandas-UDF boundary (minhash, multimodal) moves
+  columnar batches, not pickled rows.
 - The driver heap defaults to half the memory the process may use: the
   cgroup v2 ``memory.max`` when it holds a number, capped by physical
   memory. ``SPARK_GRAFT_DRIVER_MEM`` (e.g. ``2g``) overrides it.

@@ -25,17 +25,6 @@ from pyspark.sql import functions as F
 from borsa_spark.errors import NotFoundError, UnsupportedError
 from borsa_spark.plans.routing_policy import RoutingContext, RoutingPolicy
 
-#: Capability vocabulary (connector.rs trait-per-capability).
-CAPABILITIES = [
-    "history", "quote", "search", "earnings", "income_statement",
-    "balance_sheet", "cashflow", "calendar", "recommendations",
-    "recommendations_summary", "upgrades_downgrades", "price_target",
-    "major_holders", "institutional_holders", "mutual_fund_holders",
-    "insider_transactions", "insider_roster", "net_share_purchase",
-    "profile", "isin", "esg", "news", "options", "option_chain",
-    "stream_quotes", "stream_candles", "stream_options",
-]
-
 ALL_KINDS = frozenset(
     {"EQUITY", "ETF", "INDEX", "CRYPTO", "FUTURE", "FOREX", "FUND"}
 )

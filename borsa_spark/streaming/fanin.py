@@ -76,10 +76,9 @@ def streaming_exact_dedup(
     watermark horizon (`dropDuplicatesWithinWatermark`).
 
     This is the compatibility-mode alternative to the monotonic gate for
-    sources that re-deliver identical updates (at-least-once feeds), and the
-    streaming form of the training-pipeline exact dedup: key on the content
-    hash to dedup documents as they arrive. State is bounded by the
-    watermark (the gate's state never expires without TTL).
+    sources that re-deliver identical updates (at-least-once feeds). State
+    is bounded by the watermark (the gate's state never expires without
+    TTL).
     """
     return updates.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys

@@ -5,12 +5,22 @@ update strictly older than the high-water-mark timestamp; equal allowed;
 first always passes; entries expire after 24h idle (reaper :16-36); state is
 dropped when a session ends (:65-73) so a restarted provider starts fresh.
 
-Spark mapping: ``applyInPandasWithState`` keyed by symbol holding one i64
-(the HWM, microseconds). This is NOT ``dropDuplicatesWithinWatermark``
-(which dedups exact keys) nor a watermark filter (which drops by global
-delay): the rule is *per-key monotonicity with equals allowed*, and the
-reference applies it in arrival order — so the gate processes each
-micro-batch in ``seq`` order within a key. TTL via ProcessingTimeTimeout.
+Spark mapping: ``flatMapGroupsWithState`` keyed by symbol, in the JVM
+(``MonotonicGate.java``, compiled on first use by ``borsa_spark.jvm``), so no
+Python worker touches a micro-batch. The state is one long per symbol: the
+HWM in microseconds. This is NOT ``dropDuplicatesWithinWatermark`` (which
+dedups exact keys) nor a watermark filter (which drops by global delay): the
+rule is *per-key monotonicity with equals allowed*, and the reference applies
+it in arrival order — so the gate processes each key's micro-batch rows in
+``seq`` order. The rule itself is the static ``MonotonicGate.keep``, which
+the Spark function calls and the tests drive through Py4J. TTL via
+ProcessingTimeTimeout: a timed-out key's state is removed and nothing is
+emitted.
+
+A checkpoint written by the earlier Pandas gate holds another stateful
+operator with another state layout. Spark refuses to restart from it
+(``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``, naming both
+operators): restart such a stream from a fresh checkpoint.
 
 At scale: state is one long per symbol — millions of symbols fit trivially;
 the shuffle is keyed by symbol (matches the natural stream partitioning).
@@ -18,48 +28,11 @@ the shuffle is keyed by symbol (matches the natural stream partitioning).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from borsa_spark import jvm
 
 GATE_TTL_MS = 24 * 60 * 60 * 1000  # filters.rs ENTRY_TTL = 24h
-
-
-def _gate_fn(out_schema_cols: list[str], ttl_ms: int | None):
-    def fn(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        hwm = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            pdf = pdf.sort_values("seq", kind="stable")
-            ts = pdf["ts"].astype("int64").to_numpy()  # ns since epoch
-            if len(ts) == 0:
-                continue
-            # Vectorized drop-older-keep-equal: the HWM before row i is
-            # max(initial_hwm, ts[:i].max()) — a shifted cumulative max.
-            init = hwm if hwm is not None else np.iinfo(np.int64).min
-            running = np.maximum.accumulate(
-                np.concatenate(([init], ts))
-            )
-            keep = ts >= running[:-1]
-            hwm = int(running[-1])
-            out = pdf[keep]
-            if len(out):
-                yield out[out_schema_cols]
-        if hwm is not None:
-            state.update((int(hwm),))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-
-    return fn
 
 
 def streaming_monotonic_gate(
@@ -74,21 +47,13 @@ def streaming_monotonic_gate(
 
     ``ttl_ms`` enables the reference's 24h idle-state reaper
     (pass GATE_TTL_MS) for CONTINUOUS production streams. Leave None for
-    bounded runs: ProcessingTimeTimeout makes an availableNow/once trigger
-    wait on wall-clock timeouts instead of terminating after the data is
-    drained (measured: a 4s drain becomes an un-terminating query).
+    bounded runs: ProcessingTimeTimeout makes every trigger run a batch to
+    check for timeouts, so an availableNow drain does not terminate once the
+    data is drained.
     """
-    cols = updates.columns
-    schema = updates.schema
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if ttl_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
-    return updates.groupBy(key).applyInPandasWithState(
-        _gate_fn(cols, ttl_ms),
-        outputStructType=schema,
-        stateStructType="hwm long",
-        outputMode="append",
-        timeoutConf=timeout,
-    )
+    if ttl_ms is not None and ttl_ms <= 0:
+        raise ValueError(f"ttl_ms must be positive, got {ttl_ms}")
+    spark = updates.sparkSession
+    gate = jvm.monotonic_gate(spark)
+    jdf = gate.apply(updates._jdf, key, -1 if ttl_ms is None else int(ttl_ms))
+    return DataFrame(jdf, spark)

@@ -6,9 +6,11 @@ reference model of assignments + per-(provider, symbol) monotonic state.
 System under test (nothing mocked in the decision path):
 - the REAL Supervisor state machine (`handle`) decides assignments,
   failover, preemption, and cooldown;
-- the REAL gate kernel (`gate._gate_fn`) decides per-update delivery, fed
-  one micro-batch at a time with a fake GroupState (the Spark harness's
-  state object replaced, the arithmetic untouched);
+- the REAL gate kernel (`MonotonicGate.keep`, the static method the Spark
+  function calls) decides per-update delivery, driven through Py4J one
+  micro-batch at a time; the test keeps each key's high-water mark the way
+  the Spark function keeps it in its GroupState (the ts of the last kept
+  row);
 - a controller replica translates PreemptSessions -> SessionEnded exactly
   like streaming/controller.py:105-113.
 
@@ -22,12 +24,11 @@ the current session — equal allowed, state reset when the session ends
 
 from __future__ import annotations
 
-import datetime as dt
-
-import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from borsa_spark import jvm
 from borsa_spark.errors import ProviderTimeout
 from borsa_spark.streaming import (
     BackoffTick,
@@ -39,39 +40,31 @@ from borsa_spark.streaming import (
     StartSucceeded,
     make_supervisor,
 )
-from borsa_spark.streaming.gate import _gate_fn
 
 N_PROVIDERS = 3
 SYMBOLS = ["AAPL", "MSFT", "BTC-USD"]
 
 
-class FakeGroupState:
-    """Minimal stand-in for pyspark's GroupState: exists/get/update/remove."""
-
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def remove(self):
-        self._v = None
-
-    def setTimeoutDuration(self, ms):  # pragma: no cover - TTL unused here
-        pass
+#: The HWM of a key with no state (the Spark function's starting value).
+NO_STATE = -(2**63)
 
 
-def _ts(sec: int) -> dt.datetime:
-    return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=sec)
+@pytest.fixture(scope="module")
+def keep(spark):
+    """``keep(ts, seq, hwm)`` -> kept row indices, from the Java kernel."""
+    gate = jvm.monotonic_gate(spark)
+    gw = spark.sparkContext._gateway
+
+    def longs(xs: list[int]):
+        arr = gw.new_array(gw.jvm.long, len(xs))
+        for i, x in enumerate(xs):
+            arr[i] = x
+        return arr
+
+    def run(ts: list[int], seq: list[int], hwm: int) -> list[int]:
+        return list(gate.keep(longs(ts), longs(seq), hwm))
+
+    return run
 
 
 action_st = st.one_of(
@@ -153,19 +146,18 @@ def test_downstream_drop_always_terminates(pre_steps, post_steps):
 
 @settings(max_examples=250, deadline=None)
 @given(steps=st.lists(action_st, min_size=1, max_size=60))
-def test_delivered_updates_match_reference_model(steps):
+def test_delivered_updates_match_reference_model(keep, steps):
     sm = make_supervisor(
         [list(SYMBOLS) for _ in range(N_PROVIDERS)],
         min_backoff_ms=1, max_backoff_ms=1, factor=1,
     )
-    kernel = _gate_fn(["provider", "symbol", "ts", "seq"], None)
 
     # --- reference model state (dicts only) ---
     pending: dict[int, tuple[str, ...]] = {}
     live: dict[int, tuple[str, ...] | None] = {p: None for p in range(N_PROVIDERS)}
     last_ts: dict[tuple[int, str], int] = {}
-    # --- system-side session gate state: (provider, symbol) -> GroupState ---
-    gate_state: dict[tuple[int, str], FakeGroupState] = {}
+    # --- system-side session gate state: (provider, symbol) -> HWM ---
+    gate_state: dict[tuple[int, str], int] = {}
     seq = 0
 
     def end_session(pid: int) -> None:
@@ -193,15 +185,13 @@ def test_delivered_updates_match_reference_model(steps):
         """Feed one micro-batch through the real gate kernel for this
         session's (provider, symbol) state; returns rows delivered."""
         nonlocal seq
-        rows = []
-        for t in ts_list:
-            rows.append({"provider": f"p{pid}", "symbol": sym,
-                         "ts": pd.Timestamp(_ts(t)), "seq": seq})
-            seq += 1
-        pdf = pd.DataFrame(rows)
-        state = gate_state.setdefault((pid, sym), FakeGroupState())
-        delivered = list(kernel((sym,), iter([pdf]), state))
-        return sum(len(d) for d in delivered)
+        seqs = list(range(seq, seq + len(ts_list)))
+        seq += len(ts_list)
+        hwm = gate_state.get((pid, sym), NO_STATE)
+        kept = keep(ts_list, seqs, hwm)
+        if kept:
+            gate_state[(pid, sym)] = ts_list[kept[-1]]
+        return len(kept)
 
     run(BackoffTick())  # arm startup round
 

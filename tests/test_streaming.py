@@ -488,13 +488,9 @@ class TestDropDuplicatesWithinWatermark:
         assert seqs == [("AAPL", 1), ("AAPL", 2)]  # replays dropped
 
 
-class TestFrozenPartitionCount:
-    """A stateful stream keeps the shuffle partition count of its
-    checkpoint (Structured Streaming stores it in the offset log), so a
-    stream started under one count restarts under it whatever the session
-    says now, and still produces the bars of a one-shot drain. A new
-    checkpoint takes the session's count, which ``get_spark`` sets to one
-    partition per core."""
+class _TickBacklog:
+    """Three providers' tick files for fan_in -> gate -> candle_stream
+    drains, and the bars a drain wrote."""
 
     SCHEMA = ("provider string, symbol string, ts timestamp, "
               "price double, seq long")
@@ -522,6 +518,22 @@ class TestFrozenPartitionCount:
                     ))
                 spark.createDataFrame(rows, self.SCHEMA).repartition(
                     1).write.parquet(str(root / f"p{p}" / f"f{k}"))
+
+    def _bars(self, spark, out):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(str(out)).select(
+                "symbol", "ts", "open", "high", "low", "close", "n_ticks"
+            ).collect()
+        )
+
+
+class TestFrozenPartitionCount(_TickBacklog):
+    """A stateful stream keeps the shuffle partition count of its
+    checkpoint (Structured Streaming stores it in the offset log), so a
+    stream started under one count restarts under it whatever the session
+    says now, and still produces the bars of a one-shot drain. A new
+    checkpoint takes the session's count, which ``get_spark`` sets to one
+    partition per core."""
 
     def _drain(self, spark, root, out, ckpt):
         sources = [
@@ -551,13 +563,6 @@ class TestFrozenPartitionCount:
         n_ops = {len(p["stateOperators"]) for p in q.recentProgress}
         assert n_ops == {2}  # the gate and the candle aggregate
         return counts
-
-    def _bars(self, spark, out):
-        return sorted(
-            tuple(r) for r in spark.read.parquet(str(out)).select(
-                "symbol", "ts", "open", "high", "low", "close", "n_ticks"
-            ).collect()
-        )
 
     def test_restart_keeps_checkpoint_partition_count(self, spark, tmp_path):
         key = "spark.sql.shuffle.partitions"
@@ -602,6 +607,143 @@ class TestFrozenPartitionCount:
             capture_output=True, text=True, timeout=300, check=True,
         )
         assert out.stdout.strip().splitlines()[-1] == "2"
+
+
+class TestStopMidDrain(_TickBacklog):
+    """Stop the fan_in -> gate -> candle_stream query after its first
+    committed micro-batch and restart it from the same checkpoint: the gate's
+    high-water marks and the candle state come back from the checkpoint, so
+    the bars equal those of a one-shot drain."""
+
+    N_FILES = 6
+
+    def _start(self, spark, root, out, ckpt):
+        sources = [
+            spark.readStream.schema(self.SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(root / f"p{p}" / "f*"))
+            for p in range(3)
+        ]
+        bars = candle_stream(
+            streaming_monotonic_gate(fan_in(sources)),
+            interval_seconds=60, watermark="10 seconds",
+        )
+        return (
+            bars.writeStream.format("parquet")
+            .option("path", str(out))
+            .option("checkpointLocation", str(ckpt))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def _finish(self, q):
+        assert q.awaitTermination(300)
+        assert q.exception() is None
+
+    def test_restart_mid_drain_gives_one_shot_bars(self, spark, tmp_path):
+        import time
+
+        ticks, out, ckpt = (tmp_path / n for n in ("ticks", "out", "ckpt"))
+        self._write_backlog(spark, ticks, range(self.N_FILES))
+        q = self._start(spark, ticks, out, ckpt)
+        deadline = time.monotonic() + 300
+        while not (ckpt / "commits" / "0").exists():
+            assert q.isActive and time.monotonic() < deadline
+            time.sleep(0.01)
+        q.stop()
+        committed = [f for f in (ckpt / "commits").iterdir()
+                     if f.name.isdigit()]
+        assert len(committed) < self.N_FILES  # stopped mid-drain
+        self._finish(self._start(spark, ticks, out, ckpt))
+        restarted = self._bars(spark, out)
+
+        fresh_out = tmp_path / "fresh_out"
+        self._finish(
+            self._start(spark, ticks, fresh_out, tmp_path / "fresh_ckpt"))
+        one_shot = self._bars(spark, fresh_out)
+        assert len(one_shot) > 3 * self.N_FILES
+        assert restarted == one_shot
+
+
+class TestGateTTL:
+    """``ttl_ms`` reaps an idle symbol's state (filters.rs:16-36): once the
+    high-water mark of a symbol that saw no tick for ``ttl_ms`` has expired,
+    an older tick for it passes again, while a symbol that keeps ticking
+    still rejects older ticks."""
+
+    SCHEMA = ("provider string, symbol string, ts timestamp, "
+              "price double, seq long")
+    TTL_MS = 5000
+
+    def test_idle_symbol_state_expires(self, spark, tmp_path):
+        import datetime as dt
+        import itertools
+        import json
+        import os
+        import time
+
+        ticks = tmp_path / "ticks"
+        ticks.mkdir()
+        seq = itertools.count()
+
+        def write(*rows):
+            """One JSON file of (symbol, second) ticks, renamed into place
+            so the file source never lists a partial file."""
+            k = next(seq)
+            body = "".join(json.dumps({
+                "provider": "p0", "symbol": sym, "price": 1.0,
+                "ts": (dt.datetime(2024, 1, 1)
+                       + dt.timedelta(seconds=sec)).isoformat(),
+                "seq": k * 10 + i,
+            }) + "\n" for i, (sym, sec) in enumerate(rows))
+            (ticks / f".f{k}").write_text(body)
+            os.replace(ticks / f".f{k}", ticks / f"f{k}.json")
+
+        src = spark.readStream.schema(self.SCHEMA).json(str(ticks))
+        q = (
+            streaming_monotonic_gate(src, ttl_ms=self.TTL_MS)
+            .writeStream.format("memory").queryName("gate_ttl")
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+        try:
+            write(("AAPL", 100), ("MSFT", 100))
+            deadline = time.monotonic() + 120
+            for sec in itertools.count(101):
+                assert q.isActive and time.monotonic() < deadline
+                removed = sum(
+                    p["stateOperators"][0]["numRowsRemoved"]
+                    for p in q.recentProgress if p["stateOperators"]
+                )
+                if removed:
+                    break
+                write(("MSFT", sec))  # keeps MSFT's state alive
+                time.sleep(0.25)
+            # Both old ticks share one file, so one micro-batch gates them.
+            # A processing-time timeout runs a batch on every trigger, so
+            # processAllAvailable would never return: poll the sink.
+            write(("AAPL", 50), ("MSFT", 50))
+            while True:
+                kept = {(r.symbol, r.ts.second + 60 * r.ts.minute)
+                        for r in spark.table("gate_ttl").collect()}
+                if ("AAPL", 50) in kept or time.monotonic() > deadline:
+                    break
+                assert q.isActive
+                time.sleep(0.25)
+        finally:
+            q.stop()
+        assert ("AAPL", 100) in kept and ("MSFT", 100) in kept
+        assert ("AAPL", 50) in kept  # AAPL's expired HWM no longer gates
+        assert ("MSFT", 50) not in kept  # MSFT's live HWM still does
+
+    def test_non_positive_ttl_is_rejected(self, spark, stream_rows):
+        path, schema = stream_rows
+        src = spark.readStream.schema(schema).parquet(path)
+        with pytest.raises(ValueError, match="ttl_ms"):
+            streaming_monotonic_gate(src, ttl_ms=0)
 
 
 class TestDefaultDriverHeap:
