@@ -14,7 +14,7 @@ Layout
 - ``plans``       pure-Python planning: routing policy, interval planning
 - ``router``      capability routers (history, quotes, search, info, ...)
 - ``sources``     provider/fixture table registry
-- ``functions``   dedup / text-analysis / multimodal pipelines
+- ``functions``   dedup / text-analysis pipelines
 - ``streaming``   stream fan-in, monotonic gate, windowed candles, supervisor
 - ``middleware``  TTL cache / quota / blacklist wrappers
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import importlib
 
 __all__ = [
-    "classifier", "dedup", "gif", "jpeg", "multimodal", "packing", "text",
+    "classifier", "dedup", "packing", "text",
 ]
 
 

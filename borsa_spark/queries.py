@@ -1795,76 +1795,6 @@ def f14_top_tokens(spark, sf):
     )
 
 
-@query(
-    "f16_media_features",
-    """
-    SELECT doc_id AS asset_id,
-           (4 + doc_id % 13)::BIGINT AS width,
-           (4 + doc_id % 7)::BIGINT  AS height,
-           3::BIGINT                 AS n_channels,
-           round(((doc_id % 256) + (doc_id * 7 % 256) + (doc_id * 13 % 256))
-                 / 3.0 / 255.0, 4)   AS mean_luma,
-           CASE doc_id % 4 WHEN 0 THEN 'bmp' WHEN 1 THEN 'ppm'
-                WHEN 2 THEN 'png' ELSE 'gif' END AS decoder
-    FROM documents
-    """,
-)
-def f16_media_features(spark, sf):
-    """Multimodal: REAL image decode end-to-end. Synthesizes one
-    solid-color image per document (doc_id % 4: 24-bit BMP with row
-    padding / binary PPM with a header comment / zlib-compressed 8-bit
-    PNG with Paeth-filtered scanlines / LZW-compressed palettized GIF),
-    runs the pure-Python codecs inside `image_features`'s mapInPandas
-    stage, and checks the decoded (dims, channels, mean-luma, decoder)
-    against an ANALYTIC oracle computed from doc_id alone — the encoder
-    parameters, never the bytes. A decoder that misparses padding, BGR
-    order, the PPM header, the PNG filter recurrences, or the GIF LZW
-    width schedule fails the hash-match."""
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 4 + did % 7
-                rgb = (did % 256, (did * 7) % 256, (did * 13) % 256)
-                mode = did % 4
-                if mode < 2:
-                    data = (mm.encode_bmp, mm.encode_ppm)[mode](w, h, rgb)
-                elif mode == 2:
-                    # Paeth on every scanline: the hardest unfilter branch
-                    data = mm.encode_png(w, h, rgb, filter_type=4)
-                else:
-                    import numpy as np
-
-                    from borsa_spark.functions.gif import encode_gif
-
-                    data = encode_gif(
-                        np.full((h, w, 3), rgb, dtype=np.uint8)
-                    )
-                out.append((did, data))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(gen, "asset_id long, payload binary")
-    feats = mm.image_features(assets)
-    return feats.select(
-        "asset_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("n_channels").cast("long").alias("n_channels"),
-        F.round("mean_luma", 4).alias("mean_luma"),
-        "decoder",
-    )
-
-
 _SIMHASH_SQL = f"""
     WITH sh AS ({_SH_CTE}),
     sim AS ({_dd.sql_simhash('sh')})
@@ -3515,77 +3445,6 @@ def f54_training_order(spark, sf):
             (F.col("__offset") + F.col("__local_rank")).alias("position"),
         )
         .withColumn("shard", ((F.col("position") - 1) % 8).cast("long"))
-    )
-
-
-@query(
-    "f59_jpeg_features",
-    """
-    SELECT doc_id AS asset_id,
-           (4 + doc_id % 13)::BIGINT AS width,
-           (4 + doc_id % 7)::BIGINT  AS height,
-           'jpeg' AS decoder,
-           round(((doc_id % 256) + (doc_id * 7 % 256)
-                  + (doc_id * 13 % 256)) / 3.0 / 255.0, 4) AS source_luma,
-           TRUE AS luma_within_1pct
-    FROM documents
-    """,
-)
-def f59_jpeg_features(spark, sf):
-    """Multimodal: REAL baseline-JPEG decode end-to-end (functions/
-    jpeg.py — pure-Python T.81: Huffman entropy decode, dequant, IDCT,
-    YCbCr->RGB). f16's analytic-oracle pattern with an envelope
-    twist: JPEG is lossy, so instead of pinning the decoded luma exactly
-    the oracle pins the CONTRACT — per solid-color image (dims and RGB
-    derived from doc_id alone, encoded at quality 90), the decoded mean
-    luma must land within 1% of the source color's luma. A flat block is
-    DC-only, so a decoder that misreads the quant tables, the Huffman
-    spec tables, the zigzag, or the YCbCr matrix blows the envelope (a
-    wrong IDCT scale shows up as a proportional luma shift). Dimensions
-    and the decoder tag are pinned exactly.
-
-    Scale shape: same as f16 — binary payloads through Arrow-batched
-    mapInPandas, small typed feature rows out, nothing collects."""
-    import pandas as pd
-
-    from borsa_spark.functions import multimodal as mm
-    from borsa_spark.functions.jpeg import encode_jpeg
-
-    # widen the id scan before the Arrow gen: single-row-group local
-    # input => one Python worker otherwise (round 13; no-op multi-file)
-    docs = _dd.widen_if_narrow(
-        load_table(spark, sf, "documents").select("doc_id"))
-
-    def gen(batches):
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 4 + did % 7
-                rgb = (did % 256, (did * 7) % 256, (did * 13) % 256)
-                img = np.tile(
-                    np.array(rgb, dtype=np.uint8), (h, w, 1)
-                )
-                out.append((did, encode_jpeg(img, quality=90)))
-            yield pd.DataFrame(out, columns=["asset_id", "payload"])
-
-    assets = docs.mapInPandas(gen, "asset_id long, payload binary")
-    feats = mm.image_features(assets)
-    src_luma = (
-        (F.col("asset_id") % 256)
-        + (F.col("asset_id") * 7 % 256)
-        + (F.col("asset_id") * 13 % 256)
-    ) / 3.0 / 255.0
-    return feats.select(
-        "asset_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "decoder",
-        F.round(src_luma, 4).alias("source_luma"),
-        (F.abs(F.col("mean_luma") - src_luma) <= 0.01)
-            .alias("luma_within_1pct"),
     )
 
 

@@ -252,6 +252,9 @@ def history(
     # transport call or quota.
     if strategy not in ("deep", "fallback"):
         raise UnsupportedError(f"unknown merge strategy {strategy!r}")
+    if resampling not in (None, "daily", "weekly"):
+        # Resampling is a closed enum in the reference (history.rs:636-664).
+        raise UnsupportedError(f"unknown resampling {resampling!r}")
     if strategy == "fallback" and (
         symbols == ALL_SYMBOLS or (symbols is not None and len(symbols) > 1)
     ):
@@ -375,7 +378,7 @@ def history(
             reduce(lambda a, b: a.unionByName(b), actions_frames)
         )
 
-    if resampling in ("daily", "weekly"):
+    if resampling is not None:
         merged = resample(
             merged.withColumn("provider", F.lit(None).cast("string")),
             resampling,
@@ -405,7 +408,7 @@ def history(
             sub_daily.unionByName(rest.select(*sub_daily.columns))
         )
 
-    if resampling in ("daily", "weekly") or auto_resample_subdaily_to_daily:
+    if resampling is not None or auto_resample_subdaily_to_daily:
         # strip_unadjusted (timeseries/util.rs via history.rs:659-662)
         merged = merged.withColumn(
             "close_unadj", F.lit(None).cast("decimal(38,9)")

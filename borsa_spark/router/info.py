@@ -20,8 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from borsa_spark.errors import BorsaSparkError, UnsupportedError
-from borsa_spark.plans.routing_policy import RoutingContext
-from borsa_spark.router.quotes import _quote_union
+from borsa_spark.router.quotes import _best_quotes
 from borsa_spark.router.tables import capability_scan
 from borsa_spark.sources.provider import Catalog, _local_frame
 
@@ -59,35 +58,15 @@ def info(
     (no collect) — the side tables are restricted by left-semi join.
     """
     warnings: list[str] = []
-    from pyspark.sql import Window
-
-    symbols_df = (
-        symbols.select("symbol").distinct()
-        if isinstance(symbols, DataFrame)
-        else None
-    )
-
-    def _restrict(df: DataFrame) -> DataFrame:
-        if symbols_df is not None:
-            return df.join(symbols_df, "symbol", "left_semi")
-        return df.filter(F.col("symbol").isin(symbols))
-
-    ctx = RoutingContext(kind=kind)
     try:
-        quotes = _restrict(_quote_union(catalog, ctx, enforce_exchange=False))
-        w = Window.partitionBy("symbol").orderBy(F.col("priority").asc())
-        quotes = (
-            quotes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "priority")
-        )
+        quotes = _best_quotes(catalog, kind, symbols)
     except BorsaSparkError as e:
         warnings.append(f"[quote] {e.message}")
         quotes = None
 
     base = (
-        symbols_df
-        if symbols_df is not None
+        symbols.select("symbol").distinct()
+        if isinstance(symbols, DataFrame)
         else _local_frame(spark, [(s,) for s in symbols], "symbol string")
     )
     out = base
@@ -132,24 +111,9 @@ def fast_info(
     quote-derived fields only — no profile/analyst/esg joins, one window
     over the quote union. ``symbols`` may be a one-column ``symbol``
     DataFrame (left-semi restriction, no driver list)."""
-    from pyspark.sql import Window
-
-    ctx = RoutingContext(kind=kind)
-    union = _quote_union(catalog, ctx, enforce_exchange=False)
-    if isinstance(symbols, DataFrame):
-        union = union.join(
-            symbols.select("symbol").distinct(), "symbol", "left_semi"
-        )
-    else:
-        union = union.filter(F.col("symbol").isin(symbols))
-    w = Window.partitionBy("symbol").orderBy(F.col("priority").asc())
-    return (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "symbol", "shortname", "price", "previous_close", "currency",
-            "exchange", "market_state",
-        )
+    return _best_quotes(catalog, kind, symbols).select(
+        "symbol", "shortname", "price", "previous_close", "currency",
+        "exchange", "market_state",
     )
 
 

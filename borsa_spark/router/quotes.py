@@ -30,9 +30,7 @@ from borsa_spark.plans.routing_policy import RoutingContext
 from borsa_spark.sources.provider import Catalog, _local_frame
 
 
-def _quote_union(
-    catalog: Catalog, ctx: RoutingContext, enforce_exchange: bool = True
-) -> DataFrame:
+def _quote_union(catalog: Catalog, ctx: RoutingContext) -> DataFrame:
     eligible = catalog.eligible(ctx, "quote")
     if not eligible:
         raise UnsupportedError("quote: no eligible provider")
@@ -53,13 +51,35 @@ def _quote_union(
     union = frames[0]
     for f in frames[1:]:
         union = union.unionByName(f)
-    if enforce_exchange and ctx.exchange is not None:
+    if ctx.exchange is not None:
         # P4: mismatched exchange => NotFound (=> fallback); missing exchange
         # passes through (core.rs:276-296).
         union = union.filter(
             F.col("exchange").isNull() | (F.col("exchange") == ctx.exchange)
         )
     return union
+
+
+def _best_quotes(
+    catalog: Catalog, kind: str | None, symbols: "list[str] | DataFrame"
+) -> DataFrame:
+    """Each requested symbol's winning quote row: the provider union
+    restricted to ``symbols`` (a list, or a one-column ``symbol``
+    DataFrame joined left-semi), then the lowest ``priority`` per symbol.
+    Every union column is kept; callers select their own."""
+    union = _quote_union(catalog, RoutingContext(kind=kind))
+    if isinstance(symbols, DataFrame):
+        union = union.join(
+            symbols.select("symbol").distinct(), "symbol", "left_semi"
+        )
+    else:
+        union = union.filter(F.col("symbol").isin(symbols))
+    w = Window.partitionBy("symbol").orderBy(F.col("priority").asc())
+    return (
+        union.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def quote(
@@ -160,16 +180,7 @@ def quotes(
     if len(set(symbols)) != len(symbols):
         # duplicate-symbol validation (download.rs:10-26 applies the same rule)
         raise ValueError("duplicate symbols in batch quote request")
-    ctx = RoutingContext(kind=kind)
-    union = _quote_union(catalog, ctx, enforce_exchange=False).filter(
-        F.col("symbol").isin(symbols)
-    )
-    w = Window.partitionBy("symbol").orderBy(F.col("priority").asc())
-    best = (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    best = _best_quotes(catalog, kind, symbols)
     won = best.toArrow()
     quoted = set(won.column("symbol").to_pylist())
     failures = _local_frame(

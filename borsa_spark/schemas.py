@@ -162,26 +162,6 @@ SOURCE_CATALOG = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# Training-data pipeline tables (beyond-reference operators)
-# ---------------------------------------------------------------------------
-
-#: Multimodal assets: opaque binary payload + typed metadata. Decode /
-#: feature-extraction runs as Pandas UDFs over mapInPandas (functions/multimodal).
-MEDIA_ASSETS = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("meta_json", T.StringType(), True),
-    ]
-)
-
 #: Interval vocabulary with seconds — closed enum in the reference
 #: (borsa-yfinance/src/lib.rs:274-287 enumerates the yfinance-supported set).
 INTERVAL_SECONDS: dict[str, int] = {

@@ -14,8 +14,10 @@
   "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"}``.
 - UTC session timezone is a *correctness* requirement: all reference
   timestamps are UTC epoch seconds and the DuckDB oracle compares UTC-naive.
-- Arrow on: every Pandas-UDF boundary (minhash, multimodal) moves
-  columnar batches, not pickled rows.
+- Arrow on: the Python/JVM boundaries that remain move columnar batches,
+  not pickled rows: ``sources/rest.py``'s ``mapInPandas`` fetch,
+  ``packing``'s ``applyInPandas``, ``quotes()``'s ``toArrow`` and
+  ``sources.provider._local_frame``.
 - The driver heap defaults to half the memory the process may use: the
   cgroup v2 ``memory.max`` when it holds a number, capped by physical
   memory. ``SPARK_GRAFT_DRIVER_MEM`` (e.g. ``2g``) overrides it.

@@ -24,7 +24,7 @@ borsa-types/src/config.rs:108-117).
 from __future__ import annotations
 
 import random
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 from enum import Enum
 from typing import Any
 
@@ -159,7 +159,6 @@ class Supervisor:
     provider_instruments: tuple[tuple[str, ...], ...]  # symbols per provider
     provider_allow: tuple[frozenset[str], ...]
     required_symbols: frozenset[str]
-    providers_can_stream: tuple[bool, ...]
     capability: str = "stream_quotes"
 
     start_index: int = 0
@@ -250,9 +249,7 @@ class Supervisor:
 
     def _has_idle_with_work(self) -> bool:
         return any(
-            self._is_idle(p)
-            and self.providers_can_stream[i]
-            and self.compute_needed_symbols_for(i)
+            self._is_idle(p) and self.compute_needed_symbols_for(i)
             for i, p in enumerate(self.providers)
         )
 
@@ -271,10 +268,7 @@ class Supervisor:
         cur = replace(self, providers=tuple(providers))
         while True:
             p = providers[i]
-            if (
-                self._is_idle(p)
-                and self.providers_can_stream[i]
-            ):
+            if self._is_idle(p):
                 syms = cur.compute_needed_symbols_for(i)
                 if syms:
                     providers[i] = Provider(
@@ -402,7 +396,6 @@ def make_supervisor(
     provider_symbols: list[list[str]],
     provider_allow: list[set[str]] | None = None,
     required: set[str] | None = None,
-    can_stream: list[bool] | None = None,
     capability: str = "stream_quotes",
     min_backoff_ms: int = 500,
     max_backoff_ms: int = 30_000,
@@ -418,7 +411,6 @@ def make_supervisor(
             for a in (provider_allow or [set(s) for s in provider_symbols])
         ),
         required_symbols=frozenset(required if required is not None else all_syms),
-        providers_can_stream=tuple(can_stream or [True] * n),
         capability=capability,
         backoff_ms=min_backoff_ms,
         min_backoff_ms=min_backoff_ms,

@@ -67,13 +67,6 @@ class TestPlanShapes:
         assert "WindowGroupLimit" in plan
         assert "EvalPython" not in plan
 
-    def test_f16_single_arrow_python_stage(self, spark):
-        # encode (fixture gen) + decode are two mapInPandas stages and the
-        # only Python in the plan; everything around them is JVM-side.
-        plan = plan_of(spark, "f16_media_features")
-        assert plan.count("ArrowEvalPython") <= 2
-        assert "MapInPandas" in plan or "ArrowEvalPython" in plan
-
     def test_sessionize_single_shuffle(self, spark):
         # lag window, running-sum window, and the session aggregate all
         # reuse ONE user_id exchange (HashPartitioning(user_id) satisfies

@@ -285,6 +285,16 @@ class TestHistoryRouter:
                     strategy="deeep")
         assert calls == []
 
+    def test_unknown_resampling_rejected_before_any_provider(self, spark):
+        # An unknown or miscased value must not fall through to the
+        # unresampled series.
+        cat, calls = self._counting_catalog(spark)
+        for resampling in ("monthly", "Weekly"):
+            with pytest.raises(UnsupportedError, match=resampling):
+                history(spark, cat, HistoryRequest(symbol="AAPL"),
+                        resampling=resampling)
+        assert calls == []
+
     def test_fallback_batch_rejected_before_any_provider(self, spark):
         cat, calls = self._counting_catalog(spark)
         with pytest.raises(UnsupportedError, match="per-symbol"):

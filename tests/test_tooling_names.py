@@ -194,16 +194,23 @@ def test_request_paths_create_no_rows_from_lists():
     assert offenders == []
 
 
-# ``get_spark`` alone decides the shuffle partition count. A library call
-# that sets it on a live session changes every query that shares the
-# session, concurrent router threads included, and a stateful stream
-# freezes whatever count it starts under into its checkpoint.
+# ``get_spark`` alone decides the shuffle partition count and the Arrow
+# batch size. A library call that sets either on a live session changes
+# every query that shares the session, concurrent router threads included,
+# and a stateful stream freezes whatever partition count it starts under
+# into its checkpoint.
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+ARROW_BATCH_SIZE = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def _shuffle_partition_sets(tree) -> list[int]:
-    """Lines of ``<anything>.conf.set("spark.sql.shuffle.partitions", ...)``
-    calls."""
+def _conf_sets(tree, key: str) -> list[int]:
+    """Lines of ``<anything>.conf.set(key, ...)`` calls, the key written
+    as a literal or as a module-level name bound to one."""
+    names = {t.id: node.value.value
+             for node in tree.body
+             if isinstance(node, ast.Assign)
+             and isinstance(node.value, ast.Constant)
+             for t in node.targets if isinstance(t, ast.Name)}
     lines = []
     for node in ast.walk(tree):
         if not (isinstance(node, ast.Call)
@@ -212,12 +219,23 @@ def _shuffle_partition_sets(tree) -> list[int]:
                 and isinstance(node.func.value, ast.Attribute)
                 and node.func.value.attr == "conf"):
             continue
-        key = node.args[:1] + [k.value for k in node.keywords
-                               if k.arg == "key"]
-        if any(isinstance(k, ast.Constant) and k.value == SHUFFLE_PARTITIONS
-               for k in key):
+        args = node.args[:1] + [k.value for k in node.keywords
+                                if k.arg == "key"]
+        if any((isinstance(a, ast.Constant) and a.value == key)
+               or (isinstance(a, ast.Name) and names.get(a.id) == key)
+               for a in args):
             lines.append(node.lineno)
     return lines
+
+
+def _library_conf_sets(key: str) -> list[tuple[str, int]]:
+    offenders = []
+    for path in _py_files(("borsa_spark",)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        offenders += [(os.path.relpath(path, REPO), line)
+                      for line in _conf_sets(tree, key)]
+    return offenders
 
 
 def test_library_sets_no_shuffle_partitions():
@@ -229,14 +247,23 @@ def test_library_sets_no_shuffle_partitions():
         'spark.conf.get("spark.sql.shuffle.partitions")\n'
         'b.config("spark.sql.shuffle.partitions", "4")\n'
     )
-    assert _shuffle_partition_sets(planted) == [1, 2]
-    offenders = []
-    for path in _py_files(("borsa_spark",)):
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
-        offenders += [(os.path.relpath(path, REPO), line)
-                      for line in _shuffle_partition_sets(tree)]
-    assert offenders == []
+    assert _conf_sets(planted, SHUFFLE_PARTITIONS) == [1, 2]
+    assert _library_conf_sets(SHUFFLE_PARTITIONS) == []
+
+
+def test_library_sets_no_arrow_batch_size():
+    planted = ast.parse(
+        'spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",'
+        ' "100")\n'
+        'KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"\n'
+        'df.sparkSession.conf.set(KEY, str(rows))\n'
+        'spark.conf.set(key=KEY, value=1)\n'
+        'spark.conf.get(KEY)\n'
+        'spark.conf.set("spark.sql.shuffle.partitions", "8")\n'
+        'b.config(KEY, "4")\n'
+    )
+    assert _conf_sets(planted, ARROW_BATCH_SIZE) == [1, 3, 4]
+    assert _library_conf_sets(ARROW_BATCH_SIZE) == []
 
 
 def test_every_query_has_an_oracle_and_every_oracle_a_query():
