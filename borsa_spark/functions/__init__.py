@@ -7,7 +7,7 @@ from __future__ import annotations
 import importlib
 
 __all__ = [
-    "classifier", "dedup", "packing", "text",
+    "classifier", "dedup", "packing", "png", "text",
 ]
 
 
