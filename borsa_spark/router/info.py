@@ -53,8 +53,9 @@ def info(
 ) -> tuple[DataFrame, list[str]]:
     """J2: the composed Info view for a set of symbols + warnings.
 
-    ``symbols`` may be a driver-side list or a one-column ``symbol``
-    DataFrame; the DataFrame form keeps the symbol universe distributed
+    ``symbols`` may be a driver-side list (a repeated symbol gives one row,
+    as in ``fast_info``) or a one-column ``symbol`` DataFrame; the
+    DataFrame form keeps the symbol universe distributed
     (no collect) — the side tables are restricted by left-semi join.
     """
     warnings: list[str] = []
@@ -67,7 +68,8 @@ def info(
     base = (
         symbols.select("symbol").distinct()
         if isinstance(symbols, DataFrame)
-        else _local_frame(spark, [(s,) for s in symbols], "symbol string")
+        else _local_frame(
+            spark, [(s,) for s in dict.fromkeys(symbols)], "symbol string")
     )
     out = base
     if quotes is not None:

@@ -30,7 +30,7 @@ from borsa_spark.errors import BorsaSparkError, ProviderTimeout
 from borsa_spark.router.history import _BIG  # noqa: F401 (doc cross-ref)
 from borsa_spark.sources.provider import Catalog
 from borsa_spark.streaming.controller import StreamController, launch_plan
-from borsa_spark.streaming.gate import streaming_monotonic_gate
+from borsa_spark.streaming.gate import GATE_TTL_MS, streaming_monotonic_gate
 from borsa_spark.streaming.planner import StreamInstrument, plan_stream
 
 
@@ -129,7 +129,11 @@ def stream_updates(
     *streaming* DataFrame in the matching shape.
     ``stream_enforce_monotonic_timestamps`` maps to ``enforce_monotonic``
     (borsa-types/src/config.rs:145-149, default on); for options the gate
-    keys on the UNDERLYING symbol, matching stream_symbol().
+    keys on the UNDERLYING symbol, matching stream_symbol(). With
+    ``trigger_available_now=False`` a symbol's gate state expires after
+    ``GATE_TTL_MS`` without an update (the reference's reaper,
+    filters.rs:16-36); an ``availableNow`` drain gates with no timeout, so
+    that it ends once the data is drained.
 
     ``dedup_within_watermark`` (e.g. ``"1 hour"``) is the comparison mode
     the reference's T8 semantics note contrasts with the gate
@@ -164,7 +168,13 @@ def stream_updates(
                 )
             df = df.filter(F.col("symbol").isin(list(symbols)))  # P6
             if enforce_monotonic:
-                df = streaming_monotonic_gate(df, key="symbol")
+                # The reference's 24 h reaper (filters.rs:16-36) for
+                # continuous sessions; a processing-time timeout would keep
+                # an availableNow drain from ending.
+                df = streaming_monotonic_gate(
+                    df, key="symbol",
+                    ttl_ms=None if trigger_available_now else GATE_TTL_MS,
+                )
             elif dedup_within_watermark is not None:
                 from borsa_spark.streaming.fanin import streaming_exact_dedup
 

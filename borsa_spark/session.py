@@ -12,6 +12,17 @@
   every key's state on the JVM heap. For large keyed state, pass
   ``extra_conf={"spark.sql.streaming.stateStore.providerClass":
   "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"}``.
+- A stream's checkpoint and state files on ``file:`` paths are written by
+  ``borsa_spark.streaming.LocalCheckpointFileManager``, which forks no
+  process per file (Hadoop's local file system runs ``chmod`` and
+  ``readlink`` for each when its native library is missing). This builder
+  does not name it: loading the class here would cost every session,
+  streaming or not. The stateful operators (the monotonic gate, the candle
+  aggregate and the exact dedup) set
+  ``spark.sql.streaming.checkpointFileManagerClass`` on the session when
+  they load the package's classes (``borsa_spark.jvm.load``), before the
+  caller starts the query, unless the session already names a manager.
+  Other URI schemes go to Spark's default manager.
 - UTC session timezone is a *correctness* requirement: all reference
   timestamps are UTC epoch seconds and the DuckDB oracle compares UTC-naive.
 - Arrow on: the Python/JVM boundaries that remain move columnar batches,

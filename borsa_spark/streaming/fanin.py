@@ -25,6 +25,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from borsa_spark import jvm
+
 
 def fan_in(
     sources: list[DataFrame], allowed: dict[int, list[str]] | None = None
@@ -80,6 +82,7 @@ def streaming_exact_dedup(
     is bounded by the watermark (the gate's state never expires without
     TTL).
     """
+    jvm.use_checkpoint_manager(updates.sparkSession)
     return updates.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys
     )
@@ -112,6 +115,7 @@ def candle_stream(
     an append-mode stream of the same aggregation, treating presence in
     the append stream as the closed marker.
     """
+    jvm.use_checkpoint_manager(updates.sparkSession)
     ts = F.col("ts")
     win = F.window(ts, f"{interval_seconds} seconds")
     ord_key: Column = (

@@ -17,6 +17,12 @@ the Spark function calls and the tests drive through Py4J. TTL via
 ProcessingTimeTimeout: a timed-out key's state is removed and nothing is
 emitted.
 
+Opening the gate also routes the session's ``file:`` checkpoints through
+``LocalCheckpointFileManager.java`` (see ``borsa_spark.jvm.load``): the
+offset and commit logs and the gate's state deltas are written with
+``java.nio``, with the checksum files Hadoop's local file system would
+write, and no forked process.
+
 A checkpoint written by the earlier Pandas gate holds another stateful
 operator with another state layout. Spark refuses to restart from it
 (``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``, naming both

@@ -73,7 +73,8 @@ class TestLiveFacade:
     def test_rate_feed_through_stream_quotes_facade(self, spark, tmp_path):
         """The full live path with zero infrastructure: rate-source feed ->
         planner -> supervised per-provider query -> allow filter -> gate ->
-        parquet sink fan-in."""
+        parquet sink fan-in. The continuous session's gate has the
+        reference's idle-state timeout."""
         import time
 
         from borsa_spark.router.stream import stream_quotes
@@ -116,5 +117,11 @@ class TestLiveFacade:
             assert all(
                 a.ts <= b.ts for a, b in zip(ordered, ordered[1:])
             )
+            # a continuous session's gate reaps idle symbols (GATE_TTL_MS)
+            plans = [q._jsq.explainInternal(True)
+                     for ctl in handle.controllers
+                     for q in ctl.sessions.values()]
+            assert plans
+            assert all("ProcessingTimeTimeout" in p for p in plans)
         finally:
             handle.stop()

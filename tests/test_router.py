@@ -770,6 +770,16 @@ class TestMockSources:
         assert {str(r.provider) for r in res2.candles.collect()} == {"flaky"}
 
 
+def test_info_list_gives_a_repeated_symbol_one_row(spark):
+    from borsa_spark.router import fast_info
+    from borsa_spark.sources.mock import fixture_mock_source
+
+    cat = Catalog().register(fixture_mock_source(spark))
+    out, _ = info(spark, cat, ["AAPL", "AAPL", "BTC-USD"])
+    assert sorted(r.symbol for r in out.collect()) == ["AAPL", "BTC-USD"]
+    assert len(fast_info(spark, cat, ["AAPL", "AAPL"]).collect()) == 1
+
+
 def test_fast_info_quote_subset(spark):
     from borsa_spark.router import fast_info
     from borsa_spark.sources.mock import fixture_mock_source

@@ -280,6 +280,13 @@ class TestStreamQuotesFacade:
         # p0 covers both symbols (fallback mode, first in chain); the gate
         # dropped seq=2
         assert sorted(r.seq for r in out) == [0, 1, 3]
+        # the availableNow drain ended: its gate has no timeout to run
+        # batches for
+        sessions = [q for ctl in handle.controllers
+                    for q in ctl.sessions.values()]
+        assert sessions and not any(q.isActive for q in sessions)
+        assert all("NoTimeout" in q._jsq.explainInternal(True)
+                   for q in sessions)
         handle.stop()
 
     def test_stream_options_facade_gates_on_underlying(self, spark, tmp_path):

@@ -5,8 +5,9 @@ would otherwise leave a dead entry that only fails when the target is
 run (or, for an import inside a function, when that function is
 called), and a cut could leave an example that nothing runs. The
 request paths also build no local rows from a Python list, which would
-start Python workers, and no library module sets the shuffle partition
-count on a live session. Every registered query has a DuckDB oracle and
+start Python workers; no library module sets the shuffle partition
+count on a live session, or a key that drops the checksums of checkpoint
+and state files. Every registered query has a DuckDB oracle and
 every oracle a query. Everything but the registry is read with ``ast`` or
 a regex, so no script is imported, and no check starts a Spark
 session."""
@@ -16,6 +17,8 @@ from __future__ import annotations
 import ast
 import os
 import re
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -204,8 +207,9 @@ ARROW_BATCH_SIZE = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _conf_sets(tree, key: str) -> list[int]:
-    """Lines of ``<anything>.conf.set(key, ...)`` calls, the key written
-    as a literal or as a module-level name bound to one."""
+    """Lines of ``<anything>.conf.set(key, ...)`` and
+    ``<anything>.hadoopConfiguration().set(key, ...)`` calls, the key
+    written as a literal or as a module-level name bound to one."""
     names = {t.id: node.value.value
              for node in tree.body
              if isinstance(node, ast.Assign)
@@ -215,9 +219,13 @@ def _conf_sets(tree, key: str) -> list[int]:
     for node in ast.walk(tree):
         if not (isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "set"
-                and isinstance(node.func.value, ast.Attribute)
-                and node.func.value.attr == "conf"):
+                and node.func.attr == "set"):
+            continue
+        target = node.func.value
+        if isinstance(target, ast.Call):
+            target = target.func
+        if not (isinstance(target, ast.Attribute)
+                and target.attr in ("conf", "hadoopConfiguration")):
             continue
         args = node.args[:1] + [k.value for k in node.keywords
                                 if k.arg == "key"]
@@ -264,6 +272,31 @@ def test_library_sets_no_arrow_batch_size():
     )
     assert _conf_sets(planted, ARROW_BATCH_SIZE) == [1, 3, 4]
     assert _library_conf_sets(ARROW_BATCH_SIZE) == []
+
+
+# Shortcuts to fewer forks that drop checksums: the raw local file system
+# writes no ``.crc`` companions, and the checksum switch drops Spark's state
+# checksum files. The package's checkpoint manager keeps both.
+CHECKSUM_DROPPING_KEYS = (
+    "fs.file.impl",
+    "fs.AbstractFileSystem.file.impl",
+    "spark.hadoop.fs.file.impl",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+)
+
+
+@pytest.mark.parametrize("key", CHECKSUM_DROPPING_KEYS)
+def test_library_keeps_checksums(key):
+    planted = ast.parse(
+        f'spark.conf.set("{key}", "x")\n'
+        f'KEY = "{key}"\n'
+        'sc._jsc.hadoopConfiguration().set(KEY, "x")\n'
+        'spark.conf.get(KEY)\n'
+        'spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", c)\n'
+    )
+    assert _conf_sets(planted, key) == [1, 3]
+    assert _library_conf_sets(key) == []
 
 
 def test_every_query_has_an_oracle_and_every_oracle_a_query():
